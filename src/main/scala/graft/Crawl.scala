@@ -37,8 +37,8 @@ object Crawl {
       if (etagTable.currentVersion.isDefined) etagTable.read().as[EtagState]
       else spark.emptyDataset[EtagState]
 
-    // persist: results feed five consumers (commit, metrics, seen-set,
-    // etag-state merge, caller) — without it the whole schedule+fetch DAG
+    // persist: results feed four consumers (commit, seen-set, etag-state
+    // merge, caller) — without it the whole schedule+fetch DAG
     // re-executes per use. Scope-registered: released at crawl-round end.
     val results = graft.core.CacheScope.persist(
       Fetcher.runWithState(spark, schedule, cfg, priorState))
@@ -49,11 +49,8 @@ object Crawl {
     // access paths
     val rdf = results.withColumn("prefix", substring(col("id"), 1, cfg.prefixLen))
       .withColumn("run_id", lit(cfg.runId))
-    val metricsRow = Fetcher.metrics(results).head()
-    val metricsMap = metricsRow.schema.fieldNames.zipWithIndex
-      .map { case (n, i) => n -> metricsRow.get(i).toString }.toMap
     val rv = resultsTable.commit(rdf, partitionBy = Seq("prefix", "run_id"),
-      metrics = metricsMap + ("run_id" -> cfg.runId.toString))
+      metrics = Map("run_id" -> cfg.runId.toString), observed = Fetcher.metricColumns)
 
     // etag-state MERGE: new 200s override, everything else carries forward
     // (last-wins upsert, the reference's ON-DUP-KEY etag cache,

@@ -3,6 +3,7 @@ package graft.core
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Scoped lifetime for transient `persist`s.
@@ -41,15 +42,27 @@ object CacheScope {
   }
 
   /** Run `body` with a fresh scope; release everything registered inside it
-    * afterwards (outer scope, if any, is restored — scopes nest). */
+    * afterwards (outer scope, if any, is restored — scopes nest).
+    *
+    * The scope also drops the deserialized values of the broadcasts made
+    * inside it: the broadcast joins' hash relations (each holds at least one
+    * page, 16 MB at local[4] on a 3 GB heap) and the stages' task binaries.
+    * Left alone they stay in the block manager until a GC finds their
+    * broadcast unreachable and the ContextCleaner removes them, so how many
+    * earlier rounds' relations the driver holds depends on GC timing. The
+    * serialized pieces stay, so a plan that runs again after the scope
+    * reads its broadcast back from them. */
   def withScope[A](body: => A): A = {
     val prev = current.get()
     val buf = ArrayBuffer.empty[() => Unit]
+    val priorBroadcasts = Bridge.broadcastValueIds()
     current.set(buf)
     try body
     finally {
       current.set(prev)
       buf.foreach(f => try f() catch { case scala.util.control.NonFatal(_) => () })
+      try Bridge.dropBroadcastValues(Bridge.broadcastValueIds() -- priorBroadcasts)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 import graft.core.{FetchResult, Ids}
 import graft.fetch.{Fetcher, Payload}
@@ -54,8 +55,12 @@ object CrawlToDb {
       // archive rows in every rebuilt child table
       val docId = Ids.mix64(Politeness.strHash64(r.id, 3L)) & Long.MaxValue
       val text = s"${Payload.captionFor(r.id)} v${Fetcher.contentVersion(r.id, runId)}"
-      (docId, text, "crawl", crawlDateOf(runId))
-    }.toDF("doc_id", "text", "source", "crawl_date")
+      (docId, text)
+    }.toDF("doc_id", "text")
+      // constant columns as literals: the commit sees a single partition
+      // value and writes without a rebalance shuffle
+      .withColumn("source", lit("crawl"))
+      .withColumn("crawl_date", lit(crawlDateOf(runId)))
   }
 
   /** Commit run `runId`'s archive generation (the tar append). */

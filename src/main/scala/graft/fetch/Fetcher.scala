@@ -3,7 +3,7 @@ package graft.fetch
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -267,16 +267,22 @@ object Fetcher {
     ()
   }
 
-  /** Per-run metrics — the 11 summary counters of crawler:81-99 in one
-    * partial+final aggregation pass. */
+  /** Per-run metrics — the 11 summary counters of crawler:81-99 as
+    * aggregate columns over a results frame. `Crawl.run` observes them on
+    * the results commit; [[metrics]] evaluates the same columns on their own. */
+  def metricColumns: Seq[Column] = {
+    def cnt(c: String) = count(when(classCol === c, 1)).as(s"n_$c")
+    Seq(cnt("ok"), cnt("not_modified"), cnt("not_in_store"),
+      cnt("not_authorized"), cnt("ddos"), cnt("exception"),
+      cnt("worker_exception"),
+      count(when(col("retried"), 1)).as("n_retried"),
+      count(lit(1)).as("n_total"))
+  }
+
+  /** The [[metricColumns]] in one partial+final aggregation pass. */
   def metrics(results: Dataset[FetchResult]): DataFrame = {
-    def cnt(c: String) = count(when(col("cls") === c, 1)).as(s"n_$c")
-    results.withColumn("cls", classCol)
-      .agg(cnt("ok"), cnt("not_modified"), cnt("not_in_store"),
-        cnt("not_authorized"), cnt("ddos"), cnt("exception"),
-        cnt("worker_exception"),
-        count(when(col("retried"), 1)).as("n_retried"),
-        count(lit(1)).as("n_total"))
+    val cols = metricColumns
+    results.agg(cols.head, cols.tail: _*)
   }
 }
 

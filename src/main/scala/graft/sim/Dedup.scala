@@ -422,7 +422,12 @@ object Dedup {
     * column, `edges` is (`id_a`, `id_b`) of the same type; any orderable id
     * type works — the min label is the component representative. Output is
     * total over `nodes`: (id, rep_id, cluster_size), singletons rep
-    * themselves. Per-round cost: one equi-join shuffle + a min-aggregate;
+    * themselves. An edge endpoint missing from `nodes` is left out of the
+    * output, but it still links its neighbors during propagation: edges
+    * (1, 9) and (9, 3) with 9 not a node put 1 and 3 in one component of
+    * size 2, with rep 1 (a rep is always a node). Callers that need
+    * components over `nodes` alone pass edges with both endpoints in
+    * `nodes`. Per-round cost: one equi-join shuffle + a min-aggregate;
     * rounds = component diameter; `localCheckpoint` truncates the lineage
     * so the plan stays O(1) deep regardless of rounds. */
   private[graft] def componentLabels(nodes: DataFrame, edges: DataFrame,
@@ -435,9 +440,10 @@ object Dedup {
     // LogicalRDD scan (round 6; same rationale as the ivfPqCache note).
     val sym = edges.union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
-    var labels = nodes
+    val initial = nodes
       .select(col("id"), col("id").as("rep"))
       .localCheckpoint(true)
+    var labels = initial
 
     /** One propagation unit over a (id, rep, chg) frame: neighbor-min as a
       * single union + aggregate — next(id) = min(rep(id), min over
@@ -460,8 +466,10 @@ object Dedup {
           min("rep").as("rep"),
           min(when(col("own"), col("rep"))).as("__prev"),
           max("chg").as("__chg"))
+        // no own row (null __prev): an edge endpoint missing from `nodes`
+        // got its first label, a change that must keep the loop going
         .select(col("id"), col("rep"),
-          (col("__chg") || col("rep") =!= col("__prev")).as("chg"))
+          (col("__chg") || coalesce(col("rep") =!= col("__prev"), lit(true))).as("chg"))
       if (!withJump) stepped
       else stepped.as("s")
         .join(stepped.select(col("id").as("__rid"), col("rep").as("__rrep")).as("t"),
@@ -503,10 +511,13 @@ object Dedup {
       iter += 1
     }
     require(converged, s"hash-min components did not converge in $maxIters rounds")
-    // cluster sizes as one window count over the converged labels (round 6):
-    // the former aggregate + join-back re-shuffled the labels twice for the
-    // same per-rep count the window computes in its single exchange
-    labels
+    // the neighbor-min union also labels edge endpoints missing from
+    // `nodes`; the semi-join against the checkpointed initial labels drops
+    // them without re-running the `nodes` plan. Cluster sizes as one window
+    // count over the converged labels (round 6): the former aggregate +
+    // join-back re-shuffled the labels twice for the same per-rep count the
+    // window computes in its single exchange
+    labels.join(initial.select("id"), Seq("id"), "left_semi")
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("rep")))
       .select(col("id"), col("rep").as("rep_id"), col("cluster_size"))

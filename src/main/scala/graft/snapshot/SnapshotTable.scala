@@ -5,7 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Iceberg-shaped snapshot table layer (SURVEY.md §7.0/§7.1 step 3).
   *
@@ -33,37 +36,60 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
 
   def versions: Seq[Int] =
     if (!Files.isDirectory(manifests)) Nil
-    else Files.list(manifests).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{6}\\.json") => s.substring(1, 7).toInt }
-      .toSeq.sorted
+    else {
+      // the stream holds a directory descriptor until closed
+      val s = Files.list(manifests)
+      try s.iterator().asScala
+        .map(_.getFileName.toString)
+        .collect { case n if n.matches("v\\d{6}\\.json") => n.substring(1, 7).toInt }
+        .toSeq.sorted
+      finally s.close()
+    }
 
   def currentVersion: Option[Int] = versions.lastOption
 
   /** Append a new snapshot; returns the committed version. Partition columns
     * (e.g. prefix shard + run date, config.py:117-119) flow into the parquet
-    * layout so partition pruning works on read. */
+    * layout so partition pruning works on read. A partitioned commit is
+    * rebalanced on its partition columns that are not literals in `df`'s
+    * plan, so its file count follows bytes. `observed` aggregate columns
+    * ride on the write as an Observation, next to the row count; their
+    * values join `metrics` in the manifest under the columns' names. */
   def commit(df: DataFrame, partitionBy: Seq[String] = Nil,
-             metrics: Map[String, String] = Map.empty): Int = {
-    val v = currentVersion.getOrElse(0) + 1
+             metrics: Map[String, String] = Map.empty,
+             observed: Seq[Column] = Nil): Int = {
+    val parent = currentVersion.getOrElse(0)
+    val v = parent + 1
     val dataDir = base.resolve(f"data/v$v%06d")
+    // a plain partitioned write opens one file per (input partition ×
+    // partition value): 8 × 16 = 128 files for a night's results. A
+    // rebalance exchange on the partition columns lets AQE size the write
+    // tasks by bytes instead: a reducer under the advisory size writes one
+    // file per value it holds. AQE splits a larger reducer only at map-output
+    // boundaries, so no value gets more files than the plain write gives it.
+    // Columns the plan sets to a literal (a run's date or id) spread nothing,
+    // so they are left out of the keys; with none left (and for unpartitioned
+    // commits) the input keeps its own layout, with no shuffle.
+    val keys = partitionBy.filterNot(literalColumns(df))
+    val input = if (keys.isEmpty) df else df.hint("rebalance", keys.map(col): _*)
     // row count rides on the write itself via an Observation — a second full
     // scan of freshly committed data would double the commit path's I/O
     // (at archive scale, 2× the write volume read back per commit)
-    val obs = org.apache.spark.sql.Observation(s"graft_commit_${System.nanoTime()}")
-    val observed = df.observe(obs,
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-    val writer = observed.write.mode("overwrite")
+    val obs = Observation(s"graft_commit_${System.nanoTime()}")
+    val observedInput = input.observe(obs, count(lit(1)).as("rows"), observed: _*)
+    val writer = observedInput.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(dataDir.toString)
-    val rowCount = obs.get("rows").asInstanceOf[Long]
+    val stats = obs.get
+    val rowCount = stats("rows").asInstanceOf[Long]
+    val allMetrics = metrics ++ (stats - "rows").map { case (k, w) => k -> String.valueOf(w) }
     val json = {
       def esc(s: String) = s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       }
-      val m = metrics.map { case (k, w) => s""""${esc(k)}":"${esc(w)}"""" }.mkString(",")
-      s"""{"version":$v,"parent":${currentVersion.getOrElse(0)},"dataDir":"${esc(dataDir.toString)}",
+      val m = allMetrics.map { case (k, w) => s""""${esc(k)}":"${esc(w)}"""" }.mkString(",")
+      s"""{"version":$v,"parent":$parent,"dataDir":"${esc(dataDir.toString)}",
          |"rowCount":$rowCount,"partitionBy":[${partitionBy.map(p => s""""${esc(p)}"""").mkString(",")}],
          |"metrics":{$m}}""".stripMargin
     }
@@ -78,6 +104,14 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
     }
     v
   }
+
+  /** Output columns that the top projection of `df`'s plan sets to a
+    * constant expression, e.g. `withColumn("run_id", lit(3))`. */
+  private def literalColumns(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed match {
+      case Project(list, _) => list.collect { case a: Alias if a.child.foldable => a.name }.toSet
+      case _ => Set.empty
+    }
 
   private def dataDirOf(v: Int): String = {
     val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)

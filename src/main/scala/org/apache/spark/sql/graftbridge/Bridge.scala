@@ -23,4 +23,25 @@ object Bridge {
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** Ids of the broadcasts whose deserialized value this JVM's block
+    * manager holds (`BlockManager` is `private[spark]`). Empty without a
+    * running SparkContext. */
+  def broadcastValueIds(): Set[Long] =
+    Option(org.apache.spark.SparkEnv.get).toSeq
+      .flatMap(_.blockManager.getMatchingBlockIds {
+        case org.apache.spark.storage.BroadcastBlockId(_, "") => true
+        case _ => false
+      })
+      .collect { case org.apache.spark.storage.BroadcastBlockId(id, _) => id }
+      .toSet
+
+  /** Drop the deserialized values of broadcasts `ids` from this JVM's block
+    * manager. Their serialized pieces stay, so a later read deserializes the
+    * value again; the pieces go when the ContextCleaner collects the
+    * broadcast, as before. */
+  def dropBroadcastValues(ids: Iterable[Long]): Unit =
+    Option(org.apache.spark.SparkEnv.get).foreach { env =>
+      ids.foreach(id => env.blockManager.removeBlock(org.apache.spark.storage.BroadcastBlockId(id)))
+    }
 }

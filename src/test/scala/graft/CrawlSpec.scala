@@ -70,7 +70,16 @@ class CrawlSpec extends SparkSpec {
 
     // metrics recorded in the manifest lineage
     val rt = new graft.snapshot.SnapshotTable(spark, s"$dir/fetch_results")
-    assert(rt.metricsOf(1).contains("n_ok"))
+    // ... observed on the results write: the same counters a separate
+    // aggregation over the run's results computes, and the same row count
+    Seq(1 -> out, 2 -> out2).foreach { case (v, o) =>
+      val m = graft.fetch.Fetcher.metrics(o.results).head()
+      val expected = m.schema.fieldNames.map(n => n -> m.getAs[Long](n).toString).toMap
+      assert(rt.metricsOf(v) == expected + ("run_id" -> v.toString))
+      val manifest = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "fetch_results", "manifests", f"v$v%06d.json")))
+      assert(manifest.contains(s""""rowCount":${o.results.count()},"""), manifest)
+    }
 
     // determinism / idempotent re-run (reference's converging re-runs):
     // rerunning run 1 into a fresh dir produces the identical result set

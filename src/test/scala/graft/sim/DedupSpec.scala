@@ -121,4 +121,19 @@ class DedupSpec extends SparkSpec {
     assert(out == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L), (4L, 4L, 1L)),
       s"got $out")
   }
+
+  test("componentLabels: output is total over nodes, dangling edge endpoints dropped") {
+    // 9 and 0 are edge endpoints missing from `nodes`: neither may appear
+    // in the output nor count towards a cluster size
+    val nodes = Seq(1L, 2L, 3L, 5L).toDF("id")
+    val edges = Seq((1L, 2L), (3L, 9L), (0L, 5L)).toDF("id_a", "id_b")
+    val out = Dedup.componentLabels(nodes, edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(out == Set((1L, 1L, 2L), (2L, 1L, 2L), (3L, 3L, 1L), (5L, 5L, 1L)), s"got $out")
+    // a missing endpoint still links its neighbors, as the scaladoc states
+    val bridged = Dedup.componentLabels(Seq(1L, 3L).toDF("id"),
+      Seq((1L, 9L), (9L, 3L)).toDF("id_a", "id_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(bridged == Set((1L, 1L, 2L), (3L, 1L, 2L)), s"got $bridged")
+  }
 }
