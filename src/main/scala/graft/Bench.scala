@@ -318,23 +318,24 @@ object Bench {
          |163,750 → 395,703 — Java serialization costs the 8-core level 1.85×,
          |which is WHY the operator path (Tungsten rows) is the production default.
          |
-         |### Column-native fetch classifier — measured round 4, kept OPT-IN
-         |Reproduce: `SPARK_GRAFT_COLUMNAR_FETCH=1 sbt "runMain graft.bench.ScalingMain 2 8 16000000"`.
+         |### Column-native fetch classifier — measured round 4, now the only fetch path
+         |Reproduce: `sbt "runMain graft.bench.ScalingMain 2 8 16000000"`.
          |
-         |The fetch stage exists in two spec-proven-identical forms: the typed map
-         |(production default) and a codegen expression path (`Fetcher.runColumnar` /
-         |`runWithStateColumnar`, `FetchClassify`/`FetchEtag` expressions) with no
-         |encoder round-trip. In ISOLATION the columnar form is 2.8× faster when its
-         |consumer is also columnar (8M-row stage, 8 cores: typed 1.46 s with
-         |SerializeFromObject vs columnar 0.52 s; with a TYPED consumer the gain
-         |inverts to −12%% — the deserialization just moves). On the FULL crawl job
-         |the difference vanishes into the VM noise band (columnar pair run:
-         |110,084 → 369,000 URLs/s, eff 0.809 with one stalled pair at 0.510;
-         |typed: 106,928 → 385,877, eff 0.885) because fetch classification is a
-         |minor share of the end-to-end wall (schedule walk, dedup, and snapshot
-         |commits dominate). Conclusion: the knob exists and is proven correct, but
-         |the typed default stands — flipping it buys nothing measurable end-to-end
-         |and would re-baseline every published number.
+         |The fetch stage is one codegen expression path (`Fetcher.run` /
+         |`runWithState`, `FetchClassify`/`FetchEtag` expressions) with no encoder
+         |round-trip; FetcherSpec checks it row for row against per-row oracles
+         |(`Fetcher.conditionalResult`, `statusFor`/`etagFor`/`timedOut`). Round 4
+         |measured it against the typed map it replaced. In ISOLATION the columnar
+         |form was 2.8× faster when its consumer is also columnar (8M-row stage,
+         |8 cores: typed 1.46 s with SerializeFromObject vs columnar 0.52 s; with a
+         |TYPED consumer the gain inverts to −12%% — the deserialization just
+         |moves). On the FULL crawl job the difference vanished into the VM noise
+         |band (columnar pair run: 110,084 → 369,000 URLs/s, eff 0.809 with one
+         |stalled pair at 0.510; typed: 106,928 → 385,877, eff 0.885) because fetch
+         |classification is a minor share of the end-to-end wall (schedule walk,
+         |dedup, and snapshot commits dominate). The typed map and its opt-in knob
+         |were deleted: one implementation per stage, and the knob only protected a
+         |published number, not a result.
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.md"), md)
     ()

@@ -55,23 +55,9 @@ object Crawl {
     // etag-state MERGE: new 200s override, everything else carries forward
     // (last-wins upsert, the reference's ON-DUP-KEY etag cache,
     // mysql_backend.py:186-199)
-    // Default = the typed map: the configuration every published scaling
-    // number was measured on. The column-ops form (no per-row object
-    // deserialize) rides the SAME opt-in knob as the columnar fetch stage
-    // — it removes ~12 s of perfectly parallel work from the 2-core leg of
-    // the 16M pair, which shrinks the parallel share below the ≥21× bench
-    // sizing rule and reads as a ~0.1 efficiency drop that measures the
-    // BENCH SIZING, not the engine (BENCH.md "Column-native fetch
-    // classifier" documents the measured trade). Flipping the knob is a
-    // re-baseline, not a correctness change.
-    val newState =
-      if (graft.fetch.Fetcher.columnarEnabled)
-        results.toDF()
-          .filter(col("status") === 200)
-          .select(col("id"), col("etag"), lit(cfg.runId).as("lastRun"))
-      else
-        results.filter(_.status == 200)
-          .map(r => EtagState(r.id, r.etag, cfg.runId)).toDF()
+    val newState = results.toDF()
+      .filter(col("status") === 200)
+      .select(col("id"), col("etag"), lit(cfg.runId).as("lastRun"))
     // results carry one row per frontier id (the frontier is a set), so the
     // update batch is key-unique → cold-start commits skip the merge shuffle
     graft.etl.Etl.mergeUpsert(spark, etagTable, newState,

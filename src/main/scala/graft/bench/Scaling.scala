@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 import graft.core.{CrawlConfig, Ids}
 import graft.frontier.Frontier
-import graft.scheduler.Politeness
 
 /** Two-parallelism scaling evidence for the north rule's "≥0.8 throughput
   * scaling efficiency from N to 4N executors".
@@ -321,164 +320,5 @@ object SkewScalingMain {
       f""""efficiency_level_medians":${Scaling.efficiency(rN.median, r4N.median)}%.3f,""" +
       s""""pair_effs":$effsTxt,"iters":${effs.size},""" +
       s""""aggregation":"median_of_pairwise_interleaved"}""")
-  }
-}
-
-/** Microbenchmark isolating Spark's own scaling on this machine: a pure
-  * whole-stage-codegen aggregation (no object allocation) vs an
-  * allocation-heavy typed map. Dev tool: `runMain graft.bench.Micro <cores>`. */
-object Micro {
-  def main(args: Array[String]): Unit = {
-    val cores = if (args.length > 0) args(0) else "8"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    def time(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"MICRO $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-    // warmup (max: no ANSI overflow, still forces full evaluation)
-    spark.range(0L, 10000000L).select(max(xxhash64(col("id")))).head()
-    time("codegen_hash") {
-      spark.range(0L, 20000000000L).select(max(xxhash64(col("id")))).head()
-    }
-    time("alloc_map") {
-      spark.range(0L, 100000000L).map(i => Ids.syntheticId(i, 42L)).filter(_ != null).count()
-    }
-    time("sort_shuffle") {
-      val df = spark.range(0L, 100000000L).select((col("id") * 2654435761L % 1000000007L).as("k"))
-      df.repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("k"))
-        .sortWithinPartitions("k").select(count(lit(1))).head()
-    }
-    spark.stop()
-  }
-}
-
-/** Sub-phase profiler for the frontier build. Dev tool:
-  * `runMain graft.bench.ProfileWorklist <cores> <numIds>`. */
-object ProfileWorklist {
-  def main(args: Array[String]): Unit = {
-    val cores = if (args.length > 0) args(0) else "8"
-    val numIds = if (args.length > 1) args(1).toInt else 16000000
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    def phase[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SUB $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val seed = 42L
-    val discovered = spark.range(0L, numIds.toLong).map(i => Ids.syntheticId(i, seed))
-    val forum = spark.range(0L, numIds.toLong, 41L).map(i => Ids.syntheticId(i, seed))
-    val known = phase("known_distinct") {
-      val k = forum.distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      k.count(); k
-    }
-    val cand = phase("cand_distinct") {
-      val c = discovered.distinct().toDF("value")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      c.count(); c
-    }
-    val bloom = phase("bloom_build") {
-      graft.frontier.SeenSet.buildBloomTree(
-        known.toDF("value").select(
-          graft.frontier.SeenSet.idHash(org.apache.spark.sql.functions.col("value")).as("h")).as[Long],
-        1 << 20)
-    }
-    val fresh = phase("probe_split_anti") {
-      val probe = graft.frontier.BloomProbe.might(bloom,
-        graft.frontier.SeenSet.idHash(org.apache.spark.sql.functions.col("value")))
-      val f = cand.filter(!probe)
-        .union(cand.filter(probe).join(known.toDF("value"), Seq("value"), "left_anti"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      f.count(); f
-    }
-    phase("union_flag_map") {
-      val forumsSet = known.toDF("fid")
-      known.toDF("value").union(fresh).toDF("id")
-        .join(org.apache.spark.sql.functions.broadcast(forumsSet),
-          org.apache.spark.sql.functions.col("id") === org.apache.spark.sql.functions.col("fid"), "left")
-        .select(org.apache.spark.sql.functions.col("id"),
-          org.apache.spark.sql.functions.col("fid").isNotNull.as("forums"))
-        .as[(String, Boolean)]
-        .map { case (id, f) =>
-          val url = Frontier.urlFor(id)
-          graft.core.FrontierEntry(id, url, Frontier.hostOf(url), f, 1)
-        }
-        .count()
-    }
-    spark.stop()
-  }
-}
-
-/** Per-phase profiler: times each pipeline stage separately at a core count.
-  * Dev tool for finding serial sections; `runMain graft.bench.Profile <cores>
-  * <numIds>`. */
-object Profile {
-  def main(args: Array[String]): Unit = {
-    val cores = if (args.length > 0) args(0) else "8"
-    val numIds = if (args.length > 1) args(1).toInt else 4000000
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-profile-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    def phase[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PHASE $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-
-    val cfg = CrawlConfig(runId = 1, shuffleSeed = 42L, prefixLen = 1)
-    val seed = 42L
-    val discovered = spark.range(0L, numIds.toLong).map(i => Ids.syntheticId(i, seed))
-    val forum = spark.range(0L, numIds.toLong, 41L).map(i => Ids.syntheticId(i, seed))
-
-    val frontier = phase("buildWorklist") {
-      val f = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum,
-        discovered, maxNew = numIds, runId = 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count(); f
-    }
-    val schedule = phase("schedule") {
-      val s = Politeness.schedule(spark, frontier, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.count(); s
-    }
-    val results = phase("fetch") {
-      val r = graft.fetch.Fetcher.run(spark, schedule, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count(); r
-    }
-    phase("metrics") { graft.fetch.Fetcher.metrics(results).head() }
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_profile").toString
-    phase("commit_results") {
-      new graft.snapshot.SnapshotTable(spark, s"$dir/fetch_results").commit(
-        results.toDF().withColumn("prefix",
-          org.apache.spark.sql.functions.substring(org.apache.spark.sql.functions.col("id"), 1, 1)),
-        partitionBy = Seq("prefix"))
-    }
-    phase("seen_commit") {
-      new graft.snapshot.SnapshotTable(spark, s"$dir/url_seen").commit(
-        results.select("id").distinct().toDF())
-    }
-    spark.stop()
   }
 }

@@ -289,7 +289,7 @@ object TrainPrep {
                            maxShinglesPerDoc: Int = 128): DataFrame = {
     val (trainNgrams, evalShinglesRaw) = collisionSides(spark, dir, n)
     // the probe/!probe branches would otherwise re-execute the eval shingle
-    // mint + fold join twice (the SeenSet.dedupWithBloom discipline)
+    // mint + fold join twice (the SeenSet.dedup discipline)
     val evalShingles = graft.core.CacheScope.persist(evalShinglesRaw)
     graft.sim.Pq.evictStopped(deconBloomCache, (k: (SparkSession, String, Int)) => k._1)
     val bloom = deconBloomCache.computeIfAbsent((spark, dir, n), _ => {
@@ -298,7 +298,7 @@ object TrainPrep {
       graft.frontier.SeenSet.buildBloomTree(
         trainNgrams.select(xxhash64(col("shingle"))).as[Long], expected)
     })
-    val probe = graft.frontier.BloomProbe.might(bloom, xxhash64(col("shingle")))
+    val probe = graft.frontier.FilterProbe.might(bloom, xxhash64(col("shingle")))
     val maybe = evalShingles.filter(probe).join(trainNgrams, Seq("shingle"), "left")
     val miss = evalShingles.filter(!probe).withColumn("hit", lit(null).cast("int"))
     collisionRollup(maybe.unionByName(miss))

@@ -44,16 +44,16 @@ object Fetcher {
   def etagFor(id: String, runId: Int): String =
     f"""W/"${Ids.mix64(Politeness.strHash64(id, 13L) ^ contentVersion(id, runId))}%016x""""
 
-  /** T3 — virtual fetch-WORK duration for an item, with the heavy tail real
-    * crawls have (a hung download): ~1 in 1,000 (id, run) pairs draws a
-    * pathological stall far past any budget. Distinct from
-    * `Politeness.durationMs` (the schedule's virtual clock), so the timeout
-    * never perturbs schedule parity with the sequential oracle. */
   /** A hung download stalls for ~a day — far past the reference's 2 h
     * budget, but finite and budget-independent (a roomier cfg budget can
     * legitimately absorb it). */
   val StallMs: Long = 86400000L
 
+  /** T3 — virtual fetch-WORK duration for an item, with the heavy tail real
+    * crawls have (a hung download): ~1 in 1,000 (id, run) pairs draws a
+    * pathological stall far past any budget. Distinct from
+    * `Politeness.durationMs` (the schedule's virtual clock), so the timeout
+    * never perturbs schedule parity with the sequential oracle. */
   def fetchDurationMs(id: String, runId: Int, cfg: CrawlConfig): Long =
     fetchDurationMsSeeded(id, runId, cfg.shuffleSeed)
 
@@ -101,25 +101,13 @@ object Fetcher {
     }
   }
 
-  /** State-driven fetch stage: schedule co-joined with the prior etag-state
-    * table (J14 — both sides hash-partition on id, the reference's etag
-    * side-cache lookup archive.py:194-237 as a distributed join). */
-  def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                   cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] =
-    if (columnarEnabled) runWithStateColumnar(spark, schedule, cfg, etagState)
-    else {
-      import spark.implicits._
-      schedule
-        .joinWith(etagState, schedule("id") === etagState("id"), "left_outer")
-        .map { case (s, st) =>
-          conditionalResult(s, cfg.runId, Option(st).map(_.etag), cfg)
-        }
-    }
-
-  /** Column-native [[run]]: one struct-producing codegen expression per row
-    * (status, etag, retried) + plain column projections. */
-  def runColumnar(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                  cfg: CrawlConfig): Dataset[FetchResult] = {
+  /** Run the fetch stage over a schedule, with the single retry pass for
+    * exception rows (crawler:222-234: retry once, then record). One
+    * struct-producing codegen expression per row (status, retried) plus
+    * plain column projections: no encoder round-trip, no FetchResult
+    * allocation until the sink. */
+  def run(spark: SparkSession, schedule: Dataset[ScheduledFetch],
+          cfg: CrawlConfig): Dataset[FetchResult] = {
     import spark.implicits._
     schedule.toDF()
       .withColumn("__c", graft.functions.GraftFunctions.fetchClassify(
@@ -134,12 +122,14 @@ object Fetcher {
       .as[FetchResult]
   }
 
-  /** Column-native [[runWithState]]: same left join, but the conditional
-    * branch ([[conditionalResult]]) is expressed as columns — prior-etag
-    * hit → 304 short-circuit, else the classify struct with the 304→200
-    * remap baked into its `conditional` mode. */
-  def runWithStateColumnar(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                           cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
+  /** State-driven fetch stage: schedule left-joined with the prior
+    * etag-state table (J14 — both sides hash-partition on id, the
+    * reference's etag side-cache lookup archive.py:194-237 as a distributed
+    * join). [[conditionalResult]] expressed as columns: prior-etag hit →
+    * 304 short-circuit, else the classify struct with the 304→200 remap
+    * baked into its `conditional` mode. */
+  def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
+                   cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
     import spark.implicits._
     val st = etagState.toDF().select(col("id").as("__sid"), col("etag").as("__prior"))
     val hit = col("__prior").isNotNull && (col("__prior") === col("__new"))
@@ -199,41 +189,6 @@ object Fetcher {
     case 503 => "ddos"
     case TimeoutStatus => "worker_exception"
     case _   => "exception"
-  }
-
-  /** Run the fetch stage over a schedule, with the single retry pass for
-    * exception rows (crawler:222-234: retry once, then record). */
-  /** Opt-in column-native classifier (SPARK_GRAFT_COLUMNAR_FETCH=1): the
-    * per-row fetch classification runs as a codegen'd Catalyst expression
-    * over UnsafeRows instead of a typed map — no encoder round-trip, no
-    * FetchResult allocation until the sink. Parity with the typed paths is
-    * spec-gated (FetcherSpec); DEFAULT OFF: the typed map is the path every
-    * published number was measured on, and speeding the parallel stage
-    * shrinks the parallel share the N→4N efficiency gate measures. */
-  private[graft] def columnarEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_COLUMNAR_FETCH")
-      .orElse(sys.props.get("spark.graft.columnar.fetch"))
-      .contains("1")
-
-  def run(spark: SparkSession, schedule: Dataset[ScheduledFetch], cfg: CrawlConfig): Dataset[FetchResult] =
-    if (columnarEnabled) runColumnar(spark, schedule, cfg)
-    else runTyped(spark, schedule, cfg)
-
-  private def runTyped(spark: SparkSession, schedule: Dataset[ScheduledFetch], cfg: CrawlConfig): Dataset[FetchResult] = {
-    import spark.implicits._
-    schedule.map { s =>
-      if (timedOut(s.id, cfg.runId, cfg)) {
-        // per-item budget blown → worker_exception sentinel, no in-run retry
-        FetchResult(s.seq, s.id, s.fetchClass, s.startMs, TimeoutStatus, "",
-          isNew = false, retried = false)
-      } else {
-        val st0 = statusFor(s.id, cfg.runId, 0)
-        val (st, retried) = if (st0 == -1) (statusFor(s.id, cfg.runId, 1), true) else (st0, false)
-        FetchResult(s.seq, s.id, s.fetchClass, s.startMs, st,
-          if (st == 200) etagFor(s.id, cfg.runId) else "",
-          isNew = st == 200, retried = retried)
-      }
-    }
   }
 
   private def classCol = when(col("status") === 200, "ok")
@@ -519,7 +474,7 @@ object Payload {
   }
 }
 
-/** Static kernel for the column-native fetch classifier — called from both
+/** Static kernel for the fetch classifier expressions — called from both
   * generated code and interpreted eval (the ExprImpl pattern). */
 object FetchKernel {
   import org.apache.spark.sql.catalyst.InternalRow

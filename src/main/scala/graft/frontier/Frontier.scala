@@ -41,11 +41,6 @@ object Frontier {
   // the parsing + fan-out semantics are full: index XML → generic shard
   // URLs → per-shard <loc> extraction → 32-char id regex → validity filter.
 
-  /** Shard URLs from the sitemap INDEX document — `<loc>` elements kept
-    * only in the generic `?shard=N&numshards=M` form (language-parameterized
-    * shard urls return SUBSETS of the plain ones and are skipped,
-    * discover.py:33-40). The index is one small document; parsing it
-    * driver-side mirrors the reference exactly. */
   /** Minimal XML entity unescape for `<loc>` TEXT — spec-compliant sitemap
     * XML must escape `&` as `&amp;`, so the shard query strings arrive as
     * `?shard=0&amp;numshards=4`. */
@@ -53,6 +48,11 @@ object Frontier {
     s.replace("&amp;", "&").replace("&lt;", "<").replace("&gt;", ">")
       .replace("&quot;", "\"").replace("&apos;", "'")
 
+  /** Shard URLs from the sitemap INDEX document — `<loc>` elements kept
+    * only in the generic `?shard=N&numshards=M` form (language-parameterized
+    * shard urls return SUBSETS of the plain ones and are skipped,
+    * discover.py:33-40). The index is one small document; parsing it
+    * driver-side mirrors the reference exactly. */
   def sitemapShardUrls(indexXml: String, sitemapBase: String): Seq[String] = {
     val generic = (java.util.regex.Pattern.quote(sitemapBase) + "\\?shard=\\d+&numshards=\\d+").r
     "<loc>([^<]*)</loc>".r.findAllMatchIn(indexXml)
@@ -78,16 +78,17 @@ object Frontier {
   /** Work-list build (crawler:203-215 + archive.py:589-592):
     * known ∪ (discovered ⟕anti known, limit maxNew), forums-flagged.
     *
-    * With `store = Some(SeenStore)`, the pre-filter is the PERSISTED
-    * two-tier probe (epoch bloom + per-run cuckoo spills) — no per-run full
-    * scan of the seen corpus to rebuild it (the dominant constant of a
-    * nightly run at 10^10 ids). The probe only loads when it provably
-    * covers every committed url_seen version (SeenStore.loadProbe's crash
-    * validation); otherwise this falls back to the full-rebuild path. Forum
-    * ids (small config set) fold into the probe's bloom copy so the filter
-    * still covers everything `known` contains; the exact anti-join
-    * downstream is unchanged, so exactness never depends on the filter's
-    * freshness. */
+    * The anti-join runs behind a tiered pre-filter ([[SeenSet.dedup]]).
+    * With `store = Some(SeenStore)` the tiers are the PERSISTED epoch bloom
+    * and per-run cuckoo spills — no per-run full scan of the seen corpus
+    * to rebuild a filter (the dominant constant of a nightly run at 10^10
+    * ids) — plus a bloom over the forum ids (a small config set), so the
+    * probe covers everything `known` contains. The store's probe only
+    * loads when it covers every committed url_seen version
+    * (SeenStore.loadProbe's crash validation); otherwise, and without a
+    * store, the one tier is a bloom rebuilt from `known`. The exact
+    * anti-join is the same either way, so exactness never depends on the
+    * filter's freshness. */
   def buildWorklist(spark: SparkSession,
                     existing: Dataset[String],
                     forumIds: Dataset[String],
@@ -98,51 +99,19 @@ object Frontier {
                     store: Option[SeenStore] = None): Dataset[FrontierEntry] = {
     import spark.implicits._
     val known = existing.union(forumIds).distinct()
-    val shardProbe = store.filter(_.sharded).flatMap(_.loadShardProbe(spark))
-    val dedup: org.apache.spark.sql.DataFrame = if (shardProbe.isDefined) {
-      // SHARDED epoch (10^10-key mode): bloom AND spill filters are
-      // tables, candidates co-shuffle to their shard once
-      // (SeenSet.shardedMaybeSeenTiers — every tier probed in one
-      // cogroup); only the few-thousand-row forum filter rides as an
-      // in-expression column probe
-      val (shards, spillTables, _) = shardProbe.get
-      val forumBloom = BlockedBloom.sized(8192)
-      forumIds.distinct().toDF("value")
-        .select(SeenSet.idHash(org.apache.spark.sql.functions.col("value")).as("h"))
-        .as[Long].collect().foreach(forumBloom.add)
-      // no persist on cand here: unlike the in-heap branch it has exactly
-      // ONE consumer (the cogroup); `flagged` is the shared intermediate
-      val cand = discovered.distinct().toDF("value")
-      val h = SeenSet.idHash(org.apache.spark.sql.functions.col("value"))
-      val flagged = graft.core.CacheScope.persist(
-        SeenSet.shardedMaybeSeenTiers(spark, cand, "value", shards, spillTables,
-          store.get.shardCount)
-          .toDF("value", "in_shard")
-          .withColumn("maybe", org.apache.spark.sql.functions.col("in_shard") ||
-            BloomProbe.might(forumBloom, h)))
-      flagged.filter(!org.apache.spark.sql.functions.col("maybe")).select("value")
-        .union(flagged.filter(org.apache.spark.sql.functions.col("maybe")).select("value")
-          .join(known.toDF("value"), Seq("value"), "left_anti"))
-    } else store.flatMap(_.loadProbe()) match {
-      case Some(SeenProbe(bloom, spills, _)) =>
+    def hashes(ids: Dataset[String]) = ids.toDF("value").select(SeenSet.idHash(col("value"))).as[Long]
+    val probe = store.flatMap(_.loadProbe(spark)) match {
+      case Some(p) =>
         // forum list = config-file lines (archive.py:634-639), a few
-        // thousand rows — fold their xxhash64s into the epoch filter copy
-        forumIds.distinct().toDF("value")
-          .select(SeenSet.idHash(org.apache.spark.sql.functions.col("value")).as("h"))
-          .as[Long].collect().foreach(bloom.add)
-        val h = SeenSet.idHash(org.apache.spark.sql.functions.col("value"))
-        // maybe-seen if ANY tier says so; each filter ships once per
-        // executor via addReferenceObj (≤ maxSpillRuns small spills)
-        val probe = spills.foldLeft(BloomProbe.might(bloom, h))(
-          (acc, sp) => acc || CuckooProbe.might(sp, h))
-        val cand = graft.core.CacheScope.persist(discovered.distinct().toDF("value"))
-        cand.filter(!probe)
-          .union(cand.filter(probe).join(known.toDF("value"), Seq("value"), "left_anti"))
+        // thousand rows: its own in-heap tier, sized to the list
+        val forumHashes = hashes(forumIds).collect()
+        val forumBloom = BlockedBloom.sized(forumHashes.length)
+        forumHashes.foreach(forumBloom.add)
+        p.withFilter(forumBloom)
       case None =>
-        SeenSet.dedupWithBloom(
-          spark, discovered.distinct().toDF("value"), known.toDF("value"), "value",
-          expectedSeen = 1 << 20)
+        SeenProbe(Seq(SeenSet.buildBloomTree(hashes(known), expectedKeys = 1 << 20)), None, 0L)
     }
+    val dedup = SeenSet.dedup(spark, discovered.distinct().toDF("value"), known.toDF("value"), probe)
     // scope-registered persist: the crawl loop unpersists it at round end
     // (CacheScope.withScope), so iterative crawls don't leak cached rounds
     val freshAll = graft.core.CacheScope.persist(dedup)

@@ -81,49 +81,19 @@ object SeenSet {
       }
   }
 
-  /** Exact dedup: candidates not in seen (the always-correct baseline). */
+  /** Exact dedup: candidates not in seen — the oracle for [[dedup]]. */
   def dedupExact(candidates: DataFrame, seen: DataFrame, idCol: String): DataFrame =
     candidates.join(seen.select(idCol), Seq(idCol), "left_anti")
-
-  /** Bloom-accelerated exact dedup: the broadcastable-filter path.
-    * `definitely new ∪ (maybe-seen ⟕anti seen)`. The candidate set is
-    * persisted before branching — the two probe branches would otherwise
-    * re-execute the candidate plan (and any shuffle feeding it) twice. */
-  def dedupWithBloom(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                     idCol: String, expectedSeen: Long): DataFrame = {
-    import spark.implicits._
-    val bloom = buildBloomTree(
-      seen.select(idHash(col(idCol)).as("h")).as[Long], expectedSeen)
-    val probe = BloomProbe.might(bloom, idHash(col(idCol)))
-    val cand = graft.core.CacheScope.persist(candidates)
-    val definitelyNew = cand.filter(!probe)
-    val maybeSeen = cand.filter(probe)
-    definitelyNew.union(maybeSeen.join(seen.select(idCol), Seq(idCol), "left_anti"))
-  }
-
-  /** Sharded-filter exact dedup — the 10^10-key path where NO single bloom
-    * fits one JVM (10^10 keys × 10 bits ≈ 12.5 GB; `addReferenceObj` would
-    * ship it in every task binary). The filter stays TABLE-RESIDENT: one
-    * (shard, bloomBytes) row per hash-slice ([[buildBloomShards]]);
-    * candidates co-shuffle to their shard and probe it via `cogroup` — each
-    * task deserializes exactly ONE shard filter (≈ totalBits/numShards),
-    * never the whole thing. Exactness is unchanged: maybe-seen rows fall
-    * to the exact anti-join; a shard with no seen keys has no row, and its
-    * candidates are definitely new. */
-  /** Co-shuffle candidates with a table-resident shard-filter table and
-    * flag each as maybe-seen: one shard filter deserialized per task.
-    * Returns (value, maybe) pairs. */
-  def shardedMaybeSeen(spark: SparkSession, candidates: DataFrame, idCol: String,
-                       shards: Dataset[(Int, Array[Byte])],
-                       numShards: Int): Dataset[(String, Boolean)] =
-    shardedMaybeSeenTiers(spark, candidates, idCol, shards, Nil, numShards)
 
   /** Multi-tier sharded probe: the epoch bloom shards PLUS any number of
     * per-run cuckoo spill shard tables, all sharded by the same
     * `floorMod(hash, numShards)` slice so one cogroup co-shuffles a
-    * candidate with every tier's filter for its slice. Each task
-    * deserializes ≤ 1 bloom + (spill runs) cuckoo shard filters — a few
-    * rows per shard — never a whole-corpus filter. */
+    * candidate with every tier's filter for its slice. This is the
+    * 10^10-key mode, where no single bloom fits one JVM (10^10 keys × 10
+    * bits ≈ 12.5 GB): each task deserializes ≤ 1 bloom + (spill runs)
+    * cuckoo shard filters — a few rows per shard — never a whole-corpus
+    * filter. A shard with no seen keys has no row, so its candidates flag
+    * definitely new. Returns (value, maybe) pairs. */
   def shardedMaybeSeenTiers(spark: SparkSession, candidates: DataFrame, idCol: String,
                             bloomShards: Dataset[(Int, Array[Byte])],
                             cuckooShards: Seq[Dataset[(Int, Array[Byte])]],
@@ -152,69 +122,71 @@ object SeenSet {
       }
   }
 
-  def dedupSharded(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                   idCol: String, numShards: Int, blocksPerShard: Int,
-                   numHashes: Int = 5): DataFrame = {
-    import spark.implicits._
-    val shards = buildBloomShards(spark,
-      seen.select(idHash(col(idCol)).as("h")).as[Long], numShards, blocksPerShard, numHashes)
-    val probed = shardedMaybeSeen(spark, candidates, idCol, shards, numShards)
-    val definitelyNew = probed.filter(!_._2).map(_._1).toDF("value")
-    val maybeSeen = probed.filter(_._2).map(_._1).toDF("value")
-    definitelyNew.union(
-      maybeSeen.join(seen.select(col(idCol).cast("string").as("value")), Seq("value"), "left_anti"))
-      .withColumnRenamed("value", idCol)
-  }
-
-  /** Bloom + cuckoo two-tier probe: bloom = last snapshot (immutable),
-    * cuckoo = delta inserts since (mutable, supports delete on rollback).
-    * A key is maybe-seen if either tier says so. */
-  def dedupWithTiers(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                     idCol: String, bloom: BlockedBloom, cuckoo: CuckooFilter): DataFrame = {
-    val h = idHash(col(idCol))
-    val probe = BloomProbe.might(bloom, h) || CuckooProbe.might(cuckoo, h)
-    val definitelyNew = candidates.filter(!probe)
-    val maybeSeen = candidates.filter(probe)
-    definitelyNew.union(maybeSeen.join(seen.select(idCol), Seq(idCol), "left_anti"))
+  /** Exact dedup behind a tiered pre-filter: candidates no tier of `probe`
+    * flags pass straight through; maybe-seen candidates fall to the exact
+    * `left_anti` join against `known`. The probe must cover `known` (no
+    * false negatives); its false positives only cost join work. Both
+    * frames carry one id column; the output keeps the candidates' name.
+    *
+    *  1. the in-heap tiers OR into one codegen column — each filter ships
+    *     once per executor via `addReferenceObj`;
+    *  2. the table-resident shard tiers, when the probe has them, go
+    *     through one cogroup ([[shardedMaybeSeenTiers]]);
+    *  3. the flagged candidates persist once, so the two branches don't
+    *     re-run the candidate plan (and the shuffles feeding it). */
+  def dedup(spark: SparkSession, candidates: DataFrame, known: DataFrame,
+            probe: SeenProbe): DataFrame = {
+    val id = candidates.columns.head
+    val inHeap = probe.filters.map(FilterProbe.might(_, idHash(col(id))))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val flagged = graft.core.CacheScope.persist(probe.shards match {
+      case None => candidates.select(col(id), inHeap.as("maybe"))
+      case Some(t) =>
+        shardedMaybeSeenTiers(spark, candidates, id, t.bloom, t.spills, t.numShards)
+          .toDF(id, "in_shard")
+          .select(col(id), (col("in_shard") || inHeap).as("maybe"))
+    })
+    flagged.filter(!col("maybe")).select(id)
+      .union(flagged.filter(col("maybe")).select(id).join(known.toDF(id), Seq(id), "left_anti"))
   }
 }
 
-/** bloom_might_contain(hash) — codegen'd probe; the filter object ships in
-  * the task binary via `ctx.addReferenceObj` (one deserialize per executor,
-  * not per row). */
-case class BloomMightContain(bloom: BlockedBloom, child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    bloom.mightContain(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftBloom", bloom, classOf[BlockedBloom].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.mightContain($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
-    copy(child = newChild)
-  override def prettyName: String = "bloom_might_contain"
+/** The seen-set pre-filter as a list of tiers; a key is maybe-seen if ANY
+  * tier says so. `filters` are the in-heap tiers (epoch bloom, per-run
+  * cuckoo spills, the forum bloom); `shards` the table-resident ones.
+  * `coveredKeys` is the key count a [[SeenStore]]'s tiers cover. */
+final case class SeenProbe(filters: Seq[MembershipFilter], shards: Option[ShardTiers],
+                           coveredKeys: Long) {
+  def withFilter(f: MembershipFilter): SeenProbe = copy(filters = filters :+ f)
 }
 
-case class CuckooMightContain(filter: CuckooFilter, child: Expression) extends UnaryExpression {
+/** Table-resident tiers: (shard, filterBytes) rows sliced by
+  * `floorMod(hash, numShards)` — the epoch bloom ([[SeenSet.buildBloomShards]])
+  * and one cuckoo table per spilled run ([[SeenSet.buildCuckooShards]]). */
+final case class ShardTiers(bloom: Dataset[(Int, Array[Byte])],
+                            spills: Seq[Dataset[(Int, Array[Byte])]], numShards: Int)
+
+/** `bloom_might_contain(hash)` / `cuckoo_might_contain(hash)` — codegen'd
+  * probe of one filter tier; the filter object ships in the task binary
+  * via `ctx.addReferenceObj` (one deserialize per executor, not per row). */
+case class MightContain(filter: MembershipFilter, child: Expression) extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     filter.mightContain(input.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftCuckoo", filter, classOf[CuckooFilter].getName)
+    val ref = ctx.addReferenceObj("graftFilter", filter, filter.getClass.getName)
     defineCodeGen(ctx, ev, c => s"$ref.mightContain($c)")
   }
-  override protected def withNewChildInternal(newChild: Expression): CuckooMightContain =
+  override protected def withNewChildInternal(newChild: Expression): MightContain =
     copy(child = newChild)
-  override def prettyName: String = "cuckoo_might_contain"
+  override def prettyName: String = filter match {
+    case _: CuckooFilter => "cuckoo_might_contain"
+    case _ => "bloom_might_contain"
+  }
 }
 
-object BloomProbe {
-  def might(bloom: BlockedBloom, hashCol: Column): Column =
-    Bridge.column(BloomMightContain(bloom, Bridge.expression(hashCol)))
-}
-object CuckooProbe {
-  def might(f: CuckooFilter, hashCol: Column): Column =
-    Bridge.column(CuckooMightContain(f, Bridge.expression(hashCol)))
+object FilterProbe {
+  def might(filter: MembershipFilter, hashCol: Column): Column =
+    Bridge.column(MightContain(filter, Bridge.expression(hashCol)))
 }

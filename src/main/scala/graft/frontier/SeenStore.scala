@@ -7,11 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** The loaded two-tier probe: epoch bloom + per-run cuckoo spills. A key is
-  * maybe-seen if ANY tier says so; `coveredKeys` is the total key count the
-  * tiers cover (bloom epoch + spilled runs). */
-final case class SeenProbe(bloom: BlockedBloom, spills: Seq[CuckooFilter], coveredKeys: Long)
-
 /** Persistent two-tier seen-state across crawl runs (T2 at frontier scale;
   * north rule: "partitioned blocked Bloom filter (merged via treeAggregate)
   * plus cuckoo-filter spill").
@@ -45,7 +40,7 @@ final case class SeenProbe(bloom: BlockedBloom, spills: Seq[CuckooFilter], cover
   * falls back to the full-rebuild path (exact), and the next [[commitRun]]
   * heals the store by rolling. Exactness never depends on the filter's
   * freshness: the bloom/spills remain a pre-filter ahead of the exact
-  * anti-join (SeenSet.dedupWithBloom's contract), and the version check
+  * anti-join ([[SeenSet.dedup]]'s contract), and the version check
   * guarantees the pre-filter tier never silently under-covers.
   */
 final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
@@ -53,7 +48,7 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
                       maxSpillRuns: Int = 8,
                       /** >0 → SHARDED epochs: the bloom persists as a
                         * parquet table of (shard, bloomBytes) rows probed
-                        * via cogroup ([[SeenSet.shardedMaybeSeen]]) — the
+                        * via cogroup ([[SeenSet.shardedMaybeSeenTiers]]) — the
                         * 10^10-key mode where one filter (~12.5 GB) fits
                         * neither a task binary nor comfortably one heap.
                         * 0 → the single-filter epoch (default). */
@@ -63,8 +58,7 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   private val shardDir = Paths.get(dir, "url_seen_bloom_shards")
   Files.createDirectories(Paths.get(dir))
 
-  def sharded: Boolean = numShards > 0
-  def shardCount: Int = numShards
+  private def sharded: Boolean = numShards > 0
 
   // -------- url_seen snapshot version (the validation authority) --------
 
@@ -191,46 +185,34 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   def bloomExists: Boolean =
     if (sharded) Files.isDirectory(shardDir) else Files.exists(bloomPath)
 
-  /** Validated meta + covering spill VERSIONS — the common core of both
-    * probe loaders: Some only when the epoch version plus contiguous spills
-    * cover every committed `url_seen` version (no crash gap). */
-  private def validatedSpillVersions(): Option[(Meta, Seq[Int])] =
+  /** Load the probe tiers — None when absent or invalid: the epoch version
+    * plus contiguous spills must cover every committed `url_seen` version
+    * (no crash gap). Callers then use the exact full-rebuild path, and the
+    * next commit rolls the epoch. Single-filter mode loads the epoch bloom
+    * and the spills in heap; sharded mode returns their tables, read
+    * lazily by Spark and probed through one cogroup
+    * ([[SeenSet.shardedMaybeSeenTiers]]), so nothing filter-sized ever
+    * materializes on the driver or in a task binary. */
+  def loadProbe(spark: SparkSession): Option[SeenProbe] =
     for {
       m <- readMeta()
       if bloomExists
-      cur = currentSeenVersion
-      vs = spillVersions
-      if ((m.seenVersion + 1) to cur).forall(vs.contains)
-    } yield (m, vs.filter(_ > m.seenVersion))
-
-  /** Load the two-tier IN-HEAP probe (single-filter mode). None when
-    * invalid/absent (callers use the exact full-rebuild path and the next
-    * commit rolls the epoch) — and always None in sharded mode (use
-    * [[loadShardProbe]]). */
-  def loadProbe(): Option[SeenProbe] =
-    if (sharded) None
-    else validatedSpillVersions().map { case (m, vs) =>
-      val spills = vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v))))
-      SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)),
-        spills, m.insertedKeys + spills.map(_.size).sum)
-    }
-
-  /** Sharded-mode probe: the validated bloom shard TABLE plus one cuckoo
-    * spill shard table per covered run — ALL table-resident, read lazily by
-    * Spark and probed through one cogroup
-    * ([[SeenSet.shardedMaybeSeenTiers]]); nothing filter-sized ever
-    * materializes on the driver or in a task binary. */
-  def loadShardProbe(spark: SparkSession): Option[(Dataset[(Int, Array[Byte])], Seq[Dataset[(Int, Array[Byte])]], Long)] =
-    if (!sharded) None
-    else validatedSpillVersions().map { case (m, vs) =>
-      import spark.implicits._
-      def shardTable(p: Path): Dataset[(Int, Array[Byte])] =
-        spark.read.parquet(p.toString)
-          .select(org.apache.spark.sql.functions.col("shard").cast("int"),
-            org.apache.spark.sql.functions.col("bytes"))
-          .as[(Int, Array[Byte])]
-      (shardTable(shardDir), vs.map(v => shardTable(spillShardDir(v))),
-        m.insertedKeys + vs.map(spillCount).sum)
+      vs = spillVersions.filter(_ > m.seenVersion)
+      if ((m.seenVersion + 1) to currentSeenVersion).forall(vs.contains)
+    } yield {
+      val covered = m.insertedKeys + vs.map(spillCount).sum
+      if (sharded) {
+        import spark.implicits._
+        def shardTable(p: Path): Dataset[(Int, Array[Byte])] =
+          spark.read.parquet(p.toString)
+            .select(org.apache.spark.sql.functions.col("shard").cast("int"),
+              org.apache.spark.sql.functions.col("bytes"))
+            .as[(Int, Array[Byte])]
+        SeenProbe(Nil, Some(ShardTiers(shardTable(shardDir),
+          vs.map(v => shardTable(spillShardDir(v))), numShards)), covered)
+      } else
+        SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)) +:
+          vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v)))), None, covered)
     }
 
   // -------- commit --------

@@ -13,10 +13,16 @@ import graft.core.Ids.mix64
   * dedup stays EXACT; false negatives are impossible).
   */
 
+/** One tier of the seen-set pre-filter: may report a key it never saw,
+  * never misses one it did. */
+trait MembershipFilter extends Serializable {
+  def mightContain(key: Long): Boolean
+}
+
 /** Cache-friendly blocked Bloom filter: 512-bit (8-word) blocks; the first
   * hash selects the block, k bit-positions come from 9-bit slices of a
   * second hash. One cache line per probe. */
-final class BlockedBloom(val numBlocks: Int, val numHashes: Int) extends Serializable {
+final class BlockedBloom(val numBlocks: Int, val numHashes: Int) extends MembershipFilter {
   require(numBlocks > 0 && numHashes >= 1 && numHashes <= 7)
   val words = new Array[Long](numBlocks * 8)
 
@@ -85,7 +91,7 @@ object BlockedBloom {
   * delete, so it serves as the mutable spill/delta tier on top of immutable
   * bloom snapshots: recent inserts live here until the next snapshot rebuild
   * absorbs them into the bloom. */
-final class CuckooFilter(val numBuckets: Int) extends Serializable {
+final class CuckooFilter(val numBuckets: Int) extends MembershipFilter {
   require(numBuckets > 0 && (numBuckets & (numBuckets - 1)) == 0, "numBuckets must be a power of 2")
   private val slots = new Array[Short](numBuckets * 4)
   private val rnd = new java.util.Random(42) // deterministic kick selection

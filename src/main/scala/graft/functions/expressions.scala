@@ -422,9 +422,8 @@ case class LshBucket64(child: Expression, nPlanes: Int) extends UnaryExpression 
 /** fetch_classify(id) → struct<status:int, retried:boolean> — the crawl's
   * per-row result classification as ONE codegen'd expression (run
   * parameters are plan-time constants, not child columns). Powers the
-  * column-native fetch stage (Fetcher.runColumnar), which keeps the
-  * hottest per-row work inside whole-stage codegen with no encoder
-  * round-trip. */
+  * fetch stage (Fetcher.run / runWithState), which keeps the hottest
+  * per-row work inside whole-stage codegen with no encoder round-trip. */
 case class FetchClassify(child: Expression, runId: Int, seed: Long,
                          timeoutMs: Long, conditional: Boolean) extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
@@ -443,7 +442,7 @@ case class FetchClassify(child: Expression, runId: Int, seed: Long,
 }
 
 /** fetch_etag(id) → string — the deterministic synthetic ETag for
-  * (id, runId), as an expression for the columnar fetch paths. */
+  * (id, runId), as an expression for the fetch stage. */
 case class FetchEtag(child: Expression, runId: Int) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
@@ -484,8 +483,8 @@ object GraftFunctions {
     * file_identifiers.py:75-83, simhashbucket:114-116). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Column-native fetch classification (see Fetcher.runColumnar): one
-    * struct-producing codegen expression per row instead of a typed map. */
+  /** Fetch classification (see Fetcher.run): one struct-producing codegen
+    * expression per row instead of a typed map. */
   def fetchClassify(id: Column, runId: Int, seed: Long, timeoutMs: Long,
                     conditional: Boolean): Column =
     Bridge.column(FetchClassify(Bridge.expression(id), runId, seed, timeoutMs, conditional))

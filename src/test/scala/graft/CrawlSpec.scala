@@ -88,20 +88,16 @@ class CrawlSpec extends SparkSpec {
     assert(outB.results.collect().sortBy(_.seq).toSeq ==
       out.results.collect().sortBy(_.seq).toSeq)
 
-    // the columnar opt-in produces the BIT-IDENTICAL crawl (results +
-    // committed etag state) — the knob is a performance re-baseline, never
-    // a semantics change
-    System.setProperty("spark.graft.columnar.fetch", "1")
-    try {
-      val dirC = Files.createTempDirectory("graft-crawl-c").toString
-      val outC = Crawl.run(spark, frontier, cfg, dirC)
-      assert(outC.results.collect().sortBy(_.seq).toSeq ==
-        out.results.collect().sortBy(_.seq).toSeq)
-      val stateA = new graft.snapshot.SnapshotTable(spark, s"$dirB/etag_state")
-        .read().collect().map(_.mkString("|")).sorted.toSeq
-      val stateC = new graft.snapshot.SnapshotTable(spark, s"$dirC/etag_state")
-        .read().collect().map(_.mkString("|")).sorted.toSeq
-      assert(stateC == stateA)
-    } finally System.clearProperty("spark.graft.columnar.fetch")
+    // committed etag state (T2, the conditional-fetch cache): each run's
+    // 200s upsert (id, etag, runId); every other id keeps its prior entry
+    def etagState(d: String) = new graft.snapshot.SnapshotTable(spark, s"$d/etag_state")
+      .read().select("id", "etag", "lastRun").as[(String, String, Int)].collect().sorted.toSeq
+    def upserts(o: Crawl.RunOutput, runId: Int) = o.results.collect()
+      .filter(_.status == 200).map(r => r.id -> (r.etag, runId)).toMap
+    def rows(m: Map[String, (String, Int)]) = m.toSeq.map { case (id, (e, v)) => (id, e, v) }.sorted
+    val state1 = upserts(out, 1)
+    assert(state1.nonEmpty)
+    assert(etagState(dirB) == rows(state1))
+    assert(etagState(dir) == rows(state1 ++ upserts(out2, 2)))
   }
 }

@@ -45,8 +45,11 @@ class PropertySpec extends SparkSpec {
     val prop = Prop.forAllNoShrink(genIds, genIds) { (seenL, candL) =>
       val seen = spark.createDataset(seenL.distinct).toDF("value")
       val cand = spark.createDataset(candL.distinct).toDF("value")
-      val once = graft.frontier.SeenSet.dedupWithBloom(spark, cand, seen, "value", 4096)
-      val twice = graft.frontier.SeenSet.dedupWithBloom(spark, once, seen, "value", 4096)
+      // the no-store probe: one bloom tier rebuilt from the seen set
+      val probe = graft.frontier.SeenProbe(Seq(graft.frontier.SeenSet.buildBloomTree(
+        seen.select(graft.frontier.SeenSet.idHash($"value")).as[Long], 4096)), None, 0L)
+      val once = graft.frontier.SeenSet.dedup(spark, cand, seen, probe)
+      val twice = graft.frontier.SeenSet.dedup(spark, once, seen, probe)
       val a = once.collect().map(_.getString(0)).sorted.toSeq
       val b = twice.collect().map(_.getString(0)).sorted.toSeq
       a == b && a == (candL.toSet -- seenL.toSet).toList.sorted

@@ -1,7 +1,7 @@
 package graft.fetch
 
 import graft.SparkSpec
-import graft.core.{CrawlConfig, FrontierEntry, Ids}
+import graft.core.{CrawlConfig, EtagState, FetchResult, FrontierEntry, Ids, ScheduledFetch}
 import graft.frontier.Frontier
 import graft.scheduler.Politeness
 
@@ -99,48 +99,66 @@ class FetcherSpec extends SparkSpec {
       .forall(_.status != Fetcher.TimeoutStatus))
   }
 
-  test("columnar fetch == typed fetch, row for row (stateless path)") {
+  /** Per-row oracle for the stateless fetch: a blown budget is the timeout
+    * sentinel; otherwise the FIXTURES §4 status draw with the single retry
+    * pass, and the etag on 200s. */
+  private def oracle(s: ScheduledFetch, cfg: CrawlConfig): FetchResult =
+    if (Fetcher.timedOut(s.id, cfg.runId, cfg))
+      FetchResult(s.seq, s.id, s.fetchClass, s.startMs, Fetcher.TimeoutStatus, "",
+        isNew = false, retried = false)
+    else {
+      val st0 = Fetcher.statusFor(s.id, cfg.runId, 0)
+      val (st, retried) =
+        if (st0 == -1) (Fetcher.statusFor(s.id, cfg.runId, 1), true) else (st0, false)
+      FetchResult(s.seq, s.id, s.fetchClass, s.startMs, st,
+        if (st == 200) Fetcher.etagFor(s.id, cfg.runId) else "", isNew = st == 200, retried = retried)
+    }
+
+  test("fetch == statusFor/etagFor/timedOut oracle, row for row (stateless path)") {
     val cfg = CrawlConfig(runId = 3, itemTimeoutMs = 7200000L)
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(4000)), cfg)
-    val typed = Fetcher.run(spark, sched, cfg).collect().sortBy(_.seq)
-    val columnar = Fetcher.runColumnar(spark, sched, cfg).collect().sortBy(_.seq)
-    assert(columnar.toSeq == typed.toSeq)
-    // timeout sentinels present on both (tight budget forces them)
+    val rows = sched.collect().sortBy(_.seq)
+    assert(Fetcher.run(spark, sched, cfg).collect().sortBy(_.seq).toSeq ==
+      rows.map(oracle(_, cfg)).toSeq)
+    // a tight budget forces timeout sentinels
     val tight = cfg.copy(itemTimeoutMs = 100L)
     val t = Fetcher.run(spark, sched, tight).collect().sortBy(_.seq)
-    val c = Fetcher.runColumnar(spark, sched, tight).collect().sortBy(_.seq)
-    assert(c.toSeq == t.toSeq)
-    assert(c.exists(_.status == Fetcher.TimeoutStatus))
+    assert(t.toSeq == rows.map(oracle(_, tight)).toSeq)
+    assert(t.exists(_.status == Fetcher.TimeoutStatus))
   }
 
-  test("columnar conditional fetch == typed conditional fetch (etag-state path)") {
-    import graft.core.EtagState
+  test("conditional fetch == conditionalResult, row for row (etag-state path)") {
     val cfg = CrawlConfig(runId = 4)
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(3000)), cfg)
     // prior state: half the ids carry the CURRENT etag (→ 304 short-circuit),
     // a quarter carry a stale etag (→ real fetch), the rest are absent
-    val ids = sched.collect().map(_.id)
-    val state: Seq[EtagState] = ids.zipWithIndex.collect {
+    val rows = sched.collect().sortBy(_.seq)
+    val state: Seq[EtagState] = rows.map(_.id).zipWithIndex.collect {
       case (id, i) if i % 2 == 0 =>
         EtagState(id, Fetcher.etagFor(id, cfg.runId), lastRun = cfg.runId - 1)
       case (id, i) if i % 4 == 1 =>
         EtagState(id, "W/\"stale\"", lastRun = cfg.runId - 1)
     }.toSeq
-    val stateDs = spark.createDataset(state)
-    val typed = Fetcher.runWithState(spark, sched, cfg, stateDs).collect().sortBy(_.seq)
-    val columnar = Fetcher.runWithStateColumnar(spark, sched, cfg, stateDs).collect().sortBy(_.seq)
-    assert(columnar.toSeq == typed.toSeq)
-    assert(columnar.count(_.status == 304) >= ids.length / 2 - 1)
+    val prior = state.map(s => s.id -> s.etag).toMap
+    val out = Fetcher.runWithState(spark, sched, cfg, spark.createDataset(state))
+      .collect().sortBy(_.seq)
+    assert(out.toSeq == rows.map(s => Fetcher.conditionalResult(s, cfg.runId, prior.get(s.id), cfg)).toSeq)
+    assert(out.count(_.status == 304) >= rows.length / 2 - 1)
   }
 
   test("columnar fetch plan: whole-stage codegen, no encoder round-trip") {
     val cfg = CrawlConfig()
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(500)), cfg)
-    val df = Fetcher.runColumnar(spark, sched, cfg).toDF()
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("DeserializeToObject") && !plan.contains("MapElements"),
-      s"columnar path must not fall back to object mode:\n$plan")
+    val state = spark.createDataset(Seq(EtagState(sched.head().id, "W/\"stale\"", 0)))
+    // both entry points: the stateless stage and the etag-state stage Crawl.run takes
+    Seq("run" -> Fetcher.run(spark, sched, cfg).toDF(),
+        "runWithState" -> Fetcher.runWithState(spark, sched, cfg, state).toDF()).foreach {
+      case (name, df) =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("DeserializeToObject") && !plan.contains("MapElements"),
+          s"$name must not fall back to object mode:\n$plan")
+    }
   }
 }
 

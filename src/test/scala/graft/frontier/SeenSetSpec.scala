@@ -46,51 +46,53 @@ class SeenSetSpec extends SparkSpec {
     assert(keys.drop(4000).forall(f.mightContain), "surviving keys intact")
   }
 
-  test("dedupWithBloom == dedupExact == set model") {
-    val seen = (0 until 3000).map(i => s"id_$i")
-    val candidates = (1500 until 4500).map(i => s"id_$i")
-    val expected = candidates.toSet -- seen.toSet
-    val seenDf = seen.toDF("id")
-    val candDf = candidates.toDF("id")
-    val exact = SeenSet.dedupExact(candDf, seenDf, "id").as[String].collect().toSet
-    val bloomed = SeenSet.dedupWithBloom(spark, candDf, seenDf, "id", 3000)
-      .as[String].collect().toSet
-    assert(exact == expected)
-    assert(bloomed == expected, "bloom path must stay EXACT (fp fall through to anti-join)")
-  }
-
-  test("two-tier (bloom snapshot + cuckoo delta) dedup stays exact") {
-    val snapshotSeen = (0 until 2000).map(i => s"a_$i")
-    val deltaSeen = (0 until 500).map(i => s"b_$i")
-    val allSeen = snapshotSeen ++ deltaSeen
-    val candidates = (1000 until 3000).map(i => s"a_$i") ++ (250 until 750).map(i => s"b_$i")
-    val expected = candidates.toSet -- allSeen.toSet
-
-    val bloom = BlockedBloom.sized(2000)
-    // same hash the probe column computes: xxhash64 — build via Spark to match
-    val hashes = snapshotSeen.toDF("id").select(SeenSet.idHash(col("id"))).as[Long].collect()
-    hashes.foreach(bloom.add)
-    val cuckoo = new CuckooFilter(2048)
-    deltaSeen.toDF("id").select(SeenSet.idHash(col("id"))).as[Long].collect().foreach(cuckoo.add)
-
-    val out = SeenSet.dedupWithTiers(spark, candidates.toDF("id"), allSeen.toDF("id"),
-      "id", bloom, cuckoo).as[String].collect().toSet
-    assert(out == expected)
-  }
-
-  test("sharded probe (cogroup) dedup stays exact, including shards with no seen keys") {
-    import spark.implicits._
-    val seen = (0 until 3000).map(i => s"seen_$i")
-    val candidates = (1500 until 4500).map(i => s"seen_$i") ++ (0 until 800).map(i => s"fresh_$i")
-    val expected = candidates.toSet -- seen.toSet
-    // more shards than distinct seen hash-slices guarantees some EMPTY
-    // shards — their candidates must classify definitely-new, exactly
-    for (numShards <- Seq(4, 64)) {
-      val out = SeenSet.dedupSharded(spark, candidates.toDF("id"), seen.toDF("id"),
-        "id", numShards, blocksPerShard = 128)
+  test("tiered dedup == dedupExact == set model, for every tier mix") {
+    // the seen set: an epoch snapshot, one run's delta, and the forum list
+    val snapshot = (0 until 2000).map(i => s"a_$i")
+    val delta = (0 until 500).map(i => s"b_$i")
+    val forum = (0 until 50).map(i => s"f_$i")
+    val sparse = (0 until 40).map(i => s"s_$i")
+    def hashes(ids: Seq[String]) = ids.toDF("id").select(SeenSet.idHash(col("id"))).as[Long]
+    def bloom(ids: Seq[String]) = {
+      val b = BlockedBloom.sized(ids.size)
+      hashes(ids).collect().foreach(b.add)
+      b
+    }
+    def cuckoo(ids: Seq[String]) = {
+      val c = new CuckooFilter(CuckooFilter.bucketsFor(ids.size))
+      hashes(ids).collect().foreach(h => assert(c.add(h)))
+      c
+    }
+    def shards(bloomIds: Seq[String], spillIds: Seq[Seq[String]], n: Int) = Some(ShardTiers(
+      SeenSet.buildBloomShards(spark, hashes(bloomIds), n, blocksPerShard = 128),
+      spillIds.map(ids => SeenSet.buildCuckooShards(spark, hashes(ids), n,
+        CuckooFilter.bucketsFor(ids.size / n * 5 / 4 + 1))), n))
+    val all = snapshot ++ delta ++ forum
+    val cases = Seq(
+      ("bloom only", all, SeenProbe(Seq(bloom(all)), None, 0L)),
+      ("bloom + cuckoo", all, SeenProbe(Seq(bloom(snapshot ++ forum), cuckoo(delta)), None, 0L)),
+      ("shard bloom, 4 shards", all, SeenProbe(Nil, shards(all, Nil, 4), 0L)),
+      // 40 keys over 64 slices: most shards have no row, and their
+      // candidates must classify definitely new
+      ("shard bloom, 64 shards", sparse, SeenProbe(Nil, shards(sparse, Nil, 64), 0L)),
+      ("shard bloom + shard cuckoo spill", all,
+        SeenProbe(Nil, shards(snapshot ++ forum, Seq(delta), 8), 0L)),
+      ("bloom + cuckoo + forum tier", all,
+        SeenProbe(Seq(bloom(snapshot), cuckoo(delta)), None, 0L).withFilter(bloom(forum))),
+      ("shard tiers + forum tier", all,
+        SeenProbe(Nil, shards(snapshot, Seq(delta), 8), 0L).withFilter(bloom(forum))))
+    assert(SeenSet.buildBloomShards(spark, hashes(sparse), 64, 128).count() < 64,
+      "the 64-shard case must include empty shards")
+    cases.foreach { case (name, seen, probe) =>
+      val candidates = seen.drop(seen.size / 3) ++ (0 until 800).map(i => s"fresh_$i")
+      val expected = candidates.toSet -- seen.toSet
+      val exact = SeenSet.dedupExact(candidates.toDF("id"), seen.toDF("id"), "id")
+        .as[String].collect().toSet
+      val out = SeenSet.dedup(spark, candidates.toDF("id"), seen.toDF("id"), probe)
         .as[String].collect()
-      assert(out.toSet == expected, s"numShards=$numShards")
-      assert(out.length == expected.size, "no duplicate output rows")
+      assert(exact == expected, name)
+      assert(out.toSet == expected, s"$name: false positives must fall through to the anti-join")
+      assert(out.length == expected.size, s"$name: no duplicate output rows")
     }
   }
 

@@ -26,6 +26,10 @@ class SeenStoreSpec extends SparkSpec {
     ()
   }
 
+  /** The loaded in-heap tiers by kind: one epoch bloom, one cuckoo per spill. */
+  private def epochBloom(p: SeenProbe) = p.filters.collect { case b: BlockedBloom => b }.head
+  private def spills(p: SeenProbe) = p.filters.collect { case c: CuckooFilter => c }
+
   test("incremental path == rebuild path across runs; no per-run corpus scan needed") {
     val dir = Files.createTempDirectory("graft_seenstore").toString
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
@@ -97,8 +101,8 @@ class SeenStoreSpec extends SparkSpec {
       Files.readAllBytes(Paths.get(dir, "url_seen_bloom.bin"))),
       "spill commit must leave the multi-GB epoch bloom file untouched")
     // the spill covers the delta (no false negatives through the probe)
-    val probe = store.loadProbe().get
-    assert(delta.forall(h => probe.spills.exists(_.mightContain(h))))
+    val probe = store.loadProbe(spark).get
+    assert(delta.forall(h => spills(probe).exists(_.mightContain(h))))
     assert(probe.coveredKeys == 700)
   }
 
@@ -108,10 +112,10 @@ class SeenStoreSpec extends SparkSpec {
     fakeSeenCommit(dir, 1)
     val h1 = (0 until 400).map(i => Ids.mix64(i.toLong))
     store.commitRun(spark, hashesOf(h1), 400, seenVersion = 1, hashesOf(h1), 400)
-    assert(store.loadProbe().isDefined)
+    assert(store.loadProbe(spark).isDefined)
     // crash: run 2 commits its url_seen snapshot but dies before commitRun
     fakeSeenCommit(dir, 2)
-    assert(store.loadProbe().isEmpty,
+    assert(store.loadProbe(spark).isEmpty,
       "a version gap means the filter under-covers — the probe must refuse to load")
     // run 3 commits; the store heals with a roll from the authoritative corpus
     fakeSeenCommit(dir, 3)
@@ -120,8 +124,8 @@ class SeenStoreSpec extends SparkSpec {
       hashesOf((700 until 900).map(i => Ids.mix64(i.toLong))), 200, seenVersion = 3,
       hashesOf(all), 900)
     assert(rolled && covered == 900)
-    val probe = store.loadProbe().get
-    assert(all.forall(probe.bloom.mightContain), "healed epoch covers the corpus")
+    val probe = store.loadProbe(spark).get
+    assert(all.forall(epochBloom(probe).mightContain), "healed epoch covers the corpus")
   }
 
   test("roll capacity is PERSISTED: a corpus past the constructor default rolls once, then spills") {
@@ -145,9 +149,9 @@ class SeenStoreSpec extends SparkSpec {
       fullCorpusHashes = fail("capacity must come from the persisted meta, not the constructor"),
       fullCount = fail("no corpus count on the spill path"))
     assert(!r3 && n3 == 1400)
-    val probe = store.loadProbe().get
-    assert(all2.forall(probe.bloom.mightContain))
-    assert(h3.forall(h => probe.spills.exists(_.mightContain(h))))
+    val probe = store.loadProbe(spark).get
+    assert(all2.forall(epochBloom(probe).mightContain))
+    assert(h3.forall(h => spills(probe).exists(_.mightContain(h))))
   }
 
   test("sharded epoch mode: table-resident shards + spills dedup exactly like the rebuild path") {
@@ -165,7 +169,9 @@ class SeenStoreSpec extends SparkSpec {
     assert(Files.isDirectory(Paths.get(dir, "url_seen_bloom_shards")))
     assert(!Files.exists(Paths.get(dir, "url_seen_bloom.bin")),
       "sharded mode must not write the single-filter artifact")
-    assert(store.loadProbe().isEmpty, "in-heap probe is not available in sharded mode")
+    val loaded = store.loadProbe(spark).get
+    assert(loaded.filters.isEmpty && loaded.shards.exists(_.numShards == 8),
+      "sharded mode loads table-resident tiers, no in-heap filter")
 
     // run 2: spill commit (O(delta), shard table untouched), then the
     // frontier's sharded dedup must equal the exact rebuild path
@@ -195,7 +201,7 @@ class SeenStoreSpec extends SparkSpec {
 
     // crash gap invalidates the sharded probe too
     fakeSeenCommit(dir, 3)
-    assert(store.loadShardProbe(spark).isEmpty,
+    assert(store.loadProbe(spark).isEmpty,
       "a version gap must invalidate the shard-table probe")
 
     // v3's own commit IS the heal: its spill closes the gap while the
@@ -206,7 +212,7 @@ class SeenStoreSpec extends SparkSpec {
       fullCorpusHashes = fail("spill path must not scan the corpus"),
       fullCount = fail("spill path must not count the corpus"))
     assert(!r3, "committing the missing version's spill heals without rolling")
-    assert(store.loadShardProbe(spark).isDefined)
+    assert(store.loadProbe(spark).isDefined)
     // now simulate a crash BETWEEN the spill table's directory move and its
     // sidecar json (the publish point): the half-written spill must be
     // invisible, so the probe invalidates
@@ -218,14 +224,14 @@ class SeenStoreSpec extends SparkSpec {
       fullCount = fail("spill path must not count the corpus"))
     assert(!r4)
     Files.delete(Paths.get(dir, "url_seen_spill-v000004.json"))
-    assert(store.loadShardProbe(spark).isEmpty,
+    assert(store.loadProbe(spark).isEmpty,
       "a spill table without its sidecar json must read as a version gap")
     // a MALFORMED sidecar (partial write on a non-atomic filesystem) must
     // read as a gap too — silently counting 0 keys would let the bloom
     // overfill past its persisted capacity with no signal
     Files.write(Paths.get(dir, "url_seen_spill-v000004.json"),
       "{\"cou".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(store.loadShardProbe(spark).isEmpty,
+    assert(store.loadProbe(spark).isEmpty,
       "a corrupt sidecar json must read as a version gap, not count 0")
   }
 
@@ -245,8 +251,8 @@ class SeenStoreSpec extends SparkSpec {
     }
     // v1 roll (initial epoch), v2+v3 spill, v4 roll (maxSpillRuns=2 hit), v5 spill
     assert(rolls == 2, s"expected initial + one consolidation roll, got $rolls")
-    val probe = store.loadProbe().get
+    val probe = store.loadProbe(spark).get
     assert(corpus.forall(h =>
-      probe.bloom.mightContain(h) || probe.spills.exists(_.mightContain(h))))
+      epochBloom(probe).mightContain(h) || spills(probe).exists(_.mightContain(h))))
   }
 }
