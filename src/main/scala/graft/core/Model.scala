@@ -68,19 +68,11 @@ final case class CrawlConfig(
     jitterMaxMs: Long = 150,
     shuffleSeed: Long = 42L,
     runId: Int = 0,
-    parallel: Int = 32,
     /** id-prefix shard depth for the snapshot partition layout
       * (config.py:117-119 uses 3 → 16^3 = 4096 shards, right for 10^10
       * rows; small runs shard shallower so the partitioned write doesn't
       * degenerate into thousands of tiny files). */
     prefixLen: Int = 3,
-    /** Scheduler switch: up to this many restricted boundaries, the
-      * (seq, endMs) list broadcasts to executors (~16 B/entry; 4M ≈ 64 MB).
-      * Beyond it the scheduler uses the partition-bucketed boundary join —
-      * O(restricted) shuffle, O(partitions) driver — so a 10^10-id frontier
-      * with a 1-2% restricted share (10^8 boundaries) never materializes on
-      * the driver. */
-    broadcastBoundaryLimit: Long = 4000000L,
     /** T3 per-item wall budget (config.py:160-162's 7,200 s per extension):
       * an item whose fetch work exceeds this becomes a `worker_exception`
       * sentinel row instead of stalling its worker forever

@@ -53,6 +53,8 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
                         * neither a task binary nor comfortably one heap.
                         * 0 → the single-filter epoch (default). */
                       numShards: Int = 0) {
+  import SeenStore.Meta
+
   private val bloomPath = Paths.get(dir, "url_seen_bloom.bin")
   private val metaPath = Paths.get(dir, "url_seen_bloom.json")
   private val shardDir = Paths.get(dir, "url_seen_bloom_shards")
@@ -83,8 +85,6 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   }
 
   // -------- meta: {insertedKeys, capacityKeys, seenVersion} --------
-
-  private final case class Meta(insertedKeys: Long, capacityKeys: Long, seenVersion: Int)
 
   private def readMeta(): Option[Meta] =
     if (!Files.exists(metaPath)) None
@@ -317,4 +317,8 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
       (false, coveredSoFar.getOrElse(0L) + newCount)
     }
   }
+}
+
+object SeenStore {
+  private final case class Meta(insertedKeys: Long, capacityKeys: Long, seenVersion: Int)
 }

@@ -18,14 +18,12 @@ import graft.scheduler.{HostScheduler, Politeness, RobotsRules}
   * (SURVEY §2.10 tier (c): custom `LogicalPlan` + `SparkStrategy` +
   * `SparkPlan`, injected via `SparkSessionExtensions`).
   *
-  * `HostScheduler.schedule` hand-rolls its lane shuffle with
-  * `repartitionAndSortWithinPartitions` — correct, but opaque to Catalyst:
-  * the RDD boundary hides the operator from the planner, so an upstream
-  * stage that is ALREADY hash-partitioned on (host, salt) still pays a full
-  * re-shuffle, and the plan shows a black-box `ExternalRDD`.
-  *
-  * This operator instead DECLARES its needs the way Spark's own
-  * sort-based operators do:
+  * It is the only implementation behind `HostScheduler.schedule`. A lane
+  * walk written against an RDD would hard-code its lane shuffle and hide
+  * the operator from the planner behind a black-box `ExternalRDD`, so an
+  * upstream stage already hash-partitioned on (host, salt) would still pay
+  * a full re-shuffle. This operator instead DECLARES its needs the way
+  * Spark's own sort-based operators do:
   *
   *  - `requiredChildDistribution = ClusteredDistribution(host, salt)`
   *  - `requiredChildOrdering    = (host, salt, priority, id)`
@@ -34,10 +32,9 @@ import graft.scheduler.{HostScheduler, Politeness, RobotsRules}
   * an unprepared child gets exactly one Exchange + in-partition Sort
   * planned for it; a child whose partitioning/ordering already satisfies
   * the contract (e.g. the frontier was bucketed by host upstream) is passed
-  * through with NO new shuffle — the optimization the hand-rolled RDD path
-  * can never express. The walk itself is the same streaming O(1)-state
-  * virtual clock as [[graft.scheduler.HostScheduler.walkLanes]], operating
-  * directly on `InternalRow`s (no encoder round-trip).
+  * through with NO new shuffle. The walk itself is the same streaming
+  * O(1)-state virtual clock as [[graft.scheduler.HostScheduler.walkLanes]],
+  * operating directly on `InternalRow`s (no encoder round-trip).
   */
 object PoliteSchedulePlan {
 

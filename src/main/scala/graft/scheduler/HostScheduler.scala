@@ -77,7 +77,7 @@ object RobotsRules {
   *    every executor once; disallowed URLs are filtered before scheduling
   *    (a dead-letter row class, like the reference's 10 failure logs).
   *  - **per-host priority queue**: all of a host's URLs land in one
-  *    partition (`repartition(xxhash64(host, salt))`), where a single
+  *    partition (the operator's lane exchange on (host, salt)), where a single
   *    virtual-clock walk assigns start times ≥ crawlDelay apart per host —
   *    the priority is the seeded shuffle key, so intra-host order is the
   *    reference's deterministic shuffle order (archive.py:594).
@@ -97,7 +97,7 @@ object HostScheduler {
   val DefaultDelayMs = 600L // request_manager.py:19's 0.6 s floor
 
   /** The lane frame (host, salt, hot, priority, id): robots-filtered,
-    * skew-salted — the shared input of both scheduling paths. */
+    * skew-salted — the input of the lane walk. */
   def laneFrame(spark: SparkSession, frontier: Dataset[FrontierEntry],
                 robots: Seq[RobotsRules], cfg: CrawlConfig,
                 numSalts: Int = 8, saltThreshold: Long = 100000L): org.apache.spark.sql.DataFrame = {
@@ -130,71 +130,22 @@ object HostScheduler {
     * whose URL matches a disallow prefix are dropped (callers wanting the
     * dead-letter set use [[disallowed]]).
     *
-    * PRODUCTION PATH = the declarative operator
-    * ([[graft.plans.PoliteSchedulePlan]]): its lane exchange moves
-    * Tungsten UnsafeRows through the DataFrame shuffle machinery. The RDD
-    * formulation ([[scheduleRdd]]) shuffles Java-serialized Scala tuples —
-    * measured 1.85× slower at the 8-core level of the 16M-id skew
-    * scenario (395k vs 733k URLs/s), purely serialization overhead. */
+    * The lane walk runs as the declarative operator
+    * ([[graft.plans.PoliteSchedulePlan]]): `EnsureRequirements` plans its
+    * lane exchange over Tungsten rows, or elides it when the child is
+    * already lane-partitioned and sorted. */
   def schedule(spark: SparkSession, frontier: Dataset[FrontierEntry],
                robots: Seq[RobotsRules], cfg: CrawlConfig,
                numSalts: Int = 8, saltThreshold: Long = 100000L): Dataset[ScheduledFetch] =
-    scheduleDeclarative(spark, frontier, robots, cfg, numSalts, saltThreshold)
-
-  /** The RDD lane formulation (repartitionAndSortWithinPartitions + the
-    * [[walkLanes]] streaming walk) — kept as the encoder-level reference
-    * implementation the operator is parity-tested against. */
-  def scheduleRdd(spark: SparkSession, frontier: Dataset[FrontierEntry],
-                  robots: Seq[RobotsRules], cfg: CrawlConfig,
-                  numSalts: Int = 8, saltThreshold: Long = 100000L): Dataset[ScheduledFetch] = {
-    import spark.implicits._
-    val bcRobots = spark.sparkContext.broadcast(robots.map(r => r.host -> r).toMap)
-
-    // over-partition the lane shuffle: the key space is per-(host, salt)
-    // LANES (tens to hundreds of keys), and hashing few keys into exactly
-    // `cores` buckets is lumpy — a partition holding 6 hot lanes while
-    // another holds 2 caps the speedup at the straggler. 4× partitions
-    // smooth lane placement; the schedule itself is partition-independent
-    // (pure per-lane function), so only load balance changes.
-    val parts = spark.sessionState.conf.numShufflePartitions * 4
-    val salted = laneFrame(spark, frontier, robots, cfg, numSalts, saltThreshold)
-    // (the single shuffle happens below in repartitionAndSortWithinPartitions:
-    // all URLs of a (host, sub-queue) lane land together — hot hosts spread
-    // over numSalts lanes instead of one — and arrive already sorted)
-
-    // capture cfg locally so the virtual-clock walk uses the SAME config as
-    // the priority keys (durations must follow cfg.shuffleSeed, per the
-    // pure-function-of-(frontier, robots, cfg) contract)
-    val walkCfg = cfg
-    spark.createDataset(salted.as[(String, Int, Boolean, Long, String)]
-      .rdd
-      .map { case (host, salt, hot, prio, id) => ((host, salt, prio, id), hot) }
-      // shuffle-sort, not heap-sort: the sort happens in the shuffle machinery
-      // (spillable), partitioned on the LANE (host, salt) and ordered by the
-      // full composite key, so each lane arrives as one contiguous, ordered
-      // run — no per-partition ArrayBuffer. A 90%-one-host frontier at 10^10
-      // rows previously materialized ~3·10^8 rows in ONE task's heap; now the
-      // biggest lane streams through O(1) walk state.
-      .repartitionAndSortWithinPartitions(new LanePartitioner(parts))
-      .mapPartitions { it => walkLanes(it, bcRobots.value, walkCfg) })
-  }
-
-  /** Partition by lane (host, salt) ONLY — the sort key carries
-    * (priority, id) as the secondary order, giving each lane a contiguous
-    * sorted run within its partition. */
-  private[scheduler] final class LanePartitioner(n: Int) extends org.apache.spark.Partitioner {
-    override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = key match {
-      case (host: String, salt: Int, _, _) =>
-        Math.floorMod(Ids.mix64(Politeness.strHash64(s"$host#$salt", 0x1A7EL)), n.toLong).toInt
-      case other => Math.floorMod(other.hashCode, n)
-    }
-  }
+    graft.plans.PoliteSchedulePlan.schedule(
+      laneFrame(spark, frontier, robots, cfg, numSalts, saltThreshold), robots, cfg)
 
   /** Streaming virtual-clock walk over a lane-contiguous, lane-sorted
     * iterator: carries ONLY (current lane, clock, rank) — O(1) state per
     * task regardless of lane size. Pure; unit-testable off-cluster
-    * (HostSchedulerSpec asserts it never materializes its input). */
+    * (HostSchedulerSpec asserts it never materializes its input). It is
+    * the sequential lane reference PoliteSchedulePlanSpec checks the
+    * operator against. */
   private[graft] def walkLanes(
       it: Iterator[((String, Int, Long, String), Boolean)],
       robotsMap: Map[String, RobotsRules],
@@ -220,18 +171,6 @@ object HostScheduler {
       fetch
     }
   }
-
-  /** Declarative-operator path: the SAME schedule through the custom
-    * `PoliteScheduleNode` / `PoliteScheduleExec` plan
-    * ([[graft.plans.PoliteSchedulePlan]]). Catalyst's `EnsureRequirements`
-    * plans (or ELIDES, when the child is already lane-partitioned and
-    * sorted) the shuffle+sort the RDD path hard-codes — use this form when
-    * the frontier pipeline upstream can provide co-partitioning. */
-  def scheduleDeclarative(spark: SparkSession, frontier: Dataset[FrontierEntry],
-                          robots: Seq[RobotsRules], cfg: CrawlConfig,
-                          numSalts: Int = 8, saltThreshold: Long = 100000L): Dataset[ScheduledFetch] =
-    graft.plans.PoliteSchedulePlan.schedule(
-      laneFrame(spark, frontier, robots, cfg, numSalts, saltThreshold), robots, cfg)
 
   /** Dead-letter set: frontier rows blocked by robots disallow rules. */
   def disallowed(spark: SparkSession, frontier: Dataset[FrontierEntry],

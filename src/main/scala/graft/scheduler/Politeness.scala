@@ -19,17 +19,17 @@ import graft.core.{CrawlConfig, FrontierEntry, Ids, ScheduledFetch}
   *
   * The oracle (`VirtualClockOracle`) defines the schedule as a pure function
   * of (frontier, config): shuffle key, jitter and durations all derive from
-  * seeded 64-bit mixes of the id. The Spark pipeline computes the identical
-  * schedule distributed:
-  *  - global `seq` via range-repartition + per-partition offset indexing
-  *    (a distributed prefix count — no driver collect of data rows);
-  *  - the restricted chain via a per-partition prefix sum with broadcast
-  *    partition offsets (restricted class is O(1-2%) of the frontier,
-  *    download-report-one-week.gp:20-22);
-  *  - normal rows look up their restricted predecessor by binary search in
-  *    the broadcast restricted boundary list (compact: one (seq,end) pair
-  *    per restricted item; for frontiers where even that outgrows the
-  *    driver, the same lookup is expressible as a range bucket join).
+  * seeded 64-bit mixes of the id. The rule is a prefix scan over the
+  * shuffled order, and the Spark pipeline computes it distributed:
+  *  - a deterministic bucket shuffle plus an in-partition sort puts the
+  *    frontier in global seq order, one contiguous seq range per partition;
+  *  - one stats job returns (rows, restricted rows, restricted chain length)
+  *    per partition, and the driver prefix-sums those P triples;
+  *  - one walk per partition starts from its carried-in seq and chain end
+  *    and emits restricted and normal rows in the same pass: the chain
+  *    carry-in IS the end of the last earlier restricted fetch, so a normal
+  *    row needs no lookup.
+  * Driver state is O(partitions) at any frontier size.
   * Physical parallelism changes wall-clock throughput, never the schedule.
   */
 object Politeness {
@@ -66,7 +66,11 @@ object Politeness {
     * dataset disappears. Shuffle rows carry only (key, id, host, forums) —
     * the url never travels. Per-partition in-memory sort is safe at any
     * frontier size because partition count scales with the data
-    * (10^10 rows / 2^17 buckets ≈ 76k rows per partition). */
+    * (10^10 rows / 2^17 buckets ≈ 76k rows per partition).
+    *
+    * Submits exactly one job (the stats collect, which also fills the
+    * persisted sorted partitions); the returned Dataset walks those cached
+    * partitions without shuffling the frontier again. */
   def schedule(spark: SparkSession, frontier: Dataset[FrontierEntry], cfg: CrawlConfig,
                numPartitions: Int = 0): Dataset[ScheduledFetch] = {
     import spark.implicits._
@@ -98,134 +102,40 @@ object Politeness {
     // iterative crawl loops release it at round end.
     graft.core.CacheScope.persistRdd(sorted, StorageLevel.MEMORY_AND_DISK_SER)
 
-    // 2. global seq = per-partition offset (prefix count over P counters,
-    //    driver-side; P values, never data rows) + local index
-    val counts = sorted.mapPartitions(it => Iterator.single(it.size)).collect()
-    val seqOffsets = counts.scanLeft(0L)(_ + _)
-    val bcSeqOff = spark.sparkContext.broadcast(seqOffsets)
-    def seqd = sorted.mapPartitionsWithIndex { (pid, it) =>
-      var s = bcSeqOff.value(pid)
-      it.map { t => val r = (s, t); s += 1; r }
-    }
-
-    // 3. restricted chain: prefix-sum of (spacing + duration) in seq order —
-    //    restricted rows are already partition-ordered by seq
-    val restricted = seqd.filter(_._2._4)
-    val partStats = restricted
-      .mapPartitions { it =>
-        var sum = 0L; var n = 0L
-        it.foreach { case (_, (_, id, _, _)) =>
-          sum += spacingMs(id, cfg) + durationMs(id, cfg); n += 1
-        }
-        Iterator.single((sum, n))
+    // 2. one stats job: per partition (rows, restricted rows, restricted
+    //    chain length = sum of spacing + duration over its restricted rows);
+    //    the driver prefix-sums the P triples (never data rows)
+    val stats = sorted.mapPartitions { it =>
+      var n = 0L; var r = 0L; var chain = 0L
+      it.foreach { case (_, id, _, forums) =>
+        n += 1
+        if (forums) { r += 1; chain += spacingMs(id, cfg) + durationMs(id, cfg) }
       }
-      .collect()
-    val restrictedCount = partStats.map(_._2).sum
-    val chainOffsets = partStats.map(_._1).scanLeft(0L)(_ + _)
-    val bcChainOff = spark.sparkContext.broadcast(chainOffsets)
-    val restrictedSched = spark.createDataset(
-      restricted.mapPartitionsWithIndex { (pid, it) =>
-        var cum = bcChainOff.value(pid)
-        it.map { case (seq, (_, id, host, _)) =>
-          val start = cum + spacingMs(id, cfg)
-          cum += spacingMs(id, cfg) + durationMs(id, cfg)
-          ScheduledFetch(seq, id, host, "restricted", start)
-        }
-      })
-    graft.core.CacheScope.persist(restrictedSched, StorageLevel.MEMORY_AND_DISK)
+      Iterator.single((n, r, chain))
+    }.collect()
+    val carryIn = stats.scanLeft((0L, 0L, 0L)) { case ((n, r, c), (dn, dr, dc)) => (n + dn, r + dr, c + dc) }
+    val bcCarry = spark.sparkContext.broadcast(carryIn)
 
-    // 4. normal rows: start = end-of-last-restricted-before(seq) + spacing.
-    //    Two physical plans, same semantics:
-    //    (a) broadcast path — one (seq, endMs) pair per restricted item
-    //        (1-2% of the frontier, download-report-one-week.gp:20-22),
-    //        broadcast once, binary-searched per row;
-    //    (b) bucketed-boundary path beyond cfg.broadcastBoundaryLimit —
-    //        boundaries shuffle to the partition whose seq-range contains
-    //        them (seqd partitions ARE contiguous seq ranges), carry-ins
-    //        flow as O(partitions) per-partition maxima; the normal rows
-    //        never move. Driver cost O(partitions), network O(restricted).
-    val normalSched =
-      if (restrictedCount <= cfg.broadcastBoundaryLimit) {
-        val boundaries: Array[(Long, Long)] = restrictedSched
-          .map(s => (s.seq, s.startMs + durationMs(s.id, cfg)))
-          .collect().sortBy(_._1)
-        val bcBounds = spark.sparkContext.broadcast(boundaries)
-        spark.createDataset(
-          seqd.filter(!_._2._4).mapPartitions { it =>
-            val bounds = bcBounds.value
-            it.map { case (seq, (_, id, host, _)) =>
-              // binary search: last restricted with rseq < seq
-              var lo = 0; var hi = bounds.length - 1; var ans = -1
-              while (lo <= hi) {
-                val mid = (lo + hi) >>> 1
-                if (bounds(mid)._1 < seq) { ans = mid; lo = mid + 1 } else hi = mid - 1
-              }
-              val start = if (ans < 0) 0L else bounds(ans)._2 + spacingMs(id, cfg)
-              ScheduledFetch(seq, id, host, "normal", start)
-            }
-          })
-      } else {
-        // (b) bucketed boundaries. Target partition of a boundary = the seqd
-        // partition whose [offset, nextOffset) range holds its seq.
-        val offsets = seqOffsets // length P+1, ascending
-        def pidOf(seq: Long): Int = {
-          var lo = 0; var hi = offsets.length - 2; var ans = 0
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (offsets(mid) <= seq) { ans = mid; lo = mid + 1 } else hi = mid - 1
-          }
-          ans
-        }
-        val identityPart = new org.apache.spark.Partitioner {
-          override def numPartitions: Int = p
-          override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-        }
-        val byPid = restrictedSched
-          .map(s => (s.seq, s.startMs + durationMs(s.id, cfg)))
-          .rdd
-          .map(b => (pidOf(b._1), b))
-          .partitionBy(identityPart)
-          .mapPartitions(it => {
-            val arr = it.map(_._2).toArray
-            java.util.Arrays.sort(arr, Ordering.by((b: (Long, Long)) => b._1))
-            arr.iterator
-          }, preservesPartitioning = true)
-        // carry-in per partition: the latest boundary in any EARLIER
-        // partition — O(P) values through the driver, never data rows
-        val maxPer: Array[(Long, Long)] = byPid
-          .mapPartitionsWithIndex { (pid, it) =>
-            var last: (Long, Long) = null
-            it.foreach(b => last = b)
-            Iterator.single((pid, last))
-          }
-          .collect().sortBy(_._1).map(_._2)
-        val carryIn = new Array[(Long, Long)](p)
-        var running: (Long, Long) = null
-        var i = 0
-        while (i < p) {
-          carryIn(i) = running
-          if (maxPer(i) != null) running = maxPer(i)
-          i += 1
-        }
-        val bcCarry = spark.sparkContext.broadcast(carryIn)
-        spark.createDataset(
-          seqd.zipPartitions(byPid, preservesPartitioning = true) { (rows, bIt) =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val bounds = bIt.toArray // sorted by seq within this partition
-            var idx = -1
-            var lastEnd = Option(bcCarry.value(pid)).map(_._2).getOrElse(-1L)
-            rows.flatMap { case (seq, (_, id, host, forums)) =>
-              while (idx + 1 < bounds.length && bounds(idx + 1)._1 < seq) {
-                idx += 1; lastEnd = bounds(idx)._2
-              }
-              if (forums) None
-              else Some(ScheduledFetch(seq, id, host, "normal",
-                if (lastEnd < 0) 0L else lastEnd + spacingMs(id, cfg)))
-            }
-          })
+    // 3. one walk in seq order from each partition's carry-in (seq, end of
+    //    the last earlier restricted fetch, any restricted before): a
+    //    restricted row starts one spacing after the chain end and extends
+    //    it; a normal row starts one spacing after it, or at 0 before the
+    //    first restricted row
+    spark.createDataset(sorted.mapPartitionsWithIndex { (pid, it) =>
+      val (seq0, restrictedBefore, chain0) = bcCarry.value(pid)
+      var seq = seq0; var chainEnd = chain0; var anyRestricted = restrictedBefore > 0
+      it.map { case (_, id, host, forums) =>
+        val spacing = spacingMs(id, cfg)
+        val fetch =
+          if (forums) {
+            val start = chainEnd + spacing
+            chainEnd = start + durationMs(id, cfg); anyRestricted = true
+            ScheduledFetch(seq, id, host, "restricted", start)
+          } else ScheduledFetch(seq, id, host, "normal", if (anyRestricted) chainEnd + spacing else 0L)
+        seq += 1
+        fetch
       }
-
-    normalSched.union(restrictedSched)
+    })
   }
 }
 

@@ -11,10 +11,10 @@ import graft.core.{CrawlConfig, FrontierEntry, Ids, ScheduledFetch}
 import graft.scheduler.{HostScheduler, RobotsRules}
 
 /** The custom whole-operator tier: PoliteScheduleNode → Strategy →
-  * PoliteScheduleExec. Result parity with the RDD path, and the planner
-  * contract: EnsureRequirements INSERTS the lane shuffle+sort for an
-  * unprepared child and ELIDES it for a child that already satisfies the
-  * declared distribution/ordering. */
+  * PoliteScheduleExec. Result parity with the sequential lane walk, and
+  * the planner contract: EnsureRequirements INSERTS the lane shuffle+sort
+  * for an unprepared child and ELIDES it for a child that already
+  * satisfies the declared distribution/ordering. */
 class PoliteSchedulePlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,20 +42,27 @@ class PoliteSchedulePlanSpec extends SparkSpec {
     n
   }
 
-  test("result parity: declarative operator == RDD reference path, robots honored") {
+  test("result parity: declarative operator == sequential lane walk, robots honored") {
     val robots = Seq(RobotsRules("hot.example.com", 900L, Nil))
     val cfg = CrawlConfig(shuffleSeed = 99L)
-    val a = HostScheduler.scheduleRdd(spark, frontier(3000), robots, cfg,
+    // the oracle: the lane frame collected, sorted locally into lane order
+    // and walked by the sequential reference
+    val lanes = HostScheduler.laneFrame(spark, frontier(3000), robots, cfg,
       numSalts = 4, saltThreshold = 500L)
-      .collect().map(s => (s.host, s.id, s.seq, s.startMs, s.fetchClass)).sortBy(t => (t._1, t._2))
-    val b = HostScheduler.scheduleDeclarative(spark, frontier(3000), robots, cfg,
+      .as[(String, Int, Boolean, Long, String)].collect()
+      .map { case (host, salt, hot, prio, id) => ((host, salt, prio, id), hot) }
+      .sortBy(_._1)
+    assert(lanes.exists(_._2), "the hot host must be salted")
+    val expected = HostScheduler.walkLanes(lanes.iterator, robots.map(r => r.host -> r).toMap, cfg)
+      .toSeq.sortBy(s => (s.host, s.id))
+    val got = HostScheduler.schedule(spark, frontier(3000), robots, cfg,
       numSalts = 4, saltThreshold = 500L)
-      .collect().map(s => (s.host, s.id, s.seq, s.startMs, s.fetchClass)).sortBy(t => (t._1, t._2))
-    assert(a.toSeq == b.toSeq)
+      .collect().toSeq.sortBy(s => (s.host, s.id))
+    assert(got == expected)
   }
 
   test("planner inserts the lane shuffle + sort for an unprepared child") {
-    val ds = HostScheduler.scheduleDeclarative(spark, frontier(2000), Nil,
+    val ds = HostScheduler.schedule(spark, frontier(2000), Nil,
       CrawlConfig(), numSalts = 4, saltThreshold = 500L)
     ds.collect()
     assert(countWhere(ds)(_.isInstanceOf[PoliteScheduleExec]) == 1,
@@ -83,7 +90,7 @@ class PoliteSchedulePlanSpec extends SparkSpec {
       s"operator must not add a second sort:\n${ds.queryExecution.executedPlan}")
     // parity with the from-scratch declarative run (schedule is a pure
     // per-lane function — partition placement must not matter)
-    val fresh = HostScheduler.scheduleDeclarative(spark, frontier(2000), Nil, cfg,
+    val fresh = HostScheduler.schedule(spark, frontier(2000), Nil, cfg,
       numSalts = 4, saltThreshold = 500L)
       .collect().map(s => (s.host, s.id, s.startMs)).sortBy(t => (t._1, t._2)).toSeq
     val pre = ds.collect().map(s => (s.host, s.id, s.startMs)).sortBy(t => (t._1, t._2)).toSeq

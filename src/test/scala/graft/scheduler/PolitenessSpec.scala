@@ -37,31 +37,81 @@ class PolitenessSpec extends SparkSpec {
     assert(a == b, "parallelism must change throughput, never the schedule")
   }
 
-  test("bucketed-boundary fallback == oracle (broadcast limit forced to 0)") {
-    // the beyond-driver path: boundaries shuffle to their seq-range
-    // partition instead of broadcasting; must be bit-identical to the oracle
-    val frontier = mkFrontier(2000, 0.05)
-    val cfg = CrawlConfig(broadcastBoundaryLimit = 0L)
+  /** Distributed schedule of an n-row frontier at a restricted share, on
+    * `parts` partitions (0 = the session default), against the oracle. */
+  private def assertOracle(n: Int, share: Double, parts: Int, seed: Long): Unit = {
+    val frontier = mkFrontier(n, share, seed)
+    val cfg = CrawlConfig()
     val oracle = VirtualClockOracle.schedule(frontier, cfg)
-    val pipeline = Politeness.schedule(spark, spark.createDataset(frontier), cfg)
+    val pipeline = Politeness.schedule(spark, spark.createDataset(frontier), cfg, numPartitions = parts)
       .collect().sortBy(_.seq)
-    assert(pipeline.toSeq == oracle.toSeq)
+    assert(pipeline.toSeq == oracle, s"n=$n share=$share partitions=$parts")
   }
 
-  test("bucketed-boundary fallback == oracle at a 50% restricted share") {
-    // stress the fallback where restricted rows dominate: many boundaries
-    // per partition AND partitions with none (carry-in must skip them)
-    val frontier = mkFrontier(1500, 0.5, seed = 9L)
-    val cfg = CrawlConfig(broadcastBoundaryLimit = 0L)
-    val oracle = VirtualClockOracle.schedule(frontier, cfg)
-    val pipeline = Politeness.schedule(spark, spark.createDataset(frontier), cfg, numPartitions = 16)
-      .collect().sortBy(_.seq)
-    assert(pipeline.toSeq == oracle.toSeq)
-    // and the two physical plans agree with each other
-    val broadcastPlan = Politeness.schedule(spark, spark.createDataset(frontier),
-      cfg.copy(broadcastBoundaryLimit = Long.MaxValue), numPartitions = 16)
-      .collect().sortBy(_.seq)
-    assert(broadcastPlan.toSeq == pipeline.toSeq)
+  test("distributed schedule == oracle at a 5% restricted share") {
+    assertOracle(2000, 0.05, 0, seed = 1L)
+  }
+
+  test("distributed schedule == oracle at a 50% restricted share") {
+    // many restricted rows per partition: the chain carry-in crosses every
+    // partition boundary
+    assertOracle(1500, 0.5, 16, seed = 9L)
+  }
+
+  test("distributed schedule == oracle with no, all, or sparse restricted rows") {
+    assertOracle(700, 0.0, 8, seed = 9L)  // no restricted row anywhere: every start is 0
+    assertOracle(700, 1.0, 8, seed = 9L)  // one unbroken restricted chain across partitions
+    assertOracle(0, 0.05, 4, seed = 9L)   // empty frontier
+    assertOracle(5, 0.5, 64, seed = 9L)   // most partitions empty; carries skip them
+  }
+
+  test("schedule submits one job; consuming it re-shuffles nothing") {
+    val frontier = spark.createDataset(mkFrontier(1500, 0.1, seed = 5L))
+    val group = "politeness-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def ours(props: java.util.Properties) =
+        props != null && props.getProperty("spark.jobGroup.id") == group
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (ours(js.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties)) { stages.incrementAndGet(); groupStages.add(ss.stageInfo.stageId) }
+      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (groupStages.contains(sc.stageInfo.stageId) && sc.stageInfo.taskMetrics != null) {
+          val m = sc.stageInfo.taskMetrics
+          shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+        }
+    }
+    // listener delivery is async: wait until the counters are stable
+    def settle(): Unit = {
+      var last = (jobs.get(), stages.get(), shuffleBytes.get()); var stable = 0
+      while (stable < 4) {
+        Thread.sleep(100)
+        val now = (jobs.get(), stages.get(), shuffleBytes.get())
+        if (now == last) stable += 1 else { last = now; stable = 0 }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "politeness schedule")
+    try {
+      graft.core.CacheScope.withScope {
+        val sched = Politeness.schedule(spark, frontier, CrawlConfig(), numPartitions = 8)
+        settle()
+        assert(jobs.get() == 1, s"schedule must submit exactly one job (the stats collect), saw ${jobs.get()}")
+        jobs.set(0); stages.set(0); shuffleBytes.set(0L); groupStages.clear()
+        assert(sched.collect().length == 1500)
+        settle()
+        assert(jobs.get() == 1 && stages.get() == 1,
+          s"consuming the schedule must run one stage, saw ${jobs.get()} jobs / ${stages.get()} stages")
+        assert(shuffleBytes.get() == 0L, s"consuming the schedule shuffled ${shuffleBytes.get()} bytes")
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("politeness invariant: restricted fetches spaced >= budget in virtual time") {
