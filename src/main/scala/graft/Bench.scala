@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * plus the north-rule crawl metrics — URLs scheduled+fetched/sec at two
   * parallelism levels (N and 4N cores on the same input; the sandbox proxy
   * for two cluster sizes) and the derived scaling efficiency. Also refreshes
-  * `BENCH.md` with the same numbers.
+  * `BENCH.md` with the same numbers, above its hand-maintained archive.
   *
   * Hygiene (round-3): one untimed warmup pass over the whole catalog before
   * timing (JIT/codegen warmup no longer lands on whichever query runs
@@ -153,7 +153,7 @@ object Bench {
       case (name, sec, None) => f"| $name | $sec%.3f |"
       case (name, _, Some(err)) => s"| $name | ERR: ${err.take(60)} |"
     }.mkString("\n|")
-    val md =
+    val head =
       f"""# BENCH — crawl throughput + scaling evidence
          |
          |Everything above the "hand-maintained" rule is REGENERATED from the run that
@@ -201,144 +201,25 @@ object Bench {
          ||---|---|
          |$queryRows%s
          |
-         |---
-         |
-         |## Hand-maintained archive
-         |
-         |NOT regenerated by Bench — each entry is labeled with the round it was
-         |measured in and the command that reproduces it.
-         |
-         |### Frontier-size sweep — round 2 (median-of-3 per level) + round-3 full runs
-         |Reproduce: `sbt "runMain graft.bench.ScalingMain 2 8 <ids>"`.
-         |
-         || frontier ids | eff (median) | eff (best) | notes |
-         ||---|---|---|---|
-         || 8M | 0.654 | 0.715 | r2; constant driver/session costs not amortized (≥21× rule below) |
-         || 16M | 0.82-0.90 | 0.79-0.87 | r2; parallel work ≥21× the ~6 s serial floor |
-         || 24M | 0.793 | 0.854 | r2; longer 2-core legs see more GC/page-cache churn (±15%% VM noise band) |
-         || 12M | 0.84 / 0.74 | — | r3 interleaved-pair methodology, two full runs on identical code — at 12M one stalled 8-core leg moves the median |
-         || 16M | 0.81 | 0.93 (pair max) | r3 interleaved pairs; per-level med-best spreads 1-4%% → the default size |
-         |
-         |Sizing rule: the serial floor (session init, broadcast build, O(P) driver
-         |collects, manifest commits) is ~5-8 s; ≥0.8 efficiency needs the parallel
-         |work at N cores ≥21× that, i.e. ≥12M ids for the 2→8 pair (the default).
-         |Peak throughput ~300k-350k URLs/s at 8-16 cores; reference baseline for the
-         |same nightly work: ~2-5 extensions/s, politeness-bound (BASELINE.md).
-         |
-         |### Core-pair sweep — round 5 (bounding the SMT knee empirically)
-         |Reproduce: `SPARK_GRAFT_SCALE_ITERS=5 ... graft.bench.ScalingMain 4 16 16000000`.
-         |
-         || pair | URLs/s (N) | URLs/s (4N) | eff (pair median) | per-pair band |
-         ||---|---|---|---|---|
-         || 2→8 (official, r5, 7 pairs, -Xms fix) | 109,462 | 406,602 | 0.926 | 0.884–1.086 |
-         || 4→16 (r5, 5 pairs) | 191,751 | 480,778 | 0.559 | 0.511–0.757 |
-         |
-         |The 4→16 midpoint lands well below the raw-CPU 4→16 ceiling (~0.90 measured
-         |round 1): 16 threads deliver only 1.41× the 8-thread rate on the full crawl
-         |job, so the knee where the BOX (SMT contention + memory bandwidth on the
-         |shuffle/scan path) rather than the engine caps scaling sits at ~8 cores.
-         |This is the empirical justification for the 2→8 official pair: both levels
-         |stay on the engine side of the knee. Per-leg GC deltas for the slow 16-core
-         |legs are flat (machine noise, not collector behavior) — same signature as
-         |the round-5 main-pair outliers.
-         |
-         |### Headline-variance root cause — FOUND, round 5
-         |
-         |Across rounds 3-5 exactly one interleaved pair per run read ~0.52-0.64 while
-         |the rest sat at 0.76-0.98 (r3 min 0.523, r4 min 0.529, r5 run-2 min 0.635).
-         |The per-leg `[scaling-leg]` GC instrumentation added this round attributed
-         |it: the FIRST full-size leg in each fresh JVM paid a heap-expansion GC storm
-         |(-Xmx48g with no -Xms: 10.2 s of GC on a ~50 s 8-core wall = 20%%, where
-         |steady legs pay 1.5-3 s), and since the two legs of the first pair expand
-         |the heap asymmetrically, that pair always read low. Fix: pre-size the heap
-         |(-Xms = -Xmx, build.sbt + the bench launcher). Before/after on the same
-         |code, same day: three -Xmx-only runs measured medians 0.851 / 0.772 / 0.796
-         |(21-pair pooled median 0.796; first-pair 8-core GC 10 s); the -Xms run
-         |measured **0.926 with min pair 0.884** and first-pair 8-core GC 3.4 s — the
-         |outlier signature is gone. Residual spread is shared-VM drift: the same
-         |8-core leg swings 287k-415k URLs/s across a morning, which the interleaved
-         |pair median absorbs.
-         |
-         |### Degraded-VM control runs — round 5, same code as their header runs
-         |
-         |The shared VM intermittently degrades; two full Bench invocations that
-         |landed in such windows are archived as noise-floor controls (each header
-         |run keeps the quiet-box number). Signatures, so a sub-0.8 reading can be
-         |attributed to the host and not the engine:
-         |
-         |1. **Contended host (2026-08-17)**: uniform ~3.7× inflation across the
-         |   whole query sweep (92.7 s vs ~25 s), 2-core legs 369-1367 s with one
-         |   leg burning 477 s of GC against a pre-sized 24 GB heap, ~7%% host CPU
-         |   steal, pair values [1.745, 0.672, 0.758, 0.743, 0.795, 0.470, 0.703]
-         |   → median 0.743. A 1.745 pair is physically impossible and 0.470 shows
-         |   lost wall with flat GC — both mark the VM.
-         |2. **Bandwidth-throttled window (2026-08-18)**: every 8-core leg held to
-         |   131-241k URLs/s (healthy band 287-415k) while the 2-core legs matched
-         |   the healthy runs exactly (69-85k) — so all pairs read coherently low
-         |   ([0.722, 0.641, 0.509, 0.837, 0.709, 0.780, 0.597] → 0.709) with a
-         |   uniform ~2.3× query-sweep inflation. Direct measurements inside the
-         |   window: memcpy bandwidth 0.9 GB/s single-thread / 4.4 GB/s at 8
-         |   threads (10-30× below a healthy x86 VM), kernel page-zeroing at
-         |   ~175 MB/s (a 24 GB AlwaysPreTouch took 2m17s wall / 37 min sys),
-         |   host CPU steal <1%%, while a cache-resident raw-CPU probe (pure
-         |   integer loop, no memory traffic) still scaled at 0.884 — i.e. the
-         |   box's MEMORY system is throttled, CPUs are fine. That squeezes
-         |   exactly the bandwidth-bound parts — the 4N level of the crawl job
-         |   and ParallelGC pause times (observed 18-23 s legs vs 3 s steady) —
-         |   which no within-run pairing can cancel. The later same-day run
-         |   (header) straddled the window's end: pairs 2-4 read 0.52-0.76,
-         |   pairs 5-7 read 0.82-1.09 as the throttle lifted.
-         |
-         |Both controls ran the identical binary, input, and methodology as their
-         |quiet-box headers (0.923-0.926). Operationally: rerun Bench when the
-         |sweep total inflates uniformly vs BENCH.md's table, there are impossible
-         |(>1.0) or GC-flat-lost-wall pairs, or the 4N level is uniformly capped
-         |with an unchanged N level.
-         |
-         |### Skew scenario (SURVEY §7.4 hard-part 4) — measured round 4, interleaved pairs
-         |Reproduce: `sbt "runMain graft.bench.SkewScalingMain 2 8 16000000"`.
-         |
-         |90%% of 16M frontier ids on ONE host, numSalts=32, both levels on the
-         |IDENTICAL fixed-partition plan (strong scaling, not a partitioning change),
-         |through the PoliteScheduleExec operator path (streaming O(1) lane walk,
-         |UnsafeRow lane exchange). Round 4 moved this scenario onto the SAME
-         |methodology as the main pair — 5 interleaved pairs, fresh session per leg,
-         |untimed in-session pilot, within-pair order alternated across iterations,
-         |median of per-pair efficiencies: 2 cores 229,437 URLs/s → 8 cores 747,435
-         |URLs/s, **efficiency 0.843** (level-medians 0.814, per-pair values
-         |[0.748, 0.900, 0.789, 0.905, 0.843]) — the ≥0.8 criterion now holds for
-         |the skew scenario too. Round 3's 0.754 was measured with the round-2 shape
-         |(all N-core iterations in one session, then all 4N): the fixed ordering let
-         |session-warmth asymmetry land on one level, exactly the artifact the
-         |interleaved methodology removes. The salted sub-queues spread the hot host
-         |across lanes: 8 cores deliver 3.26× the 2-core rate on a 90%%-one-host
-         |corpus (unsalted, the hot host would serialize on one lane). Historical
-         |variants (round 3, level-median shape): 64 fixed partitions 253,759 →
-         |638,143 (worse at 8 cores; 32 kept); the RDD tuple-shuffle formulation
-         |163,750 → 395,703 — Java serialization costs the 8-core level 1.85×,
-         |which is WHY the operator path (Tungsten rows) is the production default.
-         |
-         |### Column-native fetch classifier — measured round 4, now the only fetch path
-         |Reproduce: `sbt "runMain graft.bench.ScalingMain 2 8 16000000"`.
-         |
-         |The fetch stage is one codegen expression path (`Fetcher.run` /
-         |`runWithState`, `FetchClassify`/`FetchEtag` expressions) with no encoder
-         |round-trip; FetcherSpec checks it row for row against per-row oracles
-         |(`Fetcher.conditionalResult`, `statusFor`/`etagFor`/`timedOut`). Round 4
-         |measured it against the typed map it replaced. In ISOLATION the columnar
-         |form was 2.8× faster when its consumer is also columnar (8M-row stage,
-         |8 cores: typed 1.46 s with SerializeFromObject vs columnar 0.52 s; with a
-         |TYPED consumer the gain inverts to −12%% — the deserialization just
-         |moves). On the FULL crawl job the difference vanished into the VM noise
-         |band (columnar pair run: 110,084 → 369,000 URLs/s, eff 0.809 with one
-         |stalled pair at 0.510; typed: 106,928 → 385,877, eff 0.885) because fetch
-         |classification is a minor share of the end-to-end wall (schedule walk,
-         |dedup, and snapshot commits dominate). The typed map and its opt-in knob
-         |were deleted: one implementation per stage, and the knob only protected a
-         |published number, not a result.
          |""".stripMargin
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.md"), md)
+    val path = java.nio.file.Paths.get("BENCH.md")
+    val existing =
+      if (java.nio.file.Files.exists(path)) Some(java.nio.file.Files.readString(path)) else None
+    java.nio.file.Files.writeString(path, spliceBenchMd(head, existing))
     ()
+  }
+
+  /** The regenerated `head` followed by the hand-maintained archive of the
+    * `existing` BENCH.md — from the `---` rule before its
+    * `## Hand-maintained archive` heading to the end, byte for byte. `head`
+    * alone when there is no file or it has no archive. */
+  private[graft] def spliceBenchMd(head: String, existing: Option[String]): String = {
+    val archive = existing.flatMap { md =>
+      val heading = md.indexOf("\n## Hand-maintained archive")
+      val rule = if (heading < 0) -1 else md.lastIndexOf("\n---\n", heading)
+      if (rule < 0) None else Some(md.substring(rule + 1))
+    }
+    head + archive.getOrElse("")
   }
 
   /** (best − median) / median of a level's throughput — the per-level noise

@@ -48,23 +48,6 @@ object Scaling {
     try f(s) finally s.stop()
   }
 
-  /** Run the full crawl job (frontier build → dedup → schedule → fetch →
-    * snapshot commits) at a given core count in a dedicated session, with a
-    * pilot run first so JIT/codegen warmup is excluded from the measured
-    * window (both levels treated identically). Snapshot tables land on
-    * tmpfs — the sandbox's single virtio disk would otherwise serialize all
-    * write I/O and measure the disk, not the engine. Median-of-3 by default
-    * (SPARK_GRAFT_SCALE_ITERS overrides). */
-  def runAll(cores: Int, numIds: Int, seed: Long = 42L): Runs =
-    withSession(cores, s"graft-scaling-$cores") { spark =>
-      runOn(spark, cores, math.max(numIds / 8, 100000), seed + 1) // warmup pilot
-      val iterations = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "3").toInt
-      Runs(cores, (1 to iterations).map(i => runOn(spark, cores, numIds, seed + 100 * i)))
-    }
-
-  def run(cores: Int, numIds: Int, seed: Long = 42L): Result =
-    runAll(cores, numIds, seed).median
-
   /** One N/4N iteration pair, measured back-to-back. */
   final case class ScalePair(rN: Result, r4N: Result) {
     def eff: Double = efficiency(rN, r4N)
@@ -136,6 +119,9 @@ object Scaling {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** One full crawl job (frontier build → dedup → schedule → fetch →
+    * snapshot commits). Snapshot tables land on tmpfs, so a single disk
+    * does not serialize the write I/O and the leg measures the engine. */
   private def runOn(spark: SparkSession, cores: Int, numIds: Int, seed: Long): Result = {
     import spark.implicits._
     val cfg = CrawlConfig(runId = 1, shuffleSeed = seed, prefixLen = 1)
@@ -195,24 +181,16 @@ object Scaling {
     * must not destroy scaling. The measured job is the multi-host path
     * (HostScheduler: robots broadcast, per-host virtual clocks, salted
     * sub-queues splitting the hot host over `numSalts` lanes) + fetch +
-    * metrics; without salting the hot host serializes on one task. */
-  def runSkewAll(cores: Int, numIds: Int, seed: Long = 42L, numSalts: Int = 32): Runs = {
-    val spark = newSkewSession(cores)
-    try {
-      runSkewOn(spark, cores, math.max(numIds / 8, 100000), seed + 1, numSalts) // warmup
-      val iterations = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "3").toInt
-      Runs(cores, (1 to iterations).map(i => runSkewOn(spark, cores, numIds, seed + 100 * i, numSalts)))
-    } finally spark.stop()
-  }
-
-  /** Interleaved-pair skew measurement — the SAME methodology as the main
-    * pair ([[runInterleaved]]): fresh session per leg, untimed in-session
-    * pilot, within-pair order alternated across iterations, efficiency
-    * aggregated as the median of per-pair values. The round-3 skew number
-    * (0.754) was still measured with the round-2 shape (all N-core
-    * iterations in one session, then all 4N) that the main pair abandoned
-    * for printing physically impossible values; the two scenarios must be
-    * measured the same way to be comparable. */
+    * metrics; without salting the hot host serializes on one task.
+    *
+    * Measured as interleaved pairs — the SAME methodology as the main pair
+    * ([[runInterleaved]]): fresh session per leg, untimed in-session pilot,
+    * within-pair order alternated across iterations, efficiency aggregated
+    * as the median of per-pair values. The round-3 skew number (0.754) was
+    * still measured with the round-2 shape (all N-core iterations in one
+    * session, then all 4N) that the main pair abandoned for printing
+    * physically impossible values; the two scenarios must be measured the
+    * same way to be comparable. */
   def runSkewInterleaved(n: Int, n4: Int, numIds: Int, seed: Long = 42L,
                          numSalts: Int = 32): Seq[ScalePair] = {
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "7").toInt

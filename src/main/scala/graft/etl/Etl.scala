@@ -62,7 +62,8 @@ object Etl {
   /** Apply a batch of upserts into a snapshot table: MERGE = union old+new,
     * keep newest per key (last-wins), sort within partitions by PK before
     * the write (O6). Returns the committed version. Idempotent: re-applying
-    * the same batch converges (T6). */
+    * the same batch converges (T6). A null version sorts last, so it never
+    * replaces a row that has one. */
   def mergeUpsert(spark: SparkSession, table: SnapshotTable, updates: DataFrame,
                   keyCols: Seq[String], versionCol: String,
                   updatesUniqueByKey: Boolean = false): Int = {

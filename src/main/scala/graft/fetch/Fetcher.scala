@@ -123,7 +123,8 @@ object Fetcher {
   }
 
   /** State-driven fetch stage: schedule left-joined with the prior
-    * etag-state table (J14 — both sides hash-partition on id, the
+    * etags (`Crawl.run` passes the `url_seen` rows whose last 200 came
+    * from an earlier run; J14 — both sides hash-partition on id, the
     * reference's etag side-cache lookup archive.py:194-237 as a distributed
     * join). [[conditionalResult]] expressed as columns: prior-etag hit →
     * 304 short-circuit, else the classify struct with the 304→200 remap

@@ -1,10 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
-import graft.core.{CrawlConfig, Ids}
-import graft.frontier.Frontier
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
+
+import graft.core.{CacheScope, CrawlConfig, Ids}
+import graft.frontier.{Frontier, SeenSet, SeenStore}
 import graft.scheduler.VirtualClockOracle
+import graft.snapshot.SnapshotTable
 
 class CrawlSpec extends SparkSpec {
   import spark.implicits._
@@ -88,10 +93,14 @@ class CrawlSpec extends SparkSpec {
     assert(outB.results.collect().sortBy(_.seq).toSeq ==
       out.results.collect().sortBy(_.seq).toSeq)
 
-    // committed etag state (T2, the conditional-fetch cache): each run's
-    // 200s upsert (id, etag, runId); every other id keeps its prior entry
-    def etagState(d: String) = new graft.snapshot.SnapshotTable(spark, s"$d/etag_state")
-      .read().select("id", "etag", "lastRun").as[(String, String, Int)].collect().sorted.toSeq
+    // committed per-id state in url_seen (T2, the conditional-fetch
+    // cache): each run's 200s upsert (id, etag, runId); every other id
+    // keeps its prior entry, and an id without a 200 yet has null etag and
+    // lastRun
+    def state(d: String) = new graft.snapshot.SnapshotTable(spark, s"$d/url_seen")
+      .read().select("id", "etag", "lastRun").as[(String, Option[String], Option[Int])]
+      .collect().toSeq
+    def etagState(d: String) = state(d).collect { case (id, Some(e), Some(v)) => (id, e, v) }.sorted
     def upserts(o: Crawl.RunOutput, runId: Int) = o.results.collect()
       .filter(_.status == 200).map(r => r.id -> (r.etag, runId)).toMap
     def rows(m: Map[String, (String, Int)]) = m.toSeq.map { case (id, (e, v)) => (id, e, v) }.sorted
@@ -99,5 +108,97 @@ class CrawlSpec extends SparkSpec {
     assert(state1.nonEmpty)
     assert(etagState(dirB) == rows(state1))
     assert(etagState(dir) == rows(state1 ++ upserts(out2, 2)))
+    val stateRows = state(dir)
+    assert(stateRows.size == seen2.size && stateRows.map(_._1).toSet == seen2,
+      "one state row per id ever crawled")
+    assert(stateRows.forall { case (_, e, v) => e.isDefined == v.isDefined })
+    // no second per-id table beside it
+    assert(!Files.exists(Paths.get(dir, "etag_state")))
+  }
+
+  /** One crawl round as `CrawlMain` runs it: round r lists ids [0, 300r)
+    * and every 40th of them as forum ids; `commitStore = false` stops it
+    * before the seen store's commit. */
+  private def round(dir: String, runId: Int, commitStore: Boolean = true): Unit =
+    CacheScope.withScope {
+      val listed = (0 until 300 * runId).map(i => Ids.syntheticId(i.toLong))
+      val known =
+        if (new SnapshotTable(spark, s"$dir/url_seen").currentVersion.isDefined)
+          Crawl.seenIds(spark, dir).as[String]
+        else spark.emptyDataset[String]
+      val store = new SeenStore(dir, expectedKeys = 1 << 16)
+      val frontier = Frontier.buildWorklist(spark, known,
+        spark.createDataset(listed.indices.by(40).map(listed)), spark.createDataset(listed),
+        maxNew = 1000, runId = runId, store = Some(store))
+      val out = Crawl.run(spark, frontier, CrawlConfig(runId = runId), dir)
+      def hashes(ids: org.apache.spark.sql.DataFrame) =
+        ids.select(SeenSet.idHash(col("id")).as("h")).as[Long]
+      if (commitStore)
+        store.commitRun(spark, hashes(out.results.toDF()), out.results.count(),
+          seenVersion = out.seenVersion,
+          fullCorpusHashes = hashes(Crawl.seenIds(spark, dir)),
+          fullCount = Crawl.seenIds(spark, dir).count())
+      ()
+    }
+
+  /** Every path under `root`, parents before children. */
+  private def tree(root: Path): Seq[Path] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
+
+  private def deleteTree(root: Path): Unit = tree(root).reverse.foreach(Files.delete)
+
+  test("resume from every commit point: a crashed round re-runs to the uninterrupted snapshots") {
+    val base = Files.createTempDirectory("graft-crawl-resume")
+    round(base.resolve("r1").toString, 1)
+    // a copy of the round-1 tree; its manifests name their data
+    // directories by absolute path, so every copy reads round 1's data
+    // from r1 and writes round 2's under its own tree
+    def fresh(name: String): String = {
+      val (from, to) = (base.resolve("r1"), base.resolve(name))
+      tree(from).foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+      to.toString
+    }
+    def snapshots(dir: String) = (
+      new SnapshotTable(spark, s"$dir/fetch_results").read()
+        .select("seq", "id", "status", "etag", "isNew", "retried", "prefix", "run_id")
+        .as[(Long, String, Int, String, Boolean, Boolean, String, Int)].collect().sorted.toSeq,
+      new SnapshotTable(spark, s"$dir/url_seen").read()
+        .as[(String, Option[String], Option[Int])].collect().sorted.toSeq)
+
+    val clean = fresh("clean")
+    round(clean, 2)
+    val expected = snapshots(clean)
+    assert(expected._1.exists(_._3 == 304) && expected._1.exists(_._3 == 200))
+
+    // (a) crash after the results commit: round 2's url_seen commit and the
+    // seen-store commit never happened
+    val afterResults = fresh("after-results")
+    round(afterResults, 2, commitStore = false)
+    val seenDir = Paths.get(afterResults, "url_seen")
+    Files.delete(seenDir.resolve("manifests").resolve("v000002.json"))
+    deleteTree(seenDir.resolve("data").resolve("v000002"))
+    // (b) crash after the url_seen commit: the seen-store commit never
+    // happened, and the re-run reads round 2's own committed state
+    val afterSeen = fresh("after-seen")
+    round(afterSeen, 2, commitStore = false)
+
+    Seq(afterResults, afterSeen).foreach { dir =>
+      round(dir, 2)
+      val got = snapshots(dir)
+      // the first differing rows, not two whole tables, on failure
+      def same[T](table: String, a: Seq[T], b: Seq[T]): Unit =
+        if (a != b) fail(s"$dir: latest $table differs, e.g. ${a.diff(b).take(3)} vs ${b.diff(a).take(3)}")
+      same("fetch_results", got._1, expected._1)
+      same("url_seen", got._2, expected._2)
+      val probe = new SeenStore(dir, expectedKeys = 1 << 16).loadProbe(spark)
+      assert(probe.isDefined, s"$dir: the seen store must cover every url_seen version")
+      val seenHashes = Crawl.seenIds(spark, dir)
+        .select(SeenSet.idHash(col("id"))).as[Long].collect()
+      assert(seenHashes.forall(h => probe.get.filters.exists(_.mightContain(h))),
+        s"$dir: the probe must flag every url_seen id")
+    }
+    deleteTree(base)
   }
 }

@@ -322,8 +322,8 @@ class PropertySpec extends SparkSpec {
           val c = lines(l.line - 1).charAt(l.colPos - 1)
           (c == '\'' || c == '"') &&
             // and the literal body follows immediately after the quote
-            src.replace("\n", " ").indexOf(
-              c + l.text.replace("\n", " ") + c) >= 0
+            src.replace("\n", "\u0000").indexOf(
+              c + l.text.replace("\n", "\u0000") + c) >= 0
         }
       }
     }
