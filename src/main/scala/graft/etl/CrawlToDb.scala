@@ -63,13 +63,16 @@ object CrawlToDb {
       .withColumn("crawl_date", lit(crawlDateOf(runId)))
   }
 
-  /** Commit run `runId`'s archive generation (the tar append). */
+  /** Commit run `runId`'s archive generation (the tar append) once: a re-run
+    * of a round whose generation is committed returns that version and
+    * writes nothing (the rows are a pure function of the run's results). */
   def commitRunArchive(spark: SparkSession, tableDir: String,
-                       results: Dataset[FetchResult], runId: Int): Int =
-    archiveTable(spark, tableDir).commit(
-      archiveRowsFromRun(spark, results, runId),
-      partitionBy = Seq("crawl_date"),
-      metrics = Map("run_id" -> runId.toString))
+                       results: Dataset[FetchResult], runId: Int): Int = {
+    val t = archiveTable(spark, tableDir)
+    t.versions.reverse.find(v => t.metricsOf(v).get("run_id").contains(runId.toString))
+      .getOrElse(t.commit(archiveRowsFromRun(spark, results, runId),
+        partitionBy = Seq("crawl_date"), metrics = Map("run_id" -> runId.toString)))
+  }
 
   /** One committed generation, with `crawl_date` back as the STRING the
     * engine's lexicographic date windows compare on (partition-column type

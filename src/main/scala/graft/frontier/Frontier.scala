@@ -3,7 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{FrontierEntry, Ids}
+import graft.core.{CacheScope, FrontierEntry, Ids}
 
 /** Frontier construction — the reference's work-list algebra
   * (crawler:203-215): known = archive-scan ∪ forum-conf; discovered =
@@ -78,6 +78,10 @@ object Frontier {
   /** Work-list build (crawler:203-215 + archive.py:589-592):
     * known ∪ (discovered ⟕anti known, limit maxNew), forums-flagged.
     *
+    * `known` = `(existing, false) ∪ (forumIds, true)` grouped by id with
+    * `max(forums)`, persisted once: the forum tier, the exact anti-join and
+    * the work-list read its cached rows, and so does the schedule's pass.
+    *
     * The anti-join runs behind a tiered pre-filter ([[SeenSet.dedup]]).
     * With `store = Some(SeenStore)` the tiers are the PERSISTED epoch bloom
     * and per-run cuckoo spills — no per-run full scan of the seen corpus
@@ -98,44 +102,32 @@ object Frontier {
                     nHosts: Int = 16,
                     store: Option[SeenStore] = None): Dataset[FrontierEntry] = {
     import spark.implicits._
-    val known = existing.union(forumIds).distinct()
-    def hashes(ids: Dataset[String]) = ids.toDF("value").select(SeenSet.idHash(col("value"))).as[Long]
+    def flagged(ids: Dataset[_], forums: Boolean) = ids.toDF("id").withColumn("forums", lit(forums))
+    def hashes(ids: DataFrame) = ids.select(SeenSet.idHash(col("id"))).as[Long]
+    // scope-registered persists: the crawl loop unpersists them at round
+    // end (CacheScope.withScope), so iterative crawls don't leak cached rounds
+    val known = CacheScope.persist(flagged(existing, forums = false).union(flagged(forumIds, forums = true))
+      .groupBy("id").agg(max("forums").as("forums")))
     val probe = store.flatMap(_.loadProbe(spark)) match {
       case Some(p) =>
         // forum list = config-file lines (archive.py:634-639), a few
         // thousand rows: its own in-heap tier, sized to the list
-        val forumHashes = hashes(forumIds).collect()
+        val forumHashes = hashes(known.filter(col("forums"))).collect()
         val forumBloom = BlockedBloom.sized(forumHashes.length)
         forumHashes.foreach(forumBloom.add)
         p.withFilter(forumBloom)
       case None =>
         SeenProbe(Seq(SeenSet.buildBloomTree(hashes(known), expectedKeys = 1 << 20)), None, 0L)
     }
-    val dedup = SeenSet.dedup(spark, discovered.distinct().toDF("value"), known.toDF("value"), probe)
-    // scope-registered persist: the crawl loop unpersists it at round end
-    // (CacheScope.withScope), so iterative crawls don't leak cached rounds
-    val freshAll = graft.core.CacheScope.persist(dedup)
-    // deterministic cap (discover.py:66-73). A global sort+limit with
-    // k ≈ |fresh| funnels everything through one CollectLimit partition —
-    // bypass it when the cap isn't binding (the common case), so the cap
-    // costs one count() instead of a global top-k.
-    val fresh: Dataset[String] =
-      if (freshAll.count() <= maxNew) freshAll.as[String]
-      else freshAll.orderBy("value").limit(maxNew).as[String]
-    // distinct: a duplicated forum id would duplicate its frontier row
-    // through the flag join (set semantics, crawler:204)
-    val forumsSet = forumIds.distinct().toDF("fid")
-    // known is distinct by construction; fresh is distinct AND anti-joined
-    // against known → the union is already a set. No distinct = one fewer
-    // full shuffle of the frontier.
-    // No broadcast hint on the forums flag join: small forum sets broadcast
-    // via AQE on their own; large ones must shuffle — a forced broadcast
-    // serializes the driver on hash-table build (Amdahl at bench scale,
-    // OOM risk at 10^10 scale).
-    known.union(fresh).toDF("id")
-      .join(forumsSet, col("id") === col("fid"), "left")
-      .select(col("id"), col("fid").isNotNull.as("forums"))
-      .as[(String, Boolean)]
+    val freshAll = CacheScope.persist(
+      SeenSet.dedup(spark, discovered.distinct().toDF("id"), known.select("id"), probe))
+    // deterministic cap (discover.py:66-73). A global sort+limit funnels
+    // everything through one partition, so it runs only when the cap binds;
+    // otherwise the cap costs one count().
+    val fresh = if (freshAll.count() <= maxNew) freshAll else freshAll.orderBy("id").limit(maxNew)
+    // known is a set; fresh is a set anti-joined against known, which holds
+    // every forum id, so its rows are not forum ids and the union is a set
+    known.union(flagged(fresh, forums = false)).as[(String, Boolean)]
       .map { case (id, forums) =>
         val url = urlFor(id, nHosts)
         FrontierEntry(id, url, hostOf(url), forums, runId)

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * No Iceberg runtime resolves offline, so snapshot semantics are built by
   * hand on Parquet + a versioned JSON manifest with an atomic rename commit:
   *  - every commit writes data files under `data/v{N}/` then publishes
-  *    `manifests/v{N}.json` (tmp + ATOMIC_MOVE) naming its data directory,
-  *    parent version, row count, and a metrics map (per-partition lineage);
+  *    `manifests/v{N}.json` (tmp + ATOMIC_MOVE) naming its data directory
+  *    relative to the table's base (so the table can move), parent version,
+  *    row count, and a metrics map (per-partition lineage);
   *  - readers resolve HEAD = max published manifest → uncommitted/partial
   *    data directories are invisible (crash safety);
   *  - time travel = read any older manifest; resume-from-checkpoint = open
@@ -60,7 +61,7 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
              observed: Seq[Column] = Nil): Int = {
     val parent = currentVersion.getOrElse(0)
     val v = parent + 1
-    val dataDir = base.resolve(f"data/v$v%06d")
+    val dataDir = f"data/v$v%06d"
     // a plain partitioned write opens one file per (input partition ×
     // partition value): 8 × 16 = 128 files for a night's results. A
     // rebalance exchange on the partition columns lets AQE size the write
@@ -79,7 +80,7 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
     val observedInput = input.observe(obs, count(lit(1)).as("rows"), observed: _*)
     val writer = observedInput.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dataDir.toString)
+      .parquet(base.resolve(dataDir).toString)
     val stats = obs.get
     val rowCount = stats("rows").asInstanceOf[Long]
     val allMetrics = metrics ++ (stats - "rows").map { case (k, w) => k -> String.valueOf(w) }
@@ -89,7 +90,7 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       }
       val m = allMetrics.map { case (k, w) => s""""${esc(k)}":"${esc(w)}"""" }.mkString(",")
-      s"""{"version":$v,"parent":$parent,"dataDir":"${esc(dataDir.toString)}",
+      s"""{"version":$v,"parent":$parent,"dataDir":"${esc(dataDir)}",
          |"rowCount":$rowCount,"partitionBy":[${partitionBy.map(p => s""""${esc(p)}"""").mkString(",")}],
          |"metrics":{$m}}""".stripMargin
     }
@@ -113,11 +114,12 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
       case _ => Set.empty
     }
 
+  /** Version `v`'s data directory; older manifests name it by absolute path. */
   private def dataDirOf(v: Int): String = {
     val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
     val m = """"dataDir":"(.*?)"""".r.findFirstMatchIn(json)
       .getOrElse(throw new IllegalStateException(s"bad manifest v$v"))
-    m.group(1).replace("\\\\", "\\").replace("\\\"", "\"")
+    base.resolve(m.group(1).replace("\\\\", "\\").replace("\\\"", "\"")).toString
   }
 
   /** Read a snapshot (latest by default; any version for time travel). */

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.col
 
 import graft.core.{CacheScope, CrawlConfig, Ids}
+import graft.etl.CrawlToDb
 import graft.frontier.{Frontier, SeenSet, SeenStore}
 import graft.scheduler.VirtualClockOracle
 import graft.snapshot.SnapshotTable
@@ -15,7 +16,7 @@ class CrawlSpec extends SparkSpec {
   import spark.implicits._
 
   test("end-to-end run: order parity, seen-set exactness, snapshot resume") {
-    val dir = Files.createTempDirectory("graft-crawl").toString
+    val dir = tempDir("graft-crawl")
     val cfg = CrawlConfig(runId = 1)
 
     // frontier from the three reference sources (crawler:203-215)
@@ -88,7 +89,7 @@ class CrawlSpec extends SparkSpec {
 
     // determinism / idempotent re-run (reference's converging re-runs):
     // rerunning run 1 into a fresh dir produces the identical result set
-    val dirB = Files.createTempDirectory("graft-crawl-b").toString
+    val dirB = tempDir("graft-crawl-b")
     val outB = Crawl.run(spark, frontier, cfg, dirB)
     assert(outB.results.collect().sortBy(_.seq).toSeq ==
       out.results.collect().sortBy(_.seq).toSeq)
@@ -116,10 +117,12 @@ class CrawlSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "etag_state")))
   }
 
-  /** One crawl round as `CrawlMain` runs it: round r lists ids [0, 300r)
-    * and every 40th of them as forum ids; `commitStore = false` stops it
-    * before the seen store's commit. */
-  private def round(dir: String, runId: Int, commitStore: Boolean = true): Unit =
+  /** One crawl round as `CrawlMain` runs it, plus the archive commit that
+    * follows it in a nightly crawl: round r lists ids [0, 300r) and every
+    * 40th of them as forum ids. `commitStore = false` stops it before the
+    * seen store's commit, `commitArchive = false` before the archive's. */
+  private def round(dir: String, runId: Int, commitStore: Boolean = true,
+                    commitArchive: Boolean = true): Unit =
     CacheScope.withScope {
       val listed = (0 until 300 * runId).map(i => Ids.syntheticId(i.toLong))
       val known =
@@ -133,11 +136,13 @@ class CrawlSpec extends SparkSpec {
       val out = Crawl.run(spark, frontier, CrawlConfig(runId = runId), dir)
       def hashes(ids: org.apache.spark.sql.DataFrame) =
         ids.select(SeenSet.idHash(col("id")).as("h")).as[Long]
-      if (commitStore)
+      if (commitStore) {
         store.commitRun(spark, hashes(out.results.toDF()), out.results.count(),
           seenVersion = out.seenVersion,
           fullCorpusHashes = hashes(Crawl.seenIds(spark, dir)),
           fullCount = Crawl.seenIds(spark, dir).count())
+        if (commitArchive) CrawlToDb.commitRunArchive(spark, dir, out.results, runId)
+      }
       ()
     }
 
@@ -150,48 +155,56 @@ class CrawlSpec extends SparkSpec {
   private def deleteTree(root: Path): Unit = tree(root).reverse.foreach(Files.delete)
 
   test("resume from every commit point: a crashed round re-runs to the uninterrupted snapshots") {
-    val base = Files.createTempDirectory("graft-crawl-resume")
-    round(base.resolve("r1").toString, 1)
-    // a copy of the round-1 tree; its manifests name their data
-    // directories by absolute path, so every copy reads round 1's data
-    // from r1 and writes round 2's under its own tree
-    def fresh(name: String): String = {
-      val (from, to) = (base.resolve("r1"), base.resolve(name))
-      tree(from).foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
-      to.toString
+    val base = Paths.get(tempDir("graft-crawl-resume"))
+    val r1 = base.resolve("r1")
+    round(r1.toString, 1)
+    // copies of the round-1 tree; r1 is deleted before round 2 runs, so
+    // every copy reads round 1's snapshots from its own tree
+    val names = Seq("clean", "after-results", "after-seen", "after-store", "after-archive")
+    names.foreach { name =>
+      val to = base.resolve(name)
+      tree(r1).foreach(p => Files.copy(p, to.resolve(r1.relativize(p).toString)))
     }
+    deleteTree(r1)
+    val Seq(clean, afterResults, afterSeen, afterStore, afterArchive) = names.map(base.resolve(_).toString)
     def snapshots(dir: String) = (
       new SnapshotTable(spark, s"$dir/fetch_results").read()
         .select("seq", "id", "status", "etag", "isNew", "retried", "prefix", "run_id")
         .as[(Long, String, Int, String, Boolean, Boolean, String, Int)].collect().sorted.toSeq,
       new SnapshotTable(spark, s"$dir/url_seen").read()
-        .as[(String, Option[String], Option[Int])].collect().sorted.toSeq)
+        .as[(String, Option[String], Option[Int])].collect().sorted.toSeq,
+      CrawlToDb.fullArchive(spark, dir)
+        .select("doc_id", "text", "source", "crawl_date")
+        .as[(Long, String, String, String)].collect().sorted.toSeq)
 
-    val clean = fresh("clean")
     round(clean, 2)
     val expected = snapshots(clean)
     assert(expected._1.exists(_._3 == 304) && expected._1.exists(_._3 == 200))
+    assert(expected._3.map(_._4).distinct.size == 2, "one archive generation per round")
 
-    // (a) crash after the results commit: round 2's url_seen commit and the
-    // seen-store commit never happened
-    val afterResults = fresh("after-results")
+    // (a) crash after the results commit: round 2's url_seen commit, the
+    // seen-store commit and the archive commit never happened
     round(afterResults, 2, commitStore = false)
     val seenDir = Paths.get(afterResults, "url_seen")
     Files.delete(seenDir.resolve("manifests").resolve("v000002.json"))
     deleteTree(seenDir.resolve("data").resolve("v000002"))
-    // (b) crash after the url_seen commit: the seen-store commit never
-    // happened, and the re-run reads round 2's own committed state
-    val afterSeen = fresh("after-seen")
+    // (b) crash after the url_seen commit: the re-run reads round 2's own
+    // committed state
     round(afterSeen, 2, commitStore = false)
+    // (c) crash after the seen-store commit, before the archive commit
+    round(afterStore, 2, commitArchive = false)
+    // (d) a re-run after the round's last commit, the archive's
+    round(afterArchive, 2)
 
-    Seq(afterResults, afterSeen).foreach { dir =>
+    Seq(afterResults, afterSeen, afterStore, afterArchive).foreach { dir =>
       round(dir, 2)
       val got = snapshots(dir)
       // the first differing rows, not two whole tables, on failure
       def same[T](table: String, a: Seq[T], b: Seq[T]): Unit =
-        if (a != b) fail(s"$dir: latest $table differs, e.g. ${a.diff(b).take(3)} vs ${b.diff(a).take(3)}")
-      same("fetch_results", got._1, expected._1)
-      same("url_seen", got._2, expected._2)
+        if (a != b) fail(s"$dir: $table differs, e.g. ${a.diff(b).take(3)} vs ${b.diff(a).take(3)}")
+      same("latest fetch_results", got._1, expected._1)
+      same("latest url_seen", got._2, expected._2)
+      same("full crawl archive", got._3, expected._3)
       val probe = new SeenStore(dir, expectedKeys = 1 << 16).loadProbe(spark)
       assert(probe.isDefined, s"$dir: the seen store must cover every url_seen version")
       val seenHashes = Crawl.seenIds(spark, dir)
@@ -199,6 +212,5 @@ class CrawlSpec extends SparkSpec {
       assert(seenHashes.forall(h => probe.get.filters.exists(_.mightContain(h))),
         s"$dir: the probe must flag every url_seen id")
     }
-    deleteTree(base)
   }
 }

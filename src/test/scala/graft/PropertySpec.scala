@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.core.{CrawlConfig, FrontierEntry, Ids}
-import graft.frontier.{BlockedBloom, CuckooFilter, Frontier}
+import graft.frontier.{BlockedBloom, CuckooFilter, Frontier, SeenSet, SeenStore}
 import graft.functions.ExprImpl
 import graft.scheduler.{Politeness, VirtualClockOracle}
 import graft.text.Mincer
@@ -24,20 +27,58 @@ class PropertySpec extends SparkSpec {
   private val genIds: Gen[List[String]] =
     Gen.resize(60, Gen.listOf(Gen.chooseNum(0L, 300L).map(Ids.syntheticId(_))))
 
-  test("frontier algebra == Set model (crawler:203-215 semantics)") {
+  /** The built frontier against the Set model: known = existing ∪ forum;
+    * the new ids are the first `maxNew` of discovered − known in sorted
+    * order; `forums` is true exactly for listed forum ids. The forum list
+    * repeats an id and shares ids with `existing` and `discovered`; with
+    * `bindCap` the cap is half the new ids. */
+  private def frontierMatchesModel(existing: List[String], forum0: List[String],
+                                   discovered: List[String], bindCap: Boolean,
+                                   store: Option[SeenStore] = None): Boolean = {
     import spark.implicits._
-    val prop = Prop.forAllNoShrink(genIds, genIds, genIds) { (existing, forum, discovered) =>
-      val frontier = Frontier.buildWorklist(spark,
-        spark.createDataset(existing), spark.createDataset(forum),
-        spark.createDataset(discovered), maxNew = Int.MaxValue, runId = 1)
-        .collect()
-      val model = existing.toSet ++ forum.toSet ++ discovered.toSet
-      val forumsModel = forum.toSet
-      frontier.map(_.id).toSet == model &&
-        frontier.length == model.size && // no duplicate rows
-        frontier.forall(e => e.forums == forumsModel.contains(e.id))
+    val forum = forum0 ++ forum0.take(1) ++ existing.take(2) ++ discovered.take(2)
+    val known = existing.toSet ++ forum
+    val newIds = (discovered.toSet -- known).toList.sorted
+    val maxNew = if (bindCap) newIds.size / 2 else Int.MaxValue
+    val frontier = Frontier.buildWorklist(spark, spark.createDataset(existing),
+      spark.createDataset(forum), spark.createDataset(discovered), maxNew, runId = 1, store = store)
+      .collect()
+    val model = known ++ newIds.take(maxNew)
+    frontier.map(_.id).toSet == model &&
+      frontier.length == model.size && // no duplicate rows
+      frontier.forall(e => e.forums == forum.contains(e.id))
+  }
+
+  test("frontier algebra == Set model (crawler:203-215 semantics)") {
+    val prop = Prop.forAllNoShrink(genIds, genIds, genIds, Gen.oneOf(false, true)) {
+      (existing, forum, discovered, bindCap) => frontierMatchesModel(existing, forum, discovered, bindCap)
     }
     check(prop, tests = 8) // Spark round-trips are expensive; 8 random triples
+  }
+
+  test("frontier algebra == Set model behind a seen store with one spill") {
+    import spark.implicits._
+    def hashes(ids: List[String]) =
+      spark.createDataset(ids).select(SeenSet.idHash(col("value"))).as[Long]
+    val prop = Prop.forAllNoShrink(genIds, genIds, genIds, Gen.oneOf(false, true)) {
+      (existing, forum, discovered, bindCap) =>
+        // the store covers `existing`: an epoch over its first half, a spill
+        // over the rest, each against a url_seen version (the store checks
+        // the manifest listing only)
+        val dir = tempDir("graft-prop-store")
+        val store = new SeenStore(dir, expectedKeys = 1 << 12)
+        val (epoch, spill) = existing.distinct.splitAt(existing.distinct.size / 2)
+        val manifests = Paths.get(dir, "url_seen", "manifests")
+        Files.createDirectories(manifests)
+        Seq(1, 2).foreach(v => Files.write(manifests.resolve(f"v$v%06d.json"), "{}".getBytes("UTF-8")))
+        store.commitRun(spark, hashes(epoch), epoch.size, seenVersion = 1, hashes(epoch), epoch.size)
+        val (rolled, _) = store.commitRun(spark, hashes(spill), spill.size, seenVersion = 2,
+          hashes(existing), existing.distinct.size)
+        val spills = store.loadProbe(spark).toSeq.flatMap(_.filters.collect { case c: CuckooFilter => c })
+        !rolled && spills.size == 1 &&
+          frontierMatchesModel(existing, forum, discovered, bindCap, Some(store))
+    }
+    check(prop, tests = 6)
   }
 
   test("seen-set dedup is idempotent: run(run(F)) == run(F)") {

@@ -1,5 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Properties
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -23,4 +33,72 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val tempRoots = ArrayBuffer.empty[Path]
+
+  /** A fresh temporary directory, deleted with everything under it once the
+    * suite has run. */
+  def tempDir(prefix: String): String = tempRoots.synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempRoots += d
+    d.toString
+  }
+
+  /** Run `body` under the job group `group`, counted by a [[GroupCounters]]. */
+  def countingGroup[A](group: String)(body: GroupCounters => A): A = {
+    val counters = new GroupCounters(group)
+    spark.sparkContext.addSparkListener(counters)
+    spark.sparkContext.setJobGroup(group, group)
+    try body(counters)
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(counters)
+    }
+  }
+
+  override def afterAll(): Unit =
+    try tempRoots.synchronized {
+      tempRoots.filter(Files.exists(_)).foreach { root =>
+        val s = Files.walk(root)
+        try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists) finally s.close()
+      }
+      tempRoots.clear()
+    } finally super.afterAll()
+}
+
+/** The jobs, stages and shuffle bytes (read plus written) of the work that
+  * runs under one job group. */
+final class GroupCounters(group: String) extends SparkListener {
+  val jobs = new AtomicInteger(0)
+  val stages = new AtomicInteger(0)
+  val shuffleBytes = new AtomicLong(0L)
+  private val groupStages = ConcurrentHashMap.newKeySet[Int]()
+
+  private def ours(props: Properties) =
+    props != null && props.getProperty("spark.jobGroup.id") == group
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    if (ours(js.properties)) jobs.incrementAndGet()
+  override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+    if (ours(ss.properties)) { stages.incrementAndGet(); groupStages.add(ss.stageInfo.stageId) }
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+    if (groupStages.contains(sc.stageInfo.stageId) && sc.stageInfo.taskMetrics != null) {
+      val m = sc.stageInfo.taskMetrics
+      shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+    }
+
+  /** Listener delivery is async: wait until the counters are stable. */
+  def settle(): Unit = {
+    var last = (jobs.get(), stages.get(), shuffleBytes.get()); var stable = 0
+    while (stable < 4) {
+      Thread.sleep(100)
+      val now = (jobs.get(), stages.get(), shuffleBytes.get())
+      if (now == last) stable += 1 else { last = now; stable = 0 }
+    }
+  }
+
+  /** Settle, then zero every counter. */
+  def reset(): Unit = {
+    settle()
+    jobs.set(0); stages.set(0); shuffleBytes.set(0L); groupStages.clear()
+  }
 }

@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +32,7 @@ class CrawlToDbSpec extends SparkSpec {
   }
 
   test("crawl runs commit archive generations; rebuild == incremental loads; revisions flow") {
-    val dir = Files.createTempDirectory("graft_crawltodb").toString
+    val dir = tempDir("graft_crawltodb")
     val runs = 3
     val per200 = scala.collection.mutable.Map.empty[Int, Long]
     (1 to runs).foreach { runId =>
@@ -73,7 +71,7 @@ class CrawlToDbSpec extends SparkSpec {
     val archive = CrawlToDb.fullArchive(spark, dir)
     val rebuilt = CrawlToDb.rebuildFromCrawl(spark, dir,
       CrawlToDb.crawlDateOf(1), CrawlToDb.crawlDateOf(runs + 1))
-    val outDir = Files.createTempDirectory("graft_crawltodb_inc").toString
+    val outDir = tempDir("graft_crawltodb_inc")
     val tabs = Map(
       "overview" -> new SnapshotTable(spark, s"$outDir/overview"),
       "tokens" -> new SnapshotTable(spark, s"$outDir/tokens"),

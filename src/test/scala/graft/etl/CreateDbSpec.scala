@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ class CreateDbSpec extends SparkSpec {
 
     // incremental path: one mergeUpsert per crawl_date, in date order —
     // the nightly loads (crawler:… global_update nightly batch)
-    val outDir = Files.createTempDirectory("graft_createdb_inc").toString
+    val outDir = tempDir("graft_createdb_inc")
     val dates = archive.select("crawl_date").distinct()
       .collect().map(_.getString(0)).sorted
     assert(dates.length > 3, "window must span several crawl dates")

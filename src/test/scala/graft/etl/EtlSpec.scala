@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.snapshot.SnapshotTable
 
@@ -11,7 +9,7 @@ class EtlSpec extends SparkSpec {
 
   test("mergeUpsert is last-wins by version and idempotent") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_merge").toString
+    val dir = tempDir("graft_merge")
     val t = new SnapshotTable(spark, dir)
 
     val v1 = Seq(("a", 1, "x1"), ("b", 1, "y1")).toDF("k", "ver", "payload")

@@ -40,7 +40,7 @@ class FetcherSpec extends SparkSpec {
     val cfg = CrawlConfig()
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(2000)), cfg)
     val results = Fetcher.run(spark, sched, cfg)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reports").toString
+    val dir = tempDir("graft-reports")
     Fetcher.writeFailureReports(results, dir)
     val classes = new java.io.File(dir).listFiles().filter(_.getName.startsWith("cls="))
     assert(classes.length >= 4, s"expected several class dirs, got ${classes.map(_.getName).toSeq}")

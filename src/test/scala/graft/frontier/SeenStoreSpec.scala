@@ -31,7 +31,7 @@ class SeenStoreSpec extends SparkSpec {
   private def spills(p: SeenProbe) = p.filters.collect { case c: CuckooFilter => c }
 
   test("incremental path == rebuild path across runs; no per-run corpus scan needed") {
-    val dir = Files.createTempDirectory("graft_seenstore").toString
+    val dir = tempDir("graft_seenstore")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
     val forum = spark.createDataset(ids(0, 7))
 
@@ -85,7 +85,7 @@ class SeenStoreSpec extends SparkSpec {
   }
 
   test("spill commit is O(delta): the epoch bloom file is not rewritten") {
-    val dir = Files.createTempDirectory("graft_seenstore_spill").toString
+    val dir = tempDir("graft_seenstore_spill")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
     fakeSeenCommit(dir, 1)
     store.commitRun(spark, hashesOf((0 until 500).map(i => Ids.mix64(i.toLong))),
@@ -107,7 +107,7 @@ class SeenStoreSpec extends SparkSpec {
   }
 
   test("crash gap: a url_seen version without its spill invalidates the probe; next commit heals by rolling") {
-    val dir = Files.createTempDirectory("graft_seenstore_crash").toString
+    val dir = tempDir("graft_seenstore_crash")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
     fakeSeenCommit(dir, 1)
     val h1 = (0 until 400).map(i => Ids.mix64(i.toLong))
@@ -129,7 +129,7 @@ class SeenStoreSpec extends SparkSpec {
   }
 
   test("roll capacity is PERSISTED: a corpus past the constructor default rolls once, then spills") {
-    val dir = Files.createTempDirectory("graft_seenstore_budget").toString
+    val dir = tempDir("graft_seenstore_budget")
     // constructor budget 1024; the corpus will grow to 1300 > 1024
     val store = new SeenStore(dir, expectedKeys = 1024)
     fakeSeenCommit(dir, 1)
@@ -155,7 +155,7 @@ class SeenStoreSpec extends SparkSpec {
   }
 
   test("sharded epoch mode: table-resident shards + spills dedup exactly like the rebuild path") {
-    val dir = Files.createTempDirectory("graft_seenstore_sharded").toString
+    val dir = tempDir("graft_seenstore_sharded")
     val store = new SeenStore(dir, expectedKeys = 1 << 16, numShards = 8)
     val forum = spark.createDataset(ids(0, 7))
 
@@ -236,7 +236,7 @@ class SeenStoreSpec extends SparkSpec {
   }
 
   test("maxSpillRuns consolidation: spills accumulate then one roll absorbs them") {
-    val dir = Files.createTempDirectory("graft_seenstore_consol").toString
+    val dir = tempDir("graft_seenstore_consol")
     val store = new SeenStore(dir, expectedKeys = 1 << 16, maxSpillRuns = 2)
     var corpus = Seq.empty[Long]
     var rolls = 0

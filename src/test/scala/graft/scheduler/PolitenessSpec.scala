@@ -67,50 +67,18 @@ class PolitenessSpec extends SparkSpec {
 
   test("schedule submits one job; consuming it re-shuffles nothing") {
     val frontier = spark.createDataset(mkFrontier(1500, 0.1, seed = 5L))
-    val group = "politeness-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      private def ours(props: java.util.Properties) =
-        props != null && props.getProperty("spark.jobGroup.id") == group
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (ours(js.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (ours(ss.properties)) { stages.incrementAndGet(); groupStages.add(ss.stageInfo.stageId) }
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (groupStages.contains(sc.stageInfo.stageId) && sc.stageInfo.taskMetrics != null) {
-          val m = sc.stageInfo.taskMetrics
-          shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
-        }
-    }
-    // listener delivery is async: wait until the counters are stable
-    def settle(): Unit = {
-      var last = (jobs.get(), stages.get(), shuffleBytes.get()); var stable = 0
-      while (stable < 4) {
-        Thread.sleep(100)
-        val now = (jobs.get(), stages.get(), shuffleBytes.get())
-        if (now == last) stable += 1 else { last = now; stable = 0 }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "politeness schedule")
-    try {
+    countingGroup("politeness-job-count") { c =>
       graft.core.CacheScope.withScope {
         val sched = Politeness.schedule(spark, frontier, CrawlConfig(), numPartitions = 8)
-        settle()
-        assert(jobs.get() == 1, s"schedule must submit exactly one job (the stats collect), saw ${jobs.get()}")
-        jobs.set(0); stages.set(0); shuffleBytes.set(0L); groupStages.clear()
+        c.settle()
+        assert(c.jobs.get() == 1, s"schedule must submit exactly one job (the stats collect), saw ${c.jobs.get()}")
+        c.reset()
         assert(sched.collect().length == 1500)
-        settle()
-        assert(jobs.get() == 1 && stages.get() == 1,
-          s"consuming the schedule must run one stage, saw ${jobs.get()} jobs / ${stages.get()} stages")
-        assert(shuffleBytes.get() == 0L, s"consuming the schedule shuffled ${shuffleBytes.get()} bytes")
+        c.settle()
+        assert(c.jobs.get() == 1 && c.stages.get() == 1,
+          s"consuming the schedule must run one stage, saw ${c.jobs.get()} jobs / ${c.stages.get()} stages")
+        assert(c.shuffleBytes.get() == 0L, s"consuming the schedule shuffled ${c.shuffleBytes.get()} bytes")
       }
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -11,7 +11,7 @@ class AnnSpec extends SparkSpec {
 
   /** Write an embeddings.parquet corpus into a temp dir usable as `sfDir`. */
   private def writeCorpus(rows: Seq[(Long, Array[Float])]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann").toString
+    val dir = tempDir("graft_ann")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     dir

@@ -107,8 +107,7 @@ class DedupSpec extends SparkSpec {
     // Planted word-3gram chain (threshold 0.5): 1~2 (J=4/6), 2~3 (J=4/6),
     // but 1~3 only J=3/7 — pairwise dedup would over-keep; the component
     // must merge all three. Doc 4 is a singleton and must pass through.
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-cc").toString
+    val dir = tempDir("graft-cc")
     Seq(
       (1L, "a b c d e f g", "en", "s", 13L),
       (2L, "a b c d e f x", "en", "s", 13L),

@@ -27,7 +27,7 @@ class OpqSpec extends SparkSpec {
       else ((rng.nextDouble() * 2 - 1) * 0.1).toFloat
     }
     val rows: Seq[(Long, Array[Float])] = (0L until 1024L).map(i => (i, vec()))
-    val d = java.nio.file.Files.createTempDirectory("graft_opq").toString
+    val d = tempDir("graft_opq")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$d/embeddings.parquet")
     d

@@ -55,7 +55,7 @@ class PqSpec extends SparkSpec {
       ((0L, base) +:
         (1 to 10).map(i => (i.toLong, base.map(x => x + (rng.nextDouble() * 0.04 - 0.02).toFloat)))) ++
         (11 until 1024).map(i => (i.toLong, randVec()))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = tempDir("graft_ivfpq")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
 
@@ -85,7 +85,7 @@ class PqSpec extends SparkSpec {
       ((0L, base) +:
         (1 to 10).map(i => (i.toLong, base.map(x => x + (rng.nextDouble() * 0.04 - 0.02).toFloat)))) ++
         (11 until 1024).map(i => (i.toLong, randVec()))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
 
@@ -121,7 +121,7 @@ class PqSpec extends SparkSpec {
       ((0L, base) +:
         (1 to 10).map(i => (i.toLong, base.map(x => x + (rng.nextDouble() * 0.04 - 0.02).toFloat)))) ++
         (11 until 1024).map(i => (i.toLong, randVec()))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdc").toString
+    val dir = tempDir("graft_sdc")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     val pairs = Pq.sdcTopPairs(spark, dir, kTop = 30, candidates = 200)

@@ -44,7 +44,7 @@ class RotationSpec extends SparkSpec {
 
   private def writeCorpus(rows: Seq[(Long, Array[Float])], tag: String): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_opq_$tag").toString
+    val dir = tempDir(s"graft_opq_$tag")
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     dir
@@ -115,7 +115,7 @@ class RotationSpec extends SparkSpec {
 
     // model artifact round-trips exactly (a new session would serve from it)
     val om = Opq.rotationModel(spark, dirA)
-    val path = java.nio.file.Files.createTempDirectory("graft_opq_model").toString
+    val path = tempDir("graft_opq_model")
     Opq.saveModel(spark, om, path)
     val back = Opq.loadModel(spark, path)
     assert(back.r.map(_.toSeq).toSeq === om.r.map(_.toSeq).toSeq)

@@ -11,11 +11,8 @@ import graft.SparkSpec
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-snap").toString
-
   test("commit/read round-trip with version monotonicity") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     assert(t.currentVersion.isEmpty)
     val v1 = t.commit(Seq((1, "a"), (2, "b")).toDF("k", "v"))
@@ -24,8 +21,24 @@ class SnapshotSpec extends SparkSpec {
     assert(t.read().count() == 3)
   }
 
+  test("manifests name data relative to the table: a moved table reads its own data") {
+    val from = Paths.get(tempDir("graft-snap"), "t")
+    new SnapshotTable(spark, from.toString).commit(Seq(1, 2).toDF("x"))
+    val manifest = from.resolve("manifests").resolve("v000001.json")
+    assert(new String(Files.readAllBytes(manifest), "UTF-8").contains(""""dataDir":"data/v000001""""))
+    val to = Paths.get(tempDir("graft-snap"), "moved")
+    Files.move(from, to)
+    assert(new SnapshotTable(spark, to.toString).read().as[Int].collect().sorted.toSeq == Seq(1, 2))
+    // older manifests name the data directory by absolute path
+    val moved = to.resolve("manifests").resolve("v000001.json")
+    Files.write(moved, new String(Files.readAllBytes(moved), "UTF-8")
+      .replace("\"data/v000001\"", "\"" + to.resolve("data/v000001") + "\"").getBytes("UTF-8"))
+    assert(new String(Files.readAllBytes(moved), "UTF-8").contains(s""""dataDir":"$to/"""))
+    assert(new SnapshotTable(spark, to.toString).read().count() == 2)
+  }
+
   test("time travel: older versions stay readable") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     t.commit(Seq(1, 2).toDF("x"))
     t.commit(Seq(1, 2, 3, 4).toDF("x"))
@@ -34,7 +47,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("crash safety: data dir without a published manifest is invisible") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     t.commit(Seq(1, 2, 3).toDF("x"))
     // simulate a crash mid-commit: orphan data directory, no manifest rename
@@ -45,25 +58,14 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("commit counts rows on the write itself: one job, no re-scan") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val input = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
+    countingGroup("snapshot-commit") { c =>
+      t.commit(input)
+      c.settle()
+      assert(c.jobs.get() == 1, s"commit must trigger exactly one job over the data, saw ${c.jobs.get()}")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      t.commit(Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"))
-      // listener delivery is async: wait until the job count is stable
-      var last = jobs.get(); var stable = 0
-      while (stable < 4) {
-        Thread.sleep(100)
-        if (jobs.get() == last) stable += 1 else { last = jobs.get(); stable = 0 }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 1, s"commit must trigger exactly one job over the data, saw ${jobs.get()}")
     // and the manifest row count is the real one (from the Observation)
     val manifest = new String(java.nio.file.Files.readAllBytes(
       Paths.get(dir, "manifests", "v000001.json")))
@@ -71,7 +73,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("metrics + lineage travel in the manifest") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     t.commit(Seq(1).toDF("x"), metrics = Map("n_ok" -> "1", "run_id" -> "0"))
     t.commit(Seq(1, 2).toDF("x"), metrics = Map("n_ok" -> "2", "run_id" -> "1"))
@@ -84,7 +86,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("partitioned snapshot supports partition-pruned reads") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     val df = Seq(("aaa", 1, 10), ("aab", 1, 20), ("aaa", 2, 30)).toDF("prefix", "run_id", "v")
     t.commit(df, partitionBy = Seq("prefix", "run_id"))
@@ -96,7 +98,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("partitioned commit writes one data file per partition value") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     // 8 input partitions, each holding rows of all 16 prefixes: a plain
     // partitioned write opens 8 × 16 files
@@ -123,7 +125,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("a literal partition column commits without a rebalance shuffle") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
     // one partition value: a rebalance could only funnel the 8 input
     // partitions into one writer, so each input partition writes its own file
@@ -136,7 +138,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("version listing releases its directory descriptor") {
-    val t = new SnapshotTable(spark, tmpDir())
+    val t = new SnapshotTable(spark, tempDir("graft-snap"))
     t.commit(Seq(1).toDF("x"))
     val fdDir = Paths.get("/proc/self/fd")
     assume(Files.isDirectory(fdDir), "needs /proc/self/fd")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -23,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[MetricSample]
     val alerts = StreamingCrawl.stallAlerts(input.toDS(),
       bucketMs = 60000L, watermarkDelay = "0 seconds")
-    val checkpoint = Files.createTempDirectory("graft_stall_ckpt").toString
+    val checkpoint = tempDir("graft_stall_ckpt")
     val out = scala.collection.mutable.ArrayBuffer.empty[StallAlert]
     val q = alerts.writeStream
       .outputMode(OutputMode.Append())
@@ -71,7 +70,7 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[Discovery]
     val results = StreamingCrawl.fetchWithState(input.toDS())
-    val checkpoint = Files.createTempDirectory("graft_stream_ckpt").toString
+    val checkpoint = tempDir("graft_stream_ckpt")
 
     // one long-lived query; foreachBatch segments output per micro-batch so
     // the etag state carried by mapGroupsWithState is observable batch by
@@ -128,8 +127,8 @@ class StreamingSpec extends SparkSpec {
   test("runToSnapshot: micro-batches MERGE into the snapshot table, restart-safe") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tableDir = Files.createTempDirectory("graft_stream_snap").toString
-    val checkpoint = Files.createTempDirectory("graft_stream_snap_ckpt").toString
+    val tableDir = tempDir("graft_stream_snap")
+    val checkpoint = tempDir("graft_stream_snap_ckpt")
     val ids = (0 until 30).map(i => graft.core.Ids.syntheticId(i.toLong))
     val t = new Timestamp(0L)
 
@@ -142,7 +141,7 @@ class StreamingSpec extends SparkSpec {
 
     // run 2 (new drained run, own checkpoint — MemoryStream offsets don't
     // survive across query instances): re-discovered ids MERGE, not append
-    val ckpt2 = Files.createTempDirectory("graft_stream_snap_ckpt2").toString
+    val ckpt2 = tempDir("graft_stream_snap_ckpt2")
     val in2 = MemoryStream[Discovery]
     in2.addData(ids.take(10).map(Discovery(_, 5, t)))
     StreamingCrawl.runToSnapshot(spark, in2.toDS(), tableDir, ckpt2)
@@ -153,7 +152,7 @@ class StreamingSpec extends SparkSpec {
 
     // replaying the same micro-batch converges (idempotent sink, T6): the
     // restart-safety property foreachBatch + mergeUpsert provides
-    val ckpt3 = Files.createTempDirectory("graft_stream_snap_ckpt3").toString
+    val ckpt3 = tempDir("graft_stream_snap_ckpt3")
     val in3 = MemoryStream[Discovery]
     in3.addData(ids.take(10).map(Discovery(_, 5, t)))
     StreamingCrawl.runToSnapshot(spark, in3.toDS(), tableDir, ckpt3)

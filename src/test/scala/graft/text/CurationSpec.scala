@@ -1,7 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** End-to-end semantics of the composed curation funnel (q85): the four
@@ -22,7 +20,7 @@ class CurationSpec extends SparkSpec {
     //   d7 s1  German                          -> fails the lang gate
     //   d8 s2  two words (lang still en)       -> fails minWords
     //   d9 s2  1 stopword in 12 words (0.083)  -> fails minStopRatio
-    val dir = Files.createTempDirectory("graft-cur").toString
+    val dir = tempDir("graft-cur")
     Seq(
       (1L, "the quick fox is one of a kind here", "en", "s1", 0L),
       (2L, "a b c d e f the is g", "en", "s1", 0L),

@@ -1,7 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import graft.SparkSpec
@@ -24,7 +22,7 @@ class PassageDedupSpec extends SparkSpec {
     def words(prefix: String, n: Int): String = (1 to n).map(p => s"$prefix$p").mkString(" ")
     val segA = words("a", 16); val segB = words("b", 16); val tailE = words("e", 8)
     val segC = words("c", 16); val segD = words("d", 16)
-    val dir = Files.createTempDirectory("graft-pd").toString
+    val dir = tempDir("graft-pd")
     Seq(
       (1L, s"$segA $segB $tailE", "en", "s1", 0L), // 40 words -> 16/16/8
       (2L, segA, "en", "s1", 0L),                  // cross-doc dup of d1 seg0
