@@ -40,22 +40,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       (FunctionIdentifier("magic_format"), info("magic_format"),
         (es: Seq[Expression]) => MagicFormat(es.head)))
-    // SQL form takes EXPECTED KEYS (same semantics as the Scala
-    // BloomAgg.apply) and reuses its sizing formula — the two surfaces must
-    // size a filter identically for the same argument.
-    ext.injectFunction(
-      (FunctionIdentifier("bloom_agg"), info("bloom_agg"),
-        (es: Seq[Expression]) => {
-          def fail(msg: String) = throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
-          if (es.length != 2)
-            fail(s"bloom_agg(hash, expectedKeys) takes 2 arguments, got ${es.length}")
-          if (!es(1).foldable)
-            fail("bloom_agg's second argument (expectedKeys) must be a foldable integer literal")
-          val expectedKeys = es(1).eval().asInstanceOf[Number].longValue()
-          graft.frontier.BloomAggregate(es.head,
-            graft.frontier.BloomAgg.blocksFor(expectedKeys), numHashes = 5)
-            .toAggregateExpression()
-        }))
   }
 }

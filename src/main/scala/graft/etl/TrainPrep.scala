@@ -295,8 +295,8 @@ object TrainPrep {
     val bloom = deconBloomCache.computeIfAbsent((spark, dir, n), _ => {
       import spark.implicits._
       val expected = Tables.documents(spark, dir).count() * maxShinglesPerDoc
-      graft.frontier.SeenSet.buildBloomTree(
-        trainNgrams.select(xxhash64(col("shingle"))).as[Long], expected)
+      graft.frontier.SeenSet.buildFilter(trainNgrams.select(xxhash64(col("shingle"))).as[Long],
+        () => graft.frontier.BlockedBloom.sized(expected))
     })
     val probe = graft.frontier.FilterProbe.might(bloom, xxhash64(col("shingle")))
     val maybe = evalShingles.filter(probe).join(trainNgrams, Seq("shingle"), "left")

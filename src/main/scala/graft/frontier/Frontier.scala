@@ -90,9 +90,9 @@ object Frontier {
     * probe covers everything `known` contains. The store's probe only
     * loads when it covers every committed url_seen version
     * (SeenStore.loadProbe's crash validation); otherwise, and without a
-    * store, the one tier is a bloom rebuilt from `known`. The exact
-    * anti-join is the same either way, so exactness never depends on the
-    * filter's freshness. */
+    * store, the one tier is a bloom rebuilt from `known`, sized from its row
+    * count. The exact anti-join is the same either way, so exactness never
+    * depends on the filter's freshness. */
   def buildWorklist(spark: SparkSession,
                     existing: Dataset[String],
                     forumIds: Dataset[String],
@@ -117,7 +117,8 @@ object Frontier {
         forumHashes.foreach(forumBloom.add)
         p.withFilter(forumBloom)
       case None =>
-        SeenProbe(Seq(SeenSet.buildBloomTree(hashes(known), expectedKeys = 1 << 20)), None, 0L)
+        val keys = known.count()
+        SeenProbe(Seq(SeenSet.buildFilter(hashes(known), () => BlockedBloom.sized(keys))), None, 0L)
     }
     val freshAll = CacheScope.persist(
       SeenSet.dedup(spark, discovered.distinct().toDF("id"), known.select("id"), probe))

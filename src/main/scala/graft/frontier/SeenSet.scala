@@ -1,6 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -12,11 +14,12 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * Architecture (north rule): candidates → bloom pre-filter (definitely-new
   * pass straight through; maybe-seen fall to an exact `left_anti` join) →
   * exact result. Bloom false positives only cost join work, never
-  * correctness. The bloom is built distributed and merged via
-  * `treeAggregate` (depth 2) so driver merge cost is O(log parts); at larger
-  * budgets the filter shards by hash-slice (partitioned build via
-  * `groupByKey.mapGroups`, one shard row each) and the probe co-shuffles
-  * candidates with their shard — no full-filter broadcast needed.
+  * correctness. Every filter, bloom or cuckoo, comes from one of two builds:
+  * [[buildFilter]] merges per-partition filters via `treeReduce` (depth 2)
+  * into one driver-side filter; [[buildFilterShards]] builds one filter per
+  * hash slice (`groupByKey.mapGroups`, one shard row each) for the
+  * table-resident tiers, which the probe co-shuffles candidates with — no
+  * full-filter broadcast needed.
   */
 object SeenSet {
 
@@ -24,128 +27,111 @@ object SeenSet {
     * "canonicalizes and xxHash64-hashes URLs"). */
   def idHash(c: Column): Column = xxhash64(c)
 
-  /** Distributed bloom build over the seen-id hashes: each partition
-    * allocates its OWN filter locally (the task closure carries only the
-    * sizing ints — a treeAggregate zeroValue would serialize the whole
-    * empty filter into EVERY task binary, GBs per task at a 10^10-key
-    * epoch), then partials merge log-depth via `treeReduce(depth=2)`
-    * (SURVEY §4 "partial + final aggregation"). */
-  def buildBloomTree(seenHashes: Dataset[Long], expectedKeys: Long,
-                     bitsPerKey: Int = 10, numHashes: Int = 5): BlockedBloom = {
-    val proto = BlockedBloom.sized(math.max(expectedKeys, 1024), bitsPerKey, numHashes)
-    val (nb, nh) = (proto.numBlocks, proto.numHashes)
-    val rdd = seenHashes.rdd
-    if (rdd.getNumPartitions == 0) proto
-    else rdd.mapPartitions { it =>
-      val b = new BlockedBloom(nb, nh)
-      it.foreach(b.add)
-      Iterator.single(b)
-    }.treeReduce((a, b) => a.mergeInPlace(b), depth = 2)
+  /** Merged build: each partition fills its OWN filter from `empty` (the
+    * task closure carries only the sizing — a treeAggregate zeroValue would
+    * serialize the whole empty filter into EVERY task binary, GBs per task
+    * at a 10^10-key epoch), then partials merge log-depth via
+    * `treeReduce(depth = 2)` (SURVEY §4 "partial + final aggregation") into
+    * the one filter the driver uses: a probe expression's reference object,
+    * or the file the seen store writes. */
+  def buildFilter[F <: BuildableFilter[F]: ClassTag](hashes: Dataset[Long], empty: () => F): F = {
+    val rdd = hashes.rdd
+    if (rdd.getNumPartitions == 0) empty()
+    else rdd.mapPartitions(it => Iterator.single(fill(empty(), it)))
+      .treeReduce((a, b) => a.mergeInPlace(b), depth = 2)
   }
 
-  /** Sharded build: one blocked bloom per hash-slice, built streaming per
-    * group; returns (shard, bloomBytes) rows that stay table-resident (the
-    * 10^10-scale path where no single filter fits one JVM). */
-  def buildBloomShards(spark: SparkSession, seenHashes: Dataset[Long], numShards: Int,
-                       blocksPerShard: Int, numHashes: Int = 5): Dataset[(Int, Array[Byte])] = {
-    import spark.implicits._
-    seenHashes
-      .groupByKey(h => Math.floorMod(h, numShards.toLong).toInt)
-      .mapGroups { (shard, it) =>
-        val bloom = new BlockedBloom(blocksPerShard, numHashes)
-        it.foreach(bloom.add)
-        (shard, bloom.serialized)
-      }
-  }
-
-  /** Sharded cuckoo build — the table-resident form of a run's spill delta
-    * (the cuckoo analog of [[buildBloomShards]]): one filter per hash-slice,
-    * (shard, cuckooBytes) rows. At 10^10-frontier scale a nightly delta can
-    * be 10^8+ keys; ONE in-heap spill filter would be GiBs in every task
-    * binary (addReferenceObj) and GiBs through treeReduce, so past the
-    * single-filter cap the spill becomes this table and rides the same
-    * cogroup probe as the bloom shards. `add` throws on overflow rather than
-    * dropping (a dropped fingerprint would be a pre-filter false negative —
-    * callers size bucketsPerShard with headroom). */
-  def buildCuckooShards(spark: SparkSession, hashes: Dataset[Long], numShards: Int,
-                        bucketsPerShard: Int): Dataset[(Int, Array[Byte])] = {
+  /** Per-shard build: one filter per hash slice `floorMod(h, numShards)`,
+    * filled streaming from its group, as (shard, filterBytes) rows that stay
+    * table-resident (the 10^10-scale path where no single filter fits one
+    * JVM). Only the 8-byte hashes shuffle; a slice with no hash has no row. */
+  def buildFilterShards[F <: BuildableFilter[F]](spark: SparkSession, hashes: Dataset[Long],
+                                                 numShards: Int,
+                                                 empty: () => F): Dataset[(Int, Array[Byte])] = {
     import spark.implicits._
     hashes
       .groupByKey(h => Math.floorMod(h, numShards.toLong).toInt)
-      .mapGroups { (shard, it) =>
-        val f = new CuckooFilter(bucketsPerShard)
-        it.foreach { h =>
-          if (!f.add(h)) throw new IllegalStateException("cuckoo shard overflow")
-        }
-        (shard, f.serialized)
-      }
+      .mapGroups((shard, it) => (shard, fill(empty(), it).serialized))
+  }
+
+  /** `f` with every hash added; throws when it fills up (a dropped key would
+    * be a pre-filter false negative — callers size with headroom). */
+  private def fill[F <: BuildableFilter[F]](f: F, hashes: Iterator[Long]): F = {
+    hashes.foreach { h =>
+      if (!f.add(h)) throw new IllegalStateException(s"${f.getClass.getSimpleName} overflow")
+    }
+    f
   }
 
   /** Exact dedup: candidates not in seen — the oracle for [[dedup]]. */
   def dedupExact(candidates: DataFrame, seen: DataFrame, idCol: String): DataFrame =
     candidates.join(seen.select(idCol), Seq(idCol), "left_anti")
 
+  /** `rows` plus a `maybe` column: true when any tier of `probe` flags
+    * `hash`, the hash of the row's key. No false negatives over the keys the
+    * probe covers; false positives are the callers' to resolve.
+    *
+    *  1. the in-heap tiers OR into one codegen column — each filter ships
+    *     once per executor via `addReferenceObj`;
+    *  2. the table-resident shard tiers, when the probe has them, go
+    *     through one cogroup ([[shardedMaybeSeenTiers]]). */
+  def maybeSeen(spark: SparkSession, rows: DataFrame, hash: Column, probe: SeenProbe): DataFrame = {
+    val inHeap = probe.filters.map(FilterProbe.might(_, hash))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    probe.shards match {
+      case None => rows.select(col("*"), inHeap.as("maybe"))
+      case Some(t) =>
+        shardedMaybeSeenTiers(spark, rows, hash, t)
+          .withColumn("maybe", col("in_shard") || inHeap).drop("in_shard")
+    }
+  }
+
   /** Multi-tier sharded probe: the epoch bloom shards PLUS any number of
     * per-run cuckoo spill shard tables, all sharded by the same
-    * `floorMod(hash, numShards)` slice so one cogroup co-shuffles a
-    * candidate with every tier's filter for its slice. This is the
-    * 10^10-key mode, where no single bloom fits one JVM (10^10 keys × 10
-    * bits ≈ 12.5 GB): each task deserializes ≤ 1 bloom + (spill runs)
-    * cuckoo shard filters — a few rows per shard — never a whole-corpus
-    * filter. A shard with no seen keys has no row, so its candidates flag
-    * definitely new. Returns (value, maybe) pairs. */
-  def shardedMaybeSeenTiers(spark: SparkSession, candidates: DataFrame, idCol: String,
-                            bloomShards: Dataset[(Int, Array[Byte])],
-                            cuckooShards: Seq[Dataset[(Int, Array[Byte])]],
-                            numShards: Int): Dataset[(String, Boolean)] = {
+    * `floorMod(hash, numShards)` slice so one cogroup co-shuffles a row
+    * with every tier's filter for its slice. This is the 10^10-key mode,
+    * where no single bloom fits one JVM (10^10 keys × 10 bits ≈ 12.5 GB):
+    * each task deserializes ≤ 1 bloom + (spill runs) cuckoo shard filters —
+    * a few rows per shard — never a whole-corpus filter. A shard with no
+    * seen keys has no row, so its rows flag definitely new. Returns `rows`
+    * plus an `in_shard` column. */
+  private def shardedMaybeSeenTiers(spark: SparkSession, rows: DataFrame, hash: Column,
+                                    t: ShardTiers): DataFrame = {
     import spark.implicits._
-    val tagged = cuckooShards
+    val tagged = t.spills
       .map(_.map { case (s, b) => (s, false, b) })
-      .foldLeft(bloomShards.map { case (s, b) => (s, true, b) })(_ union _)
-    candidates.select(col(idCol).cast("string").as("value"))
-      .withColumn("h", idHash(col("value")))
-      .select(col("value"), col("h"),
-        pmod(col("h"), lit(numShards.toLong)).cast("int").as("shard"))
-      .as[(String, Long, Int)]
-      .groupByKey(_._3)
-      .cogroup(tagged.groupByKey(_._1)) { (_, cands, filters) =>
+      .foldLeft(t.bloom.map { case (s, b) => (s, true, b) })(_ union _)
+    val n = t.numShards.toLong
+    val width = rows.columns.length
+    rows.select(col("*"), hash.as("seen_hash"))
+      .groupByKey(r => Math.floorMod(r.getLong(width), n).toInt)
+      .cogroup(tagged.groupByKey(_._1)) { (_, rs, filters) =>
         var bloom: BlockedBloom = null
         val cuckoos = scala.collection.mutable.ArrayBuffer.empty[CuckooFilter]
         filters.foreach { case (_, isBloom, bytes) =>
           if (isBloom) bloom = BlockedBloom.deserialize(bytes)
           else cuckoos += CuckooFilter.deserialize(bytes)
         }
-        cands.map { case (v, h, _) =>
-          (v, (bloom != null && bloom.mightContain(h)) ||
-            cuckoos.exists(_.mightContain(h)))
+        rs.map { r =>
+          val h = r.getLong(width)
+          Row.fromSeq(r.toSeq.take(width) :+
+            ((bloom != null && bloom.mightContain(h)) || cuckoos.exists(_.mightContain(h))))
         }
-      }
+      }(Encoders.row(rows.schema.add("in_shard", BooleanType, nullable = false)))
   }
 
   /** Exact dedup behind a tiered pre-filter: candidates no tier of `probe`
-    * flags pass straight through; maybe-seen candidates fall to the exact
-    * `left_anti` join against `known`. The probe must cover `known` (no
-    * false negatives); its false positives only cost join work. Both
-    * frames carry one id column; the output keeps the candidates' name.
-    *
-    *  1. the in-heap tiers OR into one codegen column — each filter ships
-    *     once per executor via `addReferenceObj`;
-    *  2. the table-resident shard tiers, when the probe has them, go
-    *     through one cogroup ([[shardedMaybeSeenTiers]]);
-    *  3. the flagged candidates persist once, so the two branches don't
-    *     re-run the candidate plan (and the shuffles feeding it). */
+    * flags ([[maybeSeen]]) pass straight through; maybe-seen candidates fall
+    * to the exact `left_anti` join against `known`. The probe must cover
+    * `known` (no false negatives); its false positives only cost join work.
+    * Both frames carry one id column; the output keeps the candidates'
+    * name. The flagged candidates persist once, so the two branches don't
+    * re-run the candidate plan (and the shuffles feeding it). */
   def dedup(spark: SparkSession, candidates: DataFrame, known: DataFrame,
             probe: SeenProbe): DataFrame = {
     val id = candidates.columns.head
-    val inHeap = probe.filters.map(FilterProbe.might(_, idHash(col(id))))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val flagged = graft.core.CacheScope.persist(probe.shards match {
-      case None => candidates.select(col(id), inHeap.as("maybe"))
-      case Some(t) =>
-        shardedMaybeSeenTiers(spark, candidates, id, t.bloom, t.spills, t.numShards)
-          .toDF(id, "in_shard")
-          .select(col(id), (col("in_shard") || inHeap).as("maybe"))
-    })
+    val flagged = graft.core.CacheScope.persist(
+      maybeSeen(spark, candidates.select(col(id)), idHash(col(id)), probe))
     flagged.filter(!col("maybe")).select(id)
       .union(flagged.filter(col("maybe")).select(id).join(known.toDF(id), Seq(id), "left_anti"))
   }
@@ -161,8 +147,8 @@ final case class SeenProbe(filters: Seq[MembershipFilter], shards: Option[ShardT
 }
 
 /** Table-resident tiers: (shard, filterBytes) rows sliced by
-  * `floorMod(hash, numShards)` — the epoch bloom ([[SeenSet.buildBloomShards]])
-  * and one cuckoo table per spilled run ([[SeenSet.buildCuckooShards]]). */
+  * `floorMod(hash, numShards)`, each from [[SeenSet.buildFilterShards]] —
+  * the epoch bloom and one cuckoo table per spilled run. */
 final case class ShardTiers(bloom: Dataset[(Int, Array[Byte])],
                             spills: Seq[Dataset[(Int, Array[Byte])]], numShards: Int)
 

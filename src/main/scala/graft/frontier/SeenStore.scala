@@ -6,6 +6,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.snapshot.SnapshotTable
 
 /** Persistent two-tier seen-state across crawl runs (T2 at frontier scale;
   * north rule: "partitioned blocked Bloom filter (merged via treeAggregate)
@@ -21,9 +24,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    epoch ROLLS — at archive scale the bloom file is multi-GB, so the
   *    per-run commit must not touch it;
   *  - each run's commit writes a **cuckoo spill**: a small filter over just
-  *    that run's new id hashes, built DISTRIBUTED (per-partition filters,
-  *    fingerprint-wise treeAggregate merge — no driver-side per-row loop)
-  *    and published atomically as `url_seen_spill-v{N}.bin`, keyed by the
+  *    the run's ids that no earlier tier flags (the run passes every id it
+  *    crawled; the ones the epoch or an earlier spill already covers are
+  *    dropped), built by the same distributed builds as the epoch
+  *    ([[SeenSet.buildFilter]], [[SeenSet.buildFilterShards]]) and
+  *    published atomically as `url_seen_spill-v{N}.bin`, keyed by the
   *    `url_seen` snapshot version it covers. Commit cost is O(delta);
   *  - when spills accumulate past `maxSpillRuns`, or covered keys outgrow
   *    the bloom's persisted capacity, the epoch ROLLS: one rebuild from the
@@ -44,11 +49,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * guarantees the pre-filter tier never silently under-covers.
   */
 final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
-                      bitsPerKey: Int = 10, numHashes: Int = 5,
                       maxSpillRuns: Int = 8,
                       /** >0 → SHARDED epochs: the bloom persists as a
                         * parquet table of (shard, bloomBytes) rows probed
-                        * via cogroup ([[SeenSet.shardedMaybeSeenTiers]]) — the
+                        * via cogroup ([[SeenSet.maybeSeen]]) — the
                         * 10^10-key mode where one filter (~12.5 GB) fits
                         * neither a task binary nor comfortably one heap.
                         * 0 → the single-filter epoch (default). */
@@ -64,17 +68,10 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
 
   // -------- url_seen snapshot version (the validation authority) --------
 
-  /** Current committed `url_seen` snapshot version — read from the manifest
-    * listing beside this store (same resolution rule as SnapshotTable);
-    * 0 when the table doesn't exist yet. */
-  def currentSeenVersion: Int = {
-    val manifests = Paths.get(dir, "url_seen", "manifests")
-    if (!Files.isDirectory(manifests)) 0
-    else listEntries(manifests)
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{6}\\.json") => s.substring(1, 7).toInt }
-      .foldLeft(0)(math.max)
-  }
+  /** Current committed `url_seen` snapshot version (the manifest listing
+    * beside this store); 0 when the table doesn't exist yet. */
+  def currentSeenVersion: Int =
+    SnapshotTable.versions(Paths.get(dir, "url_seen").toString).lastOption.getOrElse(0)
 
   /** Directory listing with the underlying stream closed — a bare
     * `Files.list(..).iterator()` leaks one directory fd per call, and probe
@@ -108,11 +105,6 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
     atomicWrite(metaPath,
       s"""{"insertedKeys":${m.insertedKeys},"capacityKeys":${m.capacityKeys},"seenVersion":${m.seenVersion}}"""
         .getBytes(StandardCharsets.UTF_8))
-
-  private def saveBloom(bloom: BlockedBloom, m: Meta): Unit = {
-    atomicWrite(bloomPath, bloom.serialized)
-    saveMeta(m)
-  }
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -174,11 +166,11 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
     if (sharded) shardedSpillCount(v).get
     else {
       val in = Files.newInputStream(spillPath(v))
-      try {
-        val hdr = in.readNBytes(12)
-        java.nio.ByteBuffer.wrap(hdr).getLong(4)
-      } finally in.close()
+      try CuckooFilter.sizeOf(in.readNBytes(12)) finally in.close()
     }
+
+  /** Keys the epoch and the spills `vs` hold. */
+  private def covered(m: Meta, vs: Seq[Int]): Long = m.insertedKeys + vs.map(spillCount).sum
 
   // -------- load (validated) --------
 
@@ -188,133 +180,128 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   /** Load the probe tiers — None when absent or invalid: the epoch version
     * plus contiguous spills must cover every committed `url_seen` version
     * (no crash gap). Callers then use the exact full-rebuild path, and the
-    * next commit rolls the epoch. Single-filter mode loads the epoch bloom
-    * and the spills in heap; sharded mode returns their tables, read
-    * lazily by Spark and probed through one cogroup
-    * ([[SeenSet.shardedMaybeSeenTiers]]), so nothing filter-sized ever
-    * materializes on the driver or in a task binary. */
+    * next commit rolls the epoch. */
   def loadProbe(spark: SparkSession): Option[SeenProbe] =
     for {
       m <- readMeta()
       if bloomExists
       vs = spillVersions.filter(_ > m.seenVersion)
       if ((m.seenVersion + 1) to currentSeenVersion).forall(vs.contains)
-    } yield {
-      val covered = m.insertedKeys + vs.map(spillCount).sum
-      if (sharded) {
-        import spark.implicits._
-        def shardTable(p: Path): Dataset[(Int, Array[Byte])] =
-          spark.read.parquet(p.toString)
-            .select(org.apache.spark.sql.functions.col("shard").cast("int"),
-              org.apache.spark.sql.functions.col("bytes"))
-            .as[(Int, Array[Byte])]
-        SeenProbe(Nil, Some(ShardTiers(shardTable(shardDir),
-          vs.map(v => shardTable(spillShardDir(v))), numShards)), covered)
-      } else
-        SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)) +:
-          vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v)))), None, covered)
-    }
+    } yield probeOf(spark, m, vs)
+
+  /** The epoch plus the spills `vs` as probe tiers. Single-filter mode
+    * loads them in heap; sharded mode returns their tables, read lazily by
+    * Spark and probed through one cogroup ([[SeenSet.maybeSeen]]), so
+    * nothing filter-sized ever materializes on the driver or in a task
+    * binary. */
+  private def probeOf(spark: SparkSession, m: Meta, vs: Seq[Int]): SeenProbe =
+    if (sharded) {
+      import spark.implicits._
+      def shardTable(p: Path): Dataset[(Int, Array[Byte])] =
+        spark.read.parquet(p.toString).select(col("shard").cast("int"), col("bytes"))
+          .as[(Int, Array[Byte])]
+      SeenProbe(Nil, Some(ShardTiers(shardTable(shardDir),
+        vs.map(v => shardTable(spillShardDir(v))), numShards)), covered(m, vs))
+    } else
+      SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)) +:
+        vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v)))), None,
+        covered(m, vs))
 
   // -------- commit --------
 
-  /** Commit a run's new id hashes. Fast path: write ONE small cuckoo spill
-    * over the delta (distributed build, O(delta) I/O, the epoch bloom file
-    * untouched). Roll path — taken when the store is absent/stale (crash
+  /** Commit a run's crawled id hashes. Fast path: write ONE small cuckoo
+    * spill over the hashes no earlier tier flags (the epoch and the spills
+    * of versions below `seenVersion`; this version's own spill is left out,
+    * since a re-commit replaces it) — O(delta) I/O, the epoch bloom file
+    * untouched. Roll path — taken when the store is absent/stale (crash
     * gap), covered keys would exceed the bloom's PERSISTED capacity, or
     * `maxSpillRuns` spills have accumulated — rebuilds the bloom from the
     * authoritative corpus at 2× headroom and persists the grown capacity (so
     * a corpus larger than the constructor default never re-rolls every run).
-    * `seenVersion` is the `url_seen` snapshot version this run committed.
-    * Returns (rolled, coveredKeysAfter). */
+    * `newCount` bounds the spill's keys from above; the delta is counted
+    * only when that bound fails a check. `seenVersion` is the `url_seen`
+    * snapshot version this run committed. Returns (rolled,
+    * coveredKeysAfter). */
   def commitRun(spark: SparkSession, newHashes: Dataset[Long], newCount: Long,
                 seenVersion: Int,
                 fullCorpusHashes: => Dataset[Long], fullCount: => Long): (Boolean, Long) = {
+    import spark.implicits._
     val meta = readMeta().filter(_ => bloomExists)
     val vs = spillVersions
     // valid iff spills cover exactly (bloomVersion, seenVersion-1]
     val contiguous = meta.exists(m =>
       ((m.seenVersion + 1) until seenVersion).forall(vs.contains))
-    val coveredSoFar = meta.map(m =>
-      m.insertedKeys + vs.filter(_ > m.seenVersion).map(spillCount).sum)
-    val fits = meta.zip(coveredSoFar).exists { case (m, c) =>
-      c + newCount <= m.capacityKeys }
+    val prior = meta.map(m => vs.filter(v => v > m.seenVersion && v < seenVersion)).getOrElse(Nil)
+    lazy val coveredSoFar = covered(meta.get, prior)
     // a delta past the cuckoo's geometry cap can't spill safely (overload →
     // kick overflow; and the per-task zero table would be GiBs) — such a
     // run IS a reshape of the corpus, roll instead. In SHARDED mode the
     // spill is a per-slice table, so the cap applies per shard (with the
     // same 25% skew margin the build sizes with) — a nightly 10^8-key delta
     // spills in O(delta) instead of forcing a full-corpus epoch roll
-    val spillable =
-      if (sharded) newCount / numShards * 5 / 4 + 1 <= CuckooFilter.MaxSpillKeys
-      else newCount <= CuckooFilter.MaxSpillKeys
-    if (!contiguous || !fits || !spillable ||
-        vs.count(_ > meta.get.seenVersion) + 1 > maxSpillRuns) {
-      // epoch roll: one full rebuild from the authoritative snapshot. The
-      // empty filter is allocated PER PARTITION on the executors (shipping
-      // it as a treeAggregate zeroValue would put the whole multi-GB filter
-      // in every task binary at archive scale); partials merge log-depth.
-      val total = fullCount
-      val capacity = math.max(expectedKeys, total * 2)
-      if (sharded) {
-        // the epoch becomes a TABLE: one (shard, bloomBytes) row per hash
-        // slice, written then published by directory swap; a crash mid-swap
-        // is a version gap the next load/commit heals by rolling again
-        val blocksPerShard = math.max(1L,
-          (capacity / numShards * bitsPerKey + 511) / 512).min(Int.MaxValue / 16).toInt
-        val tmp = Paths.get(dir, s".bloomshards-tmp-${System.nanoTime()}")
-        SeenSet.buildBloomShards(spark, fullCorpusHashes, numShards, blocksPerShard, numHashes)
+    def perShard(keys: Long) = keys / numShards * 5 / 4 + 1
+    def spillFits(keys: Long) = coveredSoFar + keys <= meta.get.capacityKeys &&
+      (if (sharded) perShard(keys) else keys) <= CuckooFilter.MaxSpillKeys
+    lazy val delta =
+      SeenSet.maybeSeen(spark, newHashes.toDF("h"), col("h"), probeOf(spark, meta.get, prior))
+        .filter(!col("maybe")).select("h").as[Long]
+    val spillKeys =
+      if (!contiguous || prior.size + 1 > maxSpillRuns) None
+      else if (spillFits(newCount)) Some(newCount)
+      else Some(delta.count()).filter(spillFits)
+    spillKeys match {
+      case None =>
+        // epoch roll: one full rebuild from the authoritative snapshot
+        val total = fullCount
+        val capacity = math.max(expectedKeys, total * 2)
+        if (sharded) {
+          // the epoch becomes a TABLE: one (shard, bloomBytes) row per hash
+          // slice, written then published by directory swap; a crash mid-swap
+          // is a version gap the next load/commit heals by rolling again
+          val perShardKeys = capacity / numShards
+          val tmp = Paths.get(dir, s".bloomshards-tmp-${System.nanoTime()}")
+          SeenSet.buildFilterShards(spark, fullCorpusHashes, numShards,
+              () => BlockedBloom.sized(perShardKeys))
+            .toDF("shard", "bytes")
+            .write.mode("overwrite").parquet(tmp.toString)
+          deleteRecursively(shardDir)
+          Files.move(tmp, shardDir, StandardCopyOption.REPLACE_EXISTING)
+        } else
+          atomicWrite(bloomPath,
+            SeenSet.buildFilter(fullCorpusHashes, () => BlockedBloom.sized(capacity)).serialized)
+        saveMeta(Meta(total, capacity, seenVersion))
+        deleteSpills()
+        (true, total)
+      case Some(keys) if sharded =>
+        // sharded spill: the delta as a (shard, cuckooBytes) table,
+        // published by directory move, made VISIBLE by the sidecar count
+        // json (written last; a crash between the two is a version gap the
+        // next commit heals by rolling). Sized per shard at ≤50% load with a
+        // 25% skew margin; the count is read from each filter's header as
+        // the write's result tasks pass it
+        val buckets = CuckooFilter.bucketsFor(perShard(keys))
+        val added = spark.sparkContext.longAccumulator("seenstore.spill_keys")
+        val tmp = Paths.get(dir, s".spillshards-tmp-${System.nanoTime()}")
+        SeenSet.buildFilterShards(spark, delta, numShards, () => new CuckooFilter(buckets))
+          .map { case row @ (_, bytes) => added.add(CuckooFilter.sizeOf(bytes)); row }
           .toDF("shard", "bytes")
           .write.mode("overwrite").parquet(tmp.toString)
-        deleteRecursively(shardDir)
-        Files.move(tmp, shardDir, StandardCopyOption.REPLACE_EXISTING)
-        saveMeta(Meta(total, capacity, seenVersion))
-      } else {
-        val rebuilt = SeenSet.buildBloomTree(fullCorpusHashes, capacity, bitsPerKey, numHashes)
-        saveBloom(rebuilt, Meta(total, capacity, seenVersion))
-      }
-      deleteSpills()
-      (true, total)
-    } else if (sharded) {
-      // sharded spill: the delta as a (shard, cuckooBytes) table — built
-      // per hash-slice like the bloom shards, published by directory move,
-      // made VISIBLE by the sidecar count json (written last; a crash
-      // between the two is a version gap the next commit heals by rolling).
-      // Sized per shard at ≤50% load with a 25% skew margin; add throws on
-      // overflow (a dropped key would be a pre-filter false negative).
-      val buckets = CuckooFilter.bucketsFor(newCount / numShards * 5 / 4 + 1)
-      val tmp = Paths.get(dir, s".spillshards-tmp-${System.nanoTime()}")
-      SeenSet.buildCuckooShards(spark, newHashes, numShards, buckets)
-        .toDF("shard", "bytes")
-        .write.mode("overwrite").parquet(tmp.toString)
-      // invisible-before-visible holds on RE-commit of the same version too:
-      // the sidecar json is the visibility marker, so drop any stale one
-      // BEFORE replacing the table — a crash after the move then leaves the
-      // version invisible (a gap), never a fresh table paired with an old
-      // count
-      Files.deleteIfExists(spillMetaPath(seenVersion))
-      deleteRecursively(spillShardDir(seenVersion))
-      Files.move(tmp, spillShardDir(seenVersion), StandardCopyOption.REPLACE_EXISTING)
-      atomicWrite(spillMetaPath(seenVersion),
-        s"""{"count":$newCount}""".getBytes(StandardCharsets.UTF_8))
-      (false, coveredSoFar.getOrElse(0L) + newCount)
-    } else {
-      // spill: distributed cuckoo over the delta only — per-partition local
-      // filters, fingerprint-wise log-depth merge. add throws on overflow
-      // (a dropped key would be a pre-filter false negative); bucketsFor
-      // sizes at ≤50% load so kicks can't cascade to failure.
-      val buckets = CuckooFilter.bucketsFor(newCount)
-      val rdd = newHashes.rdd
-      val spill =
-        if (rdd.getNumPartitions == 0) new CuckooFilter(buckets)
-        else rdd.mapPartitions { it =>
-          val f = new CuckooFilter(buckets)
-          it.foreach { h =>
-            if (!f.add(h)) throw new IllegalStateException("cuckoo spill overflow")
-          }
-          Iterator.single(f)
-        }.treeReduce((a, b) => a.mergeInPlace(b), depth = 2)
-      atomicWrite(spillPath(seenVersion), spill.serialized)
-      (false, coveredSoFar.getOrElse(0L) + newCount)
+        // invisible-before-visible holds on RE-commit of the same version too:
+        // the sidecar json is the visibility marker, so drop any stale one
+        // BEFORE replacing the table — a crash after the move then leaves the
+        // version invisible (a gap), never a fresh table paired with an old
+        // count
+        Files.deleteIfExists(spillMetaPath(seenVersion))
+        deleteRecursively(spillShardDir(seenVersion))
+        Files.move(tmp, spillShardDir(seenVersion), StandardCopyOption.REPLACE_EXISTING)
+        atomicWrite(spillMetaPath(seenVersion),
+          s"""{"count":${added.sum}}""".getBytes(StandardCharsets.UTF_8))
+        (false, coveredSoFar + added.sum)
+      case Some(keys) =>
+        val buckets = CuckooFilter.bucketsFor(keys)
+        val spill = SeenSet.buildFilter(delta, () => new CuckooFilter(buckets))
+        atomicWrite(spillPath(seenVersion), spill.serialized)
+        (false, coveredSoFar + spill.size)
     }
   }
 }

@@ -19,16 +19,27 @@ trait MembershipFilter extends Serializable {
   def mightContain(key: Long): Boolean
 }
 
+/** A filter the two distributed builds ([[SeenSet.buildFilter]],
+  * [[SeenSet.buildFilterShards]]) can fill, merge and persist. `add` returns
+  * false when the filter is full (a bloom never is); the builds throw then,
+  * since a dropped key would be a pre-filter false negative. */
+trait BuildableFilter[F <: BuildableFilter[F]] extends MembershipFilter {
+  def add(key: Long): Boolean
+  def mergeInPlace(o: F): F
+  def serialized: Array[Byte]
+}
+
 /** Cache-friendly blocked Bloom filter: 512-bit (8-word) blocks; the first
   * hash selects the block, k bit-positions come from 9-bit slices of a
   * second hash. One cache line per probe. */
-final class BlockedBloom(val numBlocks: Int, val numHashes: Int) extends MembershipFilter {
+final class BlockedBloom(val numBlocks: Int, val numHashes: Int)
+    extends BuildableFilter[BlockedBloom] {
   require(numBlocks > 0 && numHashes >= 1 && numHashes <= 7)
   val words = new Array[Long](numBlocks * 8)
 
   @inline private def blockOf(h1: Long): Int = (Math.floorMod(h1, numBlocks.toLong)).toInt
 
-  def add(key: Long): Unit = {
+  def add(key: Long): Boolean = {
     val h1 = mix64(key)
     val h2 = mix64(h1 ^ 0x5851F42D4C957F2DL)
     val base = blockOf(h1) * 8
@@ -38,6 +49,7 @@ final class BlockedBloom(val numBlocks: Int, val numHashes: Int) extends Members
       words(base + (bit >> 6)) |= (1L << (bit & 63))
       i += 1
     }
+    true
   }
 
   def mightContain(key: Long): Boolean = {
@@ -53,7 +65,7 @@ final class BlockedBloom(val numBlocks: Int, val numHashes: Int) extends Members
     true
   }
 
-  /** In-place union — the treeAggregate combOp (bitwise OR). */
+  /** In-place union — the merged build's combOp (bitwise OR). */
   def mergeInPlace(o: BlockedBloom): BlockedBloom = {
     require(o.numBlocks == numBlocks && o.numHashes == numHashes)
     var i = 0
@@ -79,10 +91,13 @@ object BlockedBloom {
     f
   }
 
-  /** Blocks needed for ~`bitsPerKey` bits/key over `expectedKeys`. */
-  def sized(expectedKeys: Long, bitsPerKey: Int = 10, numHashes: Int = 5): BlockedBloom = {
-    val blocks = math.max(1L, (expectedKeys * bitsPerKey + 511) / 512)
-    new BlockedBloom(math.min(blocks, Int.MaxValue / 16).toInt, numHashes)
+  private val BitsPerKey = 10
+  private val NumHashes = 5
+
+  /** The one bloom sizing rule: ~`BitsPerKey` bits/key over `expectedKeys`. */
+  def sized(expectedKeys: Long): BlockedBloom = {
+    val blocks = math.max(1L, (expectedKeys * BitsPerKey + 511) / 512)
+    new BlockedBloom(math.min(blocks, Int.MaxValue / 16).toInt, NumHashes)
   }
 }
 
@@ -91,7 +106,7 @@ object BlockedBloom {
   * delete, so it serves as the mutable spill/delta tier on top of immutable
   * bloom snapshots: recent inserts live here until the next snapshot rebuild
   * absorbs them into the bloom. */
-final class CuckooFilter(val numBuckets: Int) extends MembershipFilter {
+final class CuckooFilter(val numBuckets: Int) extends BuildableFilter[CuckooFilter] {
   require(numBuckets > 0 && (numBuckets & (numBuckets - 1)) == 0, "numBuckets must be a power of 2")
   private val slots = new Array[Short](numBuckets * 4)
   private val rnd = new java.util.Random(42) // deterministic kick selection
@@ -114,24 +129,10 @@ final class CuckooFilter(val numBuckets: Int) extends MembershipFilter {
     false
   }
 
+  /** False when the table is full — the caller must rebuild/snapshot. */
   def add(key: Long): Boolean = {
     val h = mix64(key)
-    var f = fingerprint(h)
-    val b1 = bucket1(h)
-    if (insertAt(b1, f) || insertAt(altBucket(b1, f), f)) return true
-    // cuckoo kicks
-    var b = if (rnd.nextBoolean()) b1 else altBucket(b1, f)
-    var kicks = 0
-    while (kicks < 500) {
-      val slot = b * 4 + rnd.nextInt(4)
-      val evicted = slots(slot)
-      slots(slot) = f
-      f = evicted
-      b = altBucket(b, f)
-      if (insertAt(b, f)) return true
-      kicks += 1
-    }
-    false // table full — caller must rebuild/snapshot
+    insertFingerprint(bucket1(h), fingerprint(h))
   }
 
   def mightContain(key: Long): Boolean = {
@@ -166,8 +167,9 @@ final class CuckooFilter(val numBuckets: Int) extends MembershipFilter {
 
   def size: Long = count
 
-  /** Insert a raw (bucket, fingerprint) pair — the partial-key property
-    * makes this sufficient for merge/resize: alt(b, f) is an involution, so
+  /** Insert a (bucket, fingerprint) pair, kicking residents to their
+    * alternate bucket when both are full — the partial-key property makes
+    * this sufficient for merge/resize too: alt(b, f) is an involution, so
     * re-inserting at the bucket a fingerprint was FOUND in preserves its
     * (b1, b2) pair. */
   private def insertFingerprint(b0: Int, f0: Short): Boolean = {
@@ -187,8 +189,8 @@ final class CuckooFilter(val numBuckets: Int) extends MembershipFilter {
     false
   }
 
-  /** In-place union — the treeAggregate combOp for DISTRIBUTED cuckoo
-    * builds (per-partition filters merged fingerprint-wise). Throws on
+  /** In-place union — the merged build's combOp for cuckoo filters
+    * (per-partition filters merged fingerprint-wise). Throws on
     * overflow rather than silently dropping: a dropped fingerprint would be
     * a false NEGATIVE, which breaks the seen-set pre-filter contract
     * (callers size with ≥2× headroom, so this never fires in practice). */
@@ -226,6 +228,9 @@ object CuckooFilter {
     f
   }
 
+  /** Key count from a serialized filter's 12-byte header, without its slots. */
+  def sizeOf(header: Array[Byte]): Long = java.nio.ByteBuffer.wrap(header).getLong(4)
+
   /** Buckets for `keys` inserts at ≤50% load (4 slots/bucket, power of 2) —
     * the headroom that makes kick-overflow practically impossible. */
   def bucketsFor(keys: Long): Int = {
@@ -247,7 +252,7 @@ object CuckooFilter {
     * exceed the single-ByteBuffer Int limit). Kept consistent with
     * [[MaxBuckets]] so any delta that passes the spill guard is guaranteed
     * to serialize. In SHARDED mode this cap applies PER HASH-SLICE
-    * (SeenSet.buildCuckooShards): the run's delta capacity scales with the
+    * (SeenSet.buildFilterShards): the run's delta capacity scales with the
     * shard count, so a 10^8-10^9-key nightly delta spills as a table
     * instead of forcing an epoch roll — the single-filter cap only bounds
     * the in-heap mode, whose filter must also fit a task binary. */

@@ -35,17 +35,7 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
 
   private def manifestPath(v: Int): Path = manifests.resolve(f"v$v%06d.json")
 
-  def versions: Seq[Int] =
-    if (!Files.isDirectory(manifests)) Nil
-    else {
-      // the stream holds a directory descriptor until closed
-      val s = Files.list(manifests)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.matches("v\\d{6}\\.json") => n.substring(1, 7).toInt }
-        .toSeq.sorted
-      finally s.close()
-    }
+  def versions: Seq[Int] = SnapshotTable.versions(baseDir)
 
   def currentVersion: Option[Int] = versions.lastOption
 
@@ -135,6 +125,24 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
       case Some(body) if body.nonEmpty =>
         """"(.*?)":"(.*?)"""".r.findAllMatchIn(body).map(m => m.group(1) -> m.group(2)).toMap
       case _ => Map.empty
+    }
+  }
+}
+
+object SnapshotTable {
+  /** Published versions of the table at `baseDir`, ascending: the one rule
+    * that resolves a table's HEAD. Nil when it has no manifests directory. */
+  def versions(baseDir: String): Seq[Int] = {
+    val manifests = Paths.get(baseDir, "manifests")
+    if (!Files.isDirectory(manifests)) Nil
+    else {
+      // the stream holds a directory descriptor until closed
+      val s = Files.list(manifests)
+      try s.iterator().asScala
+        .map(_.getFileName.toString)
+        .collect { case n if n.matches("v\\d{6}\\.json") => n.substring(1, 7).toInt }
+        .toSeq.sorted
+      finally s.close()
     }
   }
 }

@@ -28,25 +28,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(s.sql("SELECT le_u32(X'01000000', 0)").head.getLong(0) == 1L)
       assert(s.sql("SELECT rolling_minhash('abcdefghij', 4)").head.getLong(0) != 0L)
       assert(s.sql("SELECT magic_format(X'89504E47')").head.getString(0) == "png")
-      // aggregate path: bloom_agg(hash, expectedKeys) → binary filter sized
-      // by the SAME formula as the Scala BloomAgg.apply surface
-      val bytes = s.sql(
-        "SELECT bloom_agg(xxhash64(CAST(id AS STRING)), 1000) FROM range(1000)")
-        .head.getAs[Array[Byte]](0)
-      val bloom = frontier.BlockedBloom.deserialize(bytes)
-      val h = s.sql("SELECT xxhash64(CAST(7 AS STRING))").head.getLong(0)
-      assert(bloom.mightContain(h))
-      // the two surfaces must size identically for the same expectedKeys
-      import org.apache.spark.sql.functions.xxhash64
-      val scalaBytes = s.range(1000).toDF("id")
-        .agg(frontier.BloomAgg(xxhash64(org.apache.spark.sql.functions.col("id").cast("string")), 1000L))
-        .head.getAs[Array[Byte]](0)
-      assert(scalaBytes.length == bytes.length)
-      // non-foldable expectedKeys → clear AnalysisException, not an opaque NPE
-      val ex = intercept[Exception] {
-        s.sql("SELECT bloom_agg(xxhash64(CAST(id AS STRING)), CAST(id AS INT)) FROM range(10)").collect()
-      }
-      assert(ex.getMessage.contains("foldable"), ex.getMessage)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

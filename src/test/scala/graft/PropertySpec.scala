@@ -87,8 +87,8 @@ class PropertySpec extends SparkSpec {
       val seen = spark.createDataset(seenL.distinct).toDF("value")
       val cand = spark.createDataset(candL.distinct).toDF("value")
       // the no-store probe: one bloom tier rebuilt from the seen set
-      val probe = graft.frontier.SeenProbe(Seq(graft.frontier.SeenSet.buildBloomTree(
-        seen.select(graft.frontier.SeenSet.idHash($"value")).as[Long], 4096)), None, 0L)
+      val probe = graft.frontier.SeenProbe(Seq(graft.frontier.SeenSet.buildFilter(
+        seen.select(graft.frontier.SeenSet.idHash($"value")).as[Long], () => BlockedBloom.sized(4096))), None, 0L)
       val once = graft.frontier.SeenSet.dedup(spark, cand, seen, probe)
       val twice = graft.frontier.SeenSet.dedup(spark, once, seen, probe)
       val a = once.collect().map(_.getString(0)).sorted.toSeq
@@ -363,8 +363,7 @@ class PropertySpec extends SparkSpec {
           val c = lines(l.line - 1).charAt(l.colPos - 1)
           (c == '\'' || c == '"') &&
             // and the literal body follows immediately after the quote
-            src.replace("\n", "\u0000").indexOf(
-              c + l.text.replace("\n", "\u0000") + c) >= 0
+            src.replace("\n", "\u0000").indexOf(s"$c${l.text.replace("\n", "\u0000")}$c") >= 0
         }
       }
     }

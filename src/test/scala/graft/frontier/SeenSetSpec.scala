@@ -1,15 +1,15 @@
-// (BloomAgg coverage lives in BloomAggSpec alongside this file)
 package graft.frontier
 
 import graft.SparkSpec
 import graft.core.Ids
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 class SeenSetSpec extends SparkSpec {
   import spark.implicits._
 
   test("BlockedBloom: no false negatives, bounded false positives") {
-    val bloom = BlockedBloom.sized(10000, bitsPerKey = 10, numHashes = 5)
+    val bloom = BlockedBloom.sized(10000)
     val keys = (0L until 10000L).map(Ids.mix64)
     keys.foreach(bloom.add)
     assert(keys.forall(bloom.mightContain), "bloom must never lose a key")
@@ -64,9 +64,11 @@ class SeenSetSpec extends SparkSpec {
       c
     }
     def shards(bloomIds: Seq[String], spillIds: Seq[Seq[String]], n: Int) = Some(ShardTiers(
-      SeenSet.buildBloomShards(spark, hashes(bloomIds), n, blocksPerShard = 128),
-      spillIds.map(ids => SeenSet.buildCuckooShards(spark, hashes(ids), n,
-        CuckooFilter.bucketsFor(ids.size / n * 5 / 4 + 1))), n))
+      SeenSet.buildFilterShards(spark, hashes(bloomIds), n, () => new BlockedBloom(128, 5)),
+      spillIds.map { ids =>
+        val buckets = CuckooFilter.bucketsFor(ids.size / n * 5 / 4 + 1)
+        SeenSet.buildFilterShards(spark, hashes(ids), n, () => new CuckooFilter(buckets))
+      }, n))
     val all = snapshot ++ delta ++ forum
     val cases = Seq(
       ("bloom only", all, SeenProbe(Seq(bloom(all)), None, 0L)),
@@ -81,7 +83,7 @@ class SeenSetSpec extends SparkSpec {
         SeenProbe(Seq(bloom(snapshot), cuckoo(delta)), None, 0L).withFilter(bloom(forum))),
       ("shard tiers + forum tier", all,
         SeenProbe(Nil, shards(snapshot, Seq(delta), 8), 0L).withFilter(bloom(forum))))
-    assert(SeenSet.buildBloomShards(spark, hashes(sparse), 64, 128).count() < 64,
+    assert(SeenSet.buildFilterShards(spark, hashes(sparse), 64, () => new BlockedBloom(128, 5)).count() < 64,
       "the 64-shard case must include empty shards")
     cases.foreach { case (name, seen, probe) =>
       val candidates = seen.drop(seen.size / 3) ++ (0 until 800).map(i => s"fresh_$i")
@@ -96,14 +98,50 @@ class SeenSetSpec extends SparkSpec {
     }
   }
 
+  test("buildFilter over 8 partitions == sequential build") {
+    val keys = (0L until 20000L).map(Ids.mix64)
+    val hashes = spark.createDataset(keys).repartition(8)
+    assert(hashes.rdd.getNumPartitions == 8)
+    // bloom: OR-merging partials sets exactly the bits one filter would
+    val bloom = SeenSet.buildFilter(hashes, () => BlockedBloom.sized(20000L))
+    val seqBloom = BlockedBloom.sized(20000L)
+    keys.foreach(seqBloom.add)
+    assert(bloom.numBlocks == seqBloom.numBlocks && bloom.numHashes == seqBloom.numHashes)
+    assert(bloom.words.toSeq == seqBloom.words.toSeq, "bloom must be bit-identical")
+    // cuckoo: slot placement depends on insertion order, so compare geometry
+    // and key count, and check every key survives the merge
+    val buckets = CuckooFilter.bucketsFor(keys.size.toLong)
+    val cuckoo = SeenSet.buildFilter(hashes, () => new CuckooFilter(buckets))
+    val seqCuckoo = new CuckooFilter(buckets)
+    keys.foreach(k => assert(seqCuckoo.add(k)))
+    assert(cuckoo.numBuckets == seqCuckoo.numBuckets && cuckoo.size == seqCuckoo.size)
+    assert(keys.forall(cuckoo.mightContain), "cuckoo merge must keep every key")
+    // an overfull filter throws rather than dropping a key
+    val full = intercept[org.apache.spark.SparkException] {
+      SeenSet.buildFilter(hashes, () => new CuckooFilter(256))
+    }
+    assert(full.getMessage.contains("CuckooFilter overflow"), full.getMessage)
+  }
+
+  private val shardKeys = (0L until 5000L).map(Ids.mix64)
+
+  private def checkShards(rows: Dataset[(Int, Array[Byte])],
+                          read: Array[Byte] => MembershipFilter): Unit = {
+    val filters = rows.collect().map { case (shard, bytes) => shard -> read(bytes) }.toMap
+    assert(filters.size == 8)
+    assert(shardKeys.forall(h => filters(Math.floorMod(h, 8L).toInt).mightContain(h)))
+  }
+
   test("sharded bloom build covers all inserted keys") {
-    val hashes = spark.createDataset((0L until 5000L).map(Ids.mix64))
-    val shards = SeenSet.buildBloomShards(spark, hashes, numShards = 8, blocksPerShard = 256)
-      .collect().toMap
-    assert(shards.size == 8)
-    val filters = shards.map { case (s, bytes) => s -> BlockedBloom.deserialize(bytes) }
-    assert((0L until 5000L).map(Ids.mix64).forall { h =>
-      filters(Math.floorMod(h, 8L).toInt).mightContain(h)
-    })
+    val hashes = spark.createDataset(shardKeys)
+    checkShards(SeenSet.buildFilterShards(spark, hashes, 8, () => new BlockedBloom(256, 5)),
+      BlockedBloom.deserialize)
+  }
+
+  test("sharded cuckoo build covers all inserted keys") {
+    val hashes = spark.createDataset(shardKeys)
+    val buckets = CuckooFilter.bucketsFor(5000L / 8 * 5 / 4 + 1)
+    checkShards(SeenSet.buildFilterShards(spark, hashes, 8, () => new CuckooFilter(buckets)),
+      CuckooFilter.deserialize)
   }
 }

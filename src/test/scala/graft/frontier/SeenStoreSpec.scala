@@ -106,6 +106,40 @@ class SeenStoreSpec extends SparkSpec {
     assert(probe.coveredKeys == 700)
   }
 
+  test("spills hold only the run's new ids: recrawling the corpus spills and covers it once") {
+    val dir = tempDir("graft_seenstore_delta")
+    val store = new SeenStore(dir, expectedKeys = 1024)
+    def upTo(n: Int) = (0 until n).map(i => Ids.mix64(i.toLong))
+    def flagsAll(n: Int) = {
+      val probe = store.loadProbe(spark).get
+      upTo(n).forall(h => probe.filters.exists(_.mightContain(h)))
+    }
+    fakeSeenCommit(dir, 1)
+    val (r1, n1) = store.commitRun(spark, hashesOf(upTo(2000)), 2000, 1, hashesOf(upTo(2000)), 2000)
+    assert(r1 && n1 == 2000, "the first commit builds the epoch at capacity 4000")
+    // each run passes every id crawled so far plus 100 new ones; the upper
+    // bound (covered + every id) overflows the capacity, the delta does not
+    (2 to 4).foreach { v =>
+      val corpus = 2000 + 100 * (v - 1)
+      fakeSeenCommit(dir, v)
+      val (rolled, covered) = store.commitRun(spark, hashesOf(upTo(corpus)), corpus, v,
+        fullCorpusHashes = fail(s"run $v must spill, not roll"),
+        fullCount = fail(s"run $v must spill, not count the corpus"))
+      assert(!rolled)
+      assert(covered <= corpus, s"run $v: $covered covered keys for a corpus of $corpus")
+      assert(store.loadProbe(spark).get.coveredKeys == covered)
+      assert(flagsAll(corpus), s"run $v: every committed id stays flagged")
+    }
+    // a re-commit of version 4 leaves its own spill out of the filter and
+    // replaces it: the same delta again, counted once
+    val before = store.loadProbe(spark).get.coveredKeys
+    val (rolled, covered) = store.commitRun(spark, hashesOf(upTo(2300)), 2300, 4,
+      fullCorpusHashes = fail("a re-commit must spill, not roll"),
+      fullCount = fail("a re-commit must spill, not count the corpus"))
+    assert(!rolled && covered == before)
+    assert(flagsAll(2300), "every committed id stays flagged after a re-commit")
+  }
+
   test("crash gap: a url_seen version without its spill invalidates the probe; next commit heals by rolling") {
     val dir = tempDir("graft_seenstore_crash")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
