@@ -54,7 +54,9 @@ object CrawlMain {
     val lo = (runId - 1) * numIds
     val discovered = spark.range(lo, lo + numIds).map(i => Ids.syntheticId(i, seed))
     val forum = spark.range(lo, lo + numIds, 41).map(i => Ids.syntheticId(i, seed))
-    // persistent epoch bloom: run 2+ skips the full-corpus filter rebuild
+    // persistent epoch bloom: run 2+ skips the full-corpus filter rebuild.
+    // expectedKeys is the roll-budget floor only; the bloom is sized from
+    // the corpus each roll holds
     val store = new graft.frontier.SeenStore(tableDir,
       expectedKeys = math.max(1L << 22, numIds.toLong * 8))
     val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,

@@ -71,8 +71,10 @@ object SeenSet {
     * `hash`, the hash of the row's key. No false negatives over the keys the
     * probe covers; false positives are the callers' to resolve.
     *
-    *  1. the in-heap tiers OR into one codegen column — each filter ships
-    *     once per executor via `addReferenceObj`;
+    *  1. the in-heap tiers OR into one codegen column — each filter is a
+    *     reference object of the plan ([[MightContain]]), so it rides in the
+    *     task binary of every stage whose lineage holds the probe, and
+    *     every task deserializes it: its size is paid per stage and task;
     *  2. the table-resident shard tiers, when the probe has them, go
     *     through one cogroup ([[shardedMaybeSeenTiers]]). */
   def maybeSeen(spark: SparkSession, rows: DataFrame, hash: Column, probe: SeenProbe): DataFrame = {
@@ -153,8 +155,10 @@ final case class ShardTiers(bloom: Dataset[(Int, Array[Byte])],
                             spills: Seq[Dataset[(Int, Array[Byte])]], numShards: Int)
 
 /** `bloom_might_contain(hash)` / `cuckoo_might_contain(hash)` — codegen'd
-  * probe of one filter tier; the filter object ships in the task binary
-  * via `ctx.addReferenceObj` (one deserialize per executor, not per row). */
+  * probe of one filter tier. The filter object is a reference object
+  * (`ctx.addReferenceObj`) of the plan, so it is serialized into the task
+  * binary of every stage whose lineage holds the probe and deserialized
+  * once per task (not per row). */
 case class MightContain(filter: MembershipFilter, child: Expression) extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true

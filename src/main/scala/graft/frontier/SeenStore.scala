@@ -20,9 +20,10 @@ import graft.snapshot.SnapshotTable
   * filter a PERSISTED artifact with an O(delta) nightly commit:
   *
   *  - the **epoch bloom** covers the seen corpus up to one `url_seen`
-  *    snapshot version (recorded in its meta file). It is only rewritten at
-  *    epoch ROLLS — at archive scale the bloom file is multi-GB, so the
-  *    per-run commit must not touch it;
+  *    snapshot version (recorded in its meta file), sized from the keys it
+  *    holds ([[BlockedBloom.sized]]; it never gains one after its roll). It
+  *    is only rewritten at epoch ROLLS — at archive scale the bloom file is
+  *    multi-GB, so the per-run commit must not touch it;
   *  - each run's commit writes a **cuckoo spill**: a small filter over just
   *    the run's ids that no earlier tier flags (the run passes every id it
   *    crawled; the ones the epoch or an earlier spill already covers are
@@ -31,9 +32,10 @@ import graft.snapshot.SnapshotTable
   *    published atomically as `url_seen_spill-v{N}.bin`, keyed by the
   *    `url_seen` snapshot version it covers. Commit cost is O(delta);
   *  - when spills accumulate past `maxSpillRuns`, or covered keys outgrow
-  *    the bloom's persisted capacity, the epoch ROLLS: one rebuild from the
-  *    authoritative snapshot (the only full scan, amortized over many runs),
-  *    after which the spills are deleted.
+  *    the persisted roll budget (`capacityKeys`, at least 2× the corpus at
+  *    the last roll), the epoch ROLLS: one rebuild from the authoritative
+  *    snapshot (the only full scan, amortized over many runs), after which
+  *    the spills are deleted.
   *
   * **Crash safety is validation, not staging** (the round-2 design staged
   * current-run inserts in a driver-held delta that production never
@@ -48,7 +50,12 @@ import graft.snapshot.SnapshotTable
   * anti-join ([[SeenSet.dedup]]'s contract), and the version check
   * guarantees the pre-filter tier never silently under-covers.
   */
-final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
+final class SeenStore(dir: String,
+                      /** Floor of the roll budget: a roll persists
+                        * `max(expectedKeys, 2 × corpus)` as the covered-key
+                        * count the spills may grow to before the next roll.
+                        * It does not size any filter. */
+                      expectedKeys: Long = 1L << 22,
                       maxSpillRuns: Int = 8,
                       /** >0 → SHARDED epochs: the bloom persists as a
                         * parquet table of (shard, bloomBytes) rows probed
@@ -82,6 +89,9 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   }
 
   // -------- meta: {insertedKeys, capacityKeys, seenVersion} --------
+  // insertedKeys: the epoch's keys (its bloom is sized from them);
+  // capacityKeys: the roll budget the spills fit against; seenVersion: the
+  // url_seen version the epoch covers
 
   private def readMeta(): Option[Meta] =
     if (!Files.exists(metaPath)) None
@@ -151,7 +161,7 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
   /** Parsed sidecar count — None for a missing OR malformed json, which
     * makes the version INVISIBLE (a gap the next load/commit heals by
     * rolling): a corrupt sidecar must not silently count 0 keys toward the
-    * bloom's capacity check. */
+    * roll-budget check. */
   private def shardedSpillCount(v: Int): Option[Long] =
     if (!Files.exists(spillMetaPath(v))) None
     else {
@@ -214,10 +224,11 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
     * of versions below `seenVersion`; this version's own spill is left out,
     * since a re-commit replaces it) — O(delta) I/O, the epoch bloom file
     * untouched. Roll path — taken when the store is absent/stale (crash
-    * gap), covered keys would exceed the bloom's PERSISTED capacity, or
+    * gap), covered keys would exceed the PERSISTED roll budget, or
     * `maxSpillRuns` spills have accumulated — rebuilds the bloom from the
-    * authoritative corpus at 2× headroom and persists the grown capacity (so
-    * a corpus larger than the constructor default never re-rolls every run).
+    * authoritative corpus, sized from the keys it holds, and persists a
+    * budget of 2× the corpus (at least `expectedKeys`; so a corpus larger
+    * than the constructor default never re-rolls every run).
     * `newCount` bounds the spill's keys from above; the delta is counted
     * only when that bound fails a check. `seenVersion` is the `url_seen`
     * snapshot version this run committed. Returns (rolled,
@@ -233,12 +244,13 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
       ((m.seenVersion + 1) until seenVersion).forall(vs.contains))
     val prior = meta.map(m => vs.filter(v => v > m.seenVersion && v < seenVersion)).getOrElse(Nil)
     lazy val coveredSoFar = covered(meta.get, prior)
-    // a delta past the cuckoo's geometry cap can't spill safely (overload →
-    // kick overflow; and the per-task zero table would be GiBs) — such a
-    // run IS a reshape of the corpus, roll instead. In SHARDED mode the
-    // spill is a per-slice table, so the cap applies per shard (with the
-    // same 25% skew margin the build sizes with) — a nightly 10^8-key delta
-    // spills in O(delta) instead of forcing a full-corpus epoch roll
+    // keys one hash slice gets out of `keys`, with a 25% skew margin: the
+    // size of each sharded filter, epoch or spill. A delta past the cuckoo's
+    // geometry cap can't spill safely (overload → kick overflow; and the
+    // per-task zero table would be GiBs) — such a run IS a reshape of the
+    // corpus, roll instead. In SHARDED mode the spill is a per-slice table,
+    // so the cap applies per shard — a nightly 10^8-key delta spills in
+    // O(delta) instead of forcing a full-corpus epoch roll
     def perShard(keys: Long) = keys / numShards * 5 / 4 + 1
     def spillFits(keys: Long) = coveredSoFar + keys <= meta.get.capacityKeys &&
       (if (sharded) perShard(keys) else keys) <= CuckooFilter.MaxSpillKeys
@@ -251,14 +263,17 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
       else Some(delta.count()).filter(spillFits)
     spillKeys match {
       case None =>
-        // epoch roll: one full rebuild from the authoritative snapshot
+        // epoch roll: one full rebuild from the authoritative snapshot. Its
+        // bits follow the keys it holds, not the roll budget: it never gains
+        // a key after the roll (new ids go to spills), and every stage
+        // downstream of the probe ships it in its task binary
         val total = fullCount
         val capacity = math.max(expectedKeys, total * 2)
         if (sharded) {
           // the epoch becomes a TABLE: one (shard, bloomBytes) row per hash
           // slice, written then published by directory swap; a crash mid-swap
           // is a version gap the next load/commit heals by rolling again
-          val perShardKeys = capacity / numShards
+          val perShardKeys = perShard(total)
           val tmp = Paths.get(dir, s".bloomshards-tmp-${System.nanoTime()}")
           SeenSet.buildFilterShards(spark, fullCorpusHashes, numShards,
               () => BlockedBloom.sized(perShardKeys))
@@ -268,7 +283,7 @@ final class SeenStore(dir: String, expectedKeys: Long = 1L << 22,
           Files.move(tmp, shardDir, StandardCopyOption.REPLACE_EXISTING)
         } else
           atomicWrite(bloomPath,
-            SeenSet.buildFilter(fullCorpusHashes, () => BlockedBloom.sized(capacity)).serialized)
+            SeenSet.buildFilter(fullCorpusHashes, () => BlockedBloom.sized(total)).serialized)
         saveMeta(Meta(total, capacity, seenVersion))
         deleteSpills()
         (true, total)

@@ -1,5 +1,7 @@
 package graft.sim
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -216,10 +218,10 @@ object Ann {
   def nearestCentroid(emb: Column, nrm: Column, cents: Array[Array[Double]]): Column = {
     val scored = cents.zipWithIndex.map { case (c, j) =>
       val cn = math.sqrt(c.map(x => x * x).sum)
-      val d = dot(emb, array(c.map(lit): _*))
+      val d = dot(emb, array(ArraySeq.unsafeWrapArray(c.map(lit)): _*))
       struct((d / (nrm * lit(cn))).as("cos"), lit(j).as("idx"))
     }
-    array_max(array(scored: _*)).getField("idx")
+    array_max(array(ArraySeq.unsafeWrapArray(scored): _*)).getField("idx")
   }
 
   /** Train IVF centroids with deterministic Lloyd iterations: init = the k
@@ -332,9 +334,9 @@ object Ann {
         (c.zip(q).map { case (a, b) => a * b }.sum / (cn * qn), j)
       }
       .sortBy(-_._1).take(nProbe).map(_._2)
-    val qLit = array(q.map(lit): _*)
+    val qLit = array(ArraySeq.unsafeWrapArray(q.map(lit)): _*)
     ivfIndex(spark, dir, nCentroids, iters)
-      .filter(col("cid").isin(probes.map(Integer.valueOf): _*))
+      .filter(col("cid").isin(ArraySeq.unsafeWrapArray(probes.map(Integer.valueOf)): _*))
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"),
         round(dot(col("embedding"), qLit) / (col("nrm") * lit(qn)), 6).as("cos_sim"))

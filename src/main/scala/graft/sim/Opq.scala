@@ -1,5 +1,7 @@
 package graft.sim
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +55,7 @@ object Opq {
   /** The permuted view of an embedding column — literal-index gather, one
     * codegen'd array construction, no shuffle. */
   def permuteExpr(emb: Column, perm: Array[Int]): Column =
-    array(perm.map(i => element_at(emb, i + 1)): _*)
+    array(ArraySeq.unsafeWrapArray(perm.map(i => element_at(emb, i + 1))): _*)
 
   private def permutedCorpus(spark: SparkSession, dir: String,
                              perm: Array[Int]): DataFrame =

@@ -1,5 +1,7 @@
 package graft.sim
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +49,7 @@ object Pq {
   // codegen'd (VecSqDist) — the HOF form was CodegenFallback; identical
   // IEEE sequence (widen, subtract, square, ascending sum)
   private def sqDistTo(sub: Column, cent: Array[Double]): Column =
-    graft.functions.GraftFunctions.vecSqDist(sub, array(cent.map(lit): _*))
+    graft.functions.GraftFunctions.vecSqDist(sub, array(ArraySeq.unsafeWrapArray(cent.map(lit)): _*))
 
   /** Nearest sub-centroid id by L2 — argmin via array_min over
     * (dist, idx) structs (fieldwise struct ordering; ties → lower idx via
@@ -57,7 +59,7 @@ object Pq {
     val scored = book.zipWithIndex.map { case (c, j) =>
       struct(sqDistTo(sub, c).as("d"), lit(j).as("idx"))
     }
-    array_min(array(scored: _*)).getField("idx")
+    array_min(array(ArraySeq.unsafeWrapArray(scored): _*)).getField("idx")
   }
 
   /** The m-byte PQ code of `emb` as an array<int> column. */
@@ -191,7 +193,7 @@ object Pq {
       qs.zip(mod.books(s)(j)).map { case (a, b) => a * b }.sum
     }
     (0 until mod.m).map { s =>
-      element_at(array(lut(s).map(lit): _*), col("code").getItem(s) + 1)
+      element_at(array(ArraySeq.unsafeWrapArray(lut(s).map(lit)): _*), col("code").getItem(s) + 1)
     }.reduce(_ + _)
   }
 
@@ -247,7 +249,7 @@ object Pq {
   def exactRerank(spark: SparkSession, dir: String, q: Array[Double],
                   cand: DataFrame, kTop: Int): DataFrame = {
     val qn = math.sqrt(q.map(x => x * x).sum)
-    val qLit = array(q.map(lit): _*)
+    val qLit = array(ArraySeq.unsafeWrapArray(q.map(lit)): _*)
     Tables.embeddings(spark, dir)
       .join(broadcast(cand.select("vec_id")), "vec_id")
       .select(col("vec_id"),
@@ -329,8 +331,8 @@ object Pq {
     val b = idx.select(col("vec_id").as("id_b"), col("code").as("code_b"), col("bucket"))
     // SDC LUT: lut(s)(i)(j) = <centroid_si, centroid_sj>
     val sdcScore: Column = (0 until mod.m).map { s =>
-      val lutS = array(mod.books(s).map(ci => array(mod.books(s).map(cj =>
-        lit(ci.zip(cj).map { case (x, y) => x * y }.sum)): _*)): _*)
+      val lutS = array(ArraySeq.unsafeWrapArray(mod.books(s).map(ci => array(ArraySeq.unsafeWrapArray(mod.books(s).map(cj =>
+        lit(ci.zip(cj).map { case (x, y) => x * y }.sum))): _*))): _*)
       element_at(element_at(lutS, col("code_a").getItem(s) + 1),
         col("code_b").getItem(s) + 1)
     }.reduce(_ + _)
@@ -373,8 +375,8 @@ object Pq {
     // residual_s = emb − centroid[cid], expressed per sub-centroid lookup:
     // nearestSub over (emb_sub − cent_sub) via a cid-indexed literal table
     val residual = {
-      val centArrs = cents.map(c => array(c.map(lit): _*))
-      zip_with(col("embedding"), element_at(array(centArrs: _*), col("cid") + 1),
+      val centArrs = cents.map(c => array(ArraySeq.unsafeWrapArray(c.map(lit)): _*))
+      zip_with(col("embedding"), element_at(array(ArraySeq.unsafeWrapArray(centArrs): _*), col("cid") + 1),
         (x, c) => x.cast("double") - c)
     }
     emb.select(col("vec_id"), col("cid"), encodeExpr(residual, mod).as("code"))
@@ -388,9 +390,9 @@ object Pq {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nrm", Ann.norm(col("embedding")))
       .withColumn("cid", Ann.nearestCentroid(col("embedding"), col("nrm"), cents))
-    val centArrs = cents.map(c => array(c.map(lit): _*))
+    val centArrs = cents.map(c => array(ArraySeq.unsafeWrapArray(c.map(lit)): _*))
     val residuals = emb.select(col("vec_id"),
-      zip_with(col("embedding"), element_at(array(centArrs: _*), col("cid") + 1),
+      zip_with(col("embedding"), element_at(array(ArraySeq.unsafeWrapArray(centArrs): _*), col("cid") + 1),
         (x, c) => x.cast("double") - c).as("embedding"))
     train(residuals, m, k, iters)
   }
@@ -434,10 +436,10 @@ object Pq {
     // per-list constant term ⟨q, c_cid⟩ as a cid-indexed literal
     val centDots = cents.map(c => lit(c.zip(q).map { case (a, b) => a * b }.sum))
     codes
-      .filter(col("cid").isin(ranked.map(Integer.valueOf): _*))
+      .filter(col("cid").isin(ArraySeq.unsafeWrapArray(ranked.map(Integer.valueOf)): _*))
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"),
-        round(element_at(array(centDots: _*), col("cid") + 1) + adcScore(q, mod), 6)
+        round(element_at(array(ArraySeq.unsafeWrapArray(centDots): _*), col("cid") + 1) + adcScore(q, mod), 6)
           .as("adc_score"))
       .orderBy(col("adc_score").desc, col("vec_id").asc)
       .limit(kTop)

@@ -21,13 +21,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s ne base)
-      assert(s.sql("SELECT simhash64('the quick brown fox runs')").head.getLong(0) != 0L)
-      assert(math.abs(s.sql("SELECT shannon_entropy('abcd')").head.getDouble(0) - 2.0) < 1e-12)
-      assert(s.sql("SELECT canonicalize_url('HTTP://X.com:80/a/')").head.getString(0)
+      assert(s.sql("SELECT simhash64('the quick brown fox runs')").head().getLong(0) != 0L)
+      assert(math.abs(s.sql("SELECT shannon_entropy('abcd')").head().getDouble(0) - 2.0) < 1e-12)
+      assert(s.sql("SELECT canonicalize_url('HTTP://X.com:80/a/')").head().getString(0)
         == "http://x.com/a")
-      assert(s.sql("SELECT le_u32(X'01000000', 0)").head.getLong(0) == 1L)
-      assert(s.sql("SELECT rolling_minhash('abcdefghij', 4)").head.getLong(0) != 0L)
-      assert(s.sql("SELECT magic_format(X'89504E47')").head.getString(0) == "png")
+      assert(s.sql("SELECT le_u32(X'01000000', 0)").head().getLong(0) == 1L)
+      assert(s.sql("SELECT rolling_minhash('abcdefghij', 4)").head().getLong(0) != 0L)
+      assert(s.sql("SELECT magic_format(X'89504E47')").head().getString(0) == "png")
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

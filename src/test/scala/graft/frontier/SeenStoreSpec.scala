@@ -72,7 +72,11 @@ class SeenStoreSpec extends SparkSpec {
     val (rolled2, n2) = store.commitRun(spark, h2, 200, seenVersion = 2,
       fullCorpusHashes = fail("spill path must not scan the corpus"),
       fullCount = fail("spill path must not count the corpus"))
-    assert(!rolled2 && n2 == 500)
+    // the spill holds the ids the epoch does not flag
+    val probe2 = store.loadProbe(spark).get
+    val h2s = h2.collect().toSeq
+    assert(!rolled2 && n2 == 300 + h2s.count(h => !epochBloom(probe2).mightContain(h)))
+    assert(h2s.forall(h => probe2.filters.exists(_.mightContain(h))))
     val existing3 = spark.createDataset(ids(0, 500))
     val d3 = spark.createDataset(ids(400, 800))
     val inc3 = Frontier.buildWorklist(spark, existing3, forum, d3,
@@ -96,14 +100,18 @@ class SeenStoreSpec extends SparkSpec {
     val (rolled, covered) = store.commitRun(spark, hashesOf(delta), 200, seenVersion = 2,
       fullCorpusHashes = fail("spill path must not scan the corpus"),
       fullCount = fail("spill path must not count the corpus"))
-    assert(!rolled && covered == 700)
     assert(java.util.Arrays.equals(bloomBytes,
       Files.readAllBytes(Paths.get(dir, "url_seen_bloom.bin"))),
       "spill commit must leave the multi-GB epoch bloom file untouched")
-    // the spill covers the delta (no false negatives through the probe)
+    // the spill holds the delta ids the epoch does not flag, so every delta
+    // id is flagged by one tier (no false negatives through the probe)
     val probe = store.loadProbe(spark).get
-    assert(delta.forall(h => spills(probe).exists(_.mightContain(h))))
-    assert(probe.coveredKeys == 700)
+    val fresh = delta.filterNot(epochBloom(probe).mightContain)
+    assert(!rolled && covered == 500 + fresh.size)
+    assert(spills(probe).map(_.size).sum == fresh.size)
+    assert(delta.forall(h =>
+      epochBloom(probe).mightContain(h) || spills(probe).exists(_.mightContain(h))))
+    assert(probe.coveredKeys == covered)
   }
 
   test("spills hold only the run's new ids: recrawling the corpus spills and covers it once") {
@@ -182,10 +190,60 @@ class SeenStoreSpec extends SparkSpec {
     val (r3, n3) = store.commitRun(spark, hashesOf(h3), 100, seenVersion = 3,
       fullCorpusHashes = fail("capacity must come from the persisted meta, not the constructor"),
       fullCount = fail("no corpus count on the spill path"))
-    assert(!r3 && n3 == 1400)
     val probe = store.loadProbe(spark).get
+    assert(!r3 && n3 == 1300 + h3.count(h => !epochBloom(probe).mightContain(h)))
     assert(all2.forall(epochBloom(probe).mightContain))
-    assert(h3.forall(h => spills(probe).exists(_.mightContain(h))))
+    assert(h3.forall(h =>
+      epochBloom(probe).mightContain(h) || spills(probe).exists(_.mightContain(h))))
+  }
+
+  /** Rolls 2,000 ids into a store with the 1 << 22 roll budget the crawl
+    * mains pass, then spills two runs of 100 new ids. Returns the hashes
+    * committed, the ones the loaded probe flags, and its false-positive
+    * rate over 100k never-committed hashes. */
+  private def rollThenSpill(store: SeenStore, dir: String) = {
+    def range(lo: Int, hi: Int) = (lo until hi).map(i => Ids.mix64(i.toLong))
+    fakeSeenCommit(dir, 1)
+    val (r1, n1) = store.commitRun(spark, hashesOf(range(0, 2000)), 2000, 1,
+      hashesOf(range(0, 2000)), 2000)
+    assert(r1 && n1 == 2000)
+    (2 to 3).foreach { v =>
+      fakeSeenCommit(dir, v)
+      val delta = range(2000 + 100 * (v - 2), 2100 + 100 * (v - 2))
+      val (rolled, _) = store.commitRun(spark, hashesOf(delta), 100, v,
+        fullCorpusHashes = fail(s"run $v must spill within the persisted budget"),
+        fullCount = fail(s"run $v must not count the corpus"))
+      assert(!rolled)
+    }
+    val committed = range(0, 2200)
+    val never = range(1 << 20, (1 << 20) + 100000)
+    val flagged = SeenSet.maybeSeen(spark, hashesOf(committed ++ never).toDF("h"), col("h"),
+      store.loadProbe(spark).get).filter(col("maybe")).select("h").as[Long].collect().toSet
+    (committed, flagged, never.count(flagged).toDouble / never.size)
+  }
+
+  test("epoch bloom is sized from its corpus; the roll budget stays") {
+    val dir = tempDir("graft_seenstore_sized")
+    val store = new SeenStore(dir, expectedKeys = 1L << 22)
+    val (committed, flagged, fp) = rollThenSpill(store, dir)
+    assert(Files.size(Paths.get(dir, "url_seen_bloom.bin")) ==
+      BlockedBloom.sized(2000).serialized.length, "the epoch's bits follow its 2,000 keys")
+    assert(committed.forall(flagged), "every committed id stays flagged")
+    assert(fp < 0.05, s"false-positive rate too high: $fp")
+    info(s"false-positive rate over 100k never-committed hashes: $fp")
+  }
+
+  test("sharded epoch shards are sized from the corpus") {
+    val dir = tempDir("graft_seenstore_sized_shards")
+    val store = new SeenStore(dir, expectedKeys = 1L << 22, numShards = 8)
+    val (committed, flagged, fp) = rollThenSpill(store, dir)
+    val sizes = spark.read.parquet(Paths.get(dir, "url_seen_bloom_shards").toString)
+      .select("bytes").as[Array[Byte]].collect().map(_.length).toSet
+    assert(sizes == Set(BlockedBloom.sized(2000 / 8 * 5 / 4 + 1).serialized.length),
+      "each shard's bits follow its slice of the 2,000 keys, with a 25% skew margin")
+    assert(committed.forall(flagged), "every committed id stays flagged")
+    assert(fp < 0.05, s"false-positive rate too high: $fp")
+    info(s"false-positive rate over 100k never-committed hashes: $fp")
   }
 
   test("sharded epoch mode: table-resident shards + spills dedup exactly like the rebuild path") {

@@ -20,14 +20,14 @@ class ExpressionsSpec extends SparkSpec {
     def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(ham(a, b) < ham(a, c), s"near-dup should be closer: ${ham(a, b)} vs ${ham(a, c)}")
     // SQL registration path produces identical values
-    val viaSql = spark.sql("SELECT simhash64('the quick brown fox jumps over the lazy dog')").head.getLong(0)
+    val viaSql = spark.sql("SELECT simhash64('the quick brown fox jumps over the lazy dog')").head().getLong(0)
     assert(viaSql == a)
   }
 
   test("simhash64: case/punctuation-insensitive (lowercase + strip non-word)") {
     val df = Seq(("Hello, World! 42", "hello world 42")).toDF("a", "b")
       .select(GraftFunctions.simhash64(col("a")), GraftFunctions.simhash64(col("b")))
-    val r = df.head
+    val r = df.head()
     assert(r.getLong(0) == r.getLong(1))
   }
 
@@ -94,7 +94,7 @@ class ExpressionsSpec extends SparkSpec {
     val df = Seq(hdr).toDF("b").select(
       GraftFunctions.leU32(col("b"), lit(4)).as("version"),
       GraftFunctions.leU32(col("b"), lit(8)).as("hlen"))
-    val r = df.head
+    val r = df.head()
     assert(r.getLong(0) == 3L && r.getLong(1) == 16L)
   }
 
@@ -112,7 +112,7 @@ class ExpressionsSpec extends SparkSpec {
     assert(a != c)
     // exact repeat → exact same fingerprint
     val a2 = Seq(("XX" + base, 12)).toDF("s", "w")
-      .select(GraftFunctions.rollingMinHash(col("s"), col("w"))).head.getLong(0)
+      .select(GraftFunctions.rollingMinHash(col("s"), col("w"))).head().getLong(0)
     assert(a2 == a)
   }
 
@@ -174,7 +174,7 @@ class ExpressionsSpec extends SparkSpec {
   // ---- hamming via built-ins (F3) ----
   test("hamming distance = bit_count(xor)") {
     val r = Seq((0xFFL, 0x0FL)).toDF("a", "b")
-      .select(GraftFunctions.hamming(col("a"), col("b"))).head
+      .select(GraftFunctions.hamming(col("a"), col("b"))).head()
     assert(r.getInt(0) == 4)
   }
 }
