@@ -44,7 +44,7 @@ object CrawlMain {
     // three frontier sources (crawler:203-215): prior seen-set snapshot (if
     // resuming), a forum list, fresh discoveries
     // the whole round runs in one cache scope: every transient persist the
-    // stages register (dedup candidates, sorted schedule, results) is
+    // stages register (work-list ids, sorted schedule, results) is
     // released when the round's outputs are materialized
     val (n, wallSec, parity, out) = graft.core.CacheScope.withScope {
     val haveSeen = new snapshot.SnapshotTable(spark, s"$tableDir/url_seen").currentVersion.isDefined
@@ -54,7 +54,8 @@ object CrawlMain {
     val lo = (runId - 1) * numIds
     val discovered = spark.range(lo, lo + numIds).map(i => Ids.syntheticId(i, seed))
     val forum = spark.range(lo, lo + numIds, 41).map(i => Ids.syntheticId(i, seed))
-    // persistent epoch bloom: run 2+ skips the full-corpus filter rebuild.
+    // the seen store is committed each run but the work-list does not read
+    // it (the frontier is exact set algebra over the seen ids it recrawls).
     // expectedKeys is the roll-budget floor only; the bloom is sized from
     // the corpus each roll holds
     val store = new graft.frontier.SeenStore(tableDir,

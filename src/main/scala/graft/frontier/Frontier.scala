@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, FrontierEntry, Ids}
 
 /** Frontier construction — the reference's work-list algebra
-  * (crawler:203-215): known = archive-scan ∪ forum-conf; discovered =
-  * sitemap ids anti-joined against known, capped; work-list = known ∪
-  * discovered with a forums flag (archive.py:589-592).
+  * (crawler:203-215): known = archive-scan ∪ forum-conf; new = sitemap ids
+  * not in known, capped; work-list = known ∪ new with a forums flag
+  * (archive.py:589-592).
   */
 object Frontier {
 
@@ -75,24 +75,20 @@ object Frontier {
       .as[String]
   }
 
-  /** Work-list build (crawler:203-215 + archive.py:589-592):
-    * known ∪ (discovered ⟕anti known, limit maxNew), forums-flagged.
+  /** Work-list build (crawler:203-215 + archive.py:589-592): set algebra,
+    * known ∪ (the first `maxNew` of discovered ∖ known in id order),
+    * forums-flagged.
     *
-    * `known` = `(existing, false) ∪ (forumIds, true)` grouped by id with
-    * `max(forums)`, persisted once: the forum tier, the exact anti-join and
-    * the work-list read its cached rows, and so does the schedule's pass.
+    * Every known id is recrawled, so `known` is scanned every round anyway,
+    * and known ∪ (discovered ∖ known) = known ∪ discovered. The work-list is
+    * therefore one aggregate over three tagged sources, `(existing, forums =
+    * false, known = true)`, `(forumIds, true, true)` and `(discovered,
+    * false, false)`, grouped by id with `max(forums)` and `max(known)` and
+    * persisted once: no anti-join and no filter pre-tier. The rows without
+    * the known flag are the new ids; the cap costs one count of them.
     *
-    * The anti-join runs behind a tiered pre-filter ([[SeenSet.dedup]]).
-    * With `store = Some(SeenStore)` the tiers are the PERSISTED epoch bloom
-    * and per-run cuckoo spills — no per-run full scan of the seen corpus
-    * to rebuild a filter (the dominant constant of a nightly run at 10^10
-    * ids) — plus a bloom over the forum ids (a small config set), so the
-    * probe covers everything `known` contains. The store's probe only
-    * loads when it covers every committed url_seen version
-    * (SeenStore.loadProbe's crash validation); otherwise, and without a
-    * store, the one tier is a bloom rebuilt from `known`, sized from its row
-    * count. The exact anti-join is the same either way, so exactness never
-    * depends on the filter's freshness. */
+    * `store` is kept, unread, for source compatibility with callers that
+    * still commit a [[SeenStore]] each round. */
   def buildWorklist(spark: SparkSession,
                     existing: Dataset[String],
                     forumIds: Dataset[String],
@@ -102,33 +98,21 @@ object Frontier {
                     nHosts: Int = 16,
                     store: Option[SeenStore] = None): Dataset[FrontierEntry] = {
     import spark.implicits._
-    def flagged(ids: Dataset[_], forums: Boolean) = ids.toDF("id").withColumn("forums", lit(forums))
-    def hashes(ids: DataFrame) = ids.select(SeenSet.idHash(col("id"))).as[Long]
-    // scope-registered persists: the crawl loop unpersists them at round
-    // end (CacheScope.withScope), so iterative crawls don't leak cached rounds
-    val known = CacheScope.persist(flagged(existing, forums = false).union(flagged(forumIds, forums = true))
-      .groupBy("id").agg(max("forums").as("forums")))
-    val probe = store.flatMap(_.loadProbe(spark)) match {
-      case Some(p) =>
-        // forum list = config-file lines (archive.py:634-639), a few
-        // thousand rows: its own in-heap tier, sized to the list
-        val forumHashes = hashes(known.filter(col("forums"))).collect()
-        val forumBloom = BlockedBloom.sized(forumHashes.length)
-        forumHashes.foreach(forumBloom.add)
-        p.withFilter(forumBloom)
-      case None =>
-        val keys = known.count()
-        SeenProbe(Seq(SeenSet.buildFilter(hashes(known), () => BlockedBloom.sized(keys))), None, 0L)
-    }
-    val freshAll = CacheScope.persist(
-      SeenSet.dedup(spark, discovered.distinct().toDF("id"), known.select("id"), probe))
+    def tagged(ids: Dataset[String], forums: Boolean, known: Boolean) =
+      ids.toDF("id").select(col("id"), lit(forums).as("forums"), lit(known).as("known"))
+    // scope-registered: the crawl loop unpersists it at round end
+    // (CacheScope.withScope), after the schedule's pass has read it
+    val ids = CacheScope.persist(
+      tagged(existing, forums = false, known = true)
+        .union(tagged(forumIds, forums = true, known = true))
+        .union(tagged(discovered, forums = false, known = false))
+        .groupBy("id").agg(max("forums").as("forums"), max("known").as("known")))
+    val fresh = ids.filter(!col("known"))
     // deterministic cap (discover.py:66-73). A global sort+limit funnels
-    // everything through one partition, so it runs only when the cap binds;
-    // otherwise the cap costs one count().
-    val fresh = if (freshAll.count() <= maxNew) freshAll else freshAll.orderBy("id").limit(maxNew)
-    // known is a set; fresh is a set anti-joined against known, which holds
-    // every forum id, so its rows are not forum ids and the union is a set
-    known.union(flagged(fresh, forums = false)).as[(String, Boolean)]
+    // everything through one partition, so it runs only when the cap binds
+    val capped = if (fresh.count() <= maxNew) ids
+      else ids.filter(col("known")).union(fresh.orderBy("id").limit(maxNew))
+    capped.select("id", "forums").as[(String, Boolean)]
       .map { case (id, forums) =>
         val url = urlFor(id, nHosts)
         FrontierEntry(id, url, hostOf(url), forums, runId)

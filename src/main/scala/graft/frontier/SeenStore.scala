@@ -14,10 +14,13 @@ import graft.snapshot.SnapshotTable
   * north rule: "partitioned blocked Bloom filter (merged via treeAggregate)
   * plus cuckoo-filter spill").
   *
-  * `Frontier.buildWorklist` otherwise builds a bloom from the full known set
-  * on every call — a full scan of the seen corpus per nightly run, the most
-  * expensive constant in the loop at a 10^10 frontier. This store makes the
-  * filter a PERSISTED artifact with an O(delta) nightly commit:
+  * The store keeps a membership filter over the seen corpus as a PERSISTED
+  * artifact with an O(delta) nightly commit. The crawl path commits it each
+  * round but does not read it: `Frontier.buildWorklist` recrawls every known
+  * id, so it scans the seen corpus every round anyway and builds the
+  * work-list by exact set algebra. Nothing on the crawl path calls
+  * [[loadProbe]]; it returns the tiers as a [[SeenProbe]] for
+  * [[SeenSet.dedup]]. The tiers:
   *
   *  - the **epoch bloom** covers the seen corpus up to one `url_seen`
   *    snapshot version (recorded in its meta file), sized from the keys it
@@ -34,8 +37,8 @@ import graft.snapshot.SnapshotTable
   *  - when spills accumulate past `maxSpillRuns`, or covered keys outgrow
   *    the persisted roll budget (`capacityKeys`, at least 2× the corpus at
   *    the last roll), the epoch ROLLS: one rebuild from the authoritative
-  *    snapshot (the only full scan, amortized over many runs), after which
-  *    the spills are deleted.
+  *    snapshot (the store's only full scan, amortized over many runs),
+  *    after which the spills are deleted.
   *
   * **Crash safety is validation, not staging** (the round-2 design staged
   * current-run inserts in a driver-held delta that production never
@@ -43,8 +46,7 @@ import graft.snapshot.SnapshotTable
   * cover EVERY `url_seen` version up to the current one — the bloom's meta
   * version plus one contiguous spill per later version. A run that crashes
   * between its `url_seen` snapshot commit and its spill write leaves a
-  * version gap; [[loadProbe]] then returns None, `Frontier.buildWorklist`
-  * falls back to the full-rebuild path (exact), and the next [[commitRun]]
+  * version gap; [[loadProbe]] then returns None, and the next [[commitRun]]
   * heals the store by rolling. Exactness never depends on the filter's
   * freshness: the bloom/spills remain a pre-filter ahead of the exact
   * anti-join ([[SeenSet.dedup]]'s contract), and the version check

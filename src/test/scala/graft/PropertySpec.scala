@@ -49,11 +49,28 @@ class PropertySpec extends SparkSpec {
       frontier.forall(e => e.forums == forum.contains(e.id))
   }
 
+  /** Ids past the range [[genIds]] draws from. */
+  private val genOutsideIds: Gen[List[String]] =
+    Gen.resize(20, Gen.nonEmptyListOf(Gen.chooseNum(1000L, 1100L).map(Ids.syntheticId(_))))
+
   test("frontier algebra == Set model (crawler:203-215 semantics)") {
-    val prop = Prop.forAllNoShrink(genIds, genIds, genIds, Gen.oneOf(false, true)) {
-      (existing, forum, discovered, bindCap) => frontierMatchesModel(existing, forum, discovered, bindCap)
+    // (existing, forum, ids outside both, discovered) => (existing, forum, discovered)
+    type Shape = (List[String], List[String], List[String], List[String]) =>
+      (List[String], List[String], List[String])
+    val shapes = Seq[(String, Shape, Int)](
+      ("random triples", (e, f, _, d) => (e, f, d), 8), // Spark round-trips are expensive
+      ("first crawl: nothing seen yet, as in the set-up rounds", (_, f, _, d) => (Nil, f, d), 3),
+      ("nothing discovered", (e, f, _, _) => (e, f, Nil), 3),
+      ("discovered repeats ids", (e, f, _, d) => (e, f, d ++ d.reverse ++ d.take(3)), 3),
+      ("forum ids in neither existing nor discovered", (e, f, o, d) => (e, f ++ o, d), 3))
+    shapes.foreach { case (name, shape, tests) =>
+      val prop = Prop.forAllNoShrink(genIds, genIds, genOutsideIds, genIds, Gen.oneOf(false, true)) {
+        (existing, forum, outside, discovered, bindCap) =>
+          val (e, f, d) = shape(existing, forum, outside, discovered)
+          Prop(frontierMatchesModel(e, f, d, bindCap)) :| name
+      }
+      check(prop, tests)
     }
-    check(prop, tests = 8) // Spark round-trips are expensive; 8 random triples
   }
 
   test("frontier algebra == Set model behind a seen store with one spill") {

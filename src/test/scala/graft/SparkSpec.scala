@@ -2,15 +2,16 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.Properties
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
-  SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -67,12 +68,18 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** The jobs, stages and shuffle bytes (read plus written) of the work that
-  * runs under one job group. */
+  * runs under one job group, and the physical plans of its SQL executions
+  * (each adaptive re-plan included). */
 final class GroupCounters(group: String) extends SparkListener {
   val jobs = new AtomicInteger(0)
   val stages = new AtomicInteger(0)
   val shuffleBytes = new AtomicLong(0L)
   private val groupStages = ConcurrentHashMap.newKeySet[Int]()
+  private val executions = ConcurrentHashMap.newKeySet[Long]()
+  private val planLog = new ConcurrentLinkedQueue[String]()
+
+  /** Every plan description seen so far, in arrival order. */
+  def plans: Seq[String] = planLog.asScala.toSeq
 
   private def ours(props: Properties) =
     props != null && props.getProperty("spark.jobGroup.id") == group
@@ -85,6 +92,13 @@ final class GroupCounters(group: String) extends SparkListener {
       val m = sc.stageInfo.taskMetrics
       shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
     }
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+      executions.add(s.executionId); planLog.add(s.physicalPlanDescription)
+    case u: SparkListenerSQLAdaptiveExecutionUpdate if executions.contains(u.executionId) =>
+      planLog.add(u.physicalPlanDescription)
+    case _ => ()
+  }
 
   /** Listener delivery is async: wait until the counters are stable. */
   def settle(): Unit = {
@@ -100,5 +114,6 @@ final class GroupCounters(group: String) extends SparkListener {
   def reset(): Unit = {
     settle()
     jobs.set(0); stages.set(0); shuffleBytes.set(0L); groupStages.clear()
+    executions.clear(); planLog.clear()
   }
 }

@@ -12,9 +12,10 @@ class FrontierSpec extends SparkSpec {
 
   private def ids(lo: Int, hi: Int, step: Int = 1) = (lo until hi by step).map(i => Ids.syntheticId(i.toLong))
 
-  test("a built frontier reads its cached known set: collecting it shuffles nothing") {
-    // a seen store whose epoch covers the known ids: one url_seen version
-    // (the store validates against the manifest listing only) and one roll
+  /** A seen store whose epoch covers ids [0, 600), with a valid probe: one
+    * url_seen version (the store validates against the manifest listing
+    * only) and one roll. */
+  private lazy val store: SeenStore = {
     val dir = tempDir("graft-frontier")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
     Files.createDirectories(Paths.get(dir, "url_seen", "manifests"))
@@ -22,15 +23,24 @@ class FrontierSpec extends SparkSpec {
     val knownHashes = spark.createDataset(ids(0, 600)).select(SeenSet.idHash(col("value"))).as[Long]
     store.commitRun(spark, knownHashes, 600, seenVersion = 1, knownHashes, 600)
     assert(store.loadProbe(spark).isDefined)
+    store
+  }
 
-    // forum ids inside the known ids, inside the discovered ids, and past both
-    val forum = ids(0, 1000, step = 50)
+  // forum ids inside the known ids, inside the discovered ids, and past both
+  private val forum = ids(0, 1000, step = 50)
+
+  /** Known ids [0, 600), discovered [300, 900), a cap that does not bind:
+    * 902 work-list rows. */
+  private def worklist(store: Option[SeenStore]) =
+    Frontier.buildWorklist(spark, spark.createDataset(ids(0, 600)),
+      spark.createDataset(forum), spark.createDataset(ids(300, 900)),
+      maxNew = 1000, runId = 2, store = store)
+
+  test("a built frontier reads its cached known set: collecting it shuffles nothing") {
     Seq(None, Some(store)).foreach { s =>
       countingGroup("frontier-shuffle") { c =>
         CacheScope.withScope {
-          val frontier = Frontier.buildWorklist(spark, spark.createDataset(ids(0, 600)),
-            spark.createDataset(forum), spark.createDataset(ids(300, 900)),
-            maxNew = 1000, runId = 2, store = s)
+          val frontier = worklist(s)
           c.reset()
           val rows = frontier.collect()
           c.settle()
@@ -38,6 +48,28 @@ class FrontierSpec extends SparkSpec {
           assert(c.shuffleBytes.get() == 0L,
             s"store=${s.isDefined}: collecting the frontier shuffled ${c.shuffleBytes.get()} bytes")
           assert(c.stages.get() == 1, s"store=${s.isDefined}: collecting ran ${c.stages.get()} stages")
+        }
+      }
+    }
+  }
+
+  test("the work-list is one aggregate: five jobs, no probe, broadcast or anti-join") {
+    // with and without a store whose probe would load: the store is not read
+    Seq(None, Some(store)).foreach { s =>
+      countingGroup("frontier-work") { c =>
+        CacheScope.withScope {
+          c.reset()
+          val rows = worklist(s).collect()
+          c.settle()
+          assert(rows.length == 902 && rows.count(_.forums) == forum.size)
+          // adaptive execution runs each query stage as its own job: the
+          // aggregate's exchange, the cache build and the two stages of the
+          // count of new ids; collecting reads the cache in one more (the
+          // probe-and-anti-join build ran 13 without a store, 11 with one)
+          assert(c.jobs.get() <= 5, s"store=${s.isDefined}: building and collecting ran ${c.jobs.get()} jobs")
+          assert(c.plans.nonEmpty)
+          for (op <- Seq("BroadcastHashJoin", "LeftAnti", "bloom_might_contain"); p <- c.plans)
+            assert(!p.contains(op), s"store=${s.isDefined}: an executed plan has $op:\n$p")
         }
       }
     }
