@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.core._
 import graft.fetch.Fetcher
@@ -16,10 +17,14 @@ import graft.snapshot.SnapshotTable
   * every id ever crawled, with the etag and run of its last 200 (both null
   * if it never had one). It is both the known-id set (crawler:203-215) and
   * the conditional-fetch cache (archive.py:194-237), as the reference
-  * derives both from one archive record per extension. Everything is a pure
-  * function of (frontier, config, prior `url_seen`), so re-runs and resumes
-  * converge (the reference's idempotent tar-append/upsert discipline,
-  * archive.py:532-538, mysql_backend.py:99-104).
+  * derives both from one archive record per extension. A round reads it
+  * once: one full outer join of the schedule to it on id gives the fetch
+  * its prior etag, and the same joined rows give the next version, as the
+  * reference updates one etag record per extension as it fetches
+  * (mysql_backend.py:186-199). Everything is a pure function of (frontier,
+  * config, prior `url_seen`), so re-runs and resumes converge (the
+  * reference's idempotent tar-append/upsert discipline, archive.py:532-538,
+  * mysql_backend.py:99-104).
   */
 object Crawl {
 
@@ -36,21 +41,37 @@ object Crawl {
     import spark.implicits._
     val schedule = Politeness.schedule(spark, frontier, cfg)
 
-    // prior ETags (T2: the conditional-fetch cache): ids whose last 200 came
-    // from an earlier run. A null lastRun (no 200 yet) fails the test too;
-    // the bound keeps a re-run of this round, after its state commit
-    // landed, from reading its own etags as prior ones
+    // the schedule and the prior state are both key-unique, so the join is
+    // 1:1. A shuffled hash join, built on the state side, measured cheaper
+    // than a sort-merge join at nightly sizes. A first crawl joins an empty
+    // relation, which the optimizer folds away
     val seenTable = new SnapshotTable(spark, s"$tableDir/url_seen")
-    val priorState: Dataset[EtagState] =
-      if (seenTable.currentVersion.isDefined)
-        seenTable.read().filter(col("lastRun") < cfg.runId).as[EtagState]
-      else spark.emptyDataset[EtagState]
+    val prior =
+      (if (seenTable.currentVersion.isDefined) seenTable.read()
+       else spark.emptyDataset[EtagState].toDF())
+        .select(col("id"), col("etag").as("__etag"), col("lastRun").as("__lastRun"))
+    val joined = schedule.toDF().drop("host").join(prior.hint("shuffle_hash"), Seq("id"), "full_outer")
 
-    // persist: results feed three consumers (results commit, url_seen
-    // merge, caller) — without it the whole schedule+fetch DAG re-executes
-    // per use. Scope-registered: released at crawl-round end.
-    val results = graft.core.CacheScope.persist(
-      Fetcher.runWithState(spark, schedule, cfg, priorState))
+    // prior etag (T2: the conditional-fetch cache): the etag of a 200 from
+    // an earlier run. A null lastRun (no 200 yet) fails the test too; the
+    // bound keeps a re-run of this round, after its state commit landed,
+    // from reading its own etags as prior ones
+    val fetched = Fetcher.withPriorEtag(joined, cfg,
+      when(col("__lastRun") < cfg.runId, col("__etag")))
+
+    // next state, last-wins by lastRun (the reference's ON-DUP-KEY etag
+    // cache, mysql_backend.py:186-199): a 200 carries (etag, runId) unless
+    // the row holds a later run; any other status, and a prior id that is
+    // not scheduled, keeps its row, and a new id without a 200 enters with
+    // nulls
+    val won = col("status") === 200 && coalesce(col("__lastRun") <= cfg.runId, lit(true))
+    // persist: the rows feed the results commit, the url_seen commit and
+    // the caller — without it the whole schedule+join+fetch DAG re-executes
+    // per use. Scope-registered: released at crawl-round end
+    val rows = CacheScope.persist(fetched.select(Fetcher.resultColumns ++ Seq(
+      when(won, col("etag")).otherwise(col("__etag")).as("__etag"),
+      when(won, lit(cfg.runId)).otherwise(col("__lastRun")).as("__lastRun")): _*))
+    val results = rows.filter(col("seq").isNotNull).select(Fetcher.resultColumns: _*).as[FetchResult]
 
     val resultsTable = new SnapshotTable(spark, s"$tableDir/fetch_results")
     // prefix-shard partition layout (ext_id[:3] sharding, config.py:117-119;
@@ -61,17 +82,14 @@ object Crawl {
     val rv = resultsTable.commit(rdf, partitionBy = Seq("prefix", "run_id"),
       metrics = Map("run_id" -> cfg.runId.toString), observed = Fetcher.metricColumns)
 
-    // state MERGE (the reference's ON-DUP-KEY etag cache,
-    // mysql_backend.py:186-199): every result row upserts its id; a 200
-    // carries (etag, runId), anything else nulls, which sort last, so the
-    // prior row wins and a new non-200 id enters with nulls. Results carry
-    // one row per frontier id (the frontier is a set), so the update batch
-    // is key-unique → cold-start commits skip the merge shuffle
-    val ok = col("status") === 200
-    val updates = results.toDF()
-      .select(col("id"), when(ok, col("etag")).as("etag"), when(ok, lit(cfg.runId)).as("lastRun"))
-    val sv = graft.etl.Etl.mergeUpsert(spark, seenTable, updates,
-      keyCols = Seq("id"), versionCol = "lastRun", updatesUniqueByKey = true)
+    // a cached plan keeps its last shuffle's partition count, so the state
+    // write merges the cached partitions to the advisory partition size, as
+    // the adaptive planner does for a plan that is not cached; the results
+    // commit has loaded the cache, so its size is the measured one
+    val state = rows.select(col("id"), col("__etag").as("etag"), col("__lastRun").as("lastRun"))
+    val parts = state.queryExecution.optimizedPlan.stats.sizeInBytes /
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1
+    val sv = seenTable.commit(state.coalesce(parts.min(Int.MaxValue).toInt).sortWithinPartitions("id"))
 
     RunOutput(schedule, results, rv, sv)
   }

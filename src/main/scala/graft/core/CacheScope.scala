@@ -45,13 +45,14 @@ object CacheScope {
     * afterwards (outer scope, if any, is restored — scopes nest).
     *
     * The scope also drops the deserialized values of the broadcasts made
-    * inside it: the broadcast joins' hash relations (each holds at least one
-    * page, 16 MB at local[4] on a 3 GB heap) and the stages' task binaries.
-    * Left alone they stay in the block manager until a GC finds their
-    * broadcast unreachable and the ContextCleaner removes them, so how many
-    * earlier rounds' relations the driver holds depends on GC timing. The
-    * serialized pieces stay, so a plan that runs again after the scope
-    * reads its broadcast back from them. */
+    * inside it: the stages' task binaries, and the hash relation of any
+    * broadcast join (each holds at least one page, 16 MB at local[4] on a
+    * 3 GB heap; a crawl round plans none). Left alone they stay in the
+    * block manager until a GC finds their broadcast unreachable and the
+    * ContextCleaner removes them, so how many earlier rounds' relations
+    * the driver holds depends on GC timing. The serialized pieces stay,
+    * so a plan that runs again after the scope reads its broadcast back
+    * from them. */
   def withScope[A](body: => A): A = {
     val prev = current.get()
     val buf = ArrayBuffer.empty[() => Unit]

@@ -122,31 +122,45 @@ object Fetcher {
       .as[FetchResult]
   }
 
-  /** State-driven fetch stage: schedule left-joined with the prior
-    * etags (`Crawl.run` passes the `url_seen` rows whose last 200 came
-    * from an earlier run; J14 — both sides hash-partition on id, the
-    * reference's etag side-cache lookup archive.py:194-237 as a distributed
-    * join). [[conditionalResult]] expressed as columns: prior-etag hit →
-    * 304 short-circuit, else the classify struct with the 304→200 remap
-    * baked into its `conditional` mode. */
+  /** State-driven fetch stage: the schedule left-joined with `etagState`,
+    * fetched by [[withPriorEtag]]. `Crawl.run` does not call it: it joins
+    * the schedule to `url_seen` itself and fetches the joined rows with
+    * the same columns. */
   def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
                    cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
     import spark.implicits._
     val st = etagState.toDF().select(col("id").as("__sid"), col("etag").as("__prior"))
+    withPriorEtag(schedule.toDF().join(st, col("id") === col("__sid"), "left_outer"),
+      cfg, col("__prior"))
+      .select(resultColumns: _*).as[FetchResult]
+  }
+
+  /** The [[FetchResult]] columns, in field order. */
+  val resultColumns: Seq[Column] =
+    Seq("seq", "id", "fetchClass", "startMs", "status", "etag", "isNew", "retried").map(col)
+
+  /** [[conditionalResult]] as columns over `rows`, which carry a schedule's
+    * columns and a prior etag `prior` (null for none): a prior-etag hit is
+    * a 304 short-circuit, else the classify struct with the 304→200 remap
+    * baked into its `conditional` mode. Adds `status`, `etag`, `isNew` and
+    * `retried`; a row whose `seq` is null is not scheduled, is not fetched
+    * and gets nulls. */
+  def withPriorEtag(rows: DataFrame, cfg: CrawlConfig, prior: Column): DataFrame = {
+    val scheduled = col("seq").isNotNull
     val hit = col("__prior").isNotNull && (col("__prior") === col("__new"))
-    schedule.toDF()
-      .join(st, col("id") === col("__sid"), "left_outer")
-      .withColumn("__new", graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId))
-      .withColumn("__c", graft.functions.GraftFunctions.fetchClassify(
-        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = true))
-      .select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
-        when(hit, lit(304)).otherwise(col("__c.status")).as("status"),
-        when(hit, col("__new"))
-          .when(col("__c.status") === 200, col("__new"))
-          .otherwise(lit("")).as("etag"),
-        (!hit && (col("__c.status") === 200)).as("isNew"),
-        (!hit && col("__c.retried")).as("retried"))
-      .as[FetchResult]
+    rows
+      .withColumn("__prior", prior)
+      .withColumn("__new", when(scheduled,
+        graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId)))
+      .withColumn("__c", when(scheduled, graft.functions.GraftFunctions.fetchClassify(
+        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = true)))
+      .withColumn("status", when(hit, lit(304)).otherwise(col("__c.status")))
+      .withColumn("etag", when(hit, col("__new"))
+        .when(col("__c.status") === 200, col("__new"))
+        .when(scheduled, lit("")))
+      .withColumn("isNew", !hit && (col("__c.status") === 200))
+      .withColumn("retried", !hit && col("__c.retried"))
+      .drop("__prior", "__new", "__c")
   }
 
   /** P2 — composite result classification over the FOUR sub-fetches of a

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CacheScope, FrontierEntry, Ids}
@@ -85,7 +85,8 @@ object Frontier {
     * false, known = true)`, `(forumIds, true, true)` and `(discovered,
     * false, false)`, grouped by id with `max(forums)` and `max(known)` and
     * persisted once: no anti-join and no filter pre-tier. The rows without
-    * the known flag are the new ids; the cap costs one count of them.
+    * the known flag are the new ids; the cap's count of them rides on the
+    * write that fills the cache.
     *
     * `store` is kept, unread, for source compatibility with callers that
     * still commit a [[SeenStore]] each round. */
@@ -107,11 +108,13 @@ object Frontier {
         .union(tagged(forumIds, forums = true, known = true))
         .union(tagged(discovered, forums = false, known = false))
         .groupBy("id").agg(max("forums").as("forums"), max("known").as("known")))
-    val fresh = ids.filter(!col("known"))
+    // one noop-sink write fills the cache and counts the new ids on the way
+    val obs = Observation()
+    ids.observe(obs, count_if(!col("known")).as("fresh")).write.format("noop").mode("overwrite").save()
     // deterministic cap (discover.py:66-73). A global sort+limit funnels
     // everything through one partition, so it runs only when the cap binds
-    val capped = if (fresh.count() <= maxNew) ids
-      else ids.filter(col("known")).union(fresh.orderBy("id").limit(maxNew))
+    val capped = if (obs.get("fresh").asInstanceOf[Long] <= maxNew) ids
+      else ids.filter(col("known")).union(ids.filter(!col("known")).orderBy("id").limit(maxNew))
     capped.select("id", "forums").as[(String, Boolean)]
       .map { case (id, forums) =>
         val url = urlFor(id, nHosts)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-shaped snapshot table layer (SURVEY.md §7.0/§7.1 step 3).
   *
@@ -80,9 +81,12 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       }
       val m = allMetrics.map { case (k, w) => s""""${esc(k)}":"${esc(w)}"""" }.mkString(",")
+      // a partitioned table's partition-column types come from inference on
+      // read, so only unpartitioned commits record the schema
+      val schema = if (partitionBy.isEmpty) s""",\n"schema":"${esc(df.schema.json)}"""" else ""
       s"""{"version":$v,"parent":$parent,"dataDir":"${esc(dataDir)}",
          |"rowCount":$rowCount,"partitionBy":[${partitionBy.map(p => s""""${esc(p)}"""").mkString(",")}],
-         |"metrics":{$m}}""".stripMargin
+         |"metrics":{$m}$schema}""".stripMargin
     }
     // atomic publish: tmp file + ATOMIC_MOVE rename
     val tmp = manifests.resolve(s".tmp-$v-${System.nanoTime()}")
@@ -104,19 +108,31 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
       case _ => Set.empty
     }
 
-  /** Version `v`'s data directory; older manifests name it by absolute path. */
-  private def dataDirOf(v: Int): String = {
-    val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
-    val m = """"dataDir":"(.*?)"""".r.findFirstMatchIn(json)
-      .getOrElse(throw new IllegalStateException(s"bad manifest v$v"))
-    base.resolve(m.group(1).replace("\\\\", "\\").replace("\\\"", "\"")).toString
-  }
+  /** The string field `name` of a manifest's text, unescaped. */
+  private def field(json: String, name: String): Option[String] =
+    (s""""$name":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(json).map { m =>
+      """\\(u[0-9a-f]{4}|.)""".r.replaceAllIn(m.group(1), e => java.util.regex.Matcher.quoteReplacement(
+        e.group(1) match {
+          case "n" => "\n"
+          case u if u.length == 5 => Integer.parseInt(u.substring(1), 16).toChar.toString
+          case c => c
+        }))
+    }
 
-  /** Read a snapshot (latest by default; any version for time travel). */
+  /** Read a snapshot (latest by default; any version for time travel). An
+    * unpartitioned version's manifest records its schema, so the read
+    * skips the job that infers it from a data file's footer. Older
+    * manifests name the data directory by absolute path. */
   def read(version: Option[Int] = None): DataFrame = {
     val v = version.orElse(currentVersion)
       .getOrElse(throw new IllegalStateException(s"no snapshots in $baseDir"))
-    spark.read.parquet(dataDirOf(v))
+    val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
+    val dataDir = base.resolve(field(json, "dataDir")
+      .getOrElse(throw new IllegalStateException(s"bad manifest v$v"))).toString
+    field(json, "schema") match {
+      case Some(s) => spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]).parquet(dataDir)
+      case None => spark.read.parquet(dataDir)
+    }
   }
 
   def metricsOf(v: Int): Map[String, String] = {

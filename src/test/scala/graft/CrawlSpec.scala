@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.col
 
-import graft.core.{CacheScope, CrawlConfig, Ids}
+import graft.core.{CacheScope, CrawlConfig, FrontierEntry, Ids}
 import graft.etl.CrawlToDb
+import graft.fetch.Fetcher
 import graft.frontier.{Frontier, SeenSet, SeenStore}
 import graft.scheduler.VirtualClockOracle
 import graft.snapshot.SnapshotTable
@@ -115,6 +116,94 @@ class CrawlSpec extends SparkSpec {
     assert(stateRows.forall { case (_, e, v) => e.isDefined == v.isDefined })
     // no second per-id table beside it
     assert(!Files.exists(Paths.get(dir, "etag_state")))
+  }
+
+  /** A frontier of the synthetic ids numbered `ids`, every 40th a forum id. */
+  private def frontierOf(runId: Int, ids: Seq[Int]) = spark.createDataset(ids.map { i =>
+    val id = Ids.syntheticId(i.toLong)
+    val url = Frontier.urlFor(id)
+    FrontierEntry(id, url, Frontier.hostOf(url), i % 40 == 0, runId)
+  })
+
+  test("url_seen after each round == a sequential model of per-id state") {
+    val dir = tempDir("graft-crawl-model")
+    // round 1 is a first crawl; round 2 leaves out ids [0, 100) and lists
+    // new ones; round 3 brings some of [0, 100) back and leaves out others;
+    // then round 2 runs again, over rows that round 3 wrote
+    val rounds = Seq(1 -> (0 until 300), 2 -> (100 until 450), 3 -> ((0 until 50) ++ (200 until 600)),
+      2 -> (100 until 450))
+    // per id: (etag, run) of its last 200, None for an id without one
+    var model = Map.empty[String, Option[(String, Int)]]
+    var statuses = Map.empty[String, Seq[Int]]
+    var unscheduledKept = 0
+    var laterKept = 0
+    rounds.foreach { case (runId, ids) =>
+      CacheScope.withScope {
+        val cfg = CrawlConfig(runId = runId)
+        val out = Crawl.run(spark, frontierOf(runId, ids), cfg, dir)
+        val scheduled = out.scheduled.collect().sortBy(_.seq).toSeq
+        assert(scheduled.map(_.id).toSet == ids.map(i => Ids.syntheticId(i.toLong)).toSet)
+        // the fetch, row for row: a prior etag is the etag of a 200 from an
+        // earlier run
+        val expected = scheduled.map(s => Fetcher.conditionalResult(s, runId,
+          model.get(s.id).flatten.collect { case (e, v) if v < runId => e }, cfg))
+        assert(out.results.collect().sortBy(_.seq).toSeq == expected, s"round $runId results")
+        unscheduledKept += model.keySet.diff(scheduled.map(_.id).toSet).count(model(_).isDefined)
+        // last-wins by run: a 200 does not replace a later run's row
+        expected.foreach { r =>
+          val later = model.get(r.id).flatten.exists(_._2 > runId)
+          if (r.status == 200 && later) laterKept += 1
+          if (r.status == 200 && !later) model += r.id -> Some((r.etag, runId))
+          else if (!model.contains(r.id)) model += r.id -> None
+          statuses += r.id -> (statuses.getOrElse(r.id, Nil) :+ r.status)
+        }
+        val state = new SnapshotTable(spark, s"$dir/url_seen").read()
+          .as[(String, Option[String], Option[Int])].collect().toSeq
+        assert(state.map(_._1).distinct.size == state.size, s"round $runId: one row per id")
+        val got = state.map { case (id, e, v) => id -> e.zip(v) }.toMap
+        if (got != model) {
+          val diff = (got.keySet ++ model.keySet).filter(k => got.get(k) != model.get(k)).take(3)
+          fail(s"round $runId url_seen differs, e.g. ${diff.map(k => (k, got.get(k), model.get(k)))}")
+        }
+      }
+    }
+    // the shapes the model must have met: a prior id left out of a later
+    // frontier keeps its 200, an id whose 200 is followed by a failure, and
+    // a re-run's 200 that leaves a later run's row in place
+    assert(unscheduledKept > 0)
+    assert(laterKept > 0)
+    assert(statuses.values.exists(_.sliding(2).exists {
+      case Seq(a, b) => a == 200 && b != 200 && b != 304
+      case _ => false
+    }))
+  }
+
+  test("a round reads url_seen once: no broadcast or window, one scan, and none on a first crawl") {
+    val dir = tempDir("graft-crawl-plan")
+    // the distinct url_seen scans of a set of plans, told apart by their
+    // output attributes: a plan that reads a cache repeats the cached scan
+    val scan = """Scan parquet[^\n]*\nOutput \[\d+\]: \[([^\]]*)\]\nBatched: [^\n]*\nLocation: [^\n]*url_seen/""".r
+    def seenScans(plans: Seq[String]) = plans.flatMap(scan.findAllMatchIn(_).map(_.group(1))).distinct
+    countingGroup("crawl-plan") { c =>
+      Seq(1 -> (0 until 300), 2 -> (100 until 450)).foreach { case (runId, ids) =>
+        CacheScope.withScope {
+          c.reset()
+          Crawl.run(spark, frontierOf(runId, ids), CrawlConfig(runId = runId), dir)
+          c.settle()
+          assert(c.plans.nonEmpty)
+          for (op <- Seq("BroadcastHashJoin", "BroadcastExchange", "Window"); p <- c.plans)
+            assert(!p.contains(op), s"round $runId: an executed plan has $op:\n$p")
+          if (runId == 1) {
+            // the join to the empty prior state folds away
+            for (op <- Seq("SortMergeJoin", "ShuffledHashJoin"); p <- c.plans)
+              assert(!p.contains(op), s"first crawl: an executed plan has $op:\n$p")
+            assert(seenScans(c.plans).isEmpty)
+          } else
+            assert(seenScans(c.plans).size == 1,
+              s"round 2 scans url_seen ${seenScans(c.plans).size} times:\n${c.plans.mkString("\n")}")
+        }
+      }
+    }
   }
 
   /** One crawl round as `CrawlMain` runs it, plus the archive commit that

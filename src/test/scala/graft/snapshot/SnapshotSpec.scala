@@ -37,6 +37,41 @@ class SnapshotSpec extends SparkSpec {
     assert(new SnapshotTable(spark, to.toString).read().count() == 2)
   }
 
+  test("an unpartitioned read takes its schema from the manifest: no job, any column name") {
+    val dir = tempDir("graft-snap")
+    val t = new SnapshotTable(spark, dir)
+    val name = "a\"b\\c"
+    val df = Seq((1L, "x", Option(2)), (2L, "y\n", None)).toDF("k", name, "n")
+    t.commit(df)
+    val manifest = Paths.get(dir, "manifests", "v000001.json")
+    assert(new String(Files.readAllBytes(manifest), "UTF-8").contains("\"schema\":"))
+    countingGroup("snapshot-read") { c =>
+      val read = t.read()
+      c.settle()
+      assert(c.jobs.get() == 0, s"reading the snapshot ran ${c.jobs.get()} jobs")
+      // the schema the footer gives, field for field
+      assert(read.schema == spark.read.parquet(s"$dir/data/v000001").schema)
+      assert(read.schema.fieldNames.toSeq == Seq("k", name, "n"))
+    }
+    assert(t.read().as[(Long, String, Option[Int])].collect().sorted.toSeq ==
+      Seq((1L, "x", Some(2)), (2L, "y\n", None)))
+    // a manifest written before the schema was recorded still reads, by
+    // inference
+    val json = new String(Files.readAllBytes(manifest), "UTF-8")
+    Files.write(manifest, json.substring(0, json.indexOf(",\n\"schema\":")).concat("}").getBytes("UTF-8"))
+    assert(!new String(Files.readAllBytes(manifest), "UTF-8").contains("schema"))
+    assert(t.read().schema == spark.read.parquet(s"$dir/data/v000001").schema)
+    assert(t.read().as[(Long, String, Option[Int])].collect().sorted.toSeq ==
+      Seq((1L, "x", Some(2)), (2L, "y\n", None)))
+    // a partitioned commit records no schema: its partition columns' types
+    // come from inference
+    val pdir = tempDir("graft-snap")
+    new SnapshotTable(spark, pdir)
+      .commit(Seq(("aaa", 1, 10)).toDF("prefix", "run_id", "v"), partitionBy = Seq("prefix", "run_id"))
+    assert(!new String(Files.readAllBytes(Paths.get(pdir, "manifests", "v000001.json")), "UTF-8")
+      .contains("schema"))
+  }
+
   test("time travel: older versions stay readable") {
     val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
