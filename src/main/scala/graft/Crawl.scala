@@ -6,51 +6,62 @@ import org.apache.spark.sql.internal.SQLConf
 
 import graft.core._
 import graft.fetch.Fetcher
+import graft.frontier.Worklist
 import graft.scheduler.Politeness
 import graft.snapshot.SnapshotTable
 
 /** End-to-end crawl run (SURVEY.md §3.1 re-expressed Spark-first):
-  * frontier → seeded-shuffle schedule under the politeness budget → fetch →
-  * two snapshot commits: the run's results, then `url_seen`.
+  * work-list → seeded-shuffle schedule under the politeness budget → fetch
+  * → two snapshot commits: the run's results, then `url_seen`.
   *
   * `url_seen` is the one per-id crawl state table, `(id, etag, lastRun)`:
   * every id ever crawled, with the etag and run of its last 200 (both null
   * if it never had one). It is both the known-id set (crawler:203-215) and
   * the conditional-fetch cache (archive.py:194-237), as the reference
-  * derives both from one archive record per extension. A round reads it
-  * once: one full outer join of the schedule to it on id gives the fetch
-  * its prior etag, and the same joined rows give the next version, as the
-  * reference updates one etag record per extension as it fetches
-  * (mysql_backend.py:186-199). Everything is a pure function of (frontier,
-  * config, prior `url_seen`), so re-runs and resumes converge (the
-  * reference's idempotent tar-append/upsert discipline, archive.py:532-538,
-  * mysql_backend.py:99-104).
+  * derives both from one archive record per extension.
+  *
+  * A round shuffles once, as the reference shuffles its one work-list once
+  * (archive.py:594) and each worker reads that extension's own etag record
+  * as it fetches: the work-list's tagged sources and the prior `url_seen`
+  * rows go through the schedule's bucket exchange together, where the rows
+  * of one id sit side by side and merge into its schedule slot and its
+  * prior state. The same rows give the next version, as the reference
+  * updates one etag record per extension as it fetches
+  * (mysql_backend.py:186-199). Everything is a pure function of
+  * (work-list, config, prior `url_seen`), so re-runs and resumes converge
+  * (the reference's idempotent tar-append/upsert discipline,
+  * archive.py:532-538, mysql_backend.py:99-104).
   */
 object Crawl {
 
+  /** `resultRows` is the row count the results commit observed. */
   final case class RunOutput(
       scheduled: Dataset[ScheduledFetch],
       results: Dataset[FetchResult],
       resultsVersion: Int,
-      seenVersion: Int)
+      seenVersion: Int,
+      resultRows: Long)
 
-  /** One crawl run over a prepared frontier, checkpointing results + the
-    * per-id state into snapshot tables under `tableDir`. */
-  def run(spark: SparkSession, frontier: Dataset[FrontierEntry], cfg: CrawlConfig,
+  /** One crawl run over a work-list, checkpointing results + the per-id
+    * state into snapshot tables under `tableDir`. */
+  def run(spark: SparkSession, worklist: Worklist, cfg: CrawlConfig,
           tableDir: String): RunOutput = {
     import spark.implicits._
-    val schedule = Politeness.schedule(spark, frontier, cfg)
-
-    // the schedule and the prior state are both key-unique, so the join is
-    // 1:1. A shuffled hash join, built on the state side, measured cheaper
-    // than a sort-merge join at nightly sizes. A first crawl joins an empty
-    // relation, which the optimizer folds away
     val seenTable = new SnapshotTable(spark, s"$tableDir/url_seen")
-    val prior =
-      (if (seenTable.currentVersion.isDefined) seenTable.read()
-       else spark.emptyDataset[EtagState].toDF())
-        .select(col("id"), col("etag").as("__etag"), col("lastRun").as("__lastRun"))
-    val joined = schedule.toDF().drop("host").join(prior.hint("shuffle_hash"), Seq("id"), "full_outer")
+    val prior = seenTable.currentVersion.map(_ => seenTable.read().select("id", "etag", "lastRun"))
+    val first = Politeness.exchange(spark,
+      worklist.tagged.select(col("id"), lit(null).cast("string").as("host"), col("forums"), col("known")),
+      prior, cfg)
+    // the cap (discover.py:66-73) binds only when the stats counted more new
+    // ids than it allows: the round then schedules the capped work-list,
+    // through the same exchange
+    val ex = if (first.stats.map(_._4).sum <= worklist.maxNew) first else {
+      first.sorted.unpersist(blocking = false)
+      Politeness.exchange(spark, Politeness.frontierRows(worklist.entries), prior, cfg)
+    }
+    val placed = Politeness.walk(spark, ex, cfg, worklist.nHosts)
+    val joined = placed.toDF().select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
+      col("etag").as("__etag"), col("lastRun").as("__lastRun"))
 
     // prior etag (T2: the conditional-fetch cache): the etag of a 200 from
     // an earlier run. A null lastRun (no 200 yet) fails the test too; the
@@ -66,8 +77,8 @@ object Crawl {
     // nulls
     val won = col("status") === 200 && coalesce(col("__lastRun") <= cfg.runId, lit(true))
     // persist: the rows feed the results commit, the url_seen commit and
-    // the caller — without it the whole schedule+join+fetch DAG re-executes
-    // per use. Scope-registered: released at crawl-round end
+    // the caller — without it the walk and the fetch re-execute per use.
+    // Scope-registered: released at crawl-round end
     val rows = CacheScope.persist(fetched.select(Fetcher.resultColumns ++ Seq(
       when(won, col("etag")).otherwise(col("__etag")).as("__etag"),
       when(won, lit(cfg.runId)).otherwise(col("__lastRun")).as("__lastRun")): _*))
@@ -91,7 +102,7 @@ object Crawl {
       spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1
     val sv = seenTable.commit(state.coalesce(parts.min(Int.MaxValue).toInt).sortWithinPartitions("id"))
 
-    RunOutput(schedule, results, rv, sv)
+    RunOutput(Politeness.scheduled(placed), results, rv, sv, resultsTable.metricsOf(rv)("n_total").toLong)
   }
 
   /** The known-id set: the latest `url_seen` snapshot's ids. Its versions

@@ -44,7 +44,7 @@ object CrawlMain {
     // three frontier sources (crawler:203-215): prior seen-set snapshot (if
     // resuming), a forum list, fresh discoveries
     // the whole round runs in one cache scope: every transient persist the
-    // stages register (work-list ids, sorted schedule, results) is
+    // stages register (the sorted exchange, the fetched rows) is
     // released when the round's outputs are materialized
     val (n, wallSec, parity, out) = graft.core.CacheScope.withScope {
     val haveSeen = new snapshot.SnapshotTable(spark, s"$tableDir/url_seen").currentVersion.isDefined
@@ -64,7 +64,7 @@ object CrawlMain {
       maxNew = numIds, runId = runId, store = Some(store))
 
     val out = Crawl.run(spark, frontier, cfg, tableDir)
-    val n = out.results.count()
+    val n = out.resultRows
     // graduate this run's ids into the seen store: normally an O(delta)
     // cuckoo spill keyed by the url_seen version just committed (the epoch
     // bloom file is untouched); rolls rebuild from the corpus when spills
@@ -83,12 +83,12 @@ object CrawlMain {
     // is prefix-local), and the K smallest (shuffleKey, id) pairs are
     // computable distributedly — no full-frontier collect at any scale.
     val parity = if (n <= 200000) {
-      val oracle = VirtualClockOracle.schedule(frontier.collect().toSeq, cfg)
+      val oracle = VirtualClockOracle.schedule(frontier.entries.collect().toSeq, cfg)
       val pipe = out.scheduled.collect().sortBy(_.seq)
       pipe.toSeq == oracle.toSeq
     } else {
       val k = 1000
-      val prefix = frontier
+      val prefix = frontier.entries
         .map(e => (graft.scheduler.Politeness.shuffleKey(e.id, cfg), e))
         .orderBy($"_1", $"_2.id").limit(k)
         .collect().map(_._2).toSeq

@@ -80,7 +80,7 @@ object CreateDbMain {
         val out = Crawl.run(spark, frontier, cfg, workDir)
         val av = CrawlToDb.commitRunArchive(spark, workDir, out.results, runId)
         // scalastyle:off println
-        println(s"[create-db] crawl run=$runId fetched=${out.results.count()} archive_v=$av")
+        println(s"[create-db] crawl run=$runId fetched=${out.resultRows} archive_v=$av")
         // scalastyle:on println
       }
     }

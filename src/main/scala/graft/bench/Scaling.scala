@@ -138,8 +138,7 @@ object Scaling {
       val frontier = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum,
         discovered, maxNew = numIds, runId = 1)
       val out = graft.Crawl.run(spark, frontier, cfg, dir)
-      val c = out.results.count()
-      (c, (System.nanoTime() - t0) / 1e9)
+      (out.resultRows, (System.nanoTime() - t0) / 1e9)
     }
     // free cached state + bench tables between iterations
     spark.sharedState.cacheManager.clearCache()

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 /** Scoped lifetime for transient `persist`s.
   *
   * Pipeline stages cache intermediates that only live for one crawl round
-  * (the work-list's id aggregate, the sorted schedule); in an iterative
+  * (the sorted schedule exchange, the fetched rows); in an iterative
   * crawl loop those caches would accumulate MEMORY_AND_DISK blocks across
   * rounds. Stages register their persists here; a driver loop wraps each
   * round in [[withScope]], which unpersists everything registered inside it

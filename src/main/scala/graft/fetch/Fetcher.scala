@@ -123,9 +123,9 @@ object Fetcher {
   }
 
   /** State-driven fetch stage: the schedule left-joined with `etagState`,
-    * fetched by [[withPriorEtag]]. `Crawl.run` does not call it: it joins
-    * the schedule to `url_seen` itself and fetches the joined rows with
-    * the same columns. */
+    * fetched by [[withPriorEtag]]. `Crawl.run` does not call it: its
+    * schedule's exchange merges each id with its `url_seen` row, and it
+    * fetches those rows with the same columns. */
   def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
                    cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
     import spark.implicits._

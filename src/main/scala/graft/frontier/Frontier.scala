@@ -1,9 +1,9 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CacheScope, FrontierEntry, Ids}
+import graft.core.{FrontierEntry, Ids}
 
 /** Frontier construction — the reference's work-list algebra
   * (crawler:203-215): known = archive-scan ∪ forum-conf; new = sitemap ids
@@ -79,14 +79,15 @@ object Frontier {
     * known ∪ (the first `maxNew` of discovered ∖ known in id order),
     * forums-flagged.
     *
-    * Every known id is recrawled, so `known` is scanned every round anyway,
-    * and known ∪ (discovered ∖ known) = known ∪ discovered. The work-list is
-    * therefore one aggregate over three tagged sources, `(existing, forums =
-    * false, known = true)`, `(forumIds, true, true)` and `(discovered,
-    * false, false)`, grouped by id with `max(forums)` and `max(known)` and
-    * persisted once: no anti-join and no filter pre-tier. The rows without
-    * the known flag are the new ids; the cap's count of them rides on the
-    * write that fills the cache.
+    * Every known id is recrawled, so known ∪ (discovered ∖ known) = known ∪
+    * discovered: the work-list is the three sources tagged `(existing,
+    * forums = false, known = true)`, `(forumIds, true, true)` and
+    * `(discovered, false, false)`, merged per id with `max(forums)` and
+    * `max(known)`. Building it submits no job: it returns the tagged
+    * sources, and a crawl round merges them inside its schedule's bucket
+    * exchange ([[graft.Crawl.run]]), where the rows of one id sit side by
+    * side. [[Worklist.entries]] merges and caps them on its own, for callers
+    * that need the rows.
     *
     * `store` is kept, unread, for source compatibility with callers that
     * still commit a [[SeenStore]] each round. */
@@ -97,28 +98,41 @@ object Frontier {
                     maxNew: Int,
                     runId: Int,
                     nHosts: Int = 16,
-                    store: Option[SeenStore] = None): Dataset[FrontierEntry] = {
-    import spark.implicits._
-    def tagged(ids: Dataset[String], forums: Boolean, known: Boolean) =
+                    store: Option[SeenStore] = None): Worklist =
+    new Worklist(existing, forumIds, discovered, maxNew, runId, nHosts)
+}
+
+/** A round's work-list as its three id sources, not yet merged: see
+  * [[Frontier.buildWorklist]]. */
+final class Worklist(existing: Dataset[String],
+                     forumIds: Dataset[String],
+                     discovered: Dataset[String],
+                     val maxNew: Int,
+                     val runId: Int,
+                     val nHosts: Int) {
+
+  /** The tagged source rows `(id, forums, known)`; an id may repeat. The
+    * rows without the known flag are the new ids the cap applies to. */
+  def tagged: DataFrame = {
+    def rows(ids: Dataset[String], forums: Boolean, known: Boolean) =
       ids.toDF("id").select(col("id"), lit(forums).as("forums"), lit(known).as("known"))
-    // scope-registered: the crawl loop unpersists it at round end
-    // (CacheScope.withScope), after the schedule's pass has read it
-    val ids = CacheScope.persist(
-      tagged(existing, forums = false, known = true)
-        .union(tagged(forumIds, forums = true, known = true))
-        .union(tagged(discovered, forums = false, known = false))
-        .groupBy("id").agg(max("forums").as("forums"), max("known").as("known")))
-    // one noop-sink write fills the cache and counts the new ids on the way
-    val obs = Observation()
-    ids.observe(obs, count_if(!col("known")).as("fresh")).write.format("noop").mode("overwrite").save()
-    // deterministic cap (discover.py:66-73). A global sort+limit funnels
-    // everything through one partition, so it runs only when the cap binds
-    val capped = if (obs.get("fresh").asInstanceOf[Long] <= maxNew) ids
-      else ids.filter(col("known")).union(ids.filter(!col("known")).orderBy("id").limit(maxNew))
-    capped.select("id", "forums").as[(String, Boolean)]
+    rows(existing, forums = false, known = true)
+      .union(rows(forumIds, forums = true, known = true))
+      .union(rows(discovered, forums = false, known = false))
+  }
+
+  /** The merged, capped work-list: one row per id, known ∪ the first
+    * `maxNew` new ids in id order (discover.py:66-73). The cap's global
+    * sort funnels the new ids through one partition. */
+  def entries: Dataset[FrontierEntry] = {
+    import existing.sparkSession.implicits._
+    val ids = tagged.groupBy("id").agg(max("forums").as("forums"), max("known").as("known"))
+    val (n, r) = (nHosts, runId)
+    ids.filter(col("known")).union(ids.filter(!col("known")).orderBy("id").limit(maxNew))
+      .select("id", "forums").as[(String, Boolean)]
       .map { case (id, forums) =>
-        val url = urlFor(id, nHosts)
-        FrontierEntry(id, url, hostOf(url), forums, runId)
+        val url = Frontier.urlFor(id, n)
+        FrontierEntry(id, url, Frontier.hostOf(url), forums, r)
       }
   }
 }

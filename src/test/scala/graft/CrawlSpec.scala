@@ -27,7 +27,7 @@ class CrawlSpec extends SparkSpec {
       (400 until 900).map(i => Ids.syntheticId(i.toLong))) // 100 overlap, 400 new
     val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,
       maxNew = 1000, runId = 1)
-    val flist = frontier.collect().toSeq
+    val flist = frontier.entries.collect().toSeq
     assert(flist.map(_.id).distinct.size == 900, "overlap must dedup (discover.py:68)")
     assert(flist.count(_.forums) == 13)
 
@@ -86,6 +86,7 @@ class CrawlSpec extends SparkSpec {
       val manifest = new String(Files.readAllBytes(
         java.nio.file.Paths.get(dir, "fetch_results", "manifests", f"v$v%06d.json")))
       assert(manifest.contains(s""""rowCount":${o.results.count()},"""), manifest)
+      assert(o.resultRows == o.results.count())
     }
 
     // determinism / idempotent re-run (reference's converging re-runs):
@@ -118,12 +119,75 @@ class CrawlSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "etag_state")))
   }
 
-  /** A frontier of the synthetic ids numbered `ids`, every 40th a forum id. */
-  private def frontierOf(runId: Int, ids: Seq[Int]) = spark.createDataset(ids.map { i =>
+  /** The synthetic ids numbered `ids`. */
+  private def idsOf(ids: Seq[Int]) = spark.createDataset(ids.map(i => Ids.syntheticId(i.toLong)))
+
+  /** A work-list of the synthetic ids numbered `ids`, every 40th a forum id. */
+  private def frontierOf(runId: Int, ids: Seq[Int]) =
+    Frontier.buildWorklist(spark, idsOf(ids.filter(_ % 40 != 0)), idsOf(ids.filter(_ % 40 == 0)),
+      spark.emptyDataset[String], maxNew = 0, runId = runId)
+
+  private def entry(i: Int, forums: Boolean, runId: Int) = {
     val id = Ids.syntheticId(i.toLong)
     val url = Frontier.urlFor(id)
-    FrontierEntry(id, url, Frontier.hostOf(url), i % 40 == 0, runId)
-  })
+    FrontierEntry(id, url, Frontier.hostOf(url), forums, runId)
+  }
+
+  private def seenState(dir: String) = new SnapshotTable(spark, s"$dir/url_seen").read()
+    .as[(String, Option[String], Option[Int])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+
+  test("more new ids than maxNew: the round schedules known ∪ the first maxNew new ids") {
+    val dir = tempDir("graft-crawl-cap")
+    CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 200), CrawlConfig(runId = 1), dir) }
+    // round 2: the 200 known ids, forum ids among them and past them, and
+    // 400 new discovered ids of which the cap admits 150
+    val forum = (0 until 400 by 50)
+    val discovered = 100 until 600
+    val cfg = CrawlConfig(runId = 2)
+    CacheScope.withScope {
+      val out = Crawl.run(spark, Frontier.buildWorklist(spark, Crawl.seenIds(spark, dir).as[String],
+        idsOf(forum), idsOf(discovered), maxNew = 150, runId = 2), cfg, dir)
+      val known = ((0 until 200) ++ forum).distinct
+      val admitted = discovered.filterNot(known.contains).sortBy(i => Ids.syntheticId(i.toLong)).take(150)
+      assert(admitted.size == 150)
+      val expected = (known ++ admitted).map(i => entry(i, forum.contains(i), 2))
+      assert(out.scheduled.collect().sortBy(_.seq).toSeq == VirtualClockOracle.schedule(expected, cfg))
+      assert(out.resultRows == out.results.count() && out.resultRows == expected.size)
+      assert(Crawl.seenIds(spark, dir).as[String].collect().toSet == expected.map(_.id).toSet)
+    }
+  }
+
+  test("an id listed by several sources is scheduled once, restricted if any source says so") {
+    // round 2 leaves ids [0, 50) of url_seen out; forum ids fall in
+    // existing, in discovered, in both, and in neither; discovered repeats
+    val existing = 50 until 300
+    val forum = (0 until 600 by 30) ++ Seq(240, 240)
+    val discovered = (200 until 500) ++ (250 until 260)
+    val listed = (existing ++ forum ++ discovered).distinct
+    val cfg = CrawlConfig(runId = 2)
+    val expected = listed.map(i => entry(i, forum.contains(i), 2))
+    assert(Seq(240, 270).forall(i => existing.contains(i) && forum.contains(i) && discovered.contains(i)))
+    val oracle = VirtualClockOracle.schedule(expected, cfg)
+    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions")
+    Seq(2, 16).foreach { parts =>
+      val dir = tempDir(s"graft-crawl-repeat-$parts")
+      CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 300), CrawlConfig(runId = 1), dir) }
+      val before = seenState(dir)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try CacheScope.withScope {
+        val out = Crawl.run(spark, Frontier.buildWorklist(spark, idsOf(existing), idsOf(forum), idsOf(discovered),
+          maxNew = 1000, runId = 2), cfg, dir)
+        assert(out.scheduled.collect().sortBy(_.seq).toSeq == oracle, s"$parts partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", defaultParts)
+      val after = seenState(dir)
+      assert(after.keySet == before.keySet ++ listed.map(i => Ids.syntheticId(i.toLong)))
+      val stateOnly = (0 until 50).filterNot(forum.contains).map(i => Ids.syntheticId(i.toLong))
+      assert(stateOnly.exists(id => before(id)._1.isDefined))
+      stateOnly.foreach { id =>
+        assert(after(id) == before(id), s"$parts partitions: state-only $id lost its url_seen row")
+      }
+    }
+  }
 
   test("url_seen after each round == a sequential model of per-id state") {
     val dir = tempDir("graft-crawl-model")
@@ -191,14 +255,13 @@ class CrawlSpec extends SparkSpec {
           Crawl.run(spark, frontierOf(runId, ids), CrawlConfig(runId = runId), dir)
           c.settle()
           assert(c.plans.nonEmpty)
-          for (op <- Seq("BroadcastHashJoin", "BroadcastExchange", "Window"); p <- c.plans)
+          // the prior state meets the work-list inside the schedule's
+          // exchange: no join in either round
+          for (op <- Seq("BroadcastHashJoin", "BroadcastExchange", "Window", "SortMergeJoin",
+                         "ShuffledHashJoin"); p <- c.plans)
             assert(!p.contains(op), s"round $runId: an executed plan has $op:\n$p")
-          if (runId == 1) {
-            // the join to the empty prior state folds away
-            for (op <- Seq("SortMergeJoin", "ShuffledHashJoin"); p <- c.plans)
-              assert(!p.contains(op), s"first crawl: an executed plan has $op:\n$p")
-            assert(seenScans(c.plans).isEmpty)
-          } else
+          if (runId == 1) assert(seenScans(c.plans).isEmpty)
+          else
             assert(seenScans(c.plans).size == 1,
               s"round 2 scans url_seen ${seenScans(c.plans).size} times:\n${c.plans.mkString("\n")}")
         }

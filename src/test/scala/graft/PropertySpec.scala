@@ -42,7 +42,7 @@ class PropertySpec extends SparkSpec {
     val maxNew = if (bindCap) newIds.size / 2 else Int.MaxValue
     val frontier = Frontier.buildWorklist(spark, spark.createDataset(existing),
       spark.createDataset(forum), spark.createDataset(discovered), maxNew, runId = 1, store = store)
-      .collect()
+      .entries.collect()
     val model = known ++ newIds.take(maxNew)
     frontier.map(_.id).toSet == model &&
       frontier.length == model.size && // no duplicate rows

@@ -36,38 +36,35 @@ class FrontierSpec extends SparkSpec {
       spark.createDataset(forum), spark.createDataset(ids(300, 900)),
       maxNew = 1000, runId = 2, store = store)
 
-  test("a built frontier reads its cached known set: collecting it shuffles nothing") {
+  test("building the work-list submits no job; its entries merge the sources") {
     Seq(None, Some(store)).foreach { s =>
-      countingGroup("frontier-shuffle") { c =>
+      countingGroup("frontier-build") { c =>
         CacheScope.withScope {
-          val frontier = worklist(s)
           c.reset()
-          val rows = frontier.collect()
+          val w = worklist(s)
           c.settle()
-          assert(rows.length == 902 && rows.count(_.forums) == forum.size)
-          assert(c.shuffleBytes.get() == 0L,
-            s"store=${s.isDefined}: collecting the frontier shuffled ${c.shuffleBytes.get()} bytes")
-          assert(c.stages.get() == 1, s"store=${s.isDefined}: collecting ran ${c.stages.get()} stages")
+          assert(c.jobs.get() == 0, s"store=${s.isDefined}: building the work-list ran ${c.jobs.get()} jobs")
+          val rows = w.entries.collect()
+          assert(rows.length == 902 && rows.map(_.id).distinct.length == 902)
+          assert(rows.count(_.forums) == forum.size)
         }
       }
     }
   }
 
-  test("the work-list is one aggregate: four jobs, no probe, broadcast or anti-join") {
+  test("one work-list aggregate: two jobs, no probe, broadcast or anti-join") {
     // with and without a store whose probe would load: the store is not read
     Seq(None, Some(store)).foreach { s =>
       countingGroup("frontier-work") { c =>
         CacheScope.withScope {
           c.reset()
-          val rows = worklist(s).collect()
+          val rows = worklist(s).entries.collect()
           c.settle()
           assert(rows.length == 902 && rows.count(_.forums) == forum.size)
-          // adaptive execution runs each query stage as its own job: the
-          // aggregate's exchange, the cache build and the noop-sink write
-          // that counts the new ids; collecting reads the cache in one more
-          // (the probe-and-anti-join build ran 13 without a store, 11 with
-          // one; a separate count of the new ids ran 5)
-          assert(c.jobs.get() <= 4, s"store=${s.isDefined}: building and collecting ran ${c.jobs.get()} jobs")
+          // adaptive execution runs the aggregate's exchange as its own
+          // job; the collect, with the cap's sort, is the other (the
+          // probe-and-anti-join build ran 13 without a store, 11 with one)
+          assert(c.jobs.get() <= 2, s"store=${s.isDefined}: building and collecting ran ${c.jobs.get()} jobs")
           assert(c.plans.nonEmpty)
           for (op <- Seq("BroadcastHashJoin", "LeftAnti", "bloom_might_contain"); p <- c.plans)
             assert(!p.contains(op), s"store=${s.isDefined}: an executed plan has $op:\n$p")

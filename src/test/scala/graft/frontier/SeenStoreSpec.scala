@@ -39,10 +39,10 @@ class SeenStoreSpec extends SparkSpec {
     val d1 = spark.createDataset(ids(0, 300))
     val f1 = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum, d1,
       maxNew = 1000, runId = 1, store = Some(store))
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     val f1ref = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum, d1,
       maxNew = 1000, runId = 1)
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     assert(f1 == f1ref)
 
     // graduate run 1's ids (first commit = epoch roll: builds the bloom)
@@ -58,10 +58,10 @@ class SeenStoreSpec extends SparkSpec {
     val d2 = spark.createDataset(ids(150, 500))
     val inc = Frontier.buildWorklist(spark, existing, forum, d2,
       maxNew = 1000, runId = 2, store = Some(store))
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     val ref = Frontier.buildWorklist(spark, existing, forum, d2,
       maxNew = 1000, runId = 2)
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     assert(inc == ref, "epoch-probe dedup must match the rebuild path")
 
     // graduate run 2 as a SPILL (O(delta)) and check run 3 parity again —
@@ -81,10 +81,10 @@ class SeenStoreSpec extends SparkSpec {
     val d3 = spark.createDataset(ids(400, 800))
     val inc3 = Frontier.buildWorklist(spark, existing3, forum, d3,
       maxNew = 1000, runId = 3, store = Some(store))
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     val ref3 = Frontier.buildWorklist(spark, existing3, forum, d3,
       maxNew = 1000, runId = 3)
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     assert(inc3 == ref3, "bloom+spill dedup must match the rebuild path")
   }
 
@@ -285,10 +285,10 @@ class SeenStoreSpec extends SparkSpec {
     val d3 = spark.createDataset(ids(300, 1000))
     val inc = Frontier.buildWorklist(spark, existing, forum, d3,
       maxNew = 2000, runId = 3, store = Some(store))
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     val ref = Frontier.buildWorklist(spark, existing, forum, d3,
       maxNew = 2000, runId = 3)
-      .collect().map(e => (e.id, e.forums)).toSet
+      .entries.collect().map(e => (e.id, e.forums)).toSet
     assert(inc == ref, "sharded-probe dedup must match the rebuild path")
 
     // crash gap invalidates the sharded probe too

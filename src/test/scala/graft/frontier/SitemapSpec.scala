@@ -60,7 +60,7 @@ class SitemapSpec extends SparkSpec {
     assert(!discovered.collect().contains(loose))
     val work = Frontier.buildWorklist(spark, known.toDS(), spark.emptyDataset[String],
       discovered, maxNew = 20, runId = 1)
-      .collect().map(_.id).toSet
+      .entries.collect().map(_.id).toSet
     // known all present; exactly maxNew fresh ids added; loose id gone
     assert(known.toSet.subsetOf(work))
     assert((work -- known).size == 20)
