@@ -61,7 +61,7 @@ object CrawlMain {
     val store = new graft.frontier.SeenStore(tableDir,
       expectedKeys = math.max(1L << 22, numIds.toLong * 8))
     val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,
-      maxNew = numIds, runId = runId, store = Some(store))
+      maxNew = numIds, runId = runId)
 
     val out = Crawl.run(spark, frontier, cfg, tableDir)
     val n = out.resultRows

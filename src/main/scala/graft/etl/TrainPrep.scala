@@ -289,7 +289,7 @@ object TrainPrep {
                            maxShinglesPerDoc: Int = 128): DataFrame = {
     val (trainNgrams, evalShinglesRaw) = collisionSides(spark, dir, n)
     // the probe/!probe branches would otherwise re-execute the eval shingle
-    // mint + fold join twice (the SeenSet.dedup discipline)
+    // mint + fold join twice, so the shingles persist once
     val evalShingles = graft.core.CacheScope.persist(evalShinglesRaw)
     graft.sim.Pq.evictStopped(deconBloomCache, (k: (SparkSession, String, Int)) => k._1)
     val bloom = deconBloomCache.computeIfAbsent((spark, dir, n), _ => {

@@ -122,19 +122,6 @@ object Fetcher {
       .as[FetchResult]
   }
 
-  /** State-driven fetch stage: the schedule left-joined with `etagState`,
-    * fetched by [[withPriorEtag]]. `Crawl.run` does not call it: its
-    * schedule's exchange merges each id with its `url_seen` row, and it
-    * fetches those rows with the same columns. */
-  def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                   cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
-    import spark.implicits._
-    val st = etagState.toDF().select(col("id").as("__sid"), col("etag").as("__prior"))
-    withPriorEtag(schedule.toDF().join(st, col("id") === col("__sid"), "left_outer"),
-      cfg, col("__prior"))
-      .select(resultColumns: _*).as[FetchResult]
-  }
-
   /** The [[FetchResult]] columns, in field order. */
   val resultColumns: Seq[Column] =
     Seq("seq", "id", "fetchClass", "startMs", "status", "etag", "isNew", "retried").map(col)

@@ -89,8 +89,8 @@ object Frontier {
     * side. [[Worklist.entries]] merges and caps them on its own, for callers
     * that need the rows.
     *
-    * `store` is kept, unread, for source compatibility with callers that
-    * still commit a [[SeenStore]] each round. */
+    * `store` is not read. It stays only because the benchmark's crawl
+    * nights (`perfbench`) pass it. */
   def buildWorklist(spark: SparkSession,
                     existing: Dataset[String],
                     forumIds: Dataset[String],

@@ -18,9 +18,8 @@ import graft.snapshot.SnapshotTable
   * artifact with an O(delta) nightly commit. The crawl path commits it each
   * round but does not read it: `Frontier.buildWorklist` recrawls every known
   * id, so it scans the seen corpus every round anyway and builds the
-  * work-list by exact set algebra. Nothing on the crawl path calls
-  * [[loadProbe]]; it returns the tiers as a [[SeenProbe]] for
-  * [[SeenSet.dedup]]. The tiers:
+  * work-list by exact set algebra. [[loadProbe]] returns the tiers as a
+  * [[SeenProbe]] for readers that check what was committed. The tiers:
   *
   *  - the **epoch bloom** covers the seen corpus up to one `url_seen`
   *    snapshot version (recorded in its meta file), sized from the keys it
@@ -30,15 +29,19 @@ import graft.snapshot.SnapshotTable
   *  - each run's commit writes a **cuckoo spill**: a small filter over just
   *    the run's ids that no earlier tier flags (the run passes every id it
   *    crawled; the ones the epoch or an earlier spill already covers are
-  *    dropped), built by the same distributed builds as the epoch
-  *    ([[SeenSet.buildFilter]], [[SeenSet.buildFilterShards]]) and
-  *    published atomically as `url_seen_spill-v{N}.bin`, keyed by the
-  *    `url_seen` snapshot version it covers. Commit cost is O(delta);
+  *    dropped), built by the same distributed build as the epoch
+  *    ([[SeenSet.buildFilter]]) and published atomically as
+  *    `url_seen_spill-v{N}.bin`, keyed by the `url_seen` snapshot version it
+  *    covers. Commit cost is O(delta);
   *  - when spills accumulate past `maxSpillRuns`, or covered keys outgrow
   *    the persisted roll budget (`capacityKeys`, at least 2× the corpus at
   *    the last roll), the epoch ROLLS: one rebuild from the authoritative
   *    snapshot (the store's only full scan, amortized over many runs),
   *    after which the spills are deleted.
+  *
+  * Every tier is one in-heap filter file. The rule's "partitioned" half, a
+  * table-resident (sharded) layout, is out of scope: the crawl path reads
+  * no filter at any scale.
   *
   * **Crash safety is validation, not staging** (the round-2 design staged
   * current-run inserts in a driver-held delta that production never
@@ -47,10 +50,8 @@ import graft.snapshot.SnapshotTable
   * version plus one contiguous spill per later version. A run that crashes
   * between its `url_seen` snapshot commit and its spill write leaves a
   * version gap; [[loadProbe]] then returns None, and the next [[commitRun]]
-  * heals the store by rolling. Exactness never depends on the filter's
-  * freshness: the bloom/spills remain a pre-filter ahead of the exact
-  * anti-join ([[SeenSet.dedup]]'s contract), and the version check
-  * guarantees the pre-filter tier never silently under-covers.
+  * heals the store by rolling. The version check guarantees the tiers
+  * never silently under-cover what was committed.
   */
 final class SeenStore(dir: String,
                       /** Floor of the roll budget: a roll persists
@@ -58,22 +59,12 @@ final class SeenStore(dir: String,
                         * count the spills may grow to before the next roll.
                         * It does not size any filter. */
                       expectedKeys: Long = 1L << 22,
-                      maxSpillRuns: Int = 8,
-                      /** >0 → SHARDED epochs: the bloom persists as a
-                        * parquet table of (shard, bloomBytes) rows probed
-                        * via cogroup ([[SeenSet.maybeSeen]]) — the
-                        * 10^10-key mode where one filter (~12.5 GB) fits
-                        * neither a task binary nor comfortably one heap.
-                        * 0 → the single-filter epoch (default). */
-                      numShards: Int = 0) {
+                      maxSpillRuns: Int = 8) {
   import SeenStore.Meta
 
   private val bloomPath = Paths.get(dir, "url_seen_bloom.bin")
   private val metaPath = Paths.get(dir, "url_seen_bloom.json")
-  private val shardDir = Paths.get(dir, "url_seen_bloom_shards")
   Files.createDirectories(Paths.get(dir))
-
-  private def sharded: Boolean = numShards > 0
 
   // -------- url_seen snapshot version (the validation authority) --------
 
@@ -118,106 +109,53 @@ final class SeenStore(dir: String,
       s"""{"insertedKeys":${m.insertedKeys},"capacityKeys":${m.capacityKeys},"seenVersion":${m.seenVersion}}"""
         .getBytes(StandardCharsets.UTF_8))
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p))
-        listEntries(p).foreach(deleteRecursively)
-      Files.deleteIfExists(p)
-      ()
-    }
-
   // -------- spill tier --------
 
   private def spillPath(v: Int): Path = Paths.get(dir, f"url_seen_spill-v$v%06d.bin")
-  // sharded-mode spill artifacts: a (shard, cuckooBytes) parquet table plus
-  // a sidecar count json written AFTER the table's atomic move — a crash
-  // between the two leaves the version invisible (a gap), which the
-  // validation below already treats as "roll on next commit"
-  private def spillShardDir(v: Int): Path = Paths.get(dir, f"url_seen_spill-v$v%06d.shards")
-  private def spillMetaPath(v: Int): Path = Paths.get(dir, f"url_seen_spill-v$v%06d.json")
 
   private def spillVersions: Seq[Int] = {
     val d = Paths.get(dir)
     if (!Files.isDirectory(d)) Nil
-    else if (sharded)
-      listEntries(d)
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("url_seen_spill-v\\d{6}\\.shards") =>
-          s.substring(16, 22).toInt }
-        .filter(v => shardedSpillCount(v).isDefined)
-        .toSeq.sorted
     else listEntries(d)
       .map(_.getFileName.toString)
       .collect { case s if s.matches("url_seen_spill-v\\d{6}\\.bin") =>
         s.substring(16, 22).toInt }
-      .toSeq.sorted
+      .sorted
   }
 
   private def deleteSpills(): Unit =
-    spillVersions.foreach { v =>
-      Files.deleteIfExists(spillPath(v))
-      Files.deleteIfExists(spillMetaPath(v))
-      deleteRecursively(spillShardDir(v))
-    }
-
-  /** Parsed sidecar count — None for a missing OR malformed json, which
-    * makes the version INVISIBLE (a gap the next load/commit heals by
-    * rolling): a corrupt sidecar must not silently count 0 keys toward the
-    * roll-budget check. */
-  private def shardedSpillCount(v: Int): Option[Long] =
-    if (!Files.exists(spillMetaPath(v))) None
-    else {
-      val s = new String(Files.readAllBytes(spillMetaPath(v)), StandardCharsets.UTF_8)
-      """"count":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    }
+    spillVersions.foreach(v => Files.deleteIfExists(spillPath(v)))
 
   /** Spill key count WITHOUT deserializing the filter (potentially GiBs):
-    * the 12-byte serialization header in single-filter mode, the sidecar
-    * json in sharded mode (validated present by [[spillVersions]]). */
-  private def spillCount(v: Int): Long =
-    if (sharded) shardedSpillCount(v).get
-    else {
-      val in = Files.newInputStream(spillPath(v))
-      try CuckooFilter.sizeOf(in.readNBytes(12)) finally in.close()
-    }
+    * its 12-byte serialization header. */
+  private def spillCount(v: Int): Long = {
+    val in = Files.newInputStream(spillPath(v))
+    try CuckooFilter.sizeOf(in.readNBytes(12)) finally in.close()
+  }
 
   /** Keys the epoch and the spills `vs` hold. */
   private def covered(m: Meta, vs: Seq[Int]): Long = m.insertedKeys + vs.map(spillCount).sum
 
   // -------- load (validated) --------
 
-  def bloomExists: Boolean =
-    if (sharded) Files.isDirectory(shardDir) else Files.exists(bloomPath)
+  def bloomExists: Boolean = Files.exists(bloomPath)
 
   /** Load the probe tiers — None when absent or invalid: the epoch version
     * plus contiguous spills must cover every committed `url_seen` version
-    * (no crash gap). Callers then use the exact full-rebuild path, and the
-    * next commit rolls the epoch. */
+    * (no crash gap), and the next commit rolls the epoch. */
   def loadProbe(spark: SparkSession): Option[SeenProbe] =
     for {
       m <- readMeta()
       if bloomExists
       vs = spillVersions.filter(_ > m.seenVersion)
       if ((m.seenVersion + 1) to currentSeenVersion).forall(vs.contains)
-    } yield probeOf(spark, m, vs)
+    } yield probeOf(m, vs)
 
-  /** The epoch plus the spills `vs` as probe tiers. Single-filter mode
-    * loads them in heap; sharded mode returns their tables, read lazily by
-    * Spark and probed through one cogroup ([[SeenSet.maybeSeen]]), so
-    * nothing filter-sized ever materializes on the driver or in a task
-    * binary. */
-  private def probeOf(spark: SparkSession, m: Meta, vs: Seq[Int]): SeenProbe =
-    if (sharded) {
-      import spark.implicits._
-      def shardTable(p: Path): Dataset[(Int, Array[Byte])] =
-        spark.read.parquet(p.toString).select(col("shard").cast("int"), col("bytes"))
-          .as[(Int, Array[Byte])]
-      SeenProbe(Nil, Some(ShardTiers(shardTable(shardDir),
-        vs.map(v => shardTable(spillShardDir(v))), numShards)), covered(m, vs))
-    } else
-      SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)) +:
-        vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v)))), None,
-        covered(m, vs))
+  /** The epoch plus the spills `vs`, loaded in heap. */
+  private def probeOf(m: Meta, vs: Seq[Int]): SeenProbe =
+    SeenProbe(BlockedBloom.deserialize(Files.readAllBytes(bloomPath)) +:
+      vs.map(v => CuckooFilter.deserialize(Files.readAllBytes(spillPath(v)))),
+      covered(m, vs))
 
   // -------- commit --------
 
@@ -246,18 +184,13 @@ final class SeenStore(dir: String,
       ((m.seenVersion + 1) until seenVersion).forall(vs.contains))
     val prior = meta.map(m => vs.filter(v => v > m.seenVersion && v < seenVersion)).getOrElse(Nil)
     lazy val coveredSoFar = covered(meta.get, prior)
-    // keys one hash slice gets out of `keys`, with a 25% skew margin: the
-    // size of each sharded filter, epoch or spill. A delta past the cuckoo's
-    // geometry cap can't spill safely (overload → kick overflow; and the
-    // per-task zero table would be GiBs) — such a run IS a reshape of the
-    // corpus, roll instead. In SHARDED mode the spill is a per-slice table,
-    // so the cap applies per shard — a nightly 10^8-key delta spills in
-    // O(delta) instead of forcing a full-corpus epoch roll
-    def perShard(keys: Long) = keys / numShards * 5 / 4 + 1
+    // a delta past the cuckoo's geometry cap can't spill safely (overload
+    // → kick overflow; and the per-task zero table would be GiBs) — such a
+    // run IS a reshape of the corpus, roll instead
     def spillFits(keys: Long) = coveredSoFar + keys <= meta.get.capacityKeys &&
-      (if (sharded) perShard(keys) else keys) <= CuckooFilter.MaxSpillKeys
+      keys <= CuckooFilter.MaxSpillKeys
     lazy val delta =
-      SeenSet.maybeSeen(spark, newHashes.toDF("h"), col("h"), probeOf(spark, meta.get, prior))
+      SeenSet.maybeSeen(newHashes.toDF("h"), col("h"), probeOf(meta.get, prior).filters)
         .filter(!col("maybe")).select("h").as[Long]
     val spillKeys =
       if (!contiguous || prior.size + 1 > maxSpillRuns) None
@@ -271,49 +204,11 @@ final class SeenStore(dir: String,
         // downstream of the probe ships it in its task binary
         val total = fullCount
         val capacity = math.max(expectedKeys, total * 2)
-        if (sharded) {
-          // the epoch becomes a TABLE: one (shard, bloomBytes) row per hash
-          // slice, written then published by directory swap; a crash mid-swap
-          // is a version gap the next load/commit heals by rolling again
-          val perShardKeys = perShard(total)
-          val tmp = Paths.get(dir, s".bloomshards-tmp-${System.nanoTime()}")
-          SeenSet.buildFilterShards(spark, fullCorpusHashes, numShards,
-              () => BlockedBloom.sized(perShardKeys))
-            .toDF("shard", "bytes")
-            .write.mode("overwrite").parquet(tmp.toString)
-          deleteRecursively(shardDir)
-          Files.move(tmp, shardDir, StandardCopyOption.REPLACE_EXISTING)
-        } else
-          atomicWrite(bloomPath,
-            SeenSet.buildFilter(fullCorpusHashes, () => BlockedBloom.sized(total)).serialized)
+        atomicWrite(bloomPath,
+          SeenSet.buildFilter(fullCorpusHashes, () => BlockedBloom.sized(total)).serialized)
         saveMeta(Meta(total, capacity, seenVersion))
         deleteSpills()
         (true, total)
-      case Some(keys) if sharded =>
-        // sharded spill: the delta as a (shard, cuckooBytes) table,
-        // published by directory move, made VISIBLE by the sidecar count
-        // json (written last; a crash between the two is a version gap the
-        // next commit heals by rolling). Sized per shard at ≤50% load with a
-        // 25% skew margin; the count is read from each filter's header as
-        // the write's result tasks pass it
-        val buckets = CuckooFilter.bucketsFor(perShard(keys))
-        val added = spark.sparkContext.longAccumulator("seenstore.spill_keys")
-        val tmp = Paths.get(dir, s".spillshards-tmp-${System.nanoTime()}")
-        SeenSet.buildFilterShards(spark, delta, numShards, () => new CuckooFilter(buckets))
-          .map { case row @ (_, bytes) => added.add(CuckooFilter.sizeOf(bytes)); row }
-          .toDF("shard", "bytes")
-          .write.mode("overwrite").parquet(tmp.toString)
-        // invisible-before-visible holds on RE-commit of the same version too:
-        // the sidecar json is the visibility marker, so drop any stale one
-        // BEFORE replacing the table — a crash after the move then leaves the
-        // version invisible (a gap), never a fresh table paired with an old
-        // count
-        Files.deleteIfExists(spillMetaPath(seenVersion))
-        deleteRecursively(spillShardDir(seenVersion))
-        Files.move(tmp, spillShardDir(seenVersion), StandardCopyOption.REPLACE_EXISTING)
-        atomicWrite(spillMetaPath(seenVersion),
-          s"""{"count":${added.sum}}""".getBytes(StandardCharsets.UTF_8))
-        (false, coveredSoFar + added.sum)
       case Some(keys) =>
         val buckets = CuckooFilter.bucketsFor(keys)
         val spill = SeenSet.buildFilter(delta, () => new CuckooFilter(buckets))

@@ -4,13 +4,14 @@ import graft.core.Ids.mix64
 
 /** Probabilistic membership structures for the URL-seen set (SURVEY.md J1,
   * north rule: "partitioned blocked Bloom filter (merged via treeAggregate)
-  * plus cuckoo-filter spill").
+  * plus cuckoo-filter spill"; the partitioned layout is out of scope, see
+  * [[SeenStore]]).
   *
   * The reference's seen-set is a Python `set` (discover.py:68,
-  * crawler:203-215) — exact but driver-bound. At 10^10 URLs the exact set is
-  * a table; these filters are the cheap pre-filter tier in front of the
-  * exact anti-join (false positives fall through to the join, so end-to-end
-  * dedup stays EXACT; false negatives are impossible).
+  * crawler:203-215) — exact but driver-bound. The crawl path keeps it exact
+  * as set algebra; these filters are the tiers [[SeenStore]] persists and
+  * the pre-filter other stages put in front of an exact join (false
+  * positives fall through to the join; false negatives are impossible).
   */
 
 /** One tier of the seen-set pre-filter: may report a key it never saw,
@@ -19,10 +20,10 @@ trait MembershipFilter extends Serializable {
   def mightContain(key: Long): Boolean
 }
 
-/** A filter the two distributed builds ([[SeenSet.buildFilter]],
-  * [[SeenSet.buildFilterShards]]) can fill, merge and persist. `add` returns
-  * false when the filter is full (a bloom never is); the builds throw then,
-  * since a dropped key would be a pre-filter false negative. */
+/** A filter the distributed build ([[SeenSet.buildFilter]]) can fill, merge
+  * and persist. `add` returns false when the filter is full (a bloom never
+  * is); the build throws then, since a dropped key would be a pre-filter
+  * false negative. */
 trait BuildableFilter[F <: BuildableFilter[F]] extends MembershipFilter {
   def add(key: Long): Boolean
   def mergeInPlace(o: F): F
@@ -251,10 +252,7 @@ object CuckooFilter {
     * overloaded filter would kick-overflow, and its serialized form would
     * exceed the single-ByteBuffer Int limit). Kept consistent with
     * [[MaxBuckets]] so any delta that passes the spill guard is guaranteed
-    * to serialize. In SHARDED mode this cap applies PER HASH-SLICE
-    * (SeenSet.buildFilterShards): the run's delta capacity scales with the
-    * shard count, so a 10^8-10^9-key nightly delta spills as a table
-    * instead of forcing an epoch roll — the single-filter cap only bounds
-    * the in-heap mode, whose filter must also fit a task binary. */
+    * to serialize. The cap bounds one run's delta, since a spill is one
+    * in-heap filter that must also fit a task binary. */
   val MaxSpillKeys: Long = MaxBuckets.toLong * 2
 }

@@ -422,7 +422,7 @@ case class LshBucket64(child: Expression, nPlanes: Int) extends UnaryExpression 
 /** fetch_classify(id) → struct<status:int, retried:boolean> — the crawl's
   * per-row result classification as ONE codegen'd expression (run
   * parameters are plan-time constants, not child columns). Powers the
-  * fetch stage (Fetcher.run / runWithState), which keeps the hottest
+  * fetch stage (Fetcher.run / withPriorEtag), which keeps the hottest
   * per-row work inside whole-stage codegen with no encoder round-trip. */
 case class FetchClassify(child: Expression, runId: Int, seed: Long,
                          timeoutMs: Long, conditional: Boolean) extends UnaryExpression {

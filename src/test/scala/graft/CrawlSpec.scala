@@ -284,7 +284,7 @@ class CrawlSpec extends SparkSpec {
       val store = new SeenStore(dir, expectedKeys = 1 << 16)
       val frontier = Frontier.buildWorklist(spark, known,
         spark.createDataset(listed.indices.by(40).map(listed)), spark.createDataset(listed),
-        maxNew = 1000, runId = runId, store = Some(store))
+        maxNew = 1000, runId = runId)
       val out = Crawl.run(spark, frontier, CrawlConfig(runId = runId), dir)
       def hashes(ids: org.apache.spark.sql.DataFrame) =
         ids.select(SeenSet.idHash(col("id")).as("h")).as[Long]

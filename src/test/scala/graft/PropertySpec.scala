@@ -13,7 +13,7 @@ import graft.text.Mincer
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Property-based tests (SURVEY §5.4): frontier algebra vs the Set model,
-  * dedup idempotence, politeness invariants under random inputs, filter
+  * politeness invariants under random inputs, filter
   * soundness, normalizer idempotence. Raw ScalaCheck (no scalatestplus in
   * the offline cache) — each property asserts `Test.check(...).passed`. */
 class PropertySpec extends SparkSpec {
@@ -96,23 +96,6 @@ class PropertySpec extends SparkSpec {
           frontierMatchesModel(existing, forum, discovered, bindCap, Some(store))
     }
     check(prop, tests = 6)
-  }
-
-  test("seen-set dedup is idempotent: run(run(F)) == run(F)") {
-    import spark.implicits._
-    val prop = Prop.forAllNoShrink(genIds, genIds) { (seenL, candL) =>
-      val seen = spark.createDataset(seenL.distinct).toDF("value")
-      val cand = spark.createDataset(candL.distinct).toDF("value")
-      // the no-store probe: one bloom tier rebuilt from the seen set
-      val probe = graft.frontier.SeenProbe(Seq(graft.frontier.SeenSet.buildFilter(
-        seen.select(graft.frontier.SeenSet.idHash($"value")).as[Long], () => BlockedBloom.sized(4096))), None, 0L)
-      val once = graft.frontier.SeenSet.dedup(spark, cand, seen, probe)
-      val twice = graft.frontier.SeenSet.dedup(spark, once, seen, probe)
-      val a = once.collect().map(_.getString(0)).sorted.toSeq
-      val b = twice.collect().map(_.getString(0)).sorted.toSeq
-      a == b && a == (candL.toSet -- seenL.toSet).toList.sorted
-    }
-    check(prop, tests = 8)
   }
 
   test("bloom filter: NEVER a false negative (any key set, any sizing)") {

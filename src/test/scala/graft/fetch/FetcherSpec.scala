@@ -1,5 +1,8 @@
 package graft.fetch
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 import graft.core.{CrawlConfig, EtagState, FetchResult, FrontierEntry, Ids, ScheduledFetch}
 import graft.frontier.Frontier
@@ -127,6 +130,16 @@ class FetcherSpec extends SparkSpec {
     assert(t.exists(_.status == Fetcher.TimeoutStatus))
   }
 
+  /** The schedule left-joined with prior etag state and fetched by
+    * `Fetcher.withPriorEtag`, the columns `Crawl.run` fetches its merged
+    * rows with. */
+  private def fetchWithState(sched: Dataset[ScheduledFetch], cfg: CrawlConfig,
+                             state: Dataset[EtagState]): Dataset[FetchResult] =
+    Fetcher.withPriorEtag(
+      sched.toDF().join(state.toDF().select(col("id"), col("etag").as("prior")), Seq("id"), "left_outer"),
+      cfg, col("prior"))
+      .select(Fetcher.resultColumns: _*).as[FetchResult]
+
   test("conditional fetch == conditionalResult, row for row (etag-state path)") {
     val cfg = CrawlConfig(runId = 4)
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(3000)), cfg)
@@ -140,7 +153,7 @@ class FetcherSpec extends SparkSpec {
         EtagState(id, "W/\"stale\"", lastRun = cfg.runId - 1)
     }.toSeq
     val prior = state.map(s => s.id -> s.etag).toMap
-    val out = Fetcher.runWithState(spark, sched, cfg, spark.createDataset(state))
+    val out = fetchWithState(sched, cfg, spark.createDataset(state))
       .collect().sortBy(_.seq)
     assert(out.toSeq == rows.map(s => Fetcher.conditionalResult(s, cfg.runId, prior.get(s.id), cfg)).toSeq)
     assert(out.count(_.status == 304) >= rows.length / 2 - 1)
@@ -150,9 +163,9 @@ class FetcherSpec extends SparkSpec {
     val cfg = CrawlConfig()
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(500)), cfg)
     val state = spark.createDataset(Seq(EtagState(sched.head().id, "W/\"stale\"", 0)))
-    // both entry points: the stateless stage and the etag-state stage Crawl.run takes
+    // both fetch forms: the stateless stage and the prior-etag columns Crawl.run fetches with
     Seq("run" -> Fetcher.run(spark, sched, cfg).toDF(),
-        "runWithState" -> Fetcher.runWithState(spark, sched, cfg, state).toDF()).foreach {
+        "withPriorEtag" -> fetchWithState(sched, cfg, state).toDF()).foreach {
       case (name, df) =>
         df.collect()
         val plan = df.queryExecution.executedPlan.toString

@@ -2,7 +2,6 @@ package graft.frontier
 
 import graft.SparkSpec
 import graft.core.Ids
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 class SeenSetSpec extends SparkSpec {
@@ -51,7 +50,6 @@ class SeenSetSpec extends SparkSpec {
     val snapshot = (0 until 2000).map(i => s"a_$i")
     val delta = (0 until 500).map(i => s"b_$i")
     val forum = (0 until 50).map(i => s"f_$i")
-    val sparse = (0 until 40).map(i => s"s_$i")
     def hashes(ids: Seq[String]) = ids.toDF("id").select(SeenSet.idHash(col("id"))).as[Long]
     def bloom(ids: Seq[String]) = {
       val b = BlockedBloom.sized(ids.size)
@@ -63,36 +61,25 @@ class SeenSetSpec extends SparkSpec {
       hashes(ids).collect().foreach(h => assert(c.add(h)))
       c
     }
-    def shards(bloomIds: Seq[String], spillIds: Seq[Seq[String]], n: Int) = Some(ShardTiers(
-      SeenSet.buildFilterShards(spark, hashes(bloomIds), n, () => new BlockedBloom(128, 5)),
-      spillIds.map { ids =>
-        val buckets = CuckooFilter.bucketsFor(ids.size / n * 5 / 4 + 1)
-        SeenSet.buildFilterShards(spark, hashes(ids), n, () => new CuckooFilter(buckets))
-      }, n))
-    val all = snapshot ++ delta ++ forum
-    val cases = Seq(
-      ("bloom only", all, SeenProbe(Seq(bloom(all)), None, 0L)),
-      ("bloom + cuckoo", all, SeenProbe(Seq(bloom(snapshot ++ forum), cuckoo(delta)), None, 0L)),
-      ("shard bloom, 4 shards", all, SeenProbe(Nil, shards(all, Nil, 4), 0L)),
-      // 40 keys over 64 slices: most shards have no row, and their
-      // candidates must classify definitely new
-      ("shard bloom, 64 shards", sparse, SeenProbe(Nil, shards(sparse, Nil, 64), 0L)),
-      ("shard bloom + shard cuckoo spill", all,
-        SeenProbe(Nil, shards(snapshot ++ forum, Seq(delta), 8), 0L)),
-      ("bloom + cuckoo + forum tier", all,
-        SeenProbe(Seq(bloom(snapshot), cuckoo(delta)), None, 0L).withFilter(bloom(forum))),
-      ("shard tiers + forum tier", all,
-        SeenProbe(Nil, shards(snapshot, Seq(delta), 8), 0L).withFilter(bloom(forum))))
-    assert(SeenSet.buildFilterShards(spark, hashes(sparse), 64, () => new BlockedBloom(128, 5)).count() < 64,
-      "the 64-shard case must include empty shards")
-    cases.foreach { case (name, seen, probe) =>
-      val candidates = seen.drop(seen.size / 3) ++ (0 until 800).map(i => s"fresh_$i")
-      val expected = candidates.toSet -- seen.toSet
-      val exact = SeenSet.dedupExact(candidates.toDF("id"), seen.toDF("id"), "id")
-        .as[String].collect().toSet
-      val out = SeenSet.dedup(spark, candidates.toDF("id"), seen.toDF("id"), probe)
-        .as[String].collect()
-      assert(exact == expected, name)
+    val seen = snapshot ++ delta ++ forum
+    val cases = Seq[(String, Seq[MembershipFilter])](
+      ("bloom only", Seq(bloom(seen))),
+      ("bloom + cuckoo", Seq(bloom(snapshot ++ forum), cuckoo(delta))),
+      ("bloom + cuckoo + forum tier", Seq(bloom(snapshot), cuckoo(delta), bloom(forum))))
+    val candidates = seen.drop(seen.size / 3) ++ (0 until 800).map(i => s"fresh_$i")
+    val expected = candidates.toSet -- seen.toSet
+    val exact = SeenSet.dedupExact(candidates.toDF("id"), seen.toDF("id"), "id")
+      .as[String].collect()
+    assert(exact.toSet == expected && exact.length == expected.size, "dedupExact == set model")
+    cases.foreach { case (name, filters) =>
+      val flagged = SeenSet.maybeSeen(candidates.toDF("id"), SeenSet.idHash(col("id")), filters)
+      val maybe = flagged.filter(col("maybe")).select("id").as[String].collect().toSet
+      assert(candidates.filter(seen.toSet).forall(maybe), s"$name: maybeSeen missed a seen id")
+      // the tiers as a pre-filter: unflagged candidates pass, flagged ones
+      // fall to the exact anti-join
+      val out = flagged.filter(!col("maybe")).select("id").as[String].collect() ++
+        SeenSet.dedupExact(flagged.filter(col("maybe")).select("id"), seen.toDF("id"), "id")
+          .as[String].collect()
       assert(out.toSet == expected, s"$name: false positives must fall through to the anti-join")
       assert(out.length == expected.size, s"$name: no duplicate output rows")
     }
@@ -121,27 +108,5 @@ class SeenSetSpec extends SparkSpec {
       SeenSet.buildFilter(hashes, () => new CuckooFilter(256))
     }
     assert(full.getMessage.contains("CuckooFilter overflow"), full.getMessage)
-  }
-
-  private val shardKeys = (0L until 5000L).map(Ids.mix64)
-
-  private def checkShards(rows: Dataset[(Int, Array[Byte])],
-                          read: Array[Byte] => MembershipFilter): Unit = {
-    val filters = rows.collect().map { case (shard, bytes) => shard -> read(bytes) }.toMap
-    assert(filters.size == 8)
-    assert(shardKeys.forall(h => filters(Math.floorMod(h, 8L).toInt).mightContain(h)))
-  }
-
-  test("sharded bloom build covers all inserted keys") {
-    val hashes = spark.createDataset(shardKeys)
-    checkShards(SeenSet.buildFilterShards(spark, hashes, 8, () => new BlockedBloom(256, 5)),
-      BlockedBloom.deserialize)
-  }
-
-  test("sharded cuckoo build covers all inserted keys") {
-    val hashes = spark.createDataset(shardKeys)
-    val buckets = CuckooFilter.bucketsFor(5000L / 8 * 5 / 4 + 1)
-    checkShards(SeenSet.buildFilterShards(spark, hashes, 8, () => new CuckooFilter(buckets)),
-      CuckooFilter.deserialize)
   }
 }

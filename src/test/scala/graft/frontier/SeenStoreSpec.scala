@@ -33,59 +33,48 @@ class SeenStoreSpec extends SparkSpec {
   test("incremental path == rebuild path across runs; no per-run corpus scan needed") {
     val dir = tempDir("graft_seenstore")
     val store = new SeenStore(dir, expectedKeys = 1 << 16)
-    val forum = spark.createDataset(ids(0, 7))
+    val forum = ids(0, 7)
+    def idHashes(xs: Seq[String]) =
+      spark.createDataset(xs).toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
+    // the work-list against the set model: known ∪ discovered (the cap does
+    // not bind), forums-flagged exactly for the forum ids
+    def checkWorklist(existing: Seq[String], discovered: Seq[String], runId: Int): Unit = {
+      val got = Frontier.buildWorklist(spark, spark.createDataset(existing),
+        spark.createDataset(forum), spark.createDataset(discovered), maxNew = 1000, runId = runId)
+        .entries.collect().map(e => (e.id, e.forums))
+      val model = (existing ++ forum ++ discovered).distinct.map(id => (id, forum.contains(id)))
+      assert(got.toSet == model.toSet && got.length == model.size, s"run $runId: work-list != set model")
+    }
+    // the loaded tiers flag every committed id
+    def checkCovers(committed: Seq[String], when: String): Unit = {
+      val probe = store.loadProbe(spark).get
+      assert(idHashes(committed).collect().forall(h => probe.filters.exists(_.mightContain(h))),
+        s"$when: a committed id is not flagged")
+    }
 
-    // run 1: no epoch filter yet → identical to the rebuild path by definition
-    val d1 = spark.createDataset(ids(0, 300))
-    val f1 = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum, d1,
-      maxNew = 1000, runId = 1, store = Some(store))
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    val f1ref = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum, d1,
-      maxNew = 1000, runId = 1)
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    assert(f1 == f1ref)
-
-    // graduate run 1's ids (first commit = epoch roll: builds the bloom)
+    // run 1: nothing seen yet; the first commit rolls the epoch from the corpus
+    checkWorklist(Nil, ids(0, 300), 1)
     fakeSeenCommit(dir, 1)
-    val h1 = spark.createDataset(ids(0, 300))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
-    val (rolled1, n1) = store.commitRun(spark, h1, 300, seenVersion = 1, h1, 300)
+    val (rolled1, n1) = store.commitRun(spark, idHashes(ids(0, 300)), 300, seenVersion = 1,
+      idHashes(ids(0, 300)), 300)
     assert(rolled1 && n1 == 300 && store.bloomExists)
+    checkCovers(ids(0, 300), "after the roll")
 
-    // run 2: overlapping + fresh discoveries; the store path must equal the
-    // full-rebuild path exactly (filters are a pre-filter, anti-join exact)
-    val existing = spark.createDataset(ids(0, 300))
-    val d2 = spark.createDataset(ids(150, 500))
-    val inc = Frontier.buildWorklist(spark, existing, forum, d2,
-      maxNew = 1000, runId = 2, store = Some(store))
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    val ref = Frontier.buildWorklist(spark, existing, forum, d2,
-      maxNew = 1000, runId = 2)
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    assert(inc == ref, "epoch-probe dedup must match the rebuild path")
-
-    // graduate run 2 as a SPILL (O(delta)) and check run 3 parity again —
-    // now the probe has both tiers live
+    // run 2: overlapping + fresh discoveries, graduated as a SPILL: O(delta),
+    // with no corpus scan
+    checkWorklist(ids(0, 300), ids(150, 500), 2)
     fakeSeenCommit(dir, 2)
-    val h2 = spark.createDataset(ids(300, 500))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
+    val h2 = idHashes(ids(300, 500))
     val (rolled2, n2) = store.commitRun(spark, h2, 200, seenVersion = 2,
       fullCorpusHashes = fail("spill path must not scan the corpus"),
       fullCount = fail("spill path must not count the corpus"))
     // the spill holds the ids the epoch does not flag
     val probe2 = store.loadProbe(spark).get
-    val h2s = h2.collect().toSeq
-    assert(!rolled2 && n2 == 300 + h2s.count(h => !epochBloom(probe2).mightContain(h)))
-    assert(h2s.forall(h => probe2.filters.exists(_.mightContain(h))))
-    val existing3 = spark.createDataset(ids(0, 500))
-    val d3 = spark.createDataset(ids(400, 800))
-    val inc3 = Frontier.buildWorklist(spark, existing3, forum, d3,
-      maxNew = 1000, runId = 3, store = Some(store))
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    val ref3 = Frontier.buildWorklist(spark, existing3, forum, d3,
-      maxNew = 1000, runId = 3)
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    assert(inc3 == ref3, "bloom+spill dedup must match the rebuild path")
+    assert(!rolled2 && n2 == 300 + h2.collect().count(h => !epochBloom(probe2).mightContain(h)))
+    checkCovers(ids(0, 500), "after the spill")
+
+    // run 3: the work-list is still exact with both tiers live
+    checkWorklist(ids(0, 500), ids(400, 800), 3)
   }
 
   test("spill commit is O(delta): the epoch bloom file is not rewritten") {
@@ -168,6 +157,15 @@ class SeenStoreSpec extends SparkSpec {
     assert(rolled && covered == 900)
     val probe = store.loadProbe(spark).get
     assert(all.forall(epochBloom(probe).mightContain), "healed epoch covers the corpus")
+    // a re-run of the gap's own version is the heal: its spill closes the
+    // gap while the chain stays contiguous, so no roll is needed
+    fakeSeenCommit(dir, 4)
+    assert(store.loadProbe(spark).isEmpty)
+    val (rolled4, _) = store.commitRun(spark,
+      hashesOf((900 until 950).map(i => Ids.mix64(i.toLong))), 50, seenVersion = 4,
+      fullCorpusHashes = fail("committing the missing version must spill, not roll"),
+      fullCount = fail("committing the missing version must not count the corpus"))
+    assert(!rolled4 && store.loadProbe(spark).isDefined)
   }
 
   test("roll capacity is PERSISTED: a corpus past the constructor default rolls once, then spills") {
@@ -197,11 +195,11 @@ class SeenStoreSpec extends SparkSpec {
       epochBloom(probe).mightContain(h) || spills(probe).exists(_.mightContain(h))))
   }
 
-  /** Rolls 2,000 ids into a store with the 1 << 22 roll budget the crawl
-    * mains pass, then spills two runs of 100 new ids. Returns the hashes
-    * committed, the ones the loaded probe flags, and its false-positive
-    * rate over 100k never-committed hashes. */
-  private def rollThenSpill(store: SeenStore, dir: String) = {
+  test("epoch bloom is sized from its corpus; the roll budget stays") {
+    val dir = tempDir("graft_seenstore_sized")
+    // the 1 << 22 roll budget the crawl mains pass: 2,000 ids roll, then two
+    // runs of 100 new ids spill
+    val store = new SeenStore(dir, expectedKeys = 1L << 22)
     def range(lo: Int, hi: Int) = (lo until hi).map(i => Ids.mix64(i.toLong))
     fakeSeenCommit(dir, 1)
     val (r1, n1) = store.commitRun(spark, hashesOf(range(0, 2000)), 2000, 1,
@@ -217,114 +215,14 @@ class SeenStoreSpec extends SparkSpec {
     }
     val committed = range(0, 2200)
     val never = range(1 << 20, (1 << 20) + 100000)
-    val flagged = SeenSet.maybeSeen(spark, hashesOf(committed ++ never).toDF("h"), col("h"),
-      store.loadProbe(spark).get).filter(col("maybe")).select("h").as[Long].collect().toSet
-    (committed, flagged, never.count(flagged).toDouble / never.size)
-  }
-
-  test("epoch bloom is sized from its corpus; the roll budget stays") {
-    val dir = tempDir("graft_seenstore_sized")
-    val store = new SeenStore(dir, expectedKeys = 1L << 22)
-    val (committed, flagged, fp) = rollThenSpill(store, dir)
+    val flagged = SeenSet.maybeSeen(hashesOf(committed ++ never).toDF("h"), col("h"),
+      store.loadProbe(spark).get.filters).filter(col("maybe")).select("h").as[Long].collect().toSet
+    val fp = never.count(flagged).toDouble / never.size
     assert(Files.size(Paths.get(dir, "url_seen_bloom.bin")) ==
       BlockedBloom.sized(2000).serialized.length, "the epoch's bits follow its 2,000 keys")
     assert(committed.forall(flagged), "every committed id stays flagged")
     assert(fp < 0.05, s"false-positive rate too high: $fp")
     info(s"false-positive rate over 100k never-committed hashes: $fp")
-  }
-
-  test("sharded epoch shards are sized from the corpus") {
-    val dir = tempDir("graft_seenstore_sized_shards")
-    val store = new SeenStore(dir, expectedKeys = 1L << 22, numShards = 8)
-    val (committed, flagged, fp) = rollThenSpill(store, dir)
-    val sizes = spark.read.parquet(Paths.get(dir, "url_seen_bloom_shards").toString)
-      .select("bytes").as[Array[Byte]].collect().map(_.length).toSet
-    assert(sizes == Set(BlockedBloom.sized(2000 / 8 * 5 / 4 + 1).serialized.length),
-      "each shard's bits follow its slice of the 2,000 keys, with a 25% skew margin")
-    assert(committed.forall(flagged), "every committed id stays flagged")
-    assert(fp < 0.05, s"false-positive rate too high: $fp")
-    info(s"false-positive rate over 100k never-committed hashes: $fp")
-  }
-
-  test("sharded epoch mode: table-resident shards + spills dedup exactly like the rebuild path") {
-    val dir = tempDir("graft_seenstore_sharded")
-    val store = new SeenStore(dir, expectedKeys = 1 << 16, numShards = 8)
-    val forum = spark.createDataset(ids(0, 7))
-
-    // run 1: no epoch → rebuild-path parity by definition; commit ROLLS
-    // into the parquet shard table (not a single bloom file)
-    fakeSeenCommit(dir, 1)
-    val h1 = spark.createDataset(ids(0, 400))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
-    val (r1, n1) = store.commitRun(spark, h1, 400, seenVersion = 1, h1, 400)
-    assert(r1 && n1 == 400)
-    assert(Files.isDirectory(Paths.get(dir, "url_seen_bloom_shards")))
-    assert(!Files.exists(Paths.get(dir, "url_seen_bloom.bin")),
-      "sharded mode must not write the single-filter artifact")
-    val loaded = store.loadProbe(spark).get
-    assert(loaded.filters.isEmpty && loaded.shards.exists(_.numShards == 8),
-      "sharded mode loads table-resident tiers, no in-heap filter")
-
-    // run 2: spill commit (O(delta), shard table untouched), then the
-    // frontier's sharded dedup must equal the exact rebuild path
-    fakeSeenCommit(dir, 2)
-    val h2 = spark.createDataset(ids(400, 600))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
-    val (r2, n2) = store.commitRun(spark, h2, 200, seenVersion = 2,
-      fullCorpusHashes = fail("spill path must not scan the corpus"),
-      fullCount = fail("spill path must not count the corpus"))
-    assert(!r2 && n2 == 600)
-    // the spill is TABLE-RESIDENT in sharded mode: a (shard, cuckooBytes)
-    // parquet dir + sidecar count json, never a single in-heap .bin whose
-    // geometry cap would force epoch rolls on big nightly deltas
-    assert(Files.isDirectory(Paths.get(dir, "url_seen_spill-v000002.shards")))
-    assert(Files.exists(Paths.get(dir, "url_seen_spill-v000002.json")))
-    assert(!Files.exists(Paths.get(dir, "url_seen_spill-v000002.bin")),
-      "sharded mode must not write a monolithic spill filter")
-    val existing = spark.createDataset(ids(0, 600))
-    val d3 = spark.createDataset(ids(300, 1000))
-    val inc = Frontier.buildWorklist(spark, existing, forum, d3,
-      maxNew = 2000, runId = 3, store = Some(store))
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    val ref = Frontier.buildWorklist(spark, existing, forum, d3,
-      maxNew = 2000, runId = 3)
-      .entries.collect().map(e => (e.id, e.forums)).toSet
-    assert(inc == ref, "sharded-probe dedup must match the rebuild path")
-
-    // crash gap invalidates the sharded probe too
-    fakeSeenCommit(dir, 3)
-    assert(store.loadProbe(spark).isEmpty,
-      "a version gap must invalidate the shard-table probe")
-
-    // v3's own commit IS the heal: its spill closes the gap while the
-    // chain stays contiguous, so no roll is needed
-    val h3 = spark.createDataset(ids(600, 700))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
-    val (r3, _) = store.commitRun(spark, h3, 100, seenVersion = 3,
-      fullCorpusHashes = fail("spill path must not scan the corpus"),
-      fullCount = fail("spill path must not count the corpus"))
-    assert(!r3, "committing the missing version's spill heals without rolling")
-    assert(store.loadProbe(spark).isDefined)
-    // now simulate a crash BETWEEN the spill table's directory move and its
-    // sidecar json (the publish point): the half-written spill must be
-    // invisible, so the probe invalidates
-    fakeSeenCommit(dir, 4)
-    val h4 = spark.createDataset(ids(700, 750))
-      .toDF("value").select(SeenSet.idHash(col("value")).as("h")).as[Long]
-    val (r4, _) = store.commitRun(spark, h4, 50, seenVersion = 4,
-      fullCorpusHashes = fail("spill path must not scan the corpus"),
-      fullCount = fail("spill path must not count the corpus"))
-    assert(!r4)
-    Files.delete(Paths.get(dir, "url_seen_spill-v000004.json"))
-    assert(store.loadProbe(spark).isEmpty,
-      "a spill table without its sidecar json must read as a version gap")
-    // a MALFORMED sidecar (partial write on a non-atomic filesystem) must
-    // read as a gap too — silently counting 0 keys would let the bloom
-    // overfill past its persisted capacity with no signal
-    Files.write(Paths.get(dir, "url_seen_spill-v000004.json"),
-      "{\"cou".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(store.loadProbe(spark).isEmpty,
-      "a corrupt sidecar json must read as a version gap, not count 0")
   }
 
   test("maxSpillRuns consolidation: spills accumulate then one roll absorbs them") {
