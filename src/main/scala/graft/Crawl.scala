@@ -22,13 +22,15 @@ import graft.snapshot.SnapshotTable
   *
   * A round shuffles once, as the reference shuffles its one work-list once
   * (archive.py:594) and each worker reads that extension's own etag record
-  * as it fetches: the work-list's tagged sources and the prior `url_seen`
-  * rows go through the schedule's bucket exchange together, where the rows
-  * of one id sit side by side and merge into its schedule slot and its
-  * prior state. The same rows give the next version, as the reference
-  * updates one etag record per extension as it fetches
-  * (mysql_backend.py:186-199). Everything is a pure function of
-  * (work-list, config, prior `url_seen`), so re-runs and resumes converge
+  * as it fetches: the work-list's forum and discovered ids and the prior
+  * `url_seen` rows go through the schedule's bucket exchange together,
+  * where the rows of one id sit side by side and merge into its schedule
+  * slot and its prior state. The prior rows are the round's known ids, so
+  * every id in `url_seen` is recrawled and the caller does not pass them
+  * back. The same rows give the next version, as the reference updates one
+  * etag record per extension as it fetches (mysql_backend.py:186-199).
+  * Everything is a pure function of (work-list, config, prior
+  * `url_seen`), so re-runs and resumes converge
   * (the reference's idempotent tar-append/upsert discipline,
   * archive.py:532-538, mysql_backend.py:99-104).
   */
@@ -49,17 +51,10 @@ object Crawl {
     import spark.implicits._
     val seenTable = new SnapshotTable(spark, s"$tableDir/url_seen")
     val prior = seenTable.currentVersion.map(_ => seenTable.read().select("id", "etag", "lastRun"))
-    val first = Politeness.exchange(spark,
+    val ex = Politeness.cap(Politeness.exchange(spark,
       worklist.tagged.select(col("id"), lit(null).cast("string").as("host"), col("forums"), col("known")),
-      prior, cfg)
-    // the cap (discover.py:66-73) binds only when the stats counted more new
-    // ids than it allows: the round then schedules the capped work-list,
-    // through the same exchange
-    val ex = if (first.stats.map(_._4).sum <= worklist.maxNew) first else {
-      first.sorted.unpersist(blocking = false)
-      Politeness.exchange(spark, Politeness.frontierRows(worklist.entries), prior, cfg)
-    }
-    val placed = Politeness.walk(spark, ex, cfg, worklist.nHosts)
+      prior, cfg), worklist.maxNew, cfg)
+    val placed = Politeness.walk(spark, ex, cfg)
     val joined = placed.toDF().select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
       col("etag").as("__etag"), col("lastRun").as("__lastRun"))
 
@@ -72,9 +67,8 @@ object Crawl {
 
     // next state, last-wins by lastRun (the reference's ON-DUP-KEY etag
     // cache, mysql_backend.py:186-199): a 200 carries (etag, runId) unless
-    // the row holds a later run; any other status, and a prior id that is
-    // not scheduled, keeps its row, and a new id without a 200 enters with
-    // nulls
+    // the row holds a later run; any other status keeps the prior row, and a
+    // new id without a 200 enters with nulls
     val won = col("status") === 200 && coalesce(col("__lastRun") <= cfg.runId, lit(true))
     // persist: the rows feed the results commit, the url_seen commit and
     // the caller — without it the walk and the fetch re-execute per use.
@@ -82,7 +76,7 @@ object Crawl {
     val rows = CacheScope.persist(fetched.select(Fetcher.resultColumns ++ Seq(
       when(won, col("etag")).otherwise(col("__etag")).as("__etag"),
       when(won, lit(cfg.runId)).otherwise(col("__lastRun")).as("__lastRun")): _*))
-    val results = rows.filter(col("seq").isNotNull).select(Fetcher.resultColumns: _*).as[FetchResult]
+    val results = rows.select(Fetcher.resultColumns: _*).as[FetchResult]
 
     val resultsTable = new SnapshotTable(spark, s"$tableDir/fetch_results")
     // prefix-shard partition layout (ext_id[:3] sharding, config.py:117-119;

@@ -42,7 +42,8 @@ object CrawlMain {
     val t0 = System.nanoTime()
 
     // three frontier sources (crawler:203-215): prior seen-set snapshot (if
-    // resuming), a forum list, fresh discoveries
+    // resuming), a forum list, fresh discoveries. The round reads url_seen
+    // itself; `existing` feeds only the parity check's set model
     // the whole round runs in one cache scope: every transient persist the
     // stages register (the sorted exchange, the fetched rows) is
     // released when the round's outputs are materialized

@@ -65,17 +65,13 @@ object CreateDbMain {
     (1 to runs).foreach { runId =>
       val cfg = CrawlConfig(runId = runId, prefixLen = 1)
       graft.core.CacheScope.withScope {
-        val haveSeen =
-          new snapshot.SnapshotTable(spark, s"$workDir/url_seen").currentVersion.isDefined
-        val existing =
-          if (haveSeen) Crawl.seenIds(spark, workDir).as[String]
-          else spark.emptyDataset[String]
         // a rolling window of ids so later runs mix refetches (etag/304
-        // paths) with fresh discoveries, like a nightly store crawl
+        // paths) with fresh discoveries, like a nightly store crawl; the
+        // round recrawls every url_seen id on its own
         val lo = (runId - 1) * numIds / 2
         val discovered = spark.range(lo, lo + numIds).map(i => Ids.syntheticId(i))
         val forum = spark.range(lo, lo + numIds, 41).map(i => Ids.syntheticId(i))
-        val frontier = FrontierOps.buildWorklist(spark, existing, forum, discovered,
+        val frontier = FrontierOps.buildWorklist(spark, spark.emptyDataset[String], forum, discovered,
           maxNew = numIds, runId = runId)
         val out = Crawl.run(spark, frontier, cfg, workDir)
         val av = CrawlToDb.commitRunArchive(spark, workDir, out.results, runId)

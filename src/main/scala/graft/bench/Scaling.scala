@@ -30,21 +30,16 @@ object Scaling {
     def best: Result = results.maxBy(_.idsPerSec)
   }
 
-  private def newSession(cores: Int, name: String): SparkSession = {
+  private def withSession[T](cores: Int, name: String, partitions: String)(f: SparkSession => T): T = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(name)
-      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def withSession[T](cores: Int, name: String)(f: SparkSession => T): T = {
-    val s = newSession(cores, name)
     try f(s) finally s.stop()
   }
 
@@ -67,7 +62,15 @@ object Scaling {
     * and efficiency is computed PER PAIR then aggregated as the median of
     * pair efficiencies: drift hits both levels of a pair equally, so the
     * estimator is robust to slow trends in machine state. */
-  def runInterleaved(n: Int, n4: Int, numIds: Int, seed: Long = 42L): Seq[ScalePair] = {
+  def runInterleaved(n: Int, n4: Int, numIds: Int, seed: Long = 42L): Seq[ScalePair] =
+    interleaved(n, n4, numIds, seed, "graft-scaling", _.toString, legLines = true)(runOn)
+
+  /** `iters` interleaved N/4N pairs of `job(session, cores, ids, seed)`,
+    * each leg in a fresh session named `app` with `partitions(cores)`
+    * shuffle partitions; `legLines` prints each measured leg's diagnostics. */
+  private def interleaved(n: Int, n4: Int, numIds: Int, seed: Long, app: String,
+                          partitions: Int => String, legLines: Boolean)
+                         (job: (SparkSession, Int, Int, Long) => Result): Seq[ScalePair] = {
     // 7 pairs (round-5: one ~0.52 outlier pair appeared in two consecutive
     // rounds at 5 pairs — more pairs shrink the median's sensitivity to a
     // single stalled leg while the per-leg GC/wall prints below identify it)
@@ -80,24 +83,27 @@ object Scaling {
       // 10 s of GC on a 55 s wall = 18%, flattening that pair to ~0.64
       // while later legs pay 1.5-3 s) — collect it before the session opens
       System.gc()
-      withSession(cores, s"graft-scaling-$cores") { s =>
-        runOn(s, cores, pilotIds, seed + 10 * i) // in-session pilot, untimed leg
-        val (gc0n, gc0ms) = gcTotals()
-        val (t0, i0, s0) = cpuStat()
-        val r = runOn(s, cores, numIds, seed + 100 * i)
-        val (t1, i1, s1) = cpuStat()
-        val (gc1n, gc1ms) = gcTotals()
-        // one diagnostic line per measured leg: if a pair stalls, this says
-        // whether the slow leg burned GC time, lost wall to hypervisor
-        // pressure (steal), or ran against unexplained host busy time
-        val dT = math.max(t1 - t0, 1L)
-        System.err.println(String.format(java.util.Locale.ROOT,
-          "[scaling-leg] iter=%d cores=%d wall=%.2fs rate=%.0f gc_n=%d gc_ms=%d busy=%.0f%% steal=%.1f%%",
-          Int.box(i), Int.box(cores), Double.box(r.wallSec),
-          Double.box(r.idsPerSec), Long.box(gc1n - gc0n), Long.box(gc1ms - gc0ms),
-          Double.box((dT - (i1 - i0)).toDouble / dT * 100.0),
-          Double.box((s1 - s0).toDouble / dT * 100.0)))
-        r
+      withSession(cores, s"$app-$cores", partitions(cores)) { s =>
+        job(s, cores, pilotIds, seed + 10 * i) // in-session pilot, untimed leg
+        if (!legLines) job(s, cores, numIds, seed + 100 * i)
+        else {
+          val (gc0n, gc0ms) = gcTotals()
+          val (t0, i0, s0) = cpuStat()
+          val r = job(s, cores, numIds, seed + 100 * i)
+          val (t1, i1, s1) = cpuStat()
+          val (gc1n, gc1ms) = gcTotals()
+          // one diagnostic line per measured leg: if a pair stalls, this says
+          // whether the slow leg burned GC time, lost wall to hypervisor
+          // pressure (steal), or ran against unexplained host busy time
+          val dT = math.max(t1 - t0, 1L)
+          System.err.println(String.format(java.util.Locale.ROOT,
+            "[scaling-leg] iter=%d cores=%d wall=%.2fs rate=%.0f gc_n=%d gc_ms=%d busy=%.0f%% steal=%.1f%%",
+            Int.box(i), Int.box(cores), Double.box(r.wallSec),
+            Double.box(r.idsPerSec), Long.box(gc1n - gc0n), Long.box(gc1ms - gc0ms),
+            Double.box((dT - (i1 - i0)).toDouble / dT * 100.0),
+            Double.box((s1 - s0).toDouble / dT * 100.0)))
+          r
+        }
       }
     }
     (1 to iters).map { i =>
@@ -191,43 +197,16 @@ object Scaling {
     * physically impossible values; the two scenarios must be measured the
     * same way to be comparable. */
   def runSkewInterleaved(n: Int, n4: Int, numIds: Int, seed: Long = 42L,
-                         numSalts: Int = 32): Seq[ScalePair] = {
-    val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "7").toInt
-    val pilotIds = math.max(numIds / 8, 100000)
-    def leg(cores: Int, i: Int): Result = {
-      System.gc() // leg-boundary heap hygiene (see runInterleaved)
-      val s = newSkewSession(cores)
-      try {
-        runSkewOn(s, cores, pilotIds, seed + 10 * i, numSalts) // in-session pilot
-        runSkewOn(s, cores, numIds, seed + 100 * i, numSalts)
-      } finally s.stop()
-    }
-    (1 to iters).map { i =>
-      if (i % 2 == 1) { val a = leg(n, i); val b = leg(n4, i); ScalePair(a, b) }
-      else { val b = leg(n4, i); val a = leg(n, i); ScalePair(a, b) }
-    }
-  }
-
-  private def newSkewSession(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-skew-$cores")
-      // FIXED partition count across levels: both cores levels execute the
-      // identical plan (same lane placement), so the pair measures the
-      // engine's strong scaling, not a partitioning change. Default 32
-      // (4× the top level) smooths lane placement — hashing ~100 lane
-      // keys into exactly `cores` buckets leaves straggler partitions
-      // (round-2 finding, preserved through the operator path which
-      // shuffles at the session's partition count)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_PARTS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+                         numSalts: Int = 32): Seq[ScalePair] =
+    // FIXED partition count across levels: both cores levels execute the
+    // identical plan (same lane placement), so the pair measures the
+    // engine's strong scaling, not a partitioning change. Default 32 (4×
+    // the top level) smooths lane placement — hashing ~100 lane keys into
+    // exactly `cores` buckets leaves straggler partitions (round-2 finding,
+    // preserved through the operator path which shuffles at the session's
+    // partition count)
+    interleaved(n, n4, numIds, seed, "graft-skew", _ => sys.env.getOrElse("SPARK_GRAFT_SKEW_PARTS", "32"),
+      legLines = false)((s, cores, ids, legSeed) => runSkewOn(s, cores, ids, legSeed, numSalts))
 
   private def runSkewOn(spark: SparkSession, cores: Int, numIds: Int, seed: Long,
                         numSalts: Int): Result = {

@@ -130,21 +130,16 @@ object Fetcher {
     * columns and a prior etag `prior` (null for none): a prior-etag hit is
     * a 304 short-circuit, else the classify struct with the 304→200 remap
     * baked into its `conditional` mode. Adds `status`, `etag`, `isNew` and
-    * `retried`; a row whose `seq` is null is not scheduled, is not fetched
-    * and gets nulls. */
+    * `retried`. */
   def withPriorEtag(rows: DataFrame, cfg: CrawlConfig, prior: Column): DataFrame = {
-    val scheduled = col("seq").isNotNull
     val hit = col("__prior").isNotNull && (col("__prior") === col("__new"))
     rows
       .withColumn("__prior", prior)
-      .withColumn("__new", when(scheduled,
-        graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId)))
-      .withColumn("__c", when(scheduled, graft.functions.GraftFunctions.fetchClassify(
-        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = true)))
+      .withColumn("__new", graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId))
+      .withColumn("__c", graft.functions.GraftFunctions.fetchClassify(
+        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = true))
       .withColumn("status", when(hit, lit(304)).otherwise(col("__c.status")))
-      .withColumn("etag", when(hit, col("__new"))
-        .when(col("__c.status") === 200, col("__new"))
-        .when(scheduled, lit("")))
+      .withColumn("etag", when(hit || col("__c.status") === 200, col("__new")).otherwise(lit("")))
       .withColumn("isNew", !hit && (col("__c.status") === 200))
       .withColumn("retried", !hit && col("__c.retried"))
       .drop("__prior", "__new", "__c")

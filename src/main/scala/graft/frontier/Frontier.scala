@@ -12,11 +12,13 @@ import graft.core.{FrontierEntry, Ids}
   */
 object Frontier {
 
-  /** Overview-URL template — config.py:33-35 analog (synthetic host space
-    * so politeness/host-salting has real key diversity; `nHosts` compresses
-    * to one host for the reference's single-store shape). */
-  def urlFor(id: String, nHosts: Int = 16): String = {
-    val h = Math.floorMod(Ids.mix64(id.hashCode.toLong), nHosts.toLong)
+  /** The synthetic store's host count. */
+  val Hosts = 16
+
+  /** Overview-URL template — config.py:33-35 analog (a synthetic space of
+    * [[Hosts]] hosts, so politeness/host-salting has real key diversity). */
+  def urlFor(id: String): String = {
+    val h = Math.floorMod(Ids.mix64(id.hashCode.toLong), Hosts.toLong)
     s"https://store-$h.example.com/detail/$id"
   }
 
@@ -77,61 +79,62 @@ object Frontier {
 
   /** Work-list build (crawler:203-215 + archive.py:589-592): set algebra,
     * known ∪ (the first `maxNew` of discovered ∖ known in id order),
-    * forums-flagged.
+    * forums-flagged, where known is the prior `url_seen` ids plus the forum
+    * ids.
     *
     * Every known id is recrawled, so known ∪ (discovered ∖ known) = known ∪
-    * discovered: the work-list is the three sources tagged `(existing,
-    * forums = false, known = true)`, `(forumIds, true, true)` and
-    * `(discovered, false, false)`, merged per id with `max(forums)` and
-    * `max(known)`. Building it submits no job: it returns the tagged
-    * sources, and a crawl round merges them inside its schedule's bucket
+    * discovered. Building the work-list submits no job: it returns the
+    * forum and discovered ids, tagged. A crawl round reads the prior
+    * `url_seen` rows anyway, for their etags, so they are its known ids:
+    * they and the tagged rows merge per id inside the schedule's bucket
     * exchange ([[graft.Crawl.run]]), where the rows of one id sit side by
-    * side. [[Worklist.entries]] merges and caps them on its own, for callers
-    * that need the rows.
+    * side.
     *
-    * `store` is not read. It stays only because the benchmark's crawl
-    * nights (`perfbench`) pass it. */
+    * The crawl ignores `existing` and `store`. `existing` is the known ids
+    * for [[Worklist.entries]], the set model that callers compare a round
+    * against; they pass the `url_seen` ids there. `store` is not read at
+    * all; it stays only because the benchmark's crawl nights (`perfbench`)
+    * pass it. */
   def buildWorklist(spark: SparkSession,
                     existing: Dataset[String],
                     forumIds: Dataset[String],
                     discovered: Dataset[String],
                     maxNew: Int,
                     runId: Int,
-                    nHosts: Int = 16,
                     store: Option[SeenStore] = None): Worklist =
-    new Worklist(existing, forumIds, discovered, maxNew, runId, nHosts)
+    new Worklist(existing, forumIds, discovered, maxNew, runId)
 }
 
-/** A round's work-list as its three id sources, not yet merged: see
+/** A round's work-list as its id sources, not yet merged: see
   * [[Frontier.buildWorklist]]. */
 final class Worklist(existing: Dataset[String],
                      forumIds: Dataset[String],
                      discovered: Dataset[String],
                      val maxNew: Int,
-                     val runId: Int,
-                     val nHosts: Int) {
+                     val runId: Int) {
 
-  /** The tagged source rows `(id, forums, known)`; an id may repeat. The
-    * rows without the known flag are the new ids the cap applies to. */
-  def tagged: DataFrame = {
-    def rows(ids: Dataset[String], forums: Boolean, known: Boolean) =
-      ids.toDF("id").select(col("id"), lit(forums).as("forums"), lit(known).as("known"))
-    rows(existing, forums = false, known = true)
-      .union(rows(forumIds, forums = true, known = true))
-      .union(rows(discovered, forums = false, known = false))
-  }
+  private def rows(ids: Dataset[String], forums: Boolean, known: Boolean) =
+    ids.toDF("id").select(col("id"), lit(forums).as("forums"), lit(known).as("known"))
 
-  /** The merged, capped work-list: one row per id, known ∪ the first
-    * `maxNew` new ids in id order (discover.py:66-73). The cap's global
-    * sort funnels the new ids through one partition. */
+  /** The forum and discovered ids as tagged rows `(id, forums, known)`; an
+    * id may repeat. The forum ids are known; the rows without the known
+    * flag are the candidates the cap applies to. */
+  def tagged: DataFrame =
+    rows(forumIds, forums = true, known = true).union(rows(discovered, forums = false, known = false))
+
+  /** The merged, capped work-list over `existing` and [[tagged]]: one row
+    * per id, known ∪ the first `maxNew` new ids in id order
+    * (discover.py:66-73). The cap's global sort funnels the new ids through
+    * one partition. */
   def entries: Dataset[FrontierEntry] = {
     import existing.sparkSession.implicits._
-    val ids = tagged.groupBy("id").agg(max("forums").as("forums"), max("known").as("known"))
-    val (n, r) = (nHosts, runId)
+    val ids = rows(existing, forums = false, known = true).union(tagged)
+      .groupBy("id").agg(max("forums").as("forums"), max("known").as("known"))
+    val r = runId
     ids.filter(col("known")).union(ids.filter(!col("known")).orderBy("id").limit(maxNew))
       .select("id", "forums").as[(String, Boolean)]
       .map { case (id, forums) =>
-        val url = Frontier.urlFor(id, n)
+        val url = Frontier.urlFor(id)
         FrontierEntry(id, url, Frontier.hostOf(url), forums, r)
       }
   }

@@ -27,10 +27,12 @@ import graft.frontier.Frontier
   *  - a deterministic bucket shuffle plus an in-partition sort puts the
   *    frontier in global seq order, one contiguous seq range per partition.
   *    A crawl round sends its work-list sources and its prior `url_seen`
-  *    rows through the same shuffle, so the rows of one id meet there and
-  *    merge: the round's only exchange ([[exchange]]);
+  *    rows, its known ids, through the same shuffle, so the rows of one id
+  *    meet there and merge into one scheduled id: the round's only exchange
+  *    ([[exchange]]);
   *  - one stats job returns (ids, restricted ids, restricted chain length,
   *    new ids) per partition, and the driver prefix-sums those P tuples;
+  *    a binding cap filters the merged ids and reruns it ([[cap]]);
   *  - one walk per partition starts from its carried-in seq and chain end
   *    and emits restricted and normal rows in the same pass: the chain
   *    carry-in IS the end of the last earlier restricted fetch, so a normal
@@ -65,31 +67,26 @@ object Politeness {
   /** Distributed schedule — exactly equal to
     * [[VirtualClockOracle.schedule]] on the same inputs (an id listed
     * twice is scheduled once): the round's [[exchange]] and [[walk]] with
-    * no state side. Submits exactly one job (the stats collect, which also
-    * fills the persisted sorted partitions); the returned Dataset walks
-    * those cached partitions without shuffling the frontier again. */
-  def schedule(spark: SparkSession, frontier: Dataset[FrontierEntry], cfg: CrawlConfig,
-               numPartitions: Int = 0): Dataset[ScheduledFetch] =
-    scheduled(walk(spark, exchange(spark, frontierRows(frontier), None, cfg, numPartitions), cfg))
+    * no state side, on the session's shuffle partitions. Submits exactly
+    * one job (the stats collect, which also fills the persisted sorted
+    * partitions); the returned Dataset walks those cached partitions
+    * without shuffling the frontier again. */
+  def schedule(spark: SparkSession, frontier: Dataset[FrontierEntry], cfg: CrawlConfig): Dataset[ScheduledFetch] =
+    scheduled(walk(spark, exchange(spark,
+      frontier.toDF().select(col("id"), col("host"), col("forums"), lit(true).as("known")), None, cfg), cfg))
 
-  /** A frontier's rows as [[exchange]] input: all exempt from a cap. */
-  def frontierRows(frontier: Dataset[FrontierEntry]): DataFrame =
-    frontier.toDF().select(col("id"), col("host"), col("forums"), lit(true).as("known"))
-
-  /** The scheduled rows of a [[walk]]. */
+  /** The schedule columns of a [[walk]]. */
   def scheduled(placed: Dataset[Placed]): Dataset[ScheduledFetch] = {
     import placed.sparkSession.implicits._
-    placed.filter(col("seq").isNotNull)
-      .select("seq", "id", "host", "fetchClass", "startMs").as[ScheduledFetch]
+    placed.select("seq", "id", "host", "fetchClass", "startMs").as[ScheduledFetch]
   }
 
-  // a slot's flags: a frontier row, restricted, exempt from a cap
-  private val Scheduled = 1
-  private val Forums = 2
-  private val Known = 4
+  // a slot's flags: restricted, exempt from a cap
+  private val Forums = 1
+  private val Known = 2
 
   /** One row through the exchange, and after it one merged id: a frontier
-    * row (a null `host` is derived from the id), a `url_seen` row (flags 0,
+    * row (a null `host` is derived from the id), a `url_seen` row (known,
     * with its `etag` and `lastRun`), or both. `lastRun` is boxed: it is
     * null for an id without a 200. */
   final case class Slot(id: String, host: String, flags: Int, etag: String, lastRun: java.lang.Integer) {
@@ -98,38 +95,36 @@ object Politeness {
   }
 
   /** One id out of the [[walk]]: its schedule slot (`seq`, `fetchClass`,
-    * `startMs`, null for a state-only id) and its prior `url_seen` row. */
-  final case class Placed(seq: Option[Long], id: String, host: String, fetchClass: String,
-                          startMs: Option[Long], etag: String, lastRun: Option[Int])
+    * `startMs`) and its prior `url_seen` row. */
+  final case class Placed(seq: Long, id: String, host: String, fetchClass: String,
+                          startMs: Long, etag: String, lastRun: Option[Int])
 
-  /** The merged ids, sorted and persisted, and per partition (scheduled
-    * ids, restricted ids, restricted chain length, ids without the known
-    * flag). */
+  /** The merged ids, sorted, and per partition (ids, restricted ids,
+    * restricted chain length, ids without the known flag). */
   final case class Exchange(sorted: RDD[Slot], stats: Array[(Long, Long, Long, Long)])
 
   /** The one shuffle of a round: `frontier` rows `(id, host, forums,
-    * known)` and `state` rows `(id, etag, lastRun)` go through a
-    * DETERMINISTIC bucket partitioner on the top bits of the (sign-flipped)
-    * shuffle key instead of `repartitionByRange`: the keys are uniform
-    * 64-bit mixes, so buckets balance by construction and no sampling pass
-    * runs. Within a bucket all keys share a sign, so one in-memory sort by
+    * known)` and `state` rows `(id, etag, lastRun)`, which are known, go
+    * through a DETERMINISTIC bucket partitioner on the top bits of the
+    * (sign-flipped) shuffle key instead of `repartitionByRange`: the keys
+    * are uniform 64-bit mixes, so buckets balance by construction and no
+    * sampling pass runs. Within a bucket all keys share a sign, so one in-memory sort by
     * (key, id) per partition completes the global sort, and puts the rows
     * of one id side by side to merge. The sort is safe at any frontier size
     * because partition count scales with the data (10^10 rows / 2^17
-    * buckets ≈ 76k rows per partition). `numPartitions` 0 takes the
-    * session's shuffle partitions; either is rounded up to a power of two. */
-  def exchange(spark: SparkSession, frontier: DataFrame, state: Option[DataFrame], cfg: CrawlConfig,
-               numPartitions: Int = 0): Exchange = {
+    * buckets ≈ 76k rows per partition). The partition count is the
+    * session's shuffle partitions, rounded up to a power of two. */
+  def exchange(spark: SparkSession, frontier: DataFrame, state: Option[DataFrame], cfg: CrawlConfig): Exchange = {
     import spark.implicits._
-    val parts0 = math.max(if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions, 1)
+    val parts0 = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     // next power of two ≥ parts0 so the bucket is a bit-shift of the key
     val p = Integer.highestOneBit(parts0) * (if (Integer.bitCount(parts0) == 1) 1 else 2)
     val shift = 64 - Integer.numberOfTrailingZeros(p)
-    val flags = lit(Scheduled) + when(col("forums"), Forums).otherwise(0) + when(col("known"), Known).otherwise(0)
+    val flags = when(col("forums"), Forums).otherwise(0) + when(col("known"), Known).otherwise(0)
     val rows = frontier.select(col("id"), col("host"), flags.as("flags"),
       lit(null).cast("string").as("etag"), lit(null).cast("int").as("lastRun"))
     val slots = state.fold(rows)(s => rows.union(s.select(col("id"), lit(null).cast("string").as("host"),
-      lit(0).as("flags"), col("etag"), col("lastRun"))))
+      lit(Known).as("flags"), col("etag"), col("lastRun"))))
 
     // bucket = top bits of unsigned(key): monotone in the signed key order
     // the oracle sorts by, so bucket index order IS global order
@@ -157,48 +152,56 @@ object Politeness {
     // pressure; serialized blocks keep the heap flat. Scope-registered so
     // iterative crawl loops release it at round end
     CacheScope.persistRdd(sorted, StorageLevel.MEMORY_AND_DISK_SER)
+    withStats(sorted, cfg)
+  }
 
-    val stats = sorted.mapPartitions { it =>
+  /** The stats job over merged ids. */
+  private def withStats(sorted: RDD[Slot], cfg: CrawlConfig): Exchange =
+    Exchange(sorted, sorted.mapPartitions { it =>
       var n = 0L; var r = 0L; var chain = 0L; var fresh = 0L
       it.foreach { s =>
-        if ((s.flags & Scheduled) != 0) {
-          n += 1
-          if ((s.flags & Forums) != 0) { r += 1; chain += spacingMs(s.id, cfg) + durationMs(s.id, cfg) }
-          if ((s.flags & Known) == 0) fresh += 1
-        }
+        n += 1
+        if ((s.flags & Forums) != 0) { r += 1; chain += spacingMs(s.id, cfg) + durationMs(s.id, cfg) }
+        if ((s.flags & Known) == 0) fresh += 1
       }
       Iterator.single((n, r, chain, fresh))
-    }.collect()
-    Exchange(sorted, stats)
-  }
+    }.collect())
+
+  /** The cap on new ids (discover.py:66-73): the known ids plus the first
+    * `maxNew` ids without the known flag, in id order. It binds only when
+    * the stats counted more new ids than that; it then filters the merged
+    * partitions, whose persisted blocks stay the source, and reruns the
+    * stats job. */
+  def cap(ex: Exchange, maxNew: Int, cfg: CrawlConfig): Exchange =
+    if (ex.stats.map(_._4).sum <= maxNew) ex
+    else {
+      val last = ex.sorted.filter(s => (s.flags & Known) == 0).map(_.id).takeOrdered(maxNew).lastOption
+      withStats(ex.sorted.filter(s => (s.flags & Known) != 0 || last.exists(s.id <= _)), cfg)
+    }
 
   /** One walk per partition in seq order, from its carry-in: the driver's
     * prefix sums of the earlier partitions' stats (seq, restricted ids,
     * chain end). A restricted id starts one spacing after the chain end and
     * extends it; a normal id starts one spacing after it, or at 0 before
-    * the first restricted id. A state-only id takes no seq. A null host is
-    * the id's store host of `nHosts` ([[Frontier.urlFor]]). */
-  def walk(spark: SparkSession, ex: Exchange, cfg: CrawlConfig, nHosts: Int = 16): Dataset[Placed] = {
+    * the first restricted id. A null host is the id's store host
+    * ([[Frontier.urlFor]]). */
+  def walk(spark: SparkSession, ex: Exchange, cfg: CrawlConfig): Dataset[Placed] = {
     import spark.implicits._
     val carryIn = ex.stats.scanLeft((0L, 0L, 0L)) { case ((n, r, c), (dn, dr, dc, _)) => (n + dn, r + dr, c + dc) }
     spark.createDataset(ex.sorted.mapPartitionsWithIndex { (pid, it) =>
       val (seq0, restrictedBefore, chain0) = carryIn(pid)
       var seq = seq0; var chainEnd = chain0; var anyRestricted = restrictedBefore > 0
       it.map { s =>
-        val lastRun = Option(s.lastRun).map(_.intValue)
-        if ((s.flags & Scheduled) == 0) Placed(None, s.id, null, null, None, s.etag, lastRun)
-        else {
-          val spacing = spacingMs(s.id, cfg)
-          val (cls, start) =
-            if ((s.flags & Forums) != 0) {
-              val start = chainEnd + spacing
-              chainEnd = start + durationMs(s.id, cfg); anyRestricted = true
-              ("restricted", start)
-            } else ("normal", if (anyRestricted) chainEnd + spacing else 0L)
-          val host = if (s.host != null) s.host else Frontier.hostOf(Frontier.urlFor(s.id, nHosts))
-          seq += 1
-          Placed(Some(seq - 1), s.id, host, cls, Some(start), s.etag, lastRun)
-        }
+        val spacing = spacingMs(s.id, cfg)
+        val (cls, start) =
+          if ((s.flags & Forums) != 0) {
+            val start = chainEnd + spacing
+            chainEnd = start + durationMs(s.id, cfg); anyRestricted = true
+            ("restricted", start)
+          } else ("normal", if (anyRestricted) chainEnd + spacing else 0L)
+        val host = if (s.host != null) s.host else Frontier.hostOf(Frontier.urlFor(s.id))
+        seq += 1
+        Placed(seq - 1, s.id, host, cls, start, s.etag, Option(s.lastRun).map(_.intValue))
       }
     })
   }

@@ -20,13 +20,14 @@ class CrawlSpec extends SparkSpec {
     val dir = tempDir("graft-crawl")
     val cfg = CrawlConfig(runId = 1)
 
-    // frontier from the three reference sources (crawler:203-215)
-    val existing = spark.createDataset((0 until 500).map(i => Ids.syntheticId(i.toLong)))
+    // a first crawl knows no ids: its 500 listed ids and its discoveries
+    // are all discovered (crawler:203-215)
+    val listed = spark.createDataset((0 until 500).map(i => Ids.syntheticId(i.toLong)))
     val forum = spark.createDataset((0 until 500 by 40).map(i => Ids.syntheticId(i.toLong)))
     val discovered = spark.createDataset(
       (400 until 900).map(i => Ids.syntheticId(i.toLong))) // 100 overlap, 400 new
-    val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,
-      maxNew = 1000, runId = 1)
+    val frontier = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum,
+      listed.union(discovered), maxNew = 1000, runId = 1)
     val flist = frontier.entries.collect().toSeq
     assert(flist.map(_.id).distinct.size == 900, "overlap must dedup (discover.py:68)")
     assert(flist.count(_.forums) == 13)
@@ -122,10 +123,11 @@ class CrawlSpec extends SparkSpec {
   /** The synthetic ids numbered `ids`. */
   private def idsOf(ids: Seq[Int]) = spark.createDataset(ids.map(i => Ids.syntheticId(i.toLong)))
 
-  /** A work-list of the synthetic ids numbered `ids`, every 40th a forum id. */
+  /** A work-list that discovers the synthetic ids numbered `ids`, every
+    * 40th a forum id; the round adds the ids of `url_seen`. */
   private def frontierOf(runId: Int, ids: Seq[Int]) =
-    Frontier.buildWorklist(spark, idsOf(ids.filter(_ % 40 != 0)), idsOf(ids.filter(_ % 40 == 0)),
-      spark.emptyDataset[String], maxNew = 0, runId = runId)
+    Frontier.buildWorklist(spark, spark.emptyDataset[String], idsOf(ids.filter(_ % 40 == 0)),
+      idsOf(ids), maxNew = ids.size, runId = runId)
 
   private def entry(i: Int, forums: Boolean, runId: Int) = {
     val id = Ids.syntheticId(i.toLong)
@@ -137,82 +139,78 @@ class CrawlSpec extends SparkSpec {
     .as[(String, Option[String], Option[Int])].collect().map(r => r._1 -> (r._2, r._3)).toMap
 
   test("more new ids than maxNew: the round schedules known ∪ the first maxNew new ids") {
-    val dir = tempDir("graft-crawl-cap")
-    CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 200), CrawlConfig(runId = 1), dir) }
-    // round 2: the 200 known ids, forum ids among them and past them, and
-    // 400 new discovered ids of which the cap admits 150
+    // round 2: forum ids among the 200 ids of url_seen and past them, and
+    // 500 discovered ids, 100 of them already in url_seen but not passed as
+    // known: the cap admits 150 of the 340 new ones
     val forum = (0 until 400 by 50)
     val discovered = 100 until 600
     val cfg = CrawlConfig(runId = 2)
-    CacheScope.withScope {
-      val out = Crawl.run(spark, Frontier.buildWorklist(spark, Crawl.seenIds(spark, dir).as[String],
-        idsOf(forum), idsOf(discovered), maxNew = 150, runId = 2), cfg, dir)
-      val known = ((0 until 200) ++ forum).distinct
-      val admitted = discovered.filterNot(known.contains).sortBy(i => Ids.syntheticId(i.toLong)).take(150)
-      assert(admitted.size == 150)
-      val expected = (known ++ admitted).map(i => entry(i, forum.contains(i), 2))
-      assert(out.scheduled.collect().sortBy(_.seq).toSeq == VirtualClockOracle.schedule(expected, cfg))
-      assert(out.resultRows == out.results.count() && out.resultRows == expected.size)
-      assert(Crawl.seenIds(spark, dir).as[String].collect().toSet == expected.map(_.id).toSet)
+    val known = ((0 until 200) ++ forum).distinct
+    val admitted = discovered.filterNot(known.contains).sortBy(i => Ids.syntheticId(i.toLong)).take(150)
+    assert(admitted.size == 150)
+    val expected = (known ++ admitted).map(i => entry(i, forum.contains(i), 2))
+    val oracle = VirtualClockOracle.schedule(expected, cfg)
+    Seq(2, 16).foreach { parts =>
+      val dir = tempDir(s"graft-crawl-cap-$parts")
+      CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 200), CrawlConfig(runId = 1), dir) }
+      withShufflePartitions(parts)(CacheScope.withScope {
+        val out = Crawl.run(spark, Frontier.buildWorklist(spark, spark.emptyDataset[String],
+          idsOf(forum), idsOf(discovered), maxNew = 150, runId = 2), cfg, dir)
+        assert(out.scheduled.collect().sortBy(_.seq).toSeq == oracle, s"$parts partitions")
+        assert(out.resultRows == out.results.count() && out.resultRows == expected.size)
+        assert(Crawl.seenIds(spark, dir).as[String].collect().toSet == expected.map(_.id).toSet)
+      })
     }
   }
 
   test("an id listed by several sources is scheduled once, restricted if any source says so") {
-    // round 2 leaves ids [0, 50) of url_seen out; forum ids fall in
-    // existing, in discovered, in both, and in neither; discovered repeats
+    // round 2 recrawls all of url_seen, [0, 300), though its caller passes
+    // only [50, 300) as existing; forum ids fall in url_seen, in
+    // discovered, in both, and in neither; discovered repeats
     val existing = 50 until 300
     val forum = (0 until 600 by 30) ++ Seq(240, 240)
     val discovered = (200 until 500) ++ (250 until 260)
     val listed = (existing ++ forum ++ discovered).distinct
+    val seen = 0 until 300
     val cfg = CrawlConfig(runId = 2)
-    val expected = listed.map(i => entry(i, forum.contains(i), 2))
+    val expected = (seen ++ listed).distinct.map(i => entry(i, forum.contains(i), 2))
     assert(Seq(240, 270).forall(i => existing.contains(i) && forum.contains(i) && discovered.contains(i)))
     val oracle = VirtualClockOracle.schedule(expected, cfg)
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions")
     Seq(2, 16).foreach { parts =>
       val dir = tempDir(s"graft-crawl-repeat-$parts")
-      CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 300), CrawlConfig(runId = 1), dir) }
+      CacheScope.withScope { Crawl.run(spark, frontierOf(1, seen), CrawlConfig(runId = 1), dir) }
       val before = seenState(dir)
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try CacheScope.withScope {
+      withShufflePartitions(parts)(CacheScope.withScope {
         val out = Crawl.run(spark, Frontier.buildWorklist(spark, idsOf(existing), idsOf(forum), idsOf(discovered),
           maxNew = 1000, runId = 2), cfg, dir)
         assert(out.scheduled.collect().sortBy(_.seq).toSeq == oracle, s"$parts partitions")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", defaultParts)
-      val after = seenState(dir)
-      assert(after.keySet == before.keySet ++ listed.map(i => Ids.syntheticId(i.toLong)))
-      val stateOnly = (0 until 50).filterNot(forum.contains).map(i => Ids.syntheticId(i.toLong))
-      assert(stateOnly.exists(id => before(id)._1.isDefined))
-      stateOnly.foreach { id =>
-        assert(after(id) == before(id), s"$parts partitions: state-only $id lost its url_seen row")
-      }
+      })
+      assert(seenState(dir).keySet == before.keySet ++ listed.map(i => Ids.syntheticId(i.toLong)))
     }
   }
 
   test("url_seen after each round == a sequential model of per-id state") {
     val dir = tempDir("graft-crawl-model")
-    // round 1 is a first crawl; round 2 leaves out ids [0, 100) and lists
-    // new ones; round 3 brings some of [0, 100) back and leaves out others;
-    // then round 2 runs again, over rows that round 3 wrote
+    // round 1 is a first crawl; round 2 lists new ids and recrawls ids
+    // [0, 100) from url_seen without listing them; round 3 lists some of
+    // [0, 100) again; then round 2 runs again, over rows that round 3 wrote
     val rounds = Seq(1 -> (0 until 300), 2 -> (100 until 450), 3 -> ((0 until 50) ++ (200 until 600)),
       2 -> (100 until 450))
     // per id: (etag, run) of its last 200, None for an id without one
     var model = Map.empty[String, Option[(String, Int)]]
     var statuses = Map.empty[String, Seq[Int]]
-    var unscheduledKept = 0
     var laterKept = 0
     rounds.foreach { case (runId, ids) =>
       CacheScope.withScope {
         val cfg = CrawlConfig(runId = runId)
         val out = Crawl.run(spark, frontierOf(runId, ids), cfg, dir)
         val scheduled = out.scheduled.collect().sortBy(_.seq).toSeq
-        assert(scheduled.map(_.id).toSet == ids.map(i => Ids.syntheticId(i.toLong)).toSet)
+        assert(scheduled.map(_.id).toSet == model.keySet ++ ids.map(i => Ids.syntheticId(i.toLong)))
         // the fetch, row for row: a prior etag is the etag of a 200 from an
         // earlier run
         val expected = scheduled.map(s => Fetcher.conditionalResult(s, runId,
           model.get(s.id).flatten.collect { case (e, v) if v < runId => e }, cfg))
         assert(out.results.collect().sortBy(_.seq).toSeq == expected, s"round $runId results")
-        unscheduledKept += model.keySet.diff(scheduled.map(_.id).toSet).count(model(_).isDefined)
         // last-wins by run: a 200 does not replace a later run's row
         expected.foreach { r =>
           val later = model.get(r.id).flatten.exists(_._2 > runId)
@@ -231,10 +229,8 @@ class CrawlSpec extends SparkSpec {
         }
       }
     }
-    // the shapes the model must have met: a prior id left out of a later
-    // frontier keeps its 200, an id whose 200 is followed by a failure, and
-    // a re-run's 200 that leaves a later run's row in place
-    assert(unscheduledKept > 0)
+    // the shapes the model must have met: an id whose 200 is followed by a
+    // failure, and a re-run's 200 that leaves a later run's row in place
     assert(laterKept > 0)
     assert(statuses.values.exists(_.sliding(2).exists {
       case Seq(a, b) => a == 200 && b != 200 && b != 304
@@ -242,12 +238,14 @@ class CrawlSpec extends SparkSpec {
     }))
   }
 
+  // the distinct url_seen scans of a set of plans, told apart by their
+  // output attributes: a plan that reads a cache repeats the cached scan
+  private val seenScan =
+    """Scan parquet[^\n]*\nOutput \[\d+\]: \[([^\]]*)\]\nBatched: [^\n]*\nLocation: [^\n]*url_seen/""".r
+  private def seenScans(plans: Seq[String]) = plans.flatMap(seenScan.findAllMatchIn(_).map(_.group(1))).distinct
+
   test("a round reads url_seen once: no broadcast or window, one scan, and none on a first crawl") {
     val dir = tempDir("graft-crawl-plan")
-    // the distinct url_seen scans of a set of plans, told apart by their
-    // output attributes: a plan that reads a cache repeats the cached scan
-    val scan = """Scan parquet[^\n]*\nOutput \[\d+\]: \[([^\]]*)\]\nBatched: [^\n]*\nLocation: [^\n]*url_seen/""".r
-    def seenScans(plans: Seq[String]) = plans.flatMap(scan.findAllMatchIn(_).map(_.group(1))).distinct
     countingGroup("crawl-plan") { c =>
       Seq(1 -> (0 until 300), 2 -> (100 until 450)).foreach { case (runId, ids) =>
         CacheScope.withScope {
@@ -269,6 +267,23 @@ class CrawlSpec extends SparkSpec {
     }
   }
 
+  test("a round reads url_seen once even when its caller passes the url_seen ids as existing") {
+    val dir = tempDir("graft-crawl-plan-existing")
+    CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 300), CrawlConfig(runId = 1), dir) }
+    countingGroup("crawl-plan-existing") { c =>
+      CacheScope.withScope {
+        c.reset()
+        // as the benchmark's nights call it: the url_seen ids as existing
+        val out = Crawl.run(spark, Frontier.buildWorklist(spark, Crawl.seenIds(spark, dir).as[String],
+          idsOf(0 until 450 by 40), idsOf(100 until 450), maxNew = 450, runId = 2), CrawlConfig(runId = 2), dir)
+        c.settle()
+        assert(seenScans(c.plans).size == 1,
+          s"round 2 scans url_seen ${seenScans(c.plans).size} times:\n${c.plans.mkString("\n")}")
+        assert(out.resultRows == 450)
+      }
+    }
+  }
+
   /** One crawl round as `CrawlMain` runs it, plus the archive commit that
     * follows it in a nightly crawl: round r lists ids [0, 300r) and every
     * 40th of them as forum ids. `commitStore = false` stops it before the
@@ -277,12 +292,8 @@ class CrawlSpec extends SparkSpec {
                     commitArchive: Boolean = true): Unit =
     CacheScope.withScope {
       val listed = (0 until 300 * runId).map(i => Ids.syntheticId(i.toLong))
-      val known =
-        if (new SnapshotTable(spark, s"$dir/url_seen").currentVersion.isDefined)
-          Crawl.seenIds(spark, dir).as[String]
-        else spark.emptyDataset[String]
       val store = new SeenStore(dir, expectedKeys = 1 << 16)
-      val frontier = Frontier.buildWorklist(spark, known,
+      val frontier = Frontier.buildWorklist(spark, spark.emptyDataset[String],
         spark.createDataset(listed.indices.by(40).map(listed)), spark.createDataset(listed),
         maxNew = 1000, runId = runId)
       val out = Crawl.run(spark, frontier, CrawlConfig(runId = runId), dir)

@@ -57,6 +57,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Run `body` with `spark.sql.shuffle.partitions` at `parts` (0 leaves the
+    * session's setting), then restore it. */
+  def withShufflePartitions[A](parts: Int)(body: => A): A =
+    if (parts <= 0) body
+    else {
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try body finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+
   override def afterAll(): Unit =
     try tempRoots.synchronized {
       tempRoots.filter(Files.exists(_)).foreach { root =>

@@ -37,19 +37,15 @@ class CrawlToDbSpec extends SparkSpec {
     val per200 = scala.collection.mutable.Map.empty[Int, Long]
     (1 to runs).foreach { runId =>
       graft.core.CacheScope.withScope {
-        val haveSeen =
-          new SnapshotTable(spark, s"$dir/url_seen").currentVersion.isDefined
-        val existing =
-          if (haveSeen) Crawl.seenIds(spark, dir).as[String]
-          else spark.emptyDataset[String]
-        // rolling discovery window: later runs REFETCH the known set (the
-        // nightly discipline) plus discover fresh ids
+        // rolling discovery window: later runs REFETCH the known set, which
+        // the round reads from url_seen (the nightly discipline), plus
+        // discover fresh ids
         val lo = (runId - 1) * 100
         val discovered = spark.createDataset(
           (lo until lo + 200).map(i => Ids.syntheticId(i.toLong)))
         val forum = spark.createDataset(
           (lo until lo + 200 by 41).map(i => Ids.syntheticId(i.toLong)))
-        val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,
+        val frontier = Frontier.buildWorklist(spark, spark.emptyDataset[String], forum, discovered,
           maxNew = 1000, runId = runId)
         val out = Crawl.run(spark, frontier, CrawlConfig(runId = runId, prefixLen = 1), dir)
         per200(runId) = out.results.filter(_.status == 200).count()

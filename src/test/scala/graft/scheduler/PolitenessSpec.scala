@@ -32,8 +32,8 @@ class PolitenessSpec extends SparkSpec {
   test("schedule is invariant under physical parallelism (2 vs 16 partitions)") {
     val frontier = spark.createDataset(mkFrontier(1200, 0.1, seed = 2L))
     val cfg = CrawlConfig()
-    val a = Politeness.schedule(spark, frontier, cfg, numPartitions = 2).collect().sortBy(_.seq).toSeq
-    val b = Politeness.schedule(spark, frontier, cfg, numPartitions = 16).collect().sortBy(_.seq).toSeq
+    val a = withShufflePartitions(2)(Politeness.schedule(spark, frontier, cfg).collect().sortBy(_.seq).toSeq)
+    val b = withShufflePartitions(16)(Politeness.schedule(spark, frontier, cfg).collect().sortBy(_.seq).toSeq)
     assert(a == b, "parallelism must change throughput, never the schedule")
   }
 
@@ -43,8 +43,9 @@ class PolitenessSpec extends SparkSpec {
     val frontier = mkFrontier(n, share, seed)
     val cfg = CrawlConfig()
     val oracle = VirtualClockOracle.schedule(frontier, cfg)
-    val pipeline = Politeness.schedule(spark, spark.createDataset(frontier), cfg, numPartitions = parts)
-      .collect().sortBy(_.seq)
+    val pipeline = withShufflePartitions(parts) {
+      Politeness.schedule(spark, spark.createDataset(frontier), cfg).collect().sortBy(_.seq)
+    }
     assert(pipeline.toSeq == oracle, s"n=$n share=$share partitions=$parts")
   }
 
@@ -69,7 +70,7 @@ class PolitenessSpec extends SparkSpec {
     val frontier = spark.createDataset(mkFrontier(1500, 0.1, seed = 5L))
     countingGroup("politeness-job-count") { c =>
       graft.core.CacheScope.withScope {
-        val sched = Politeness.schedule(spark, frontier, CrawlConfig(), numPartitions = 8)
+        val sched = withShufflePartitions(8)(Politeness.schedule(spark, frontier, CrawlConfig()))
         c.settle()
         assert(c.jobs.get() == 1, s"schedule must submit exactly one job (the stats collect), saw ${c.jobs.get()}")
         c.reset()
