@@ -14,11 +14,13 @@ import graft.snapshot.SnapshotTable
   * work-list → seeded-shuffle schedule under the politeness budget → fetch
   * → two snapshot commits: the run's results, then `url_seen`.
   *
-  * `url_seen` is the one per-id crawl state table, `(id, etag, lastRun)`:
-  * every id ever crawled, with the etag and run of its last 200 (both null
-  * if it never had one). It is both the known-id set (crawler:203-215) and
-  * the conditional-fetch cache (archive.py:194-237), as the reference
-  * derives both from one archive record per extension.
+  * `url_seen` is the one per-id crawl state table, `(id, etag, lastRun,
+  * firstRun)`: every id ever crawled, with the etag and run of its last 200
+  * (both null if it never had one) and the run that first scheduled it.
+  * It is both the known-id
+  * set (crawler:203-215) and the conditional-fetch cache
+  * (archive.py:194-237), as the reference derives both from one archive
+  * record per extension.
   *
   * A round shuffles once, as the reference shuffles its one work-list once
   * (archive.py:594) and each worker reads that extension's own etag record
@@ -30,9 +32,10 @@ import graft.snapshot.SnapshotTable
   * back. The same rows give the next version, as the reference updates one
   * etag record per extension as it fetches (mysql_backend.py:186-199).
   * Everything is a pure function of (work-list, config, prior
-  * `url_seen`), so re-runs and resumes converge
-  * (the reference's idempotent tar-append/upsert discipline,
-  * archive.py:532-538, mysql_backend.py:99-104).
+  * `url_seen`), so re-runs and resumes converge (the reference's idempotent
+  * tar-append/upsert discipline, archive.py:532-538, mysql_backend.py:99-104):
+  * a re-run after the round's own `url_seen` commit reads the ids it
+  * admitted with `firstRun = runId`, and a prior etag is an earlier run's.
   */
 object Crawl {
 
@@ -50,13 +53,18 @@ object Crawl {
           tableDir: String): RunOutput = {
     import spark.implicits._
     val seenTable = new SnapshotTable(spark, s"$tableDir/url_seen")
-    val prior = seenTable.currentVersion.map(_ => seenTable.read().select("id", "etag", "lastRun"))
+    // a table written before `firstRun` was recorded reads it as 0, a run
+    // before any (run ids start at 1), and its first commit stores that
+    val prior = seenTable.currentVersion.map(_ => seenTable.read()).map { t =>
+      t.select(col("id"), col("etag"), col("lastRun"),
+        if (t.columns.contains("firstRun")) col("firstRun") else lit(0).as("firstRun"))
+    }
     val ex = Politeness.cap(Politeness.exchange(spark,
       worklist.tagged.select(col("id"), lit(null).cast("string").as("host"), col("forums"), col("known")),
       prior, cfg), worklist.maxNew, cfg)
     val placed = Politeness.walk(spark, ex, cfg)
     val joined = placed.toDF().select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
-      col("etag").as("__etag"), col("lastRun").as("__lastRun"))
+      col("etag").as("__etag"), col("lastRun").as("__lastRun"), col("firstRun").as("__firstRun"))
 
     // prior etag (T2: the conditional-fetch cache): the etag of a 200 from
     // an earlier run. A null lastRun (no 200 yet) fails the test too; the
@@ -75,7 +83,7 @@ object Crawl {
     // Scope-registered: released at crawl-round end
     val rows = CacheScope.persist(fetched.select(Fetcher.resultColumns ++ Seq(
       when(won, col("etag")).otherwise(col("__etag")).as("__etag"),
-      when(won, lit(cfg.runId)).otherwise(col("__lastRun")).as("__lastRun")): _*))
+      when(won, lit(cfg.runId)).otherwise(col("__lastRun")).as("__lastRun"), col("__firstRun")): _*))
     val results = rows.select(Fetcher.resultColumns: _*).as[FetchResult]
 
     val resultsTable = new SnapshotTable(spark, s"$tableDir/fetch_results")
@@ -91,7 +99,8 @@ object Crawl {
     // write merges the cached partitions to the advisory partition size, as
     // the adaptive planner does for a plan that is not cached; the results
     // commit has loaded the cache, so its size is the measured one
-    val state = rows.select(col("id"), col("__etag").as("etag"), col("__lastRun").as("lastRun"))
+    val state = rows.select(col("id"), col("__etag").as("etag"), col("__lastRun").as("lastRun"),
+      col("__firstRun").as("firstRun"))
     val parts = state.queryExecution.optimizedPlan.stats.sizeInBytes /
       spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1
     val sv = seenTable.commit(state.coalesce(parts.min(Int.MaxValue).toInt).sortWithinPartitions("id"))

@@ -43,10 +43,6 @@ final case class FetchResult(
     isNew: Boolean,
     retried: Boolean)
 
-/** Per-id conditional-fetch state — the reference's etag side-cache
-  * (archive.py:194-237, db.py:37-70): last seen ETag + last crawl date. */
-final case class EtagState(id: String, etag: String, lastRun: Int)
-
 /** The payload table row, per BASELINE.json input_hint: image + caption
   * pairs. `bytes` are the archived payload (analog of the chunked .crx
   * write, archive.py:352-355); `phash` the 64-bit perceptual hash playing

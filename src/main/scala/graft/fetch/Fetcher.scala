@@ -75,10 +75,12 @@ object Fetcher {
     * UpdateResult with a sentinel payload, archive.py:606-621). */
   val TimeoutStatus: Int = -2
 
-  /** Conditional fetch against prior etag state — the If-Modified-Since/ETag
+  /** Conditional fetch against a prior etag — the If-Modified-Since/ETag
     * skip (archive.py:305-348): unchanged etag → 304 without a payload
     * fetch; otherwise a real fetch with the single retry pass
-    * (crawler:222-234). */
+    * (crawler:222-234). The per-row oracle that the specs check
+    * [[withPriorEtag]], the crawl's columnar form, against; no pipeline
+    * calls it. */
   def conditionalResult(s: graft.core.ScheduledFetch, runId: Int,
                         priorEtag: Option[String], cfg: CrawlConfig = CrawlConfig()): FetchResult = {
     val newEtag = etagFor(s.id, runId)

@@ -79,8 +79,8 @@ object Frontier {
 
   /** Work-list build (crawler:203-215 + archive.py:589-592): set algebra,
     * known ∪ (the first `maxNew` of discovered ∖ known in id order),
-    * forums-flagged, where known is the prior `url_seen` ids plus the forum
-    * ids.
+    * forums-flagged, where known is the `url_seen` ids of earlier runs plus
+    * the forum ids.
     *
     * Every known id is recrawled, so known ∪ (discovered ∖ known) = known ∪
     * discovered. Building the work-list submits no job: it returns the

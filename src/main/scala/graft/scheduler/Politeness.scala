@@ -81,50 +81,60 @@ object Politeness {
     placed.select("seq", "id", "host", "fetchClass", "startMs").as[ScheduledFetch]
   }
 
-  // a slot's flags: restricted, exempt from a cap
+  // a slot's flags: restricted, exempt from a cap, listed by a source
   private val Forums = 1
   private val Known = 2
+  private val Listed = 4
 
   /** One row through the exchange, and after it one merged id: a frontier
-    * row (a null `host` is derived from the id), a `url_seen` row (known,
-    * with its `etag` and `lastRun`), or both. `lastRun` is boxed: it is
-    * null for an id without a 200. */
-  final case class Slot(id: String, host: String, flags: Int, etag: String, lastRun: java.lang.Integer) {
+    * row (a null `host` is derived from the id; `firstRun` is null), a
+    * `url_seen` row (with its `etag`, `lastRun` and `firstRun`), or both.
+    * `lastRun` is boxed: null for an id without a 200. */
+  final case class Slot(id: String, host: String, flags: Int, etag: String, lastRun: java.lang.Integer,
+                        firstRun: java.lang.Integer) {
     def merge(o: Slot): Slot = Slot(id, if (host != null) host else o.host, flags | o.flags,
-      if (etag != null) etag else o.etag, if (lastRun != null) lastRun else o.lastRun)
+      if (etag != null) etag else o.etag, if (lastRun != null) lastRun else o.lastRun,
+      if (firstRun != null) firstRun else o.firstRun)
   }
 
   /** One id out of the [[walk]]: its schedule slot (`seq`, `fetchClass`,
-    * `startMs`) and its prior `url_seen` row. */
+    * `startMs`), its prior `url_seen` row, and `firstRun`, the run that
+    * first scheduled it (this round's for a new id). */
   final case class Placed(seq: Long, id: String, host: String, fetchClass: String,
-                          startMs: Long, etag: String, lastRun: Option[Int])
+                          startMs: Long, etag: String, lastRun: Option[Int], firstRun: Int)
 
   /** The merged ids, sorted, and per partition (ids, restricted ids,
     * restricted chain length, ids without the known flag). */
   final case class Exchange(sorted: RDD[Slot], stats: Array[(Long, Long, Long, Long)])
 
   /** The one shuffle of a round: `frontier` rows `(id, host, forums,
-    * known)` and `state` rows `(id, etag, lastRun)`, which are known, go
-    * through a DETERMINISTIC bucket partitioner on the top bits of the
-    * (sign-flipped) shuffle key instead of `repartitionByRange`: the keys
-    * are uniform 64-bit mixes, so buckets balance by construction and no
-    * sampling pass runs. Within a bucket all keys share a sign, so one in-memory sort by
+    * known)` and `state` rows `(id, etag, lastRun, firstRun)` go through a
+    * DETERMINISTIC bucket partitioner on the top bits of the (sign-flipped)
+    * shuffle key instead of `repartitionByRange`: the keys are uniform
+    * 64-bit mixes, so buckets balance by construction and no sampling pass
+    * runs. Within a bucket all keys share a sign, so one in-memory sort by
     * (key, id) per partition completes the global sort, and puts the rows
     * of one id side by side to merge. The sort is safe at any frontier size
     * because partition count scales with the data (10^10 rows / 2^17
     * buckets ≈ 76k rows per partition). The partition count is the
-    * session's shuffle partitions, rounded up to a power of two. */
+    * session's shuffle partitions, rounded up to a power of two.
+    *
+    * A state row is known unless a source lists it again and its
+    * `firstRun` is this round's (an earlier attempt admitted it): then it
+    * competes under the cap again, so a re-run admits the same new ids,
+    * and an attempt over other ids (a later micro-batch) loses none. */
   def exchange(spark: SparkSession, frontier: DataFrame, state: Option[DataFrame], cfg: CrawlConfig): Exchange = {
     import spark.implicits._
     val parts0 = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     // next power of two ≥ parts0 so the bucket is a bit-shift of the key
     val p = Integer.highestOneBit(parts0) * (if (Integer.bitCount(parts0) == 1) 1 else 2)
     val shift = 64 - Integer.numberOfTrailingZeros(p)
-    val flags = when(col("forums"), Forums).otherwise(0) + when(col("known"), Known).otherwise(0)
+    val flags = when(col("forums"), Forums).otherwise(0) + when(col("known"), Known).otherwise(0) + Listed
     val rows = frontier.select(col("id"), col("host"), flags.as("flags"),
-      lit(null).cast("string").as("etag"), lit(null).cast("int").as("lastRun"))
+      lit(null).cast("string").as("etag"), lit(null).cast("int").as("lastRun"), lit(null).cast("int").as("firstRun"))
     val slots = state.fold(rows)(s => rows.union(s.select(col("id"), lit(null).cast("string").as("host"),
-      lit(Known).as("flags"), col("etag"), col("lastRun"))))
+      when(col("firstRun") === cfg.runId, 0).otherwise(Known).as("flags"),
+      col("etag"), col("lastRun"), col("firstRun"))))
 
     // bucket = top bits of unsigned(key): monotone in the signed key order
     // the oracle sorts by, so bucket index order IS global order
@@ -146,7 +156,8 @@ object Politeness {
         arr.foreach { case (_, s) =>
           if (ids.nonEmpty && ids.last.id == s.id) ids(ids.length - 1) = ids.last.merge(s) else ids += s
         }
-        ids.iterator
+        // flags 0: a state row of this round's own admission, listed by no source
+        ids.iterator.map(s => if (s.flags == 0) s.copy(flags = Known) else s)
       }, preservesPartitioning = true)
     // SER: raw-object RDD caching of tens of millions of rows is pure GC
     // pressure; serialized blocks keep the heap flat. Scope-registered so
@@ -201,7 +212,8 @@ object Politeness {
           } else ("normal", if (anyRestricted) chainEnd + spacing else 0L)
         val host = if (s.host != null) s.host else Frontier.hostOf(Frontier.urlFor(s.id))
         seq += 1
-        Placed(seq - 1, s.id, host, cls, start, s.etag, Option(s.lastRun).map(_.intValue))
+        Placed(seq - 1, s.id, host, cls, start, s.etag, Option(s.lastRun).map(_.intValue),
+          if (s.firstRun != null) s.firstRun else cfg.runId)
       }
     })
   }

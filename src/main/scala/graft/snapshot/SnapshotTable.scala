@@ -1,7 +1,7 @@
 package graft.snapshot
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -14,11 +14,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Iceberg-shaped snapshot table layer (SURVEY.md §7.0/§7.1 step 3).
   *
   * No Iceberg runtime resolves offline, so snapshot semantics are built by
-  * hand on Parquet + a versioned JSON manifest with an atomic rename commit:
-  *  - every commit writes data files under `data/v{N}/` then publishes
-  *    `manifests/v{N}.json` (tmp + ATOMIC_MOVE) naming its data directory
+  * hand on Parquet + a versioned JSON manifest with an atomic link commit:
+  *  - every commit writes data files under its own `data/v{N}-{nonce}/`,
+  *    then publishes `manifests/v{N}.json` (a tmp file hard-linked into
+  *    place, which fails if the version exists) naming its data directory
   *    relative to the table's base (so the table can move), parent version,
-  *    row count, and a metrics map (per-partition lineage);
+  *    row count, and a metrics map (per-partition lineage). Of two writers
+  *    of one version, one publishes and the other deletes its data
+  *    directory and raises;
   *  - readers resolve HEAD = max published manifest → uncommitted/partial
   *    data directories are invisible (crash safety);
   *  - time travel = read any older manifest; resume-from-checkpoint = open
@@ -52,7 +55,8 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
              observed: Seq[Column] = Nil): Int = {
     val parent = currentVersion.getOrElse(0)
     val v = parent + 1
-    val dataDir = f"data/v$v%06d"
+    val nonce = java.util.UUID.randomUUID()
+    val dataDir = f"data/v$v%06d-$nonce"
     // a plain partitioned write opens one file per (input partition ×
     // partition value): 8 × 16 = 128 files for a night's results. A
     // rebalance exchange on the partition columns lets AQE size the write
@@ -88,17 +92,22 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
          |"rowCount":$rowCount,"partitionBy":[${partitionBy.map(p => s""""${esc(p)}"""").mkString(",")}],
          |"metrics":{$m}$schema}""".stripMargin
     }
-    // atomic publish: tmp file + ATOMIC_MOVE rename
-    val tmp = manifests.resolve(s".tmp-$v-${System.nanoTime()}")
+    // atomic publish: link(2) of a complete tmp file, which, unlike a
+    // rename, refuses to replace a manifest another writer published
+    val tmp = manifests.resolve(s".tmp-$v-$nonce")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp, manifestPath(v), StandardCopyOption.ATOMIC_MOVE)
+    try Files.createLink(manifestPath(v), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
+        // no manifest names this attempt's data, and no other writer knows it
+        deleteTree(base.resolve(dataDir))
         throw new IllegalStateException(s"concurrent commit for v$v")
-    }
+    } finally Files.deleteIfExists(tmp)
     v
   }
+
+  private def deleteTree(dir: Path): Unit =
+    scala.util.Using.resource(Files.walk(dir))(_.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete))
 
   /** Output columns that the top projection of `df`'s plan sets to a
     * constant expression, e.g. `withColumn("run_id", lit(3))`. */
@@ -126,17 +135,23 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
   def read(version: Option[Int] = None): DataFrame = {
     val v = version.orElse(currentVersion)
       .getOrElse(throw new IllegalStateException(s"no snapshots in $baseDir"))
-    val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
-    val dataDir = base.resolve(field(json, "dataDir")
-      .getOrElse(throw new IllegalStateException(s"bad manifest v$v"))).toString
+    val json = manifestOf(v)
+    val dataDir = dataDirOf(v).toString
     field(json, "schema") match {
       case Some(s) => spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]).parquet(dataDir)
       case None => spark.read.parquet(dataDir)
     }
   }
 
+  private def manifestOf(v: Int): String =
+    new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
+
+  /** The data directory that version `v`'s manifest names. */
+  def dataDirOf(v: Int): Path =
+    base.resolve(field(manifestOf(v), "dataDir").getOrElse(throw new IllegalStateException(s"bad manifest v$v")))
+
   def metricsOf(v: Int): Map[String, String] = {
-    val json = new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)
+    val json = manifestOf(v)
     """"metrics":\{(.*?)\}""".r.findFirstMatchIn(json).map(_.group(1)) match {
       case Some(body) if body.nonEmpty =>
         """"(.*?)":"(.*?)"""".r.findAllMatchIn(body).map(m => m.group(1) -> m.group(2)).toMap

@@ -2,54 +2,27 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.core.{EtagState, FetchResult}
-import graft.fetch.Fetcher
-import graft.scheduler.Politeness
+import graft.Crawl
+import graft.core.{CacheScope, CrawlConfig}
+import graft.frontier.Frontier
 
 /** Structured-Streaming incremental layer (SURVEY §2.9).
   *
   * The reference is batch-with-state: nightly runs with per-id ETag caches
-  * deciding "not modified" (archive.py:194-237, 305-348) and a cron
-  * micro-batch cadence (scripts/update/global_update.sh:219-234). The
-  * faithful streaming re-expression: frontier deltas arrive as a stream of
-  * (id, runId) discovery events; `mapGroupsWithState` keyed by id carries the
-  * EtagState so a re-discovered id whose etag is unchanged classifies as
-  * not_modified without a payload fetch (T2); windowed counts with a
-  * watermark give the per-run metrics view (T5/A1).
-  *
-  * Designed for `Trigger.AvailableNow` micro-batches over a frontier-delta
-  * table: each batch drains what's available and checkpoints, exactly the
-  * nightly batch-incremental semantics (T1), but the same query runs
-  * continuously against a live source unchanged.
+  * deciding "not modified" (archive.py:194-237, 305-348) on a cron
+  * cadence (scripts/update/global_update.sh:219-234). Here frontier deltas
+  * arrive as a stream of (id, runId) discovery events, and each micro-batch
+  * runs one batch crawl round ([[graft.Crawl.run]]) over its ids: the same
+  * schedule, the same conditional fetch against `url_seen` (T2), the same
+  * snapshot commits (T1). Windowed counts with a watermark give the per-run
+  * metrics view (T5/A1), and a timeout-driven monitor the stall alerts.
   */
 object StreamingCrawl {
 
   /** One discovery event in the frontier delta stream. */
   final case class Discovery(id: String, runId: Int, ts: java.sql.Timestamp)
-
-  /** Streaming fetch with carried etag state: first sight of an id fetches
-    * (status from the deterministic fetcher); re-sights whose etag is
-    * unchanged yield 304 not_modified (the If-Modified-Since/ETag skip,
-    * archive.py:305-348). State never expires here (the reference keeps
-    * etags forever in its archive side-files). */
-  def fetchWithState(discoveries: Dataset[Discovery], seed: Long = 42L): Dataset[FetchResult] = {
-    import discoveries.sparkSession.implicits._
-    discoveries
-      .groupByKey(_.id)
-      .mapGroupsWithState[EtagState, FetchResult](GroupStateTimeout.NoTimeout()) {
-        (id: String, events: Iterator[Discovery], state: GroupState[EtagState]) =>
-          // process the newest discovery for this id in the batch; the
-          // conditional-fetch decision is the SAME function the batch path
-          // uses (Fetcher.conditionalResult) — one semantics, two runtimes
-          val latest = events.maxBy(_.runId)
-          val slot = graft.core.ScheduledFetch(-1L, id, "", "normal", 0L)
-          val res = Fetcher.conditionalResult(slot, latest.runId, state.getOption.map(_.etag))
-          if (res.status == 200) state.update(EtagState(id, res.etag, latest.runId))
-          res
-      }
-  }
 
   /** Windowed per-class metrics with a watermark — the monitoring time-series
     * (scripts/monitoring gnuplot reports) as a streaming aggregation (T5). */
@@ -113,43 +86,33 @@ object StreamingCrawl {
       }
   }
 
-  /** Production sink: stream → snapshot table via foreachBatch. The memory
-    * sink cannot recover from a checkpoint; foreachBatch + the idempotent
-    * last-wins MERGE (Etl.mergeUpsert, T6) is the restart-safe path — a
-    * replayed micro-batch converges to the same snapshot, mirroring the
-    * reference's ON-DUP-KEY upserts (mysql_backend.py:99-104). Each batch
-    * commits one snapshot version keyed by (id), newest runId wins. */
+  /** Production sink: each micro-batch of `discoveries` is one crawl round
+    * into the snapshot tables under `tableDir` (`fetch_results`,
+    * `url_seen`), drained with `Trigger.AvailableNow`. The round discovers
+    * the batch's ids with no cap, since the stream already carries the
+    * discovery output (discover.py), and recrawls every `url_seen` id, as a
+    * nightly run does. Its run is the batch's largest `runId`, not the
+    * streaming batch id, which a fresh checkpoint restarts at 0: a replayed
+    * micro-batch re-runs the same round and converges to the same snapshots
+    * (the reference's idempotent upserts, mysql_backend.py:99-104), and a
+    * later micro-batch of that run over other ids keeps the earlier ids. */
   def runToSnapshot(spark: SparkSession, discoveries: Dataset[Discovery],
-                    tableDir: String, checkpoint: String): Unit = {
-    val q = fetchWithState(discoveries)
-      .writeStream
-      .outputMode(OutputMode.Update())
+                    tableDir: String, checkpoint: String): Unit =
+    discoveries.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[FetchResult], batchId: Long) =>
-        val table = new graft.snapshot.SnapshotTable(batch.sparkSession, tableDir)
-        graft.etl.Etl.mergeUpsert(batch.sparkSession, table,
-          batch.toDF().withColumn("batch_id", lit(batchId)),
-          keyCols = Seq("id"), versionCol = "batch_id")
-        ()
+      .foreachBatch { (batch: Dataset[Discovery], _: Long) =>
+        val session = batch.sparkSession
+        import session.implicits._
+        // an empty batch has no run
+        batch.agg(max("runId")).as[Option[Int]].head().foreach { runId =>
+          CacheScope.withScope {
+            val none = session.emptyDataset[String]
+            Crawl.run(session, Frontier.buildWorklist(session, none, none, batch.select("id").as[String],
+              maxNew = Int.MaxValue, runId = runId), CrawlConfig(runId = runId), tableDir)
+          }
+        }
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
-
-  /** Wire a discovery stream through the stateful fetch into an in-memory
-    * sink (tests) or any `format`; `Trigger.AvailableNow` drains-and-stops =
-    * one nightly batch. */
-  def runAvailableNow(spark: SparkSession, discoveries: Dataset[Discovery],
-                      queryName: String, checkpoint: String): Unit = {
-    val q = fetchWithState(discoveries)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 }

@@ -136,7 +136,13 @@ class CrawlSpec extends SparkSpec {
   }
 
   private def seenState(dir: String) = new SnapshotTable(spark, s"$dir/url_seen").read()
-    .as[(String, Option[String], Option[Int])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    .select("id", "etag", "lastRun").as[(String, Option[String], Option[Int])].collect()
+    .map(r => r._1 -> (r._2, r._3)).toMap
+
+  /** Every `url_seen` row, `firstRun` included, sorted. */
+  private def seenRows(dir: String) = new SnapshotTable(spark, s"$dir/url_seen").read()
+    .select("id", "etag", "lastRun", "firstRun").as[(String, Option[String], Option[Int], Option[Int])]
+    .collect().sorted.toSeq
 
   test("more new ids than maxNew: the round schedules known ∪ the first maxNew new ids") {
     // round 2: forum ids among the 200 ids of url_seen and past them, and
@@ -161,6 +167,64 @@ class CrawlSpec extends SparkSpec {
         assert(Crawl.seenIds(spark, dir).as[String].collect().toSet == expected.map(_.id).toSet)
       })
     }
+  }
+
+  /** Round 2 as the cap-resume cases run it: it discovers `discovered`
+    * under `maxNew = 150`. Its schedule, results and `url_seen` rows. */
+  private def capRound(dir: String, discovered: Seq[Int]) = CacheScope.withScope {
+    val out = Crawl.run(spark, Frontier.buildWorklist(spark, spark.emptyDataset[String],
+      spark.emptyDataset[String], idsOf(discovered), maxNew = 150, runId = 2), CrawlConfig(runId = 2), dir)
+    (out.scheduled.collect().sortBy(_.seq).toSeq, out.results.collect().sortBy(_.seq).toSeq, seenRows(dir))
+  }
+
+  /** A table directory whose `url_seen` holds the ids [0, 200) of round 1;
+    * `legacy` drops its `firstRun` column, as tables written before it was
+    * recorded lack it. */
+  private def capTable(name: String, legacy: Boolean = false): String = {
+    val dir = tempDir(name)
+    CacheScope.withScope { Crawl.run(spark, frontierOf(1, 0 until 200), CrawlConfig(runId = 1), dir) }
+    if (legacy) {
+      val t = new SnapshotTable(spark, s"$dir/url_seen")
+      t.commit(t.read().drop("firstRun"))
+      assert(!t.read().columns.contains("firstRun"))
+    }
+    dir
+  }
+
+  test("a round whose cap binds converges when it re-runs after its own url_seen commit") {
+    // url_seen holds [0, 200); round 2 discovers [100, 600) under maxNew =
+    // 150: the 200 known ids and the first 150 of the 400 new ones
+    val known = (0 until 200).map(i => Ids.syntheticId(i.toLong)).toSet
+    val admitted = (200 until 600).map(i => Ids.syntheticId(i.toLong)).sorted.take(150).toSet
+    Seq(false, true).foreach { legacy =>
+      val dir = capTable(s"graft-crawl-cap-resume-$legacy", legacy)
+      val first = capRound(dir, 100 until 600)
+      val again = capRound(dir, 100 until 600)
+      // (scheduled, url_seen) sizes of the run and of its re-run
+      assert((first._1.size, first._3.size, again._1.size, again._3.size) == (350, 350, 350, 350),
+        s"legacy=$legacy")
+      assert(first._1.map(_.id).toSet == known ++ admitted)
+      assert(again == first, s"legacy=$legacy: the re-run must give the same schedule, results and url_seen")
+      // firstRun: round 1's (0 where the column was missing), then 2
+      assert(first._3.forall { case (id, _, _, f) =>
+        f == Some(if (admitted(id)) 2 else if (legacy) 0 else 1) })
+    }
+  }
+
+  test("a re-run whose sources drop an id it admitted keeps that id as known") {
+    // the first attempt at round 2 admits 150 ids; the second lists all of
+    // [100, 600) but the first of them: that id stays known, with its
+    // firstRun, and the other 149 compete under the cap with the rest
+    val order = (200 until 600).sortBy(i => Ids.syntheticId(i.toLong))
+    val dropped = Ids.syntheticId(order.head.toLong)
+    val dir = capTable("graft-crawl-cap-drop")
+    val first = capRound(dir, 100 until 600)
+    assert(first._1.exists(_.id == dropped))
+    val rerun = capRound(dir, (100 until 600).filterNot(_ == order.head))
+    val admitted = order.take(151).map(i => Ids.syntheticId(i.toLong)).toSet
+    assert(rerun._1.map(_.id).toSet == (0 until 200).map(i => Ids.syntheticId(i.toLong)).toSet ++ admitted)
+    assert(rerun._3.map(_._1).toSet == rerun._1.map(_.id).toSet)
+    assert(rerun._3.collect { case (id, _, _, f) if admitted(id) => f } == Seq.fill(151)(Some(2)))
   }
 
   test("an id listed by several sources is scheduled once, restricted if any source says so") {
@@ -220,7 +284,7 @@ class CrawlSpec extends SparkSpec {
           statuses += r.id -> (statuses.getOrElse(r.id, Nil) :+ r.status)
         }
         val state = new SnapshotTable(spark, s"$dir/url_seen").read()
-          .as[(String, Option[String], Option[Int])].collect().toSeq
+          .select("id", "etag", "lastRun").as[(String, Option[String], Option[Int])].collect().toSeq
         assert(state.map(_._1).distinct.size == state.size, s"round $runId: one row per id")
         val got = state.map { case (id, e, v) => id -> e.zip(v) }.toMap
         if (got != model) {
@@ -334,8 +398,7 @@ class CrawlSpec extends SparkSpec {
       new SnapshotTable(spark, s"$dir/fetch_results").read()
         .select("seq", "id", "status", "etag", "isNew", "retried", "prefix", "run_id")
         .as[(Long, String, Int, String, Boolean, Boolean, String, Int)].collect().sorted.toSeq,
-      new SnapshotTable(spark, s"$dir/url_seen").read()
-        .as[(String, Option[String], Option[Int])].collect().sorted.toSeq,
+      seenRows(dir),
       CrawlToDb.fullArchive(spark, dir)
         .select("doc_id", "text", "source", "crawl_date")
         .as[(Long, String, String, String)].collect().sorted.toSeq)
@@ -349,8 +412,8 @@ class CrawlSpec extends SparkSpec {
     // seen-store commit and the archive commit never happened
     round(afterResults, 2, commitStore = false)
     val seenDir = Paths.get(afterResults, "url_seen")
+    deleteTree(new SnapshotTable(spark, seenDir.toString).dataDirOf(2))
     Files.delete(seenDir.resolve("manifests").resolve("v000002.json"))
-    deleteTree(seenDir.resolve("data").resolve("v000002"))
     // (b) crash after the url_seen commit: the re-run reads round 2's own
     // committed state
     round(afterSeen, 2, commitStore = false)

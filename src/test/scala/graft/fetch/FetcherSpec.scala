@@ -4,7 +4,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.core.{CrawlConfig, EtagState, FetchResult, FrontierEntry, Ids, ScheduledFetch}
+import graft.core.{CrawlConfig, FetchResult, FrontierEntry, Ids, ScheduledFetch}
 import graft.frontier.Frontier
 import graft.scheduler.Politeness
 
@@ -130,13 +130,12 @@ class FetcherSpec extends SparkSpec {
     assert(t.exists(_.status == Fetcher.TimeoutStatus))
   }
 
-  /** The schedule left-joined with prior etag state and fetched by
+  /** The schedule left-joined with prior `(id, etag)` rows and fetched by
     * `Fetcher.withPriorEtag`, the columns `Crawl.run` fetches its merged
     * rows with. */
-  private def fetchWithState(sched: Dataset[ScheduledFetch], cfg: CrawlConfig,
-                             state: Dataset[EtagState]): Dataset[FetchResult] =
-    Fetcher.withPriorEtag(
-      sched.toDF().join(state.toDF().select(col("id"), col("etag").as("prior")), Seq("id"), "left_outer"),
+  private def fetchWithPrior(sched: Dataset[ScheduledFetch], cfg: CrawlConfig,
+                             state: Dataset[(String, String)]): Dataset[FetchResult] =
+    Fetcher.withPriorEtag(sched.toDF().join(state.toDF("id", "prior"), Seq("id"), "left_outer"),
       cfg, col("prior"))
       .select(Fetcher.resultColumns: _*).as[FetchResult]
 
@@ -146,14 +145,12 @@ class FetcherSpec extends SparkSpec {
     // prior state: half the ids carry the CURRENT etag (→ 304 short-circuit),
     // a quarter carry a stale etag (→ real fetch), the rest are absent
     val rows = sched.collect().sortBy(_.seq)
-    val state: Seq[EtagState] = rows.map(_.id).zipWithIndex.collect {
-      case (id, i) if i % 2 == 0 =>
-        EtagState(id, Fetcher.etagFor(id, cfg.runId), lastRun = cfg.runId - 1)
-      case (id, i) if i % 4 == 1 =>
-        EtagState(id, "W/\"stale\"", lastRun = cfg.runId - 1)
+    val state: Seq[(String, String)] = rows.map(_.id).zipWithIndex.collect {
+      case (id, i) if i % 2 == 0 => (id, Fetcher.etagFor(id, cfg.runId))
+      case (id, i) if i % 4 == 1 => (id, "W/\"stale\"")
     }.toSeq
-    val prior = state.map(s => s.id -> s.etag).toMap
-    val out = fetchWithState(sched, cfg, spark.createDataset(state))
+    val prior = state.toMap
+    val out = fetchWithPrior(sched, cfg, spark.createDataset(state))
       .collect().sortBy(_.seq)
     assert(out.toSeq == rows.map(s => Fetcher.conditionalResult(s, cfg.runId, prior.get(s.id), cfg)).toSeq)
     assert(out.count(_.status == 304) >= rows.length / 2 - 1)
@@ -162,10 +159,10 @@ class FetcherSpec extends SparkSpec {
   test("columnar fetch plan: whole-stage codegen, no encoder round-trip") {
     val cfg = CrawlConfig()
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(500)), cfg)
-    val state = spark.createDataset(Seq(EtagState(sched.head().id, "W/\"stale\"", 0)))
+    val state = spark.createDataset(Seq((sched.head().id, "W/\"stale\"")))
     // both fetch forms: the stateless stage and the prior-etag columns Crawl.run fetches with
     Seq("run" -> Fetcher.run(spark, sched, cfg).toDF(),
-        "withPriorEtag" -> fetchWithState(sched, cfg, state).toDF()).foreach {
+        "withPriorEtag" -> fetchWithPrior(sched, cfg, state).toDF()).foreach {
       case (name, df) =>
         df.collect()
         val plan = df.queryExecution.executedPlan.toString

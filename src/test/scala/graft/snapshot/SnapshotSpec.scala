@@ -23,16 +23,19 @@ class SnapshotSpec extends SparkSpec {
 
   test("manifests name data relative to the table: a moved table reads its own data") {
     val from = Paths.get(tempDir("graft-snap"), "t")
-    new SnapshotTable(spark, from.toString).commit(Seq(1, 2).toDF("x"))
+    val fromTable = new SnapshotTable(spark, from.toString)
+    fromTable.commit(Seq(1, 2).toDF("x"))
+    val data = from.relativize(fromTable.dataDirOf(1)).toString
+    assert(data.startsWith("data/v000001-"), data)
     val manifest = from.resolve("manifests").resolve("v000001.json")
-    assert(new String(Files.readAllBytes(manifest), "UTF-8").contains(""""dataDir":"data/v000001""""))
+    assert(new String(Files.readAllBytes(manifest), "UTF-8").contains(s""""dataDir":"$data""""))
     val to = Paths.get(tempDir("graft-snap"), "moved")
     Files.move(from, to)
     assert(new SnapshotTable(spark, to.toString).read().as[Int].collect().sorted.toSeq == Seq(1, 2))
     // older manifests name the data directory by absolute path
     val moved = to.resolve("manifests").resolve("v000001.json")
     Files.write(moved, new String(Files.readAllBytes(moved), "UTF-8")
-      .replace("\"data/v000001\"", "\"" + to.resolve("data/v000001") + "\"").getBytes("UTF-8"))
+      .replace("\"" + data + "\"", "\"" + to.resolve(data) + "\"").getBytes("UTF-8"))
     assert(new String(Files.readAllBytes(moved), "UTF-8").contains(s""""dataDir":"$to/"""))
     assert(new SnapshotTable(spark, to.toString).read().count() == 2)
   }
@@ -50,7 +53,7 @@ class SnapshotSpec extends SparkSpec {
       c.settle()
       assert(c.jobs.get() == 0, s"reading the snapshot ran ${c.jobs.get()} jobs")
       // the schema the footer gives, field for field
-      assert(read.schema == spark.read.parquet(s"$dir/data/v000001").schema)
+      assert(read.schema == spark.read.parquet(t.dataDirOf(1).toString).schema)
       assert(read.schema.fieldNames.toSeq == Seq("k", name, "n"))
     }
     assert(t.read().as[(Long, String, Option[Int])].collect().sorted.toSeq ==
@@ -60,7 +63,7 @@ class SnapshotSpec extends SparkSpec {
     val json = new String(Files.readAllBytes(manifest), "UTF-8")
     Files.write(manifest, json.substring(0, json.indexOf(",\n\"schema\":")).concat("}").getBytes("UTF-8"))
     assert(!new String(Files.readAllBytes(manifest), "UTF-8").contains("schema"))
-    assert(t.read().schema == spark.read.parquet(s"$dir/data/v000001").schema)
+    assert(t.read().schema == spark.read.parquet(t.dataDirOf(1).toString).schema)
     assert(t.read().as[(Long, String, Option[Int])].collect().sorted.toSeq ==
       Seq((1L, "x", Some(2)), (2L, "y\n", None)))
     // a partitioned commit records no schema: its partition columns' types
@@ -90,6 +93,39 @@ class SnapshotSpec extends SparkSpec {
     val t2 = new SnapshotTable(spark, dir)
     assert(t2.currentVersion.contains(1))
     assert(t2.read().count() == 3)
+  }
+
+  test("two writers of one version: exactly one publishes, and its rows read back") {
+    val dir = tempDir("graft-snap")
+    new SnapshotTable(spark, dir).commit(Seq(0L).toDF("x"))
+    // each writer's one write task waits until the other's has started, so
+    // both have read v1 as HEAD and publish v2
+    val rows = Seq(1L until 4L, 4L until 6L)
+    val outcomes = rows.map { xs =>
+      val f = new java.util.concurrent.FutureTask[Either[Throwable, Int]](() => {
+        val df = spark.range(xs.head, xs.last + 1, 1, 1).as[Long].mapPartitions { it =>
+          CommitRace.start.countDown()
+          CommitRace.start.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          it
+        }.toDF("x")
+        try Right(new SnapshotTable(spark, dir).commit(df))
+        catch { case e: IllegalStateException => Left(e) }
+      })
+      new Thread(f).start()
+      f
+    }.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    assert(CommitRace.start.getCount == 0, "the writers did not overlap")
+    val won = outcomes.zip(rows).collect { case (Right(v), xs) => (v, xs) }
+    assert(won.size == 1, s"outcomes: $outcomes")
+    assert(won.head._1 == 2)
+    assert(outcomes.exists(_.left.exists(_.getMessage == "concurrent commit for v2")), s"$outcomes")
+    val t = new SnapshotTable(spark, dir)
+    assert(t.versions == Seq(1, 2))
+    assert(t.read().as[Long].collect().sorted.toSeq == won.head._2)
+    // the loser deleted its own data directory: only the manifest's is left
+    val dirs = Files.list(Paths.get(dir, "data")).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(dirs.filter(_.startsWith("v000002-")) == Seq(t.dataDirOf(2).getFileName.toString), dirs)
+    assert(!Files.list(Paths.get(dir, "manifests")).iterator().asScala.exists(_.getFileName.toString.startsWith(".tmp")))
   }
 
   test("commit counts rows on the write itself: one job, no re-scan") {
@@ -141,7 +177,7 @@ class SnapshotSpec extends SparkSpec {
       .select(($"id" % 16).cast("string").as("prefix"), lit(3).as("run_id"), $"id".as("v"))
     assert(df.rdd.getNumPartitions == 8)
     t.commit(df, partitionBy = Seq("prefix", "run_id"))
-    val dataDir = Paths.get(dir, "data", "v000001")
+    val dataDir = t.dataDirOf(1)
     val partDirs = Files.walk(dataDir).iterator().asScala.toSeq
       .filter(p => p.getFileName.toString.startsWith("run_id="))
     assert(partDirs.size == 16)
@@ -166,7 +202,7 @@ class SnapshotSpec extends SparkSpec {
     // partitions into one writer, so each input partition writes its own file
     val df = spark.range(0, 800, 1, 8).withColumn("crawl_date", lit("2024-02-01"))
     t.commit(df, partitionBy = Seq("crawl_date"))
-    val files = Files.list(Paths.get(dir, "data", "v000001", "crawl_date=2024-02-01"))
+    val files = Files.list(t.dataDirOf(1).resolve("crawl_date=2024-02-01"))
       .iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
     assert(files.size == 8, s"${files.size} data files")
     assert(t.read().select($"id").as[Long].collect().sorted.toSeq == (0L until 800L))
@@ -189,4 +225,10 @@ class SnapshotSpec extends SparkSpec {
     // background threads opening and closing files meanwhile
     assert(after - before < 50, s"open descriptors went $before -> $after")
   }
+}
+
+/** The two-writer case's rendezvous: an object, so the write tasks of both
+  * writers share it (a latch captured in a task closure is a copy). */
+object CommitRace {
+  val start = new java.util.concurrent.CountDownLatch(2)
 }

@@ -5,13 +5,18 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
+import graft.{Crawl, SparkSpec}
+import graft.core.{CacheScope, CrawlConfig, FrontierEntry, Ids}
+import graft.fetch.Fetcher
+import graft.frontier.Frontier
+import graft.scheduler.VirtualClockOracle
+import graft.snapshot.SnapshotTable
 import graft.streaming.StreamingCrawl.Discovery
 
-/** Structured-Streaming incremental semantics (SURVEY §2.9 T1/T2): etag
-  * state carried across micro-batches via mapGroupsWithState — a
-  * re-discovered id with an unchanged etag classifies 304 not_modified
-  * without a fetch (archive.py:305-348's If-Modified-Since/ETag skip). */
+/** Structured-Streaming incremental layer (SURVEY §2.9): each micro-batch
+  * of discoveries is one batch crawl round (T1/T2), checked against the
+  * batch rounds and the sequential schedule oracle; the monitoring
+  * queries (T5) beside it. */
 class StreamingSpec extends SparkSpec {
 
   test("streaming stall monitor: a silent metric fires its timeout alert; active metrics don't") {
@@ -64,103 +69,117 @@ class StreamingSpec extends SparkSpec {
     assert(forumCums.nonEmpty && forumCums.max == 10L, s"forum cums: $forumCums")
   }
 
-  test("stateful fetch: first sight fetches, re-sight with same etag → 304") {
+  /** Drain `ids` discovered at `runId` (the first `older` of them at the
+    * run before) into `tableDir` as one micro-batch, under a checkpoint of
+    * its own (MemoryStream offsets do not survive across query instances). */
+  private def stream(tableDir: String, ids: Seq[String], runId: Int, older: Int = 0): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-
-    val input = MemoryStream[Discovery]
-    val results = StreamingCrawl.fetchWithState(input.toDS())
-    val checkpoint = tempDir("graft_stream_ckpt")
-
-    // one long-lived query; foreachBatch segments output per micro-batch so
-    // the etag state carried by mapGroupsWithState is observable batch by
-    // batch (checkpointed state store — the streaming resume layer)
-    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Map[String, Int]]()
-    val q = results.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.core.FetchResult], id: Long) =>
-        batches.put(id, df.collect().map(r => r.id -> r.status).toMap)
-        ()
-      }
-      .start()
-
-    var nextBatch = 0L
-    def runBatch(data: Seq[Discovery]): Map[String, Int] = {
-      input.addData(data)
-      q.processAllAvailable()
-      val out = batches.getOrDefault(nextBatch, Map.empty)
-      nextBatch += 1
-      out
-    }
-
-    val ids = (0 until 50).map(i => graft.core.Ids.syntheticId(i.toLong))
-    val t = new Timestamp(0L)
-
-    // batch 1: all ids are first-sight → fetched (status from the
-    // deterministic fetcher; 200s record etag state)
-    val b1 = runBatch(ids.map(Discovery(_, 1, t)))
-    assert(b1.size === 50)
-    assert(!b1.values.exists(_ == -1)) // exceptions retried, never emitted raw
-    val okIds = b1.collect { case (id, 200) => id }.toSet
-    assert(okIds.nonEmpty)
-
-    // batch 2: same runId re-discovery → every previously-200 id must come
-    // back 304 not_modified (etag unchanged), without a payload fetch
-    val b2 = runBatch(ids.map(Discovery(_, 1, t)))
-    assert(okIds.forall(id => b2(id) === 304))
-
-    // batch 3: a new run — ids whose synthetic content version is unchanged
-    // still 304 off the carried state; changed versions must re-fetch
-    val b3 = runBatch(ids.take(5).map(Discovery(_, 2, t)))
-    assert(b3.size === 5)
-    ids.take(5).foreach { id =>
-      val unchanged = graft.fetch.Fetcher.contentVersion(id, 1) ==
-        graft.fetch.Fetcher.contentVersion(id, 2)
-      if (okIds.contains(id) && unchanged) assert(b3(id) === 304)
-      else if (okIds.contains(id)) assert(b3(id) !== 304,
-        s"$id: changed content must re-fetch, not serve stale 304")
-    }
-    q.stop()
+    val in = MemoryStream[Discovery]
+    in.addData(ids.zipWithIndex.map { case (i, n) =>
+      Discovery(i, if (n < older) runId - 1 else runId, new Timestamp(0L))
+    })
+    StreamingCrawl.runToSnapshot(spark, in.toDS(), tableDir, tempDir("graft_stream_ckpt"))
   }
 
-  test("runToSnapshot: micro-batches MERGE into the snapshot table, restart-safe") {
+  private def resultsOf(dir: String, v: Int) = new SnapshotTable(spark, s"$dir/fetch_results").read(Some(v))
+    .select("seq", "id", "fetchClass", "startMs", "status", "etag", "isNew", "retried", "prefix", "run_id")
+    .collect().map(_.toString).sorted.toSeq
+
+  private def seenOf(dir: String) = new SnapshotTable(spark, s"$dir/url_seen").read()
+    .select("id", "etag", "lastRun", "firstRun").collect().map(_.toString).sorted.toSeq
+
+  test("streamed micro-batches == batch rounds over the same ids") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    val id = (i: Int) => Ids.syntheticId(i.toLong)
+    // B1..B3 at runs 1..3; each later batch re-discovers some known ids,
+    // and some of a batch's events carry the run before: a batch's round is
+    // its largest run
+    val batches = Seq(1 -> (0 until 40), 2 -> (20 until 70), 3 -> ((0 until 10) ++ (60 until 90)))
+      .map { case (r, is) => r -> is.map(id) }
+    val streamed = tempDir("graft_stream_oracle")
+    val batch = tempDir("graft_stream_batch")
+    // the session is shared with other suites, whose persisted RDDs (local
+    // checkpoints among them) stay theirs: the rounds must add none
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    var lastOk = Map.empty[String, Int]
+    batches.foreach { case (runId, ids) =>
+      val known = if (runId == 1) Nil else Crawl.seenIds(spark, streamed).as[String].collect().toSeq
+      stream(streamed, ids, runId, older = 5 * (runId - 1))
+      CacheScope.withScope {
+        val none = spark.emptyDataset[String]
+        Crawl.run(spark, Frontier.buildWorklist(spark, none, none, spark.createDataset(ids),
+          maxNew = Int.MaxValue, runId = runId), CrawlConfig(runId = runId), batch)
+      }
+      assert(resultsOf(streamed, runId) == resultsOf(batch, runId), s"run $runId: fetch_results")
+      val results = new SnapshotTable(spark, s"$streamed/fetch_results").read(Some(runId))
+        .select("seq", "id", "fetchClass", "startMs", "status").as[(Long, String, String, Long, Int)]
+        .collect().sortBy(_._1).toSeq
+      // the schedule: the sequential oracle over url_seen ∪ the batch's ids
+      val expected = VirtualClockOracle.schedule((known ++ ids).distinct.map { i =>
+        val url = Frontier.urlFor(i)
+        FrontierEntry(i, url, Frontier.hostOf(url), forums = false, runId)
+      }, CrawlConfig(runId = runId))
+      assert(results.map(r => (r._1, r._2, r._3, r._4)) == expected.map(e => (e.seq, e.id, e.fetchClass, e.startMs)),
+        s"run $runId: schedule")
+      // the conditional fetch: a prior 200's etag is current iff its
+      // content version is unchanged, and only then is the fetch a 304
+      results.foreach { case (_, i, _, _, status) =>
+        lastOk.get(i).foreach { prev =>
+          if (Fetcher.contentVersion(i, prev) == Fetcher.contentVersion(i, runId)) assert(status == 304, s"$i")
+          else assert(status != 304, s"$i: changed content must re-fetch")
+        }
+      }
+      if (runId > 1) assert(results.exists(_._5 == 304) && results.exists(r => lastOk.contains(r._2) && r._5 == 200))
+      lastOk ++= results.collect { case (_, i, _, _, 200) => i -> runId }
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore, s"run $runId left persisted RDDs")
+    }
+    assert(seenOf(streamed) == seenOf(batch))
+    assert(new SnapshotTable(spark, s"$streamed/fetch_results").versions == Seq(1, 2, 3))
+  }
+
+  test("runToSnapshot: a replayed micro-batch converges, restart-safe") {
     val tableDir = tempDir("graft_stream_snap")
-    val checkpoint = tempDir("graft_stream_snap_ckpt")
-    val ids = (0 until 30).map(i => graft.core.Ids.syntheticId(i.toLong))
-    val t = new Timestamp(0L)
+    val ids = (0 until 30).map(i => Ids.syntheticId(i.toLong))
+    // run 1: one drained micro-batch crawls 30 ids
+    stream(tableDir, ids, 1)
+    assert(seenOf(tableDir).size == 30)
+    // run 2: a batch re-discovering 10 ids at run 5 recrawls all 30, as a
+    // nightly round does, and adds no row
+    stream(tableDir, ids.take(10), 5)
+    val seen = seenOf(tableDir)
+    val results = resultsOf(tableDir, 2)
+    assert(seen.size == 30 && results.size == 30)
+    // replaying that micro-batch, from a fresh checkpoint, re-runs round 5
+    // and converges to the identical snapshots
+    stream(tableDir, ids.take(10), 5)
+    assert(new SnapshotTable(spark, s"$tableDir/url_seen").currentVersion.contains(3))
+    assert(seenOf(tableDir) == seen, "replaying a batch must converge to the identical url_seen")
+    assert(resultsOf(tableDir, 3) == results, "a replayed round must fetch as the first did")
+  }
 
-    // run 1: drain-and-stop (AvailableNow) → one snapshot of 30 ids
-    val in1 = MemoryStream[Discovery]
-    in1.addData(ids.map(Discovery(_, 1, t)))
-    StreamingCrawl.runToSnapshot(spark, in1.toDS(), tableDir, checkpoint)
-    val table = new graft.snapshot.SnapshotTable(spark, tableDir)
-    assert(table.read().select("id").distinct().count() == 30)
-
-    // run 2 (new drained run, own checkpoint — MemoryStream offsets don't
-    // survive across query instances): re-discovered ids MERGE, not append
-    val ckpt2 = tempDir("graft_stream_snap_ckpt2")
-    val in2 = MemoryStream[Discovery]
-    in2.addData(ids.take(10).map(Discovery(_, 5, t)))
-    StreamingCrawl.runToSnapshot(spark, in2.toDS(), tableDir, ckpt2)
-    val rows = table.read()
-    assert(rows.select("id").distinct().count() == 30, "merge must not duplicate ids")
-    assert(rows.count() == 30)
-    assert(table.currentVersion.exists(_ >= 2), "each drained run commits a snapshot")
-
-    // replaying the same micro-batch converges (idempotent sink, T6): the
-    // restart-safety property foreachBatch + mergeUpsert provides
-    val ckpt3 = tempDir("graft_stream_snap_ckpt3")
-    val in3 = MemoryStream[Discovery]
-    in3.addData(ids.take(10).map(Discovery(_, 5, t)))
-    StreamingCrawl.runToSnapshot(spark, in3.toDS(), tableDir, ckpt3)
-    val replay = table.read()
-    assert(replay.count() == 30)
-    val a = rows.orderBy("id").collect().map(_.toString).toSeq
-    val b = replay.orderBy("id").collect().map(_.toString).toSeq
-    assert(a == b, "replaying a batch must converge to the identical snapshot")
+  test("micro-batches of one run over other ids, and late events of an earlier run, lose no id") {
+    val tableDir = tempDir("graft_stream_same_run")
+    val id = (i: Int) => Ids.syntheticId(i.toLong)
+    val (a, b, late) = ((0 until 20).map(id), (20 until 35).map(id), (35 until 40).map(id))
+    // id -> (firstRun, lastRun)
+    def state() = new SnapshotTable(spark, s"$tableDir/url_seen").read().select("id", "firstRun", "lastRun")
+      .collect().map(r => r.getString(0) -> (r.getInt(1), Option(r.get(2)).map(_.asInstanceOf[Int]))).toMap
+    // two drains at run 3 with disjoint ids, as a rate-limited source or a
+    // later drain of the same run delivers them
+    stream(tableDir, a, 3)
+    stream(tableDir, b, 3)
+    val seen = state()
+    assert(seen.keySet == (a ++ b).toSet && seen.values.forall(_._1 == 3))
+    // the second batch recrawls the first's ids at run 3
+    assert(resultsOf(tableDir, 2).size == 35)
+    // a batch of only late events of run 2 recrawls every id at run 2,
+    // keeps run 3's admissions, and replaces no run-3 etag
+    stream(tableDir, late, 2)
+    val after = state()
+    assert(after.keySet == (a ++ b ++ late).toSet)
+    assert(late.forall(after(_)._1 == 2))
+    assert(seen.forall { case (i, (f, last)) => after(i)._1 == f && last.forall(l => after(i)._2.contains(l)) })
   }
 
   test("windowed metrics with watermark aggregates the discovery stream") {
@@ -174,7 +193,7 @@ class StreamingSpec extends SparkSpec {
       .queryName("disc_metrics")
       .start()
     input.addData((0 until 20).map(i =>
-      Discovery(graft.core.Ids.syntheticId(i.toLong), 1, new Timestamp(i * 60000L))))
+      Discovery(Ids.syntheticId(i.toLong), 1, new Timestamp(i * 60000L))))
     q.processAllAvailable()
     val rows = spark.table("disc_metrics").collect()
     assert(rows.map(_.getLong(1)).sum === 20)
