@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Hygiene (round-3): one untimed warmup pass over the whole catalog before
   * timing (JIT/codegen warmup no longer lands on whichever query runs
   * first); each query writes its whole result to the noop sink, in the
-  * warm-up and the timed pass; queries run in catalog order
+  * warm-up and the timed pass, inside its own `CacheScope`; queries run in
+  * catalog order
   * (deterministic); a query that throws records an `err` entry instead of
   * a fake fast timing; scaling iterations
   * INTERLEAVE the two levels (A/B/A/B, fresh session per leg) and the
@@ -82,9 +83,13 @@ object Bench {
     val ordered = Catalog.allEntries.map { case (name, e) => name -> e.fn }
 
     // every query's whole result goes to the noop sink: a count() lets the
-    // optimizer prune the columns it does not need
-    def sink(fn: Catalog.Q): Unit =
+    // optimizer prune the columns it does not need. Each query runs in its
+    // own cache scope, so the frames it persists are released before the
+    // next one and it pays for its own shared frames; memoized index
+    // artifacts (graft.core.Memo) outlive the scope
+    def sink(fn: Catalog.Q): Unit = graft.core.CacheScope.withScope {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }
 
     // untimed warmup pass: JIT + codegen + parquet footer caches
     ordered.foreach { case (_, fn) =>

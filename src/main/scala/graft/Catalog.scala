@@ -18,7 +18,7 @@ import graft.views.ViewQueries
 object Catalog {
   type Q = (SparkSession, String) => DataFrame
 
-  final case class Entry(fn: Q, oracle: Option[String], headline: Boolean = false)
+  final case class Entry(fn: Q, oracle: Option[String])
 
   // DuckDB-portable word-3gram shingle CTE fragment (mirrors Dedup shingles)
   private val shingleCte =
@@ -54,7 +54,7 @@ object Catalog {
         |round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
         |round(avg(l_discount), 6) AS avg_disc, count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin), headline = true),
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin)),
 
     "q08_status_counts" -> Entry(ViewQueries.statusCounts, Some(
       """SELECT count(*) FILTER (WHERE event_type = 'view') AS n_view,
@@ -74,7 +74,7 @@ object Catalog {
       """SELECT user_id, event_id, event_type, value FROM (
         |SELECT user_id, event_id, event_type, value,
         |row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |FROM events) t WHERE rn = 1""".stripMargin), headline = true),
+        |FROM events) t WHERE rn = 1""".stripMargin)),
 
     "q03_second_most_recent" -> Entry(ViewQueries.secondMostRecent, Some(
       """SELECT user_id, event_id, event_type, value FROM (
@@ -110,11 +110,11 @@ object Catalog {
         |SELECT DISTINCT pr.o_custkey, pr.o_orderkey, li.l_partkey
         |FROM pairs pr JOIN lineitem li ON li.l_orderkey = pr.o_orderkey
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem li2
-        |  WHERE li2.l_orderkey = pr.prev_orderkey AND li2.l_partkey = li.l_partkey)""".stripMargin), headline = true),
+        |  WHERE li2.l_orderkey = pr.prev_orderkey AND li2.l_partkey = li.l_partkey)""".stripMargin)),
 
     "q12_brand_rollup" -> Entry(ViewQueries.brandRollup, Some(
       """SELECT p_brand, count(*) AS n_items, round(sum(l_extendedprice), 2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand""".stripMargin), headline = true),
+        |FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand""".stripMargin)),
 
     "q11_seen_anti_join" -> Entry((s, d) => {
       // candidate ids (discovered) anti-joined against the seen set — THE
@@ -141,7 +141,7 @@ object Catalog {
     // ---- dedup / similarity ----
     "q10_dedup_exact" -> Entry(Dedup.exactDedup, Some(
       """SELECT md5(text) AS fingerprint, min(doc_id) AS doc_id, count(*) AS n_dups
-        |FROM documents GROUP BY md5(text)""".stripMargin), headline = true),
+        |FROM documents GROUP BY md5(text)""".stripMargin)),
 
     "q13_lsh_hamming_join" -> Entry(Dedup.lshHammingJoin, Some(
       """WITH fps AS (SELECT doc_id, ('0x' || substr(md5(substr(text, 1, 30)), 1, 15))::BIGINT AS fp FROM documents),
@@ -150,7 +150,7 @@ object Catalog {
         |SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
         |  CAST(bit_count(xor(a.fp, c.fp)) AS INTEGER) AS dist
         |FROM ex a JOIN ex c ON a.band = c.band AND a.chunk = c.chunk AND a.doc_id < c.doc_id
-        |WHERE bit_count(xor(a.fp, c.fp)) <= 3""".stripMargin), headline = true),
+        |WHERE bit_count(xor(a.fp, c.fp)) <= 3""".stripMargin)),
 
     "q14_ngram_jaccard" -> Entry((s, d) => Dedup.ngramJaccard(s, d, 0.5), Some(
       s"""WITH $shingleCte,
@@ -179,7 +179,7 @@ object Catalog {
         |q AS (SELECT emb AS qe FROM e WHERE vec_id = 0)
         |SELECT vec_id, round(list_dot_product(emb, qe) /
         |  (sqrt(list_dot_product(emb, emb)) * sqrt(list_dot_product(qe, qe))), 6) AS cos_sim
-        |FROM e, q WHERE vec_id <> 0 ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin), headline = true),
+        |FROM e, q WHERE vec_id <> 0 ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin)),
 
     // ---- text analysis ----
     "q17_lang_id" -> Entry(TextAnalysis.languageId, Some(
@@ -1185,6 +1185,5 @@ object Catalog {
 
   def queries: Map[String, Q] = allEntries.map { case (n, e) => n -> e.fn }.toMap
   def oracles: Map[String, String] =
-    allEntries.collect { case (n, Entry(_, Some(sql), _)) => n -> sql.replace('\n', ' ') }.toMap
-  def headlines: Seq[String] = allEntries.collect { case (n, e) if e.headline => n }
+    allEntries.collect { case (n, Entry(_, Some(sql))) => n -> sql.replace('\n', ' ') }.toMap
 }

@@ -55,27 +55,11 @@ object CrawlMain {
     val lo = (runId - 1) * numIds
     val discovered = spark.range(lo, lo + numIds).map(i => Ids.syntheticId(i, seed))
     val forum = spark.range(lo, lo + numIds, 41).map(i => Ids.syntheticId(i, seed))
-    // the seen store is committed each run but the work-list does not read
-    // it (the frontier is exact set algebra over the seen ids it recrawls).
-    // expectedKeys is the roll-budget floor only; the bloom is sized from
-    // the corpus each roll holds
-    val store = new graft.frontier.SeenStore(tableDir,
-      expectedKeys = math.max(1L << 22, numIds.toLong * 8))
     val frontier = Frontier.buildWorklist(spark, existing, forum, discovered,
       maxNew = numIds, runId = runId)
 
     val out = Crawl.run(spark, frontier, cfg, tableDir)
     val n = out.resultRows
-    // graduate this run's ids into the seen store: normally an O(delta)
-    // cuckoo spill keyed by the url_seen version just committed (the epoch
-    // bloom file is untouched); rolls rebuild from the corpus when spills
-    // or capacity run out — or when a prior crash left a version gap
-    store.commitRun(spark,
-      out.results.select(graft.frontier.SeenSet.idHash($"id").as("h")).as[Long], n,
-      seenVersion = out.seenVersion,
-      fullCorpusHashes = Crawl.seenIds(spark, tableDir)
-        .select(graft.frontier.SeenSet.idHash(org.apache.spark.sql.functions.col("id")).as("h")).as[Long],
-      fullCount = Crawl.seenIds(spark, tableDir).count())
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     // order-parity check vs the sequential oracle. Full parity below 200k;

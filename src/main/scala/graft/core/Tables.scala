@@ -44,9 +44,7 @@ object Tables {
     * statistics (on a real deployment this is `spark.table(...).stats`).
     * Repeated ANN queries size their geometry from it without paying a
     * count() job per invocation; driver testdata is immutable, so the
-    * cache never invalidates. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
+    * memo never invalidates. */
   def cachedCount(spark: SparkSession, dir: String, name: String): Long =
-    countCache.computeIfAbsent((dir, name), _ => apply(spark, dir, name).count()).longValue()
+    Memo("tables.count", dir, name)(apply(spark, dir, name).count())
 }

@@ -259,9 +259,6 @@ object TrainPrep {
        |GROUP BY 1, 2""".stripMargin
   }
 
-  private val deconBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), graft.frontier.BlockedBloom]
-
   /** q99 — BLOOM-PREFILTERED n-gram decontamination: q93's semantics with
     * the 100 TB shuffle lever in front. A blocked Bloom filter is built once
     * over the train fold's distinct n-grams (the [[graft.frontier.SeenSet]]
@@ -278,7 +275,8 @@ object TrainPrep {
     * negative anywhere in build/serialize/probe would drop a collision and
     * move the hash. The filter is sized from an upper bound (docs ×
     * `maxShinglesPerDoc`) — sizing affects only the FP rate, never the
-    * result — and cached per (session, corpus, n) like the ANN artifacts.
+    * result — and memoized per (corpus, n, maxShinglesPerDoc) in
+    * [[graft.core.Memo]] like the ANN models.
     *
     * Scale math: the eval→train equi-join is q93's dominant exchange (all
     * eval n-grams shuffle). With contamination at c and bloom FP at ε, the
@@ -291,13 +289,12 @@ object TrainPrep {
     // the probe/!probe branches would otherwise re-execute the eval shingle
     // mint + fold join twice, so the shingles persist once
     val evalShingles = graft.core.CacheScope.persist(evalShinglesRaw)
-    graft.sim.Pq.evictStopped(deconBloomCache, (k: (SparkSession, String, Int)) => k._1)
-    val bloom = deconBloomCache.computeIfAbsent((spark, dir, n), _ => {
+    val bloom = graft.core.Memo("trainprep.decon_bloom", dir, n, maxShinglesPerDoc) {
       import spark.implicits._
       val expected = Tables.documents(spark, dir).count() * maxShinglesPerDoc
       graft.frontier.SeenSet.buildFilter(trainNgrams.select(xxhash64(col("shingle"))).as[Long],
         () => graft.frontier.BlockedBloom.sized(expected))
-    })
+    }
     val probe = graft.frontier.FilterProbe.might(bloom, xxhash64(col("shingle")))
     val maybe = evalShingles.filter(probe).join(trainNgrams, Seq("shingle"), "left")
     val miss = evalShingles.filter(!probe).withColumn("hit", lit(null).cast("int"))

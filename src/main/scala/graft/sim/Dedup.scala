@@ -437,7 +437,7 @@ object Dedup {
     // matching) the FULL upstream pair-join tree twice per round on the
     // driver — with 2-4 rounds per call that planning time rivaled the
     // actual execution. Checkpointed, each round plans against a tiny
-    // LogicalRDD scan (round 6; same rationale as the ivfPqCache note).
+    // LogicalRDD scan (round 6; same rationale as Pq's IVF-PQ index note).
     val sym = edges.union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
     val initial = nodes

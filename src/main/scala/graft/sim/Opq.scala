@@ -5,7 +5,7 @@ import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** OPQ-style space decomposition for PQ — the dimension-allocation
   * component of Optimized Product Quantization (Ge/He/Ke/Sun, CVPR 2013 —
@@ -62,20 +62,17 @@ object Opq {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), permuteExpr(col("embedding"), perm).as("embedding"))
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int),
-      (Array[Int], Pq.PqModel)]()
-
   /** Train the OPQ model: allocation pass + the standard deterministic PQ
-    * training on the permuted corpus. Cached per (corpus, m, k, iters)
-    * like [[Pq.model]] — omitting iters from the key would silently serve
-    * a differently-trained model to an explicit-iters caller. */
+    * training on the permuted corpus. Memoized per (corpus, m, k, iters)
+    * like [[Pq.model]], under its own tag — the two models share a recipe —
+    * and omitting iters from the key would silently serve a
+    * differently-trained model to an explicit-iters caller. */
   def model(spark: SparkSession, dir: String, m: Int = 8,
             k: Int = 16, iters: Int = 2): (Array[Int], Pq.PqModel) =
-    modelCache.computeIfAbsent((dir, m, k, iters), _ => {
+    Memo("opq.model", dir, m, k, iters) {
       val perm = balancedPerm(Tables.embeddings(spark, dir), m)
       (perm, Pq.train(permutedCorpus(spark, dir, perm), m, k, iters))
-    })
+    }
 
   // ---------- full OPQ: learned ORTHOGONAL rotation (Ge 2013 §3.2) ----------
 
@@ -211,30 +208,24 @@ object Opq {
     OpqModel(r, mod, dists.toSeq)
   }
 
-  private val rotModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int, Int), OpqModel]()
-  // keyed on the FULL training recipe (incl. alternations/iters), matching
-  // rotModelCache: a key missing the training knobs would silently serve
-  // codes encoded under a differently-trained rotation (ADVICE r4)
-  private val rotCodeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int, Int, Int), DataFrame]()
-
   def rotationModel(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
                     alternations: Int = 3, iters: Int = 2): OpqModel =
-    rotModelCache.computeIfAbsent((dir, m, k, alternations, iters), _ =>
+    Memo("opq.rotation_model", dir, m, k, alternations, iters)(
       trainRotation(spark, dir, m, k, alternations, iters))
 
-  /** The rotated code table — an index artifact (built once, like
-    * `Pq.cachedCodes`): rotation + encode happen at BUILD time; the query
-    * scan still reads 8-byte codes only. */
-  private def rotatedCodes(spark: SparkSession, dir: String, r: Rotation.Mat,
-                           mod: Pq.PqModel, m: Int, k: Int,
-                           alternations: Int, iters: Int): DataFrame = {
-    Pq.evictStopped(rotCodeCache, (key: (SparkSession, String, Int, Int, Int, Int)) => key._1)
-    rotCodeCache.computeIfAbsent((spark, dir, m, k, alternations, iters), _ => {
+  /** The rotation model and its rotated code table — an index artifact
+    * (built once, like `Pq.cachedCodes`): rotation + encode happen at BUILD
+    * time; the query scan still reads 8-byte codes only. Keyed on the FULL
+    * training recipe (incl. alternations/iters), the model's own: a key
+    * missing the training knobs would silently serve codes encoded under a
+    * differently-trained rotation (ADVICE r4). */
+  private def rotatedCodes(spark: SparkSession, dir: String, m: Int, k: Int,
+                           alternations: Int, iters: Int): (OpqModel, DataFrame) = {
+    val om = rotationModel(spark, dir, m, k, alternations, iters)
+    (om, Memo.inSession(spark, "opq.rotation_codes", dir, m, k, alternations, iters) {
       import spark.implicits._
-      val bcR = spark.sparkContext.broadcast(r)
-      val bcMod = spark.sparkContext.broadcast(mod)
+      val bcR = spark.sparkContext.broadcast(om.r)
+      val bcMod = spark.sparkContext.broadcast(om.pq)
       corpusVectors(spark, dir)
         .map { case (id, x) =>
           (id, encodeLocal(Rotation.applyTo(bcR.value, x), bcMod.value))
@@ -279,9 +270,9 @@ object Opq {
   private def rotatedAdcTopKWith(spark: SparkSession, dir: String, q: Array[Double],
                                  queryId: Long, kTop: Int, m: Int, k: Int,
                                  alternations: Int, iters: Int): DataFrame = {
-    val om = rotationModel(spark, dir, m, k, alternations, iters)
+    val (om, codes) = rotatedCodes(spark, dir, m, k, alternations, iters)
     val qRot = Rotation.applyTo(om.r, q)
-    rotatedCodes(spark, dir, om.r, om.pq, m, k, alternations, iters)
+    codes
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), round(Pq.adcScore(qRot, om.pq), 6).as("adc_score"))
       .orderBy(col("adc_score").desc, col("vec_id").asc)
@@ -295,20 +286,17 @@ object Opq {
   // the permuted-encode CODE TABLE is an index artifact like Pq.cachedCodes:
   // built once per (corpus, geometry), lineage truncated — re-encoding (and
   // re-analyzing the permute×encode expression tree, whose sub-distances
-  // each duplicate the 64-element gather) per query cost ~0.9 s at sf0.1
-  // keyed on the FULL training recipe (incl. iters), matching modelCache —
-  // a key missing the training knobs would silently serve codes encoded
-  // under a differently-trained model (the ADVICE r4 defect class)
-  private val permCodeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int, Int), DataFrame]()
-
-  private def permutedCodes(spark: SparkSession, dir: String, perm: Array[Int],
-                            mod: Pq.PqModel, m: Int, k: Int, iters: Int): DataFrame = {
-    Pq.evictStopped(permCodeCache, (key: (SparkSession, String, Int, Int, Int)) => key._1)
-    permCodeCache.computeIfAbsent((spark, dir, m, k, iters), _ =>
+  // each duplicate the 64-element gather) per query cost ~0.9 s at sf0.1.
+  // Keyed on the FULL training recipe (incl. iters), the model's own — a
+  // key missing the training knobs would silently serve codes encoded under
+  // a differently-trained model (the ADVICE r4 defect class)
+  private def permutedCodes(spark: SparkSession, dir: String, m: Int, k: Int,
+                            iters: Int): ((Array[Int], Pq.PqModel), DataFrame) = {
+    val (perm, mod) = model(spark, dir, m, k, iters)
+    ((perm, mod), Memo.inSession(spark, "opq.perm_codes", dir, m, k, iters)(
       permutedCorpus(spark, dir, perm)
         .select(col("vec_id"), Pq.encodeExpr(col("embedding"), mod).as("code"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)))
   }
 
   def adcTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
@@ -320,9 +308,9 @@ object Opq {
   private def adcTopKWith(spark: SparkSession, dir: String, q: Array[Double],
                           queryId: Long, kTop: Int, m: Int, k: Int,
                           iters: Int = 2): DataFrame = {
-    val (perm, mod) = model(spark, dir, m, k, iters)
+    val ((perm, mod), codes) = permutedCodes(spark, dir, m, k, iters)
     val qPerm = perm.map(q)
-    permutedCodes(spark, dir, perm, mod, m, k, iters)
+    codes
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), round(Pq.adcScore(qPerm, mod), 6).as("adc_score"))
       .orderBy(col("adc_score").desc, col("vec_id").asc)

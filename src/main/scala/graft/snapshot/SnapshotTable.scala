@@ -117,16 +117,21 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
       case _ => Set.empty
     }
 
+  /** A JSON string literal; group 1 is its text, still escaped. */
+  private val Str = """"((?:[^"\\]|\\.)*)""""
+
+  /** The text of a string literal matched by [[Str]], unescaped. */
+  private def unescape(s: String): String =
+    """\\(u[0-9a-f]{4}|.)""".r.replaceAllIn(s, e => java.util.regex.Matcher.quoteReplacement(
+      e.group(1) match {
+        case "n" => "\n"
+        case u if u.length == 5 => Integer.parseInt(u.substring(1), 16).toChar.toString
+        case c => c
+      }))
+
   /** The string field `name` of a manifest's text, unescaped. */
   private def field(json: String, name: String): Option[String] =
-    (s""""$name":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(json).map { m =>
-      """\\(u[0-9a-f]{4}|.)""".r.replaceAllIn(m.group(1), e => java.util.regex.Matcher.quoteReplacement(
-        e.group(1) match {
-          case "n" => "\n"
-          case u if u.length == 5 => Integer.parseInt(u.substring(1), 16).toChar.toString
-          case c => c
-        }))
-    }
+    s""""$name":$Str""".r.findFirstMatchIn(json).map(m => unescape(m.group(1)))
 
   /** Read a snapshot (latest by default; any version for time travel). An
     * unpartitioned version's manifest records its schema, so the read
@@ -150,12 +155,14 @@ final class SnapshotTable(spark: SparkSession, baseDir: String) {
   def dataDirOf(v: Int): Path =
     base.resolve(field(manifestOf(v), "dataDir").getOrElse(throw new IllegalStateException(s"bad manifest v$v")))
 
+  /** The metrics map that version `v`'s commit wrote, keys and values
+    * unescaped. */
   def metricsOf(v: Int): Map[String, String] = {
-    val json = manifestOf(v)
-    """"metrics":\{(.*?)\}""".r.findFirstMatchIn(json).map(_.group(1)) match {
-      case Some(body) if body.nonEmpty =>
-        """"(.*?)":"(.*?)"""".r.findAllMatchIn(body).map(m => m.group(1) -> m.group(2)).toMap
-      case _ => Map.empty
+    val pair = s"$Str:$Str"
+    s""""metrics":\\{((?:$pair,?)*)\\}""".r.findFirstMatchIn(manifestOf(v)) match {
+      case Some(body) =>
+        pair.r.findAllMatchIn(body.group(1)).map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
+      case None => Map.empty
     }
   }
 }

@@ -156,6 +156,15 @@ class SnapshotSpec extends SparkSpec {
     assert(t.metricsOf(3) == Map("run_id" -> "2", "x_sum" -> "10", "n_big" -> "2"))
   }
 
+  test("metricsOf returns what commit wrote: braces, quotes and escapes in keys and values") {
+    val t = new SnapshotTable(spark, tempDir("graft-snap"))
+    val metrics = Map("k" -> "a}b\"c", "n_total" -> "5", "back\\slash" -> "x\ny\u0001{z}",
+      "empty" -> "")
+    t.commit(Seq(1).toDF("x"), metrics = metrics)
+    assert(t.metricsOf(1) == metrics)
+    assert(t.metricsOf(1)("n_total") == "5")
+  }
+
   test("partitioned snapshot supports partition-pruned reads") {
     val dir = tempDir("graft-snap")
     val t = new SnapshotTable(spark, dir)
